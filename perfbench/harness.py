@@ -74,22 +74,6 @@ class ServerProcess:
         self.stop()
         raise RuntimeError(f"server did not start; see {self.log_path}")
 
-    def cpu_seconds(self) -> float:
-        """User + system CPU time used so far by the server's process
-        group (the server and its JVM), from /proc."""
-        total = 0
-        for name in os.listdir("/proc"):
-            if not name.isdigit():
-                continue
-            try:
-                with open(f"/proc/{name}/stat") as f:
-                    fields = f.read().rsplit(")", 1)[1].split()
-            except OSError:
-                continue
-            if int(fields[2]) == self.proc.pid:  # pgrp; utime, stime follow
-                total += int(fields[11]) + int(fields[12])
-        return total / os.sysconf("SC_CLK_TCK")
-
     def stop(self) -> None:
         """SIGTERM the whole group (the server and its JVM), then wait
         until every member has exited and been reaped."""
