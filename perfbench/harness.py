@@ -49,7 +49,6 @@ class ServerProcess:
         self.log_path = os.path.join(workdir, "server.log")
 
     def start(self) -> int:
-        _become_subreaper()
         env = dict(os.environ)
         env.update(spark_env(self.workdir))
         env["PYTHONPATH"] = self.root
@@ -60,6 +59,7 @@ class ServerProcess:
                  "--port", "0", "--host", "127.0.0.1", "--size", str(self.size)],
                 cwd=self.workdir, env=env, stdout=log, stderr=subprocess.STDOUT,
                 stdin=subprocess.DEVNULL, start_new_session=True,
+                preexec_fn=_term_on_parent_death,
             )
         deadline = time.monotonic() + SERVER_START_TIMEOUT_S
         while time.monotonic() < deadline:
@@ -91,12 +91,89 @@ class ServerProcess:
         self.proc = None
 
 
-def _become_subreaper() -> None:
-    """Orphaned descendants (the server's JVM, once the server process
-    has exited) are re-parented to this process, so it can reap them."""
+def become_subreaper() -> None:
+    """Orphaned descendants (the server's JVM once the server process
+    has exited, PySpark's worker daemon once its JVM has exited) are
+    re-parented to this process, so stop_descendants can find and reap
+    them."""
     libc = ctypes.CDLL(None, use_errno=True)
     PR_SET_CHILD_SUBREAPER = 36
     libc.prctl(PR_SET_CHILD_SUBREAPER, 1, 0, 0, 0)
+
+
+def _term_on_parent_death() -> None:
+    """In the forked server: SIGTERM it if this process dies first,
+    even by SIGKILL, which skips every cleanup path. The server's JVM
+    then exits when its stdin pipe closes."""
+    libc = ctypes.CDLL(None, use_errno=True)
+    PR_SET_PDEATHSIG = 1
+    libc.prctl(PR_SET_PDEATHSIG, signal.SIGTERM, 0, 0, 0)
+
+
+def descendants(pid: int) -> list[int]:
+    """Every process below ``pid`` in the process tree, from /proc."""
+    children: dict[int, list[int]] = {}
+    for name in os.listdir("/proc"):
+        if not name.isdigit():
+            continue
+        try:
+            with open(f"/proc/{name}/stat") as f:
+                stat = f.read()
+            ppid = int(stat[stat.rindex(")") + 2:].split()[1])
+        except (OSError, ValueError, IndexError):
+            continue
+        children.setdefault(ppid, []).append(int(name))
+    found, todo = [], [pid]
+    while todo:
+        for child in children.get(todo.pop(), ()):
+            found.append(child)
+            todo.append(child)
+    return found
+
+
+def stop_descendants(timeout: float = 20.0) -> None:
+    """SIGTERM, then SIGKILL, every process this one started, directly
+    or not, and reap each, so that none outlives the run. Call it last:
+    it reaps children that Popen objects may still hold."""
+    me = os.getpid()
+    for sig in (signal.SIGTERM, signal.SIGKILL):
+        for pid in descendants(me):
+            try:
+                os.kill(pid, sig)
+            except ProcessLookupError:
+                pass
+        deadline = time.monotonic() + timeout
+        while time.monotonic() < deadline:
+            try:
+                while os.waitpid(-1, os.WNOHANG)[0] > 0:
+                    pass
+            except ChildProcessError:
+                pass
+            if not descendants(me):
+                return
+            time.sleep(0.02)
+
+
+def stop_spark(spark, timeout: float = 30.0) -> None:
+    """Stop an in-process Spark session and its gateway JVM, and wait
+    for the JVM to exit. ``spark.stop()`` alone leaves the JVM running
+    until this process has exited."""
+    from pyspark import SparkContext
+
+    gateway = SparkContext._gateway
+    spark.stop()
+    if gateway is None:
+        return
+    proc = getattr(gateway, "proc", None)
+    gateway.shutdown()
+    SparkContext._gateway = SparkContext._jvm = None
+    if proc is not None:
+        proc.stdin.close()  # the JVM exits when its stdin closes
+        try:
+            proc.wait(timeout)
+        except subprocess.TimeoutExpired:
+            proc.kill()
+            proc.wait()
 
 
 def _reap_group(pgid: int, timeout: float) -> bool:

@@ -34,7 +34,8 @@ import numpy as np
 
 import data
 from harness import (Client, InProcessServer, OpRecord, ServerProcess, TransportError,
-                     closed_loop, percentile, store)
+                     become_subreaper, closed_loop, percentile, stop_descendants, stop_spark,
+                     store)
 from queries import LARGE_SHAPES, SMALL_SHAPES, check_response
 
 HERE = os.path.dirname(os.path.abspath(__file__))
@@ -190,7 +191,7 @@ class Run:
         if self.tracer is not None:
             self.tracer.restore()
         if self.spark is not None:
-            self.spark.stop()
+            stop_spark(self.spark)
             self.spark = None
         os.chdir(ROOT)
         shutil.rmtree(self.workdir, ignore_errors=True)
@@ -811,6 +812,7 @@ def _write_record(run: Run, result: dict) -> tuple[str, dict]:
 def run_one(args) -> int:
     if ROOT not in sys.path:
         sys.path.insert(0, ROOT)
+    become_subreaper()
     run = Run(args)
     try:
         if args.workload in HTTP_WORKLOADS:
@@ -818,7 +820,11 @@ def run_one(args) -> int:
         else:
             run_operator_batch(run)
     finally:
-        run.close()
+        try:
+            run.close()
+        finally:
+            # no process of the run outlives it, on any path out
+            stop_descendants()
     failed = min(len(run.failures), max(1, run.attempted))
     wl = args.workload
     prefix = "traced." if run.traced else ""

@@ -4,8 +4,9 @@
     python3 -m pytest perfbench/test_smoke.py -q
 
 It asserts that each metric the README names is printed with its unit
-and a sample count, that every output check matched and that
-error_rate is 0. It starts a JVM per run, so it takes several minutes.
+and a sample count, that every output check matched, that error_rate
+is 0 and that no process of the run outlives it. It starts a JVM per
+run, so it takes several minutes.
 """
 from __future__ import annotations
 
@@ -19,6 +20,9 @@ import pytest
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
+sys.path.insert(0, HERE)
+
+from harness import become_subreaper, descendants, stop_descendants  # noqa: E402
 
 HTTP_E2E = {
     "setup_s": "s", "query_p50_ms": "ms", "query_p90_ms": "ms", "query_per_s": "1/s",
@@ -52,12 +56,17 @@ LINE = re.compile(r"^(\w+) ([\w.]+) = (\S+) (\S+) \(n=(\d+)\)$")
 
 
 def _run(workload: str, trace: int) -> tuple[dict, dict]:
+    become_subreaper()
     proc = subprocess.run(
         [sys.executable, os.path.join(HERE, "run.py"), "--workload", workload, "--seed", "3",
          "--seconds", "8", "--trace", str(trace), "--tiny"],
         cwd=ROOT, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True, timeout=900,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
+    # this process is a subreaper, so anything the run left is below it
+    left = descendants(os.getpid())
+    stop_descendants()
+    assert not left, f"processes of the run outlived it: {left}"
     lines = proc.stdout.strip().splitlines()
     printed = {}
     for line in lines[:-1]:
