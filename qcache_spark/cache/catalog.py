@@ -50,6 +50,7 @@ def _next_version() -> int:
 class CacheItem:
     df: DataFrame
     byte_size: int
+    row_count: int
     enum_columns: frozenset = frozenset()
     creation_time: float = field(default_factory=time.time)
     last_access_time: float = field(default_factory=time.time)
@@ -169,7 +170,6 @@ class DatasetCatalog:
         key: str,
         df: DataFrame,
         enum_columns: frozenset = frozenset(),
-        materialize: bool = True,
         bucket_by: tuple | None = None,
     ) -> CacheItem:
         """Cache a dataset. `bucket_by=(cols, num_buckets)` opts into
@@ -188,8 +188,7 @@ class DatasetCatalog:
             if bucket_by is not None:
                 df, table, path, spec = self._write_bucketed(key, df, bucket_by, version)
             df = df.persist(StorageLevel.MEMORY_AND_DISK)
-            if materialize or bucket_by is not None:
-                df.count()
+            row_count = df.count()
             size = estimate_size(df)
             if key in self._items:
                 # replace: reference deletes the old entry first
@@ -199,6 +198,7 @@ class DatasetCatalog:
             item = CacheItem(
                 df=df,
                 byte_size=size,
+                row_count=row_count,
                 enum_columns=frozenset(enum_columns),
                 version=version,
                 bucket_table=table,
@@ -240,11 +240,12 @@ class DatasetCatalog:
                     key, df, old.bucket_by, version
                 )
             new_df = df.persist(StorageLevel.MEMORY_AND_DISK)
-            new_df.count()
+            row_count = new_df.count()
             size = estimate_size(new_df)
             item = CacheItem(
                 df=new_df,
                 byte_size=size,
+                row_count=row_count,
                 enum_columns=old.enum_columns,
                 creation_time=old.creation_time,
                 last_access_time=time.time(),

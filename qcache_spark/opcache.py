@@ -40,7 +40,7 @@ This module replaces all of those dicts with ONE registry:
   block vanished silently recomputes — so aggressive eviction can only
   cost time, never results. The one exception (ADVICE r8): plans whose
   downstream arithmetic depends on ``spark_partition_id`` of THIS
-  materialization (the range-partitioned cumsum operators collect
+  materialization (the rank device in operators/_rank.py collects
   per-(pid, group) offsets from the cached frame). Re-execution
   re-samples the RangePartitioner (seeded by the new shuffle RDD id),
   so rows can land on different partition ids than the collected

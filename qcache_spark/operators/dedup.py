@@ -1192,67 +1192,16 @@ class MinHashIndex:
             F.col("_id").alias("batch_id"),
             F.posexplode("_bands").alias("_band", "_bucket"),
         )
-        # Touched buckets only. Two result-identical narrowings
-        # (complete buckets kept either way, so the cap window below
-        # still sees true bucket sizes):
-        #
-        # - POINT-PROBE literal path (VERDICT r12 Next #6): when the
-        #   batch touches few (band, bucket) keys — the "is this one
-        #   document a near-dup" serving shape — collect them and
-        #   filter the postings scan with LITERALS. `_bucket IN (...)`
-        #   is a pushable data predicate, so the parquet reader skips
-        #   row groups via min/max stats (compact() sorts postings by
-        #   (_bucket, _id) inside each band partition exactly for
-        #   this), and `_band IN (...)` is a partition prune. The
-        #   exact pair match runs post-scan (cheap, rows already
-        #   row-group-pruned). No broadcast, no join on the scan.
-        #   OPT-IN (default 0 = off): deciding needs a key-count
-        #   take(), an extra driver job that measured ~0.3 s per
-        #   probe on BATCH-sized probes (q107/q116, control-
-        #   normalized back-to-back) — a latency-serving deployment
-        #   that probes single documents sets the conf; batch
-        #   pipelines keep the jobless semi-join.
-        # - SEMI-JOIN path: large batches (bench's corpus/4) would
-        #   need O(|batch| x bands) literals — plan-bloat — so the
-        #   touched keys stay a broadcast semi-join; row-group
-        #   pruning is structurally unavailable to dynamic keys here
-        #   (documented limitation, not an oversight).
+        # Touched buckets only, as a broadcast semi-join (complete
+        # buckets are kept, so the cap window below still sees true
+        # bucket sizes). Row-group pruning is structurally unavailable
+        # to these dynamic keys; a literal-key pushdown would need an
+        # extra driver job to collect them, which measured ~0.3 s per
+        # batch probe (q107/q116).
         bkeys = bbuckets.select("_band", "_bucket").distinct()
-        max_lit = int(
-            self._spark.conf.get(
-                "spark.qcache.minhash.probeLiteralMaxKeys", "0"
-            )
+        touched = self._live_postings().join(
+            F.broadcast(bkeys), ["_band", "_bucket"], "left_semi"
         )
-        key_rows = bkeys.take(max_lit + 1) if max_lit > 0 else []
-        if 0 < len(key_rows) <= max_lit:
-            pair_match = None
-            for r in key_rows:
-                clause = (F.col("_band") == r["_band"]) & (
-                    F.col("_bucket") == r["_bucket"]
-                )
-                pair_match = clause if pair_match is None else (
-                    pair_match | clause
-                )
-            touched = (
-                self._live_postings()
-                .filter(
-                    F.col("_band").isin(
-                        sorted({r["_band"] for r in key_rows})
-                    )
-                )
-                # the pushable row-group pruner: a superset of the
-                # exact pair set, refined by pair_match post-scan
-                .filter(
-                    F.col("_bucket").isin(
-                        sorted({r["_bucket"] for r in key_rows})
-                    )
-                )
-                .filter(pair_match)
-            )
-        else:
-            touched = self._live_postings().join(
-                F.broadcast(bkeys), ["_band", "_bucket"], "left_semi"
-            )
         w_bucket = Window.partitionBy("_band", "_bucket")
         capped = touched.withColumn(
             "_n", F.count(F.lit(1)).over(w_bucket)

@@ -35,6 +35,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from qcache_spark import opcache
+from qcache_spark.operators import _rank
 
 # 60 bits: fits a signed 64-bit long, and 15 hex chars of md5 parse
 # identically in Spark (conv) and DuckDB ('0x...'::BIGINT).
@@ -232,15 +233,7 @@ def negative_pairs(
     return cand.join(ids, "negative_id").select("anchor_id", "j", "negative_id")
 
 
-# curriculum_buckets' returned plan reads its persisted input, so
-# eviction is deferred to the NEXT registration — managed by the
-# central cross-family registry (qcache_spark.opcache) since r7
 _CURRICULUM_FAMILY = "sampling.curriculum"
-
-# above this many per-partition offset entries, broadcast-join the
-# offsets instead of shipping a literal create_map (plan-size guard —
-# see operators/timeseries.py:LITERAL_MAP_MAX)
-LITERAL_MAP_MAX = 1024
 
 
 def curriculum_buckets(
@@ -257,90 +250,26 @@ def curriculum_buckets(
     curriculum-learning / quality-threshold primitive: train on
     buckets >= b, or schedule buckets easy->hard.
 
-    DISTRIBUTED exact NTILE — no single-reducer global sort (a bare
-    ``Window.orderBy`` moves the whole table through ONE partition;
-    VERDICT r5 "What's wrong" #1). Plan instead:
-
-      1. ``repartitionByRange(score, id)`` — one range shuffle; ids are
-         unique so the ordering key is total and partition p holds a
-         contiguous rank range.
-      2. ``row_number`` windowed BY PARTITION ID — each task sorts only
-         its own range slice (the same work a range-sort's reduce task
-         does), nothing is coalesced.
-      3. Per-partition counts -> driver (O(num_partitions) scalars, the
-         same cardinality every range sort's coordinator handles) ->
-         cumulative offsets joined back as a broadcast map.
-      4. global_rank = offset[pid] + local row_number; NTILE arithmetic
-         on the rank: with n rows, q = n div k, rem = n mod k, the
-         first rem buckets take q+1 rows (SQL NTILE semantics, matched
-         exactly so the DuckDB oracle stays valid).
-
-    Cost at 100 TB: one range-partitioner sample pass + one shuffle +
-    per-partition sorts — identical shape to any distributed sort-by —
-    versus the approx variant's single scan (curriculum_buckets_approx,
-    the cheaper path when quantile-balanced buckets are acceptable).
-    One extra job materializes the per-partition counts.
+    DISTRIBUTED exact NTILE: the global rank comes from the shared
+    range-partitioned device in ``operators/_rank.py`` (no
+    single-reducer global sort), and the bucket is NTILE arithmetic on
+    it: with n rows, q = n div k, rem = n mod k, the first rem buckets
+    take q+1 rows (SQL NTILE semantics, matched exactly so the DuckDB
+    oracle stays valid). Cost at 100 TB: one range-partitioner sample
+    pass + one shuffle + per-partition sorts + one counts job, versus
+    the approx variant's single scan (curriculum_buckets_approx, the
+    cheaper path when quantile-balanced buckets are acceptable).
     """
     if n_buckets < 1:
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
-    from pyspark.sql import Window
-
-    score = F.col(score_col).asc()
-    ident = F.col(id_col).asc()
-    if num_partitions is None:
-        ranged = df.repartitionByRange(score, ident)
-    else:
-        ranged = df.repartitionByRange(num_partitions, score, ident)
-    ranged = ranged.withColumn("__pid", F.spark_partition_id())
-    # Persist so the counts job and the final plan share one range
-    # shuffle instead of recomputing it (on a cluster: MEMORY_AND_DISK
-    # spills oversized slices to local disk, never to the driver).
-    # The cache must outlive this function (the RETURNED plan reads
-    # it), so it cannot be unpersisted here; instead each call evicts
-    # the PREVIOUS call's cache — a long-lived session holds at most
-    # one table copy per session instead of one per invocation.
-    # pinned: the returned plan's bucket arithmetic reads the collected
-    # per-__pid offsets of THIS materialization — budget eviction would
-    # let a recompute re-sample the RangePartitioner and land rows on
-    # different pids than the offsets assume (ADVICE r8)
-    ranged = opcache.cache(
-        df.sparkSession, _CURRICULUM_FAMILY, ranged, pinned=True
+    order = [F.col(score_col).asc(), F.col(id_col).asc()]
+    ranked = _rank.rank(
+        df, _CURRICULUM_FAMILY, order, num_partitions=num_partitions
     )
-    counts = sorted(
-        (r["__pid"], r["cnt"])
-        for r in ranged.groupBy("__pid").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    )  # O(num_partitions) rows — the only driver-side data
-    n = sum(c for _, c in counts)
-    if n == 0:
-        # nothing downstream will ever read the cache — drop it now
-        opcache.release(df.sparkSession, _CURRICULUM_FAMILY)
+    if ranked is None:
         return df.withColumn(bucket_col, F.lit(None).cast("int"))
-    offsets, acc = {}, 0
-    for pid, c in counts:
-        offsets[pid] = acc
-        acc += c
-    q, rem = divmod(n, n_buckets)
-    if len(offsets) <= LITERAL_MAP_MAX:
-        based = ranged
-        off = F.element_at(
-            F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv]),
-            F.col("__pid"),
-        )
-    else:
-        # 10^4+ partitions at 100 TB: a literal map that size is a
-        # multi-megabyte plan the driver must analyze — broadcast-join
-        # the offsets instead (same exactness, O(1) plan size)
-        odf = df.sparkSession.createDataFrame(
-            list(offsets.items()), "__opid int, __off long"
-        )
-        based = ranged.join(
-            F.broadcast(odf), F.col("__pid") == F.col("__opid")
-        ).drop("__opid")
-        off = F.col("__off")
-    local = F.row_number().over(
-        Window.partitionBy("__pid").orderBy(score, ident)
-    )
-    rank = (off + local).cast("long")  # 1-based global rank, exact
+    q, rem = divmod(ranked.totals[None], n_buckets)
+    rank = F.col("__rank")
     head = rem * (q + 1)  # rows covered by the (q+1)-sized buckets
 
     def idiv(a, b):  # exact integer division (float `/` can misround
@@ -351,7 +280,7 @@ def curriculum_buckets(
         .otherwise(F.lit(rem) + idiv(rank - 1 - head, F.greatest(F.lit(q), F.lit(1))))
         + 1
     ).cast("int")
-    return based.withColumn(bucket_col, bucket).drop("__pid", "__off")
+    return ranked.frame.withColumn(bucket_col, bucket).drop("__rank")
 
 
 _TOKEN_MIX_FAMILY = "sampling.token_mix"
@@ -386,15 +315,11 @@ def token_budget_mix(
     that point can shift (contrast per-partition RNG sampling, where
     any growth reshuffles everything).
 
-    Distributed-exact plan (the curriculum_buckets device, applied to
-    a grouped cumulative sum): ``repartitionByRange(domain, hash,
-    key)`` puts each domain's hash order into contiguous partition
-    slices; per-(partition, domain) token sums go to the driver
-    (O(partitions × domains) scalars) and come back as cumulative
-    offsets; the in-partition running sum is a window partitioned BY
-    PARTITION ID — so no domain ever funnels through one reducer,
-    which a bare ``Window.partitionBy(domain).orderBy(hash)`` would do
-    to every corpus-sized domain (the single-reducer trap, VERDICT r5).
+    Distributed-exact plan: the cumulative weight is the grouped
+    running-sum rank of ``operators/_rank.py`` over (domain, hash,
+    key), so no domain ever funnels through one reducer, which a bare
+    ``Window.partitionBy(domain).orderBy(hash)`` would do to every
+    corpus-sized domain.
 
     ``budgets`` maps the domain's STRING rendering (Spark's own cast,
     the same canonicalization grouped_percentile_stats uses) to a
@@ -425,103 +350,45 @@ def token_budget_mix(
         raise ValueError("budgets must be non-negative")
     if epochs < 1:
         raise ValueError(f"epochs must be >= 1, got {epochs}")
-    from pyspark.sql import Window
-
-    h = hash60(F.col(key_col), seed, hash_fn)
     base = df.filter(
         F.col(domain_col).isNotNull()
         & F.col(key_col).isNotNull()
         & F.col(weight_col).isNotNull()
-    ).withColumn("__h", h)
-    if num_partitions is None:
-        ranged = base.repartitionByRange(domain_col, "__h", key_col)
-    else:
-        ranged = base.repartitionByRange(
-            num_partitions, domain_col, "__h", key_col
-        )
-    ranged = ranged.withColumn("__pid", F.spark_partition_id())
-    # pinned: downstream cumsum reads this materialization's __pid
-    # layout (same ADVICE r8 argument as curriculum_buckets above)
-    ranged = opcache.cache(
-        df.sparkSession, _family, ranged, pinned=True
+    ).withColumn("__h", hash60(F.col(key_col), seed, hash_fn))
+    ranked = _rank.rank(
+        base,
+        _family,
+        [F.col("__h").asc(), F.col(key_col).asc()],
+        group=domain_col,
+        weight=F.col(weight_col).cast("long"),
+        num_partitions=num_partitions,
     )
-
-    gs = F.col(domain_col).cast("string")
-    counts = (
-        ranged.groupBy("__pid", gs.alias("__gs"))
-        # min rides along free in the same partial-agg job: a negative
-        # weight makes the cumulative sum non-monotone, so
-        # filter(cum <= budget) would select a NON-contiguous set and
-        # silently break the "maximal hash-order prefix" contract
-        # (ADVICE r8) — refuse instead.
-        .agg(
-            F.sum(F.col(weight_col).cast("long")).alias("__w"),
-            F.min(F.col(weight_col).cast("long")).alias("__wmin"),
-        )
-        .collect()
-    )  # O(partitions x domains) — the only driver-side data
-    neg = min((r["__wmin"] for r in counts), default=0)
-    if neg is not None and neg < 0:
-        opcache.release(df.sparkSession, _family)
-        raise ValueError(
-            f"token_budget_mix: negative weight {neg} in {weight_col!r} — "
-            "cumulative budgets require non-negative weights (filter or "
-            "clamp upstream)"
-        )
-    if not counts:
-        opcache.release(df.sparkSession, _family)
+    if ranked is None:
         return (
-            ranged.withColumn(cum_col, F.lit(0).cast("long"))
+            base.withColumn(cum_col, F.lit(0).cast("long"))
             .withColumn(epoch_col, F.lit(1).cast("int"))
-            .drop("__h", "__pid")
+            .drop("__h")
             .limit(0)
         )
-    offsets: dict = {}
-    totals: dict = {}
-    for r in sorted(counts, key=lambda r: (r["__gs"], r["__pid"])):
-        offsets[(r["__pid"], r["__gs"])] = totals.get(r["__gs"], 0)
-        totals[r["__gs"]] = totals.get(r["__gs"], 0) + (r["__w"] or 0)
-
-    if len(offsets) <= LITERAL_MAP_MAX:
-        pid_g = F.concat_ws("\x1f", F.col("__pid"), gs)
-        off = F.element_at(
-            F.create_map(
-                *[
-                    F.lit(x)
-                    for (pid, g), o in offsets.items()
-                    for x in (f"{pid}\x1f{g}", str(o))
-                ]
-            ),
-            pid_g,
-        ).cast("long")
-        based = ranged.withColumn("__off", off)
-    else:
-        # 100 TB: offsets as a broadcast-joined frame, O(1) plan size
-        odf = df.sparkSession.createDataFrame(
-            [(pid, g, o) for (pid, g), o in offsets.items()],
-            "__opid int, __ogs string, __off long",
+    # a negative weight makes the cumulative sum non-monotone, so
+    # filter(cum <= budget) would select a NON-contiguous set and
+    # silently break the "maximal hash-order prefix" contract (ADVICE
+    # r8) — refuse instead
+    if ranked.min_weight < 0:
+        opcache.release(df.sparkSession, _family)
+        raise ValueError(
+            f"token_budget_mix: negative weight {ranked.min_weight} in "
+            f"{weight_col!r} — cumulative budgets require non-negative "
+            "weights (filter or clamp upstream)"
         )
-        based = (
-            ranged.withColumn("__gs", gs)
-            .join(
-                F.broadcast(odf),
-                (F.col("__pid") == F.col("__opid"))
-                & (F.col("__gs") == F.col("__ogs")),
-            )
-            .drop("__opid", "__ogs", "__gs")
-        )
+    totals = ranked.totals
+    gs = F.col(domain_col).cast("string")
     budget = F.element_at(
         F.create_map(
             *[F.lit(x) for g, b in budgets.items() for x in (str(g), str(b))]
         ),
         gs,
     ).cast("long")
-    local = F.sum(F.col(weight_col).cast("long")).over(
-        Window.partitionBy("__pid", gs)
-        .orderBy(F.col("__h").asc(), F.col(key_col).asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    pre = based.withColumn("__cum1", (F.col("__off") + local).cast("long"))
 
     # Upsampling epochs (VERDICT r8 item 6): epoch e's overall
     # cumulative = (e-1) x domain_total + within-epoch cumulative, so
@@ -554,15 +421,15 @@ def token_budget_mix(
     out = None
     for e in range(1, n_eff + 1):
         cum_e = (
-            F.lit(e - 1).cast("long") * total_lit + F.col("__cum1")
+            F.lit(e - 1).cast("long") * total_lit + F.col("__rank")
         ).cast("long")
         branch = (
-            pre.withColumn(cum_col, cum_e)
+            ranked.frame.withColumn(cum_col, cum_e)
             .withColumn(epoch_col, F.lit(e).cast("int"))
             .filter(budget.isNotNull() & (F.col(cum_col) <= budget))
         )
         out = branch if out is None else out.unionByName(branch)
-    return out.drop("__h", "__pid", "__off", "__cum1")
+    return out.drop("__h", "__rank")
 
 
 def curriculum_buckets_approx(
@@ -799,67 +666,27 @@ def balanced_shards(
     are excluded (no stable identity); NULL weights sort as 0 via
     coalesce (documented, not silent: the row still gets a shard).
 
-    DISTRIBUTED exact global rank — the curriculum_buckets device
-    (see its plan notes; same shape, different final arithmetic): one
-    ``repartitionByRange`` on the sort key, per-partition
-    ``row_number`` windows, O(partitions) count scalars to the driver,
-    broadcast offsets back; NO single-reducer global window. Returns
-    the input rows plus ``shard_col`` (0-based) and, when ``rank_col``
-    is given, the 1-based global rank."""
+    DISTRIBUTED exact global rank: the device in ``operators/_rank.py``
+    (NO single-reducer global window). Returns the input rows plus
+    ``shard_col`` (0-based) and, when ``rank_col`` is given, the
+    1-based global rank."""
     if n_shards < 1:
         raise ValueError(f"n_shards must be >= 1, got {n_shards}")
-    from pyspark.sql import Window
-
     w = F.coalesce(F.col(weight_col), F.lit(0)).cast("long")
     base = df.filter(F.col(key_col).isNotNull()).withColumn("__w", w)
     order = [F.col("__w").desc(), F.col(key_col).asc()]
-    if num_partitions is None:
-        ranged = base.repartitionByRange(*order)
-    else:
-        ranged = base.repartitionByRange(num_partitions, *order)
-    ranged = ranged.withColumn("__pid", F.spark_partition_id())
-    # pinned: the returned plan's rank arithmetic reads the collected
-    # per-__pid offsets of THIS materialization (ADVICE r8 — same
-    # argument as curriculum_buckets)
-    ranged = opcache.cache(
-        df.sparkSession, _SHARDS_FAMILY, ranged, pinned=True
+    ranked = _rank.rank(
+        base, _SHARDS_FAMILY, order, num_partitions=num_partitions
     )
-    counts = sorted(
-        (r["__pid"], r["cnt"])
-        for r in ranged.groupBy("__pid")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
-    )  # O(num_partitions) rows — the only driver-side data
-    if not counts:
-        opcache.release(df.sparkSession, _SHARDS_FAMILY)
-        out = ranged.withColumn(shard_col, F.lit(None).cast("int"))
+    if ranked is None:
+        out = base.withColumn(shard_col, F.lit(None).cast("int"))
         if rank_col is not None:
             out = out.withColumn(rank_col, F.lit(None).cast("long"))
-        return out.drop("__w", "__pid")
-    offsets, acc = {}, 0
-    for pid, c in counts:
-        offsets[pid] = acc
-        acc += c
-    if len(offsets) <= LITERAL_MAP_MAX:
-        based = ranged
-        off = F.element_at(
-            F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv]),
-            F.col("__pid"),
-        )
-    else:
-        # 10^4+ partitions: broadcast-join the offsets, O(1) plan size
-        odf = df.sparkSession.createDataFrame(
-            list(offsets.items()), "__opid int, __off long"
-        )
-        based = ranged.join(
-            F.broadcast(odf), F.col("__pid") == F.col("__opid")
-        ).drop("__opid")
-        off = F.col("__off")
-    local = F.row_number().over(Window.partitionBy("__pid").orderBy(*order))
-    rank = (off + local).cast("long")  # 1-based global rank, exact
-    out = based.withColumn(
+        return out.drop("__w")
+    rank = F.col("__rank")
+    out = ranked.frame.withColumn(
         shard_col, F.pmod(rank - 1, F.lit(int(n_shards))).cast("int")
     )
     if rank_col is not None:
         out = out.withColumn(rank_col, rank)
-    return out.drop("__w", "__pid", "__off")
+    return out.drop("__w", "__rank")

@@ -323,40 +323,35 @@ class QCacheHandler(BaseHTTPRequestHandler):
         self._guard(self._do_get)
 
     def _do_get(self):
-        try:
-            route, key, query = self._route()
-            if route == "status":
-                self._send(200, b"OK", "text/plain")
-            elif route == "statistics":
-                snap = self.stats.snapshot_and_reset()
-                snap["dataset_count"] = len(self.catalog)
-                snap["cache_size"] = self.catalog.size
-                self._send(200, json.dumps(snap).encode())
-            elif route == "opcaches":
-                # operator-lifetime persisted-frame registry
-                # (qcache_spark/opcache.py): what's pinned right now
-                from qcache_spark import opcache
+        route, key, query = self._route()
+        if route == "status":
+            self._send(200, b"OK", "text/plain")
+        elif route == "statistics":
+            snap = self.stats.snapshot_and_reset()
+            snap["dataset_count"] = len(self.catalog)
+            snap["cache_size"] = self.catalog.size
+            self._send(200, json.dumps(snap).encode())
+        elif route == "opcaches":
+            # operator-lifetime persisted-frame registry
+            # (qcache_spark/opcache.py): what's pinned right now
+            from qcache_spark import opcache
 
-                self._send(
-                    200,
-                    json.dumps(
-                        {
-                            "families": opcache.families(self.spark),
-                            "cached_bytes": opcache.cached_bytes(self.spark),
-                        }
-                    ).encode(),
-                )
-            elif route == "dataset":
-                if "q" not in query:
-                    self._error(400, "Missing query parameter q")
-                    return
-                self._run_query(key, query["q"][0])
-            else:
-                self._error(404, "Not found")
-        except _NotAcceptable as e:
-            self._error(406, f"Not acceptable: {e}")
-        except MalformedQueryException as e:
-            self._error(400, str(e))
+            self._send(
+                200,
+                json.dumps(
+                    {
+                        "families": opcache.families(self.spark),
+                        "cached_bytes": opcache.cached_bytes(self.spark),
+                    }
+                ).encode(),
+            )
+        elif route == "dataset":
+            if "q" not in query:
+                self._error(400, "Missing query parameter q")
+                return
+            self._run_query(key, query["q"][0])
+        else:
+            self._error(404, "Not found")
 
     def do_POST(self):
         self._guard(self._do_post)
@@ -415,9 +410,9 @@ class QCacheHandler(BaseHTTPRequestHandler):
         if key in self.catalog:
             self.stats.inc("replace_count")
         self.stats.inc("store_count")
-        self.catalog.insert(key, df, enum_columns, bucket_by=bucket_by)
+        item = self.catalog.insert(key, df, enum_columns, bucket_by=bucket_by)
         self.stats.append("store_durations", time.perf_counter() - t0)
-        self.stats.append("store_row_counts", df.count())
+        self.stats.append("store_row_counts", item.row_count)
         self._send(201)
 
     def _run_query(self, key: str, q_text: str) -> None:

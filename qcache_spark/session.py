@@ -45,10 +45,6 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # Parquet TIMESTAMP(NANOS) (e.g. pandas-written event streams) is
-        # otherwise an illegal type for the Spark reader; read as long
-        # and convert in load_table.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
@@ -69,6 +65,19 @@ TABLE_NAMES = (
     "documents",
     "embeddings",
 )
+
+
+def allow_parquet_nanos(spark: SparkSession) -> None:
+    """Make parquet TIMESTAMP(NANOS) columns (pandas-written event
+    files) readable on ``spark``, which may be a session not built by
+    get_spark(). Older runtimes reject the type unless
+    ``spark.sql.legacy.parquet.nanosAsLong`` is set and then surface a
+    long; Spark ≥4.1 ignores the conf and reads timestamp_ntz.
+    normalize_event_ts canonicalizes either form."""
+    try:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    except Exception:
+        pass  # conf removed entirely in some future runtime
 
 
 def normalize_event_ts(df, col: str = "ts"):
@@ -122,16 +131,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str):
     """Read one synthetic table. Parquet scan → Catalyst gets column
     pruning + predicate pushdown for free on every query we compile."""
     if name == "events":
-        # The caller may hand us a session that was NOT built by
-        # get_spark() (e.g. an external harness). On runtimes whose
-        # reader rejects TIMESTAMP(NANOS) outright, nanosAsLong makes
-        # the file readable; normalize_event_ts then canonicalizes
-        # whatever representation came back. Spark ≥4.1 ignores the
-        # conf and reads ntz natively — also handled.
-        try:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        except Exception:
-            pass  # conf removed entirely in some future runtime
+        allow_parquet_nanos(spark)
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         df = normalize_event_ts(df)

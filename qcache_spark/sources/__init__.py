@@ -13,8 +13,6 @@ from .ingest import (
     parse_stand_in_header,
     rows_to_csv,
     rows_to_json,
-    to_csv,
-    to_json_records,
 )
 
 __all__ = [
@@ -28,6 +26,4 @@ __all__ = [
     "parse_stand_in_header",
     "rows_to_csv",
     "rows_to_json",
-    "to_csv",
-    "to_json_records",
 ]

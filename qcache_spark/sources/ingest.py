@@ -245,23 +245,3 @@ def rows_to_json(rows: list) -> str:
             d[k] = v
         out.append(d)
     return json.dumps(out, default=str)
-
-
-def to_csv(df: DataFrame) -> str:
-    """Result page → CSV string. Results are post-limit and
-    driver-sized (reference to_csv, qcache/qframe/__init__.py:82-83)."""
-    return df.toPandas().to_csv(index=False)
-
-
-def to_json_records(df: DataFrame) -> str:
-    """Result page → JSON records. `inf` serializes as null, matching
-    the reference wire contract (test_api.py:109-116)."""
-    rows = []
-    for row in df.collect():
-        d = {}
-        for k, v in row.asDict().items():
-            if isinstance(v, float) and (math.isinf(v) or math.isnan(v)):
-                v = None
-            d[k] = v
-        rows.append(d)
-    return json.dumps(rows)

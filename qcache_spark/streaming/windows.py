@@ -45,12 +45,9 @@ def read_event_stream(
     then canonicalized to TimestampNTZType exactly like the batch path
     (session.normalize_event_ts), so stream ≡ batch by construction.
     """
-    from ..session import normalize_event_ts
+    from ..session import allow_parquet_nanos, normalize_event_ts
 
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass
+    allow_parquet_nanos(spark)
     observed = spark.read.parquet(path).schema
     reader = spark.readStream.schema(observed)
     if max_files_per_trigger:

@@ -92,7 +92,7 @@ def test_bucketed_insert_groupby_window_no_exchange(spark):
     df = spark.range(2000).selectExpr(
         "id % 97 as k", "id as v", "cast(id % 7 as double) as w"
     )
-    item = cat.insert("bk", df, bucket_by=("k", 4), materialize=False)
+    item = cat.insert("bk", df, bucket_by=("k", 4))
     try:
         assert item.bucket_by == (("k",), 4)
         assert item.df.count() == 2000
@@ -118,7 +118,7 @@ def test_bucketed_replace_keeps_layout_and_cleans_up(spark):
 
     cat = DatasetCatalog(max_cache_size_bytes=1 << 30)
     df = spark.range(100).selectExpr("id % 5 as k", "id as v")
-    first = cat.insert("bk2", df, bucket_by=(["k"], 2), materialize=False)
+    first = cat.insert("bk2", df, bucket_by=(["k"], 2))
     first_path = first.bucket_path
     assert first_path and os.path.isdir(first_path)
     item = cat.replace_df("bk2", spark.range(50).selectExpr("id % 5 as k", "id as v"))

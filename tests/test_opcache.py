@@ -202,14 +202,64 @@ def test_pinned_family_survives_budget_eviction(spark):
 
 
 def test_pid_dependent_operators_register_pinned(spark, sf_dir):
-    """The three spark_partition_id-dependent operator families carry
-    the pin (regression guard for ADVICE r8)."""
-    from qcache_spark.operators.sampling import token_budget_mix
+    """Every spark_partition_id-dependent operator family carries the
+    pin (regression guard for ADVICE r8)."""
+    from qcache_spark.operators import sampling
+    from qcache_spark.operators.timeseries import grouped_percentile_stats
     from qcache_spark.session import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    token_budget_mix(docs, "lang", "n_chars", {"en": 1000}).count()
-    assert "sampling.token_mix" in opcache.pinned_families(spark)
+    events = load_table(spark, sf_dir, "events")
+    sampling.curriculum_buckets(docs, "n_chars", 4).count()
+    sampling.balanced_shards(docs, "n_chars", 4).count()
+    sampling.token_budget_mix(docs, "lang", "n_chars", {"en": 1000}).count()
+    sampling.distribution_matched_sample(docs, "lang", {"en": 1}).count()
+    grouped_percentile_stats(events, pct=0.9).count()
+    assert set(opcache.pinned_families(spark)) == {
+        "sampling.curriculum",
+        "sampling.shards",
+        "sampling.token_mix",
+        "sampling.dist_match",
+        "timeseries.percentile",
+    }
+
+
+def test_rank_device_lives_only_in_rank_module():
+    """The distributed-rank device exists once: no package module but
+    operators/_rank.py reads spark_partition_id or registers a pinned
+    opcache family, and the rank operators keep no plan-size policy
+    or range shuffle of their own."""
+    import ast
+    import os
+
+    import qcache_spark
+
+    pkg = os.path.dirname(qcache_spark.__file__)
+    offenders = []
+    for root, _, files in os.walk(pkg):
+        for name in files:
+            path = os.path.join(root, name)
+            rel = os.path.relpath(path, pkg)
+            if not name.endswith(".py") or rel == os.path.join("operators", "_rank.py"):
+                continue
+            tree = ast.parse(open(path).read())
+            for node in ast.walk(tree):
+                used = (
+                    isinstance(node, ast.Attribute) and node.attr == "spark_partition_id"
+                ) or (isinstance(node, ast.Name) and node.id == "spark_partition_id")
+                pinned = (
+                    isinstance(node, ast.keyword)
+                    and node.arg == "pinned"
+                    and isinstance(node.value, ast.Constant)
+                    and node.value.value is True
+                )
+                if used or pinned:
+                    offenders.append(f"{rel}:{getattr(node, 'lineno', '?')}")
+    assert not offenders, offenders
+    for rel in ("operators/sampling.py", "operators/timeseries.py"):
+        src = open(os.path.join(pkg, rel)).read()
+        assert "LITERAL_MAP_MAX" not in src, rel
+        assert "repartitionByRange(" not in src, rel
 
 
 def test_session_dead_detects_stopped_context():

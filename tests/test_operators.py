@@ -3050,35 +3050,39 @@ def test_grouped_percentile_no_single_partition_window(spark, sf_dir):
 
 
 def test_broadcast_offsets_path_matches_literal(spark, sf_dir, docs, monkeypatch):
-    """Above LITERAL_MAP_MAX offset entries the NTILE/percentile
-    devices ship offsets as a broadcast DataFrame instead of a literal
-    create_map (plan-size guard for 10^4+-partition clusters). Forcing
-    the broadcast path must change NOTHING in the results, and the
-    plan must carry no giant literal map."""
-    from qcache_spark.operators import sampling, timeseries
+    """Above _rank.LITERAL_MAP_MAX offset entries the rank device ships
+    offsets as a broadcast DataFrame instead of a literal create_map
+    (plan-size guard for 10^4+-partition clusters). Forcing the
+    broadcast path must change NOTHING in any caller's results, and
+    the plan must carry no giant literal map."""
+    from qcache_spark.operators import _rank, sampling, timeseries
 
-    docs32 = docs.repartition(8)
-    lit = {
-        r["doc_id"]: r["bucket"]
-        for r in sampling.curriculum_buckets(docs32, "n_chars", 4).collect()
-    }
-    monkeypatch.setattr(sampling, "LITERAL_MAP_MAX", 0)
-    bc_df = sampling.curriculum_buckets(docs32, "n_chars", 4)
-    assert "map_from_arrays" not in bc_df._jdf.queryExecution().optimizedPlan().toString()
-    bc = {r["doc_id"]: r["bucket"] for r in bc_df.collect()}
-    assert bc == lit
-
+    docs8 = docs.repartition(8)
     events = load_table(spark, sf_dir, "events")
-    lit_p = {
-        r["event_type"]: (r["n"], r["k"], r["p_value"], r["n_tail"], r["win_sum_e4"])
-        for r in timeseries.grouped_percentile_stats(events, pct=0.9).collect()
+    calls = {
+        "curriculum": lambda: sampling.curriculum_buckets(docs8, "n_chars", 4),
+        "shards": lambda: sampling.balanced_shards(
+            docs8, "n_chars", 3, rank_col="r"
+        ),
+        "token_mix": lambda: sampling.token_budget_mix(
+            docs8, "lang", "n_chars", {"en": 5000, "de": 3000}, epochs=2
+        ),
+        "percentile": lambda: timeseries.grouped_percentile_stats(events, pct=0.9),
     }
-    monkeypatch.setattr(timeseries, "LITERAL_MAP_MAX", 0)
-    bc_p = {
-        r["event_type"]: (r["n"], r["k"], r["p_value"], r["n_tail"], r["win_sum_e4"])
-        for r in timeseries.grouped_percentile_stats(events, pct=0.9).collect()
-    }
-    assert bc_p == lit_p
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    lit = {name: rows(call()) for name, call in calls.items()}
+    monkeypatch.setattr(_rank, "LITERAL_MAP_MAX", 0)
+    for name, call in calls.items():
+        df = call()
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "__opid" in plan, name  # the broadcast offsets join
+        if name in ("curriculum", "shards"):  # no literal map of their own
+            assert "map_from_arrays" not in plan, name
+        assert rows(df) == lit[name], name
+        assert lit[name], name
 
 
 def test_grouped_percentile_non_string_group_types(spark):

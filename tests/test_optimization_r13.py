@@ -165,40 +165,3 @@ def test_ivf_corpus_write_salts_by_size(spark, tmp_path):
             spark.conf.unset("spark.qcache.ivf.targetFileBytes")
         else:
             spark.conf.set("spark.qcache.ivf.targetFileBytes", old)
-
-
-def test_minhash_point_probe_literal_pushdown(spark, docs, tmp_path):
-    """VERDICT r12 Next #6: a small probe (few touched (band, bucket)
-    keys) must narrow the postings SCAN with literal filters — a
-    pushable `_bucket IN (...)` (row-group pruning against compact()'s
-    (_bucket, _id) sort) and a `_band` partition prune — instead of
-    the broadcast semi-join, and return the exact same pairs."""
-    from qcache_spark.operators.dedup import MinHashIndex
-
-    path = str(tmp_path / "mh_literal")
-    corpus = docs.filter("doc_id % 4 != 0")
-    batch = docs.filter("doc_id = 0").select("doc_id", "text")
-    idx = MinHashIndex(corpus)
-    idx.write(spark, path)
-    # the literal path is an opt-in serving-latency mode (the key-count
-    # take() costs a driver job that batch probes should not pay)
-    old = spark.conf.get("spark.qcache.minhash.probeLiteralMaxKeys", None)
-    try:
-        spark.conf.set("spark.qcache.minhash.probeLiteralMaxKeys", "256")
-        out = idx.probe(batch, verify_threshold=None)
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "PushedFilters" in plan
-        pushed = plan.split("PushedFilters")[1][:400]
-        assert "_bucket" in pushed, pushed
-        got = {(r["batch_id"], r["corpus_id"]) for r in out.collect()}
-    finally:
-        if old is None:
-            spark.conf.unset("spark.qcache.minhash.probeLiteralMaxKeys")
-        else:
-            spark.conf.set("spark.qcache.minhash.probeLiteralMaxKeys", old)
-    # default path (semi-join): same pair set
-    want = {
-        (r["batch_id"], r["corpus_id"])
-        for r in idx.probe(batch, verify_threshold=None).collect()
-    }
-    assert got == want

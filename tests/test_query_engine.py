@@ -734,7 +734,7 @@ def test_division_by_zero_yields_null_not_error(spark):
     # the engine compiles `/` to try_divide -> null, matching the
     # wire contract (documented deviation for the CSV path).
     from tests.conftest import make_frame
-    from qcache_spark.sources import to_json_records
+    from qcache_spark.sources import rows_to_json
     import json
 
     frame = make_frame(spark, "foo,bar\n1,0\n1,2\n")
@@ -745,7 +745,7 @@ def test_division_by_zero_yields_null_not_error(spark):
         (r["q"] is None, r["q"]) for r in result.collect()
     )
     assert values[0] == (False, 0.5) and values[1][0] is True
-    wire = json.loads(to_json_records(result))
+    wire = json.loads(rows_to_json(result.collect()))
     assert sorted(wire, key=repr) == sorted([{"q": 0.5}, {"q": None}], key=repr)
 
 
