@@ -1,10 +1,11 @@
 """Index maintenance CLI: ``python -m qcache_spark.index_tool``.
 
-The persisted-index lifecycle (MinHashIndex / IVFIndex) is maintained
-OUT-OF-BAND from the jobs that probe it — compaction runs on a
-schedule, a dead admitter's lease needs an operator override, a
-deliberate checkpoint migration needs a watermark reset. This module
-is that operator surface, one command per maintenance verb:
+The persisted-index lifecycle (MinHashIndex / IVFIndex / ZTable,
+operators/_lifecycle.py) is maintained OUT-OF-BAND from the jobs that
+probe it — compaction runs on a schedule, a dead admitter's lease
+needs an operator override, a deliberate checkpoint migration needs a
+watermark reset. This module is that operator surface, one command
+per maintenance verb:
 
     python -m qcache_spark.index_tool stats          /path/to/index
     python -m qcache_spark.index_tool fsck           /path/to/index
@@ -32,7 +33,8 @@ files) and reports errors/warnings without touching anything.
 Paths may be any Hadoop-FS URI (``file:``, ``hdfs://``, ``s3a://``) —
 every filesystem touch goes through qcache_spark/hadoopfs.py. The
 index family is auto-detected from the ``_meta`` sidecar (MinHash
-metas carry ``num_perm``/``bands``; IVF metas carry ``centroids``).
+metas carry ``num_perm``/``bands``; IVF metas carry ``centroids``;
+ZTable metas carry ``chunks``/``bounds``).
 Output is one JSON line per command, machine-consumable.
 
 The reference engine has no index artifacts and hence no such tool;
@@ -45,43 +47,55 @@ import argparse
 import json
 import sys
 
+from qcache_spark import hadoopfs as hfs
+from qcache_spark.lease import LEASE_FILE
 
-def detect_family(spark, path: str) -> str:
-    """'minhash', 'ivf' or 'ztable', from the _meta sidecar's keys."""
-    from qcache_spark import hadoopfs as hfs
 
-    meta = hfs.read_meta_sidecar(spark, path)
+def _family(meta: dict) -> str | None:
     if "num_perm" in meta and "bands" in meta:
         return "minhash"
     if "centroids" in meta:
         return "ivf"
     if "chunks" in meta and "bounds" in meta:
         return "ztable"
-    raise ValueError(
-        f"unrecognized index meta at {path + '_meta'!r}: "
-        f"keys {sorted(meta)}"
-    )
+    return None
+
+
+def detect_family(spark, path: str) -> str:
+    """'minhash', 'ivf' or 'ztable', from the _meta sidecar's keys."""
+    meta = hfs.read_meta_sidecar(spark, path)
+    family = _family(meta)
+    if family is None:
+        raise ValueError(
+            f"unrecognized index meta at {path + '_meta'!r}: "
+            f"keys {sorted(meta)}"
+        )
+    return family
+
+
+def _index_class(family: str):
+    if family == "minhash":
+        from qcache_spark.operators.dedup import MinHashIndex
+
+        return MinHashIndex
+    if family == "ztable":
+        from qcache_spark.operators.layout import ZTable
+
+        return ZTable
+    from qcache_spark.operators.similarity import IVFIndex
+
+    return IVFIndex
 
 
 def load_index(spark, path: str):
     family = detect_family(spark, path)
-    if family == "minhash":
-        from qcache_spark.operators.dedup import MinHashIndex
-
-        return family, MinHashIndex.load(spark, path)
-    if family == "ztable":
-        from qcache_spark.operators.layout import ZTable
-
-        return family, ZTable.load(spark, path)
-    from qcache_spark.operators.similarity import IVFIndex
-
-    return family, IVFIndex.load(spark, path)
+    return family, _index_class(family).load(spark, path)
 
 
 def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(
         prog="qcache_spark.index_tool",
-        description="Maintain persisted MinHash/IVF indexes",
+        description="Maintain persisted MinHash/IVF indexes and ZTables",
     )
     p.add_argument(
         "command",
@@ -114,9 +128,7 @@ def fsck(spark, path: str) -> dict:
     may simply belong to a live admitter). One metadata read + two
     aggregate scans; no corpus text/vectors are materialized and
     nothing is modified."""
-    import json as _json
-
-    from qcache_spark import hadoopfs as hfs
+    from qcache_spark.operators import _lifecycle
 
     report: dict = {"index": path, "errors": [], "warnings": [], "info": {}}
 
@@ -127,80 +139,45 @@ def fsck(spark, path: str) -> dict:
         report["warnings"].append({"check": check, "detail": detail})
 
     try:
-        from qcache_spark import hadoopfs as _hfs
-
-        meta = _hfs.read_meta_sidecar(spark, path)
+        meta = hfs.read_meta_sidecar(spark, path)
     except Exception as e:
         err("meta", f"unreadable meta sidecar at {path + '_meta'!r}: {e}")
         report["ok"] = False
         return report
-    if "num_perm" in meta and "bands" in meta:
-        family = "minhash"
-        live_gen = meta.get("postings_generation", 0)
-    elif "centroids" in meta:
-        family = "ivf"
-        live_gen = meta.get("data_generation", 0)
-    elif "chunks" in meta and "bounds" in meta:
+    family = _family(meta)
+    if family == "ztable":
         return _fsck_ztable(spark, path, meta, report)
-    else:
+    if family is None:
         err("meta", f"unrecognized meta key set {sorted(meta)}")
         report["ok"] = False
         return report
+    layout = _index_class(family).LAYOUT
+    live_gen = meta.get(layout.pointer, 0)
     report["family"] = family
     report["info"]["live_generation"] = live_gen
 
     # ---- meta pointer vs on-disk generation dirs (no load() yet:
     # a dangling pointer is exactly the case load() cannot survive)
-    names = hfs.list_names(spark, path)
-    if family == "minhash":
-        gens = {0} if "postings" in names else set()
-        gens |= {
-            int(n[len("postings_g"):])
-            for n in names
-            if n.startswith("postings_g") and n[len("postings_g"):].isdigit()
-        }
-        sets_gens = {0} if "sets" in names else set()
-        sets_gens |= {
-            int(n[len("sets_g"):])
-            for n in names
-            if n.startswith("sets_g") and n[len("sets_g"):].isdigit()
-        }
-        if live_gen not in gens or live_gen not in sets_gens:
-            err(
-                "generation",
-                f"meta points at generation {live_gen} but its data "
-                f"dirs are missing (postings gens {sorted(gens)}, "
-                f"sets gens {sorted(sets_gens)})",
-            )
-        if gens != sets_gens:
-            err(
-                "generation",
-                f"postings generations {sorted(gens)} != sets "
-                f"generations {sorted(sets_gens)}",
-            )
-    else:
-        gens = {0} if any(n.startswith("cluster_id=") for n in names) else set()
-        gens |= {
-            int(n[len("data_g"):])
-            for n in names
-            if n.startswith("data_g") and n[len("data_g"):].isdigit()
-        }
-        if live_gen not in gens:
-            err(
-                "generation",
-                f"meta points at generation {live_gen} but on-disk "
-                f"generations are {sorted(gens)}",
-            )
+    gens = _lifecycle.generations(spark, path, layout)
+    on_disk = ", ".join(f"{s} gens {sorted(g)}" for s, g in gens.items())
+    if any(live_gen not in g for g in gens.values()):
+        err(
+            "generation",
+            f"meta points at generation {live_gen} but its data "
+            f"dirs are missing ({on_disk})",
+        )
+    if len({frozenset(g) for g in gens.values()}) > 1:
+        err("generation", f"data dirs disagree on generations ({on_disk})")
     report["info"]["superseded_generations"] = sorted(
-        g for g in gens if g < live_gen
+        g for g in gens[layout.stems[0]] if g < live_gen
     )
 
     # ---- stranded control files
     root = path.rstrip("/")
-    lease_text = hfs.read_text(spark, root + "/_admission_lease.json")
+    lease_text = hfs.read_text(spark, root + "/" + LEASE_FILE)
     if lease_text is not None:
         try:
-            holder = _json.loads(lease_text).get("owner")
+            holder = json.loads(lease_text).get("owner")
         except ValueError:
             holder = f"<unparseable: {lease_text[:60]!r}>"
         warn(
@@ -208,17 +185,17 @@ def fsck(spark, path: str) -> dict:
             f"single-writer lease held by {holder!r} — fine if that "
             "writer is live; break-lease only if it is confirmed dead",
         )
-    marker = hfs.read_text(spark, root + "/_admission_progress.json")
+    marker = hfs.read_text(spark, root + "/" + _lifecycle.PROGRESS_FILE)
     if marker is not None:
         try:
-            report["info"]["admission_progress"] = _json.loads(marker)
+            report["info"]["admission_progress"] = json.loads(marker)
         except ValueError:
             warn(
                 "watermark",
                 "admission progress marker is unparseable (replay "
                 "protection degraded to at-least-once)",
             )
-    for n in names:
+    for n in hfs.list_names(spark, path):
         if n.endswith(".tmp"):
             warn("tmp", f"half-written control file {n!r} (crashed writer)")
 
@@ -230,10 +207,8 @@ def fsck(spark, path: str) -> dict:
     _, idx = load_index(spark, path)
     from pyspark.sql import functions as F
 
-    if family == "minhash":
-        id_col, ids = "_id", idx.sets.select("_id")
-    else:
-        id_col, ids = idx.id_col, idx.assigned.select(idx.id_col)
+    id_col = idx._tomb_col
+    ids = idx._stored().select(id_col)
     dup = (
         ids.groupBy(id_col)
         .agg(F.count(F.lit(1)).alias("n"))
@@ -272,7 +247,7 @@ def fsck(spark, path: str) -> dict:
                 f"cluster_id range [{rng['lo']}, {rng['hi']}] outside "
                 f"[0, {idx.n_centroids})",
             )
-        if getattr(idx, "store_int8", False) and (
+        if idx.store_int8 and (
             "_qvec" not in idx.assigned.columns
             or "_scale" not in idx.assigned.columns
         ):
@@ -280,10 +255,10 @@ def fsck(spark, path: str) -> dict:
                 "int8_schema",
                 "meta says store_int8 but stored rows lack _qvec/_scale",
             )
-        if getattr(idx, "store_pq", False) and (
+        if idx.store_pq and (
             "_pcodes" not in idx.assigned.columns
             or "_pnorm" not in idx.assigned.columns
-            or not getattr(idx, "pq_codebooks", None)
+            or not idx.pq_codebooks
         ):
             err(
                 "pq_schema",
@@ -291,11 +266,10 @@ def fsck(spark, path: str) -> dict:
                 "or the sidecar carries no codebooks",
             )
     if idx.tombstones is not None:
-        tcol = "_id" if family == "minhash" else idx.id_col
         orphan_tombs = (
-            idx.tombstones.select(tcol)
+            idx.tombstones.select(id_col)
             .distinct()
-            .join(ids.distinct(), tcol, "left_anti")
+            .join(ids.distinct(), id_col, "left_anti")
             .count()
         )
         if orphan_tombs:
@@ -314,8 +288,6 @@ def _resolve_dataset(spark, path: str):
     root (detected by its ``_meta`` sidecar) resolves through the
     meta pointer to the LIVE chunk set — gating a maintained table
     must see exactly what readers see, not stranded/retired dirs."""
-    from qcache_spark import hadoopfs as hfs
-
     if hfs.exists(spark, path + "_meta"):
         try:
             if detect_family(spark, path) == "ztable":
@@ -427,8 +399,6 @@ def _fsck_ztable(spark, path: str, meta: dict, report: dict) -> dict:
     the meta does NOT name are stranded (a crashed writer's output —
     invisible to readers, but disk the retention story never ages
     out). Metadata-only: no chunk data is read."""
-    from qcache_spark import hadoopfs as hfs
-
     def err(check, detail):
         report["errors"].append({"check": check, "detail": detail})
 
@@ -468,9 +438,7 @@ def _fsck_ztable(spark, path: str, meta: dict, report: dict) -> dict:
             f"chunk dirs not in the meta: {stranded} (crashed writer "
             "output — safe to delete)",
         )
-    lease_text = hfs.read_text(
-        spark, path.rstrip("/") + "/_admission_lease.json"
-    )
+    lease_text = hfs.read_text(spark, path.rstrip("/") + "/" + LEASE_FILE)
     if lease_text is not None:
         warn(
             "lease",
@@ -537,9 +505,7 @@ def main(argv: list[str] | None = None) -> int:
     spark.sparkContext.setLogLevel("ERROR")
     spec = None
     if args.command == "monitor":
-        from qcache_spark import hadoopfs as hfs
-
-        # through the FS layer: the spec may live beside the data on
+            # through the FS layer: the spec may live beside the data on
         # HDFS/S3, and local paths work identically
         text = hfs.read_text(spark, args.spec)
         if text is None:

@@ -1,24 +1,8 @@
 """Single-writer lease for persisted indexes.
 
-EVERY index writer takes it (VERDICT r10 Wrong #1 closed):
-
-- ``admit()`` is probe-then-append: two concurrent admitters can both
-  probe before either appends, so both copies of a cross-batch
-  near-dup pair survive — silent corruption of the index's one
-  invariant (the original r9 motivation).
-- ``compact()``/``refit()`` plan their rewrite from the live
-  generation, then delete aged-out generations; an ``append`` racing
-  them lands files the pre-planned rewrite never saw, which the
-  cleanup then deletes — the admitted rows vanish while the admission
-  watermark says they were admitted. So the maintenance verbs (and
-  ``append``/``delete``/``merge``/``vacuum`` themselves) hold the
-  lease too: a scheduled ``index_tool compact`` FAILS LOUDLY with
-  :class:`LeaseHeld` while an admitter is live instead of destroying
-  its batch.
-
-Each verb acquires the lease by default and offers ``lease=False``
-for callers that already hold it across a larger transaction
-(``admit()`` uses it for its internal ``append``).
+Every index writer holds it (VERDICT r10 Wrong #1 closed); which
+verbs, why, and the ``lease=False`` hatch are stated once in
+operators/_lifecycle.py.
 
 Mechanism: a ``_admission_lease.json`` control file inside the index
 path, created exclusively through the Hadoop FileSystem API

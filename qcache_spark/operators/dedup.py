@@ -31,11 +31,11 @@ import random
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
 from qcache_spark import hadoopfs as hfs
 from qcache_spark import opcache
+from qcache_spark.operators import _lifecycle
 
 MERSENNE_PRIME_ISH = 4294967311  # smallest prime > 2^32
 MAX_HASH = 0xFFFFFFFF
@@ -566,8 +566,7 @@ def minhash_probe_pairs(
 
 # Bumped whenever the on-disk postings/sets layout or the MinHash
 # signature algebra changes incompatibly; persisted in the _meta
-# sidecar and checked by load() (the IVFIndex discipline,
-# similarity.py:100).
+# sidecar and checked by load() (operators/_lifecycle.py).
 MINHASH_FORMAT_VERSION = 1
 
 
@@ -576,7 +575,7 @@ class MinHashIndexMismatch(ValueError):
     version or build parameters; callers should rebuild."""
 
 
-class MinHashIndex:
+class MinHashIndex(_lifecycle.PersistedIndex):
     """Persisted, appendable MinHash-LSH index (VERDICT r8 missing #1).
 
     ``minhash_probe_pairs`` answers a batch-vs-corpus probe but
@@ -621,7 +620,17 @@ class MinHashIndex:
     holds (pytest-pinned, including after append), and the driver gate
     (q107) checks probe-off-loaded-index against the same brute-force
     DuckDB oracle as q105.
+
+    The lease, generation, retention and tombstone lifecycle is
+    operators/_lifecycle.py's.
     """
+
+    # postings/ + sets/ at generation 0; tombstones mask the LIVE
+    # generation and are consumed by the next compact
+    LAYOUT = _lifecycle.Layout(
+        ("postings", "sets"), "postings_generation", "/tombstones"
+    )
+    _tomb_col = "_id"
 
     def __init__(
         self,
@@ -677,24 +686,24 @@ class MinHashIndex:
             self.seed,
         )
 
-    # Data directories are generation-suffixed so compact() can build
-    # a full replacement NEXT to the live one and flip the meta
-    # pointer, instead of overwriting files a concurrent probe may be
-    # scanning (the same mid-scan hazard write()'s same-path guard
-    # exists for). Generation 0 keeps the bare names, so every index
-    # written before compaction existed loads unchanged.
-    def _postings_dir(self) -> str:
-        g = self.generation
-        return self.path + ("/postings" if g == 0 else f"/postings_g{g}")
+    def _stored(self) -> DataFrame:
+        return self.sets
 
-    def _sets_dir(self) -> str:
-        g = self.generation
-        return self.path + ("/sets" if g == 0 else f"/sets_g{g}")
-
-    def _tombstones_dir(self) -> str:
-        # generation-independent: tombstones mask the LIVE generation
-        # and are materialized away (and cleared) by the next compact
-        return self.path + "/tombstones"
+    def _live_copy(self) -> tuple:
+        """The live postings and sets to copy out (write/merge), plus
+        the base persisted once when the index is in memory: postings
+        and sets otherwise each re-run the shingle+signature scan, the
+        module's most expensive expression (guide §1.2 step 1). The
+        caller unpersists the base after both writes."""
+        base = self._mem_base
+        if base is None:
+            return self._live(self.postings), self._live(self.sets), None
+        base = base.persist(StorageLevel.MEMORY_AND_DISK)
+        postings = base.select(
+            "_id", F.posexplode("_bands").alias("_band", "_bucket")
+        )
+        sets = base.select("_id", "_shingles")
+        return self._live(postings), self._live(sets), base
 
     def write(self, spark, path: str) -> None:
         """Persist postings + sets + meta sidecar. ``overwrite`` keeps
@@ -707,41 +716,10 @@ class MinHashIndex:
             # only the meta sidecar needs refreshing.
             self._write_meta(spark, path)
             return
-        # Writing over a DIFFERENT index's remains: overwrite mode only
-        # replaces the generation-0 postings/ + sets/ dirs — a previous
-        # occupant's tombstones/, postings_g*/sets_g* generation dirs,
-        # admission watermark and lease would survive OUTSIDE them and
-        # silently mask rows / skip a new stream's batches / block
-        # admission on the next reload (ADVICE r9 #1). Clear them
-        # FIRST, so a mid-write crash can never leave fresh data under
-        # stale control state.
-        for name in hfs.list_names(spark, path):
-            if (
-                name == "tombstones"
-                or name.startswith("postings_g")
-                or name.startswith("sets_g")
-                or name == "_admission_progress.json"
-                or name == "_admission_lease.json"
-            ):
-                hfs.delete(spark, path.rstrip("/") + "/" + name)
+        # overwrite mode only replaces postings/ + sets/ (ADVICE r9 #1)
+        self._clear_previous(spark, path)
         # a re-homed index materializes its pending deletions
-        base = self._mem_base
-        if base is not None:
-            # One persisted materialization feeds BOTH writes: the
-            # postings and sets writes otherwise each re-run the full
-            # shingle+signature scan — the module's most expensive
-            # expression, computed twice per build (guide §1.2 step 1).
-            base = base.persist(StorageLevel.MEMORY_AND_DISK)
-            postings = base.select(
-                "_id", F.posexplode("_bands").alias("_band", "_bucket")
-            )
-            sets = base.select("_id", "_shingles")
-        else:
-            postings, sets = self.postings, self.sets
-        if self.tombstones is not None:
-            tomb = F.broadcast(self.tombstones.select("_id"))
-            postings = postings.join(tomb, "_id", "left_anti")
-            sets = sets.join(tomb, "_id", "left_anti")
+        postings, sets, base = self._live_copy()
         self.generation = 0
         self._write_postings(postings, "overwrite", path + "/postings")
         sets.write.mode("overwrite").parquet(path + "/sets")
@@ -775,7 +753,7 @@ class MinHashIndex:
     def _write_meta(self, spark, path: str) -> None:
         meta = {
             "format_version": MINHASH_FORMAT_VERSION,
-            "postings_generation": self.generation,
+            self.LAYOUT.pointer: self.generation,
             **self._params(),
         }
         # Driver-side text file through the Hadoop FS API (~ms). The
@@ -786,25 +764,13 @@ class MinHashIndex:
 
     @classmethod
     def load(cls, spark, path: str, expect: dict | None = None) -> "MinHashIndex":
-        """Load a persisted index, refusing stale artifacts: raises
-        :class:`MinHashIndexMismatch` when the sidecar's format_version
-        differs from the running code's (including pre-versioning
-        artifacts with no tag), or when any key in ``expect`` disagrees
-        with the persisted build parameters."""
-        meta = hfs.read_meta_sidecar(spark, path)
-        found = meta.get("format_version")
-        if found != MINHASH_FORMAT_VERSION:
-            raise MinHashIndexMismatch(
-                f"MinHash index at {path!r} has format_version={found!r}, "
-                f"code expects {MINHASH_FORMAT_VERSION}; rebuild the index"
-            )
-        for key, want in (expect or {}).items():
-            if meta.get(key) != want:
-                raise MinHashIndexMismatch(
-                    f"MinHash index at {path!r} was built with "
-                    f"{key}={meta.get(key)!r}, caller expects {want!r}; "
-                    "rebuild the index"
-                )
+        """Load a persisted index; raises :class:`MinHashIndexMismatch`
+        on a stale format version or an ``expect`` key that differs
+        from the persisted build parameters."""
+        meta = _lifecycle.load_meta(
+            spark, path, MINHASH_FORMAT_VERSION, MinHashIndexMismatch,
+            "MinHash index", expect,
+        )
         index = cls.__new__(cls)
         index.id_col = meta["id_col"]
         index.text_col = meta["text_col"]
@@ -813,7 +779,7 @@ class MinHashIndex:
         index.shingle_size = meta["shingle_size"]
         index.seed = meta["seed"]
         index.path = path
-        index.generation = meta.get("postings_generation", 0)
+        index.generation = meta.get(cls.LAYOUT.pointer, 0)
         index._spark = spark
         index._reload(spark)
         return index
@@ -823,23 +789,12 @@ class MinHashIndex:
         so the file listing reflects files added since the previous
         DataFrame was planned."""
         self._mem_base = None  # disk-backed from here on
-        self.postings = spark.read.parquet(self._postings_dir()).select(
+        postings_dir, sets_dir = self._dirs()
+        self.postings = spark.read.parquet(postings_dir).select(
             "_id", "_band", "_bucket"
         )
-        self.sets = spark.read.parquet(self._sets_dir())
-        # Hadoop FS existence check, not os.path: on HDFS/S3 an os.*
-        # probe sees nothing and pending deletions would silently stop
-        # masking (VERDICT r9 Wrong #1).
-        self.tombstones = (
-            spark.read.parquet(self._tombstones_dir())
-            if hfs.exists(spark, self._tombstones_dir())
-            else None
-        )
-
-    def _writer_lease(self):
-        from qcache_spark.lease import IndexLease
-
-        return IndexLease(self._spark, self.path)
+        self.sets = spark.read.parquet(sets_dir)
+        self.tombstones = self._read_tombstones(spark)
 
     def append(
         self,
@@ -851,40 +806,28 @@ class MinHashIndex:
         own parameters and append them as NEW FILES (no rewrite of
         existing data — O(batch) I/O). The caller owns id uniqueness:
         appending an id twice duplicates its postings, exactly as
-        storing a document twice would.
-
-        ``lease=True`` holds the index's single-writer lease for the
-        write (VERDICT r10 Wrong #1: an append racing a concurrent
-        compact lands files the compact's pre-planned rewrite never
-        saw, and the post-flip cleanup deletes them); pass
-        ``lease=False`` only when the caller already holds it
-        (``admit()`` does, around its probe→append section)."""
-        if self.path is None:
-            raise ValueError(
-                "append requires a persisted index — call write() first "
-                "(in-memory indexes would silently diverge from disk)"
+        storing a document twice would."""
+        with _lifecycle.writer(self, "append", lease):
+            # ``_base``: a caller-materialized base over a SUPERSET of
+            # batch rows (admit passes the probe's batch base filtered
+            # to survivors) — reusing it removes the batch's third and
+            # fourth signature scans. Locally derived bases are
+            # eagerly localCheckpoint-ed for the same reason, PLUS
+            # lineage truncation: the postings sampling job, the
+            # postings write and the sets write would otherwise each
+            # re-run AND re-plan the shingle+signature pipeline
+            # (batch-sized blocks; see admit for the planning-cost
+            # rationale and the retry trade-off).
+            if _base is None:
+                _base = self._base(batch).localCheckpoint(eager=True)
+            postings_dir, sets_dir = self._dirs()
+            self._write_postings(_base.select(
+                "_id", F.posexplode("_bands").alias("_band", "_bucket")
+            ), "append", postings_dir)
+            _base.select("_id", "_shingles").write.mode("append").parquet(
+                sets_dir
             )
-        if lease:
-            with self._writer_lease():
-                return self.append(batch, lease=False, _base=_base)
-        # ``_base``: a caller-materialized base over a SUPERSET of
-        # batch rows (admit passes the probe's batch base filtered to
-        # survivors) — reusing it removes the batch's third and fourth
-        # signature scans. Locally derived bases are eagerly
-        # localCheckpoint-ed for the same reason, PLUS lineage
-        # truncation: the postings sampling job, the postings write
-        # and the sets write would otherwise each re-run AND re-plan
-        # the shingle+signature pipeline (batch-sized blocks; see
-        # admit for the planning-cost rationale and the retry
-        # trade-off).
-        base = self._base(batch).localCheckpoint(eager=True) if _base is None else _base
-        self._write_postings(base.select(
-            "_id", F.posexplode("_bands").alias("_band", "_bucket")
-        ), "append", self._postings_dir())
-        base.select("_id", "_shingles").write.mode("append").parquet(
-            self._sets_dir()
-        )
-        self._reload(self._spark)
+            self._reload(self._spark)
 
     def merge(self, other: "MinHashIndex", lease: bool = True) -> None:
         """Union another index's corpus into this one — the
@@ -897,93 +840,23 @@ class MinHashIndex:
         hashed under different params would silently corrupt probes).
         ``other``'s pending tombstones are materialized out during the
         copy; this index's own tombstones are untouched. As with
-        append, callers own id uniqueness across the merged shards.
-        ``lease``: see :meth:`append` — merge writes into SELF, so it
-        takes self's single-writer lease."""
-        if self.path is None:
-            raise ValueError(
-                "merge requires a persisted index — call write() first"
-            )
-        if lease:
-            with self._writer_lease():
-                return self.merge(other, lease=False)
-        if other._params() != self._params():
-            raise MinHashIndexMismatch(
-                f"cannot merge: parameter mismatch "
-                f"{other._params()} != {self._params()}"
-            )
-        base = other._mem_base
-        if base is not None:
-            # an in-memory shard: persist its base once so the
-            # postings and sets copies below don't each re-run the
-            # shard's shingle+signature scan (same discipline as
-            # write()/append())
-            base = base.persist(StorageLevel.MEMORY_AND_DISK)
-            postings = base.select(
-                "_id", F.posexplode("_bands").alias("_band", "_bucket")
-            )
-            sets = base.select("_id", "_shingles")
-        else:
-            postings, sets = other.postings, other.sets
-        if other.tombstones is not None:
-            tomb = F.broadcast(other.tombstones.select("_id"))
-            postings = postings.join(tomb, "_id", "left_anti")
-            sets = sets.join(tomb, "_id", "left_anti")
-        self._write_postings(postings, "append", self._postings_dir())
-        sets.write.mode("append").parquet(self._sets_dir())
-        if base is not None:
-            base.unpersist(blocking=False)
-        self._reload(self._spark)
-
-    def delete(self, ids, lease: bool = True) -> None:
-        """Retract documents from the index (the GDPR/takedown
-        lifecycle step): ``ids`` — a DataFrame carrying the index's id
-        column, or an iterable of ids — are tombstoned, NOT rewritten:
-        one small parquet append under ``tombstones/``, O(|ids|) I/O
-        regardless of corpus size. Every subsequent ``probe``/``admit``
-        masks tombstoned postings with a broadcast anti-join BEFORE
-        the bucket-cap window, so results are identical to an index
-        rebuilt without those documents (pytest-pinned) — deleted
-        boilerplate stops inflating bucket sizes immediately. The next
-        ``compact()`` materializes the deletions into the rewritten
-        files and clears the tombstones.
-
-        Tombstones mask by ID: re-appending a deleted id before the
-        next compact stays masked (and the pending compact drops ALL
-        of that id's rows) — re-admit deleted content under a fresh
-        id, or compact() first. Callers own the id lifecycle, as with
-        append. ``lease``: see :meth:`append` — the tombstone write is
-        a write like any other and must not race a compact's
-        tombstone-consuming rewrite."""
-        if self.path is None:
-            raise ValueError(
-                "delete requires a persisted index — call write() first"
-            )
-        if lease:
-            with self._writer_lease():
-                return self.delete(ids, lease=False)
-        # Tombstones carry the INDEX's id dtype, derived from the
-        # stored sets (ADVICE r9 #3: a hardcoded long schema made
-        # string-id deletions raise or silently anti-join nothing
-        # across a type mismatch).
-        id_type = self.sets.schema["_id"].dataType
-        if isinstance(ids, DataFrame):
-            tdf = ids.select(
-                F.col(self.id_col).cast(id_type).alias("_id")
-            )
-        else:
-            tdf = self._spark.createDataFrame(
-                [(i,) for i in ids], T.StructType([T.StructField("_id", id_type)])
-            )
-        tdf.write.mode("append").parquet(self._tombstones_dir())
-        self._reload(self._spark)
+        append, callers own id uniqueness across the merged shards."""
+        with _lifecycle.writer(self, "merge", lease):
+            if other._params() != self._params():
+                raise MinHashIndexMismatch(
+                    f"cannot merge: parameter mismatch "
+                    f"{other._params()} != {self._params()}"
+                )
+            postings, sets, base = other._live_copy()
+            postings_dir, sets_dir = self._dirs()
+            self._write_postings(postings, "append", postings_dir)
+            sets.write.mode("append").parquet(sets_dir)
+            if base is not None:
+                base.unpersist(blocking=False)
+            self._reload(self._spark)
 
     def _live_postings(self) -> DataFrame:
-        if self.tombstones is None:
-            return self.postings
-        return self.postings.join(
-            F.broadcast(self.tombstones.select("_id")), "_id", "left_anti"
-        )
+        return self._live(self.postings)
 
     def stats(self) -> dict:
         """Operational health report — what to check before deciding
@@ -993,78 +866,14 @@ class MinHashIndex:
         Two small aggregate jobs + a file listing; no corpus text is
         touched."""
         n_docs = self.sets.count() if self.sets is not None else 0
-        n_tomb = (
-            self.tombstones.select("_id").distinct().count()
-            if self.tombstones is not None
-            else 0
-        )
-        files = (
-            self._count_files(self._postings_dir())
-            if self.path is not None
-            else None
-        )
+        n_tomb = self._pending()
         return {
             "docs_stored": n_docs,
             "docs_live": n_docs - n_tomb,
-            "tombstones_pending": n_tomb,
-            "generation": self.generation,
-            "superseded_generations": (
-                [
-                    g
-                    for g in self._persisted_generations()
-                    if g < self.generation
-                ]
-                if self.path is not None
-                else []
-            ),
-            "postings_files": files,
+            **self._lifecycle_stats(n_tomb),
+            "postings_files": self._files() if self.path is not None else None,
             "bands": self.bands,
         }
-
-    def _count_files(self, path: str) -> int | None:
-        # Hadoop FS recursive listing — works on HDFS/S3, not just
-        # local disk (None only when the path was never written).
-        return hfs.count_files(self._spark, path)
-
-    def _dirs_for_generation(self, g: int) -> tuple[str, str]:
-        root = self.path.rstrip("/")
-        suffix = "" if g == 0 else f"_g{g}"
-        return (root + "/postings" + suffix, root + "/sets" + suffix)
-
-    def _persisted_generations(self) -> list:
-        """Generations whose data dirs exist on disk, ascending."""
-        gens = set()
-        for name in hfs.list_names(self._spark, self.path):
-            if name == "postings":
-                gens.add(0)
-            elif name.startswith("postings_g"):
-                try:
-                    gens.add(int(name[len("postings_g"):]))
-                except ValueError:
-                    pass
-        return sorted(gens)
-
-    def _delete_generation(self, g: int) -> None:
-        # Hadoop FS delete, not shutil: on an object store — the
-        # 100 TB home this lifecycle exists for (SCALING §17a) —
-        # shutil sees nothing and superseded generations would
-        # accumulate forever.
-        for d in self._dirs_for_generation(g):
-            hfs.delete(self._spark, d)
-
-    def _apply_retention(self, retain: int) -> tuple:
-        """Post-flip cleanup shared by compact(): delete superseded
-        generations beyond the newest ``retain`` of them (those stay
-        on disk for in-flight readers — ``vacuum()`` does the final
-        delete). Returns (kept, removed) generation lists."""
-        superseded = [
-            g for g in self._persisted_generations() if g < self.generation
-        ]
-        kept = superseded[len(superseded) - retain:] if retain > 0 else []
-        removed = [g for g in superseded if g not in kept]
-        for g in removed:
-            self._delete_generation(g)
-        return kept, removed
 
     def compact(self, retain: int = 1, lease: bool = True) -> dict:
         """Rewrite postings + sets into one bucket-sorted file per
@@ -1075,94 +884,40 @@ class MinHashIndex:
         pruning. Compaction rebuilds the data dirs at generation N+1
         (``repartition(bands, _band)`` + ``sortWithinPartitions
         (_bucket)`` — one shuffle of 24-byte rows, bucket-clustered
-        row groups so min/max stats prune within a band), flips the
-        meta sidecar's ``postings_generation`` pointer, and reloads.
-
-        Reader safety: the rewrite never overwrites live files, and
-        the newest ``retain`` superseded generations are KEPT on disk
-        (default 1 flip), so a data scan planned against the old
-        files completes after the flip — ``vacuum()`` (or the next
-        compact aging them past ``retain``) does the actual delete
-        once in-flight readers are done. The one non-retained artifact
-        is the pending-tombstone control files, consumed by the
-        rewrite and removed at the flip: they are O(KB), read once at
-        job launch into a broadcast, so only a probe planned-but-not-
-        launched across the flip would notice (re-plan it).
-
-        ``lease=True`` holds the single-writer lease for the whole
-        plan→rewrite→flip→cleanup section (VERDICT r10 Wrong #1: a
-        compact racing a concurrent admit deletes the admit's freshly
-        appended files — its rewrite was planned before they existed).
-        A scheduled ``index_tool compact`` therefore fails loudly with
-        :class:`~qcache_spark.lease.LeaseHeld` while an admitter is
-        live, instead of silently destroying its batch.
+        row groups so min/max stats prune within a band) and flips the
+        meta pointer; ``retain`` and the reader-safety contract are
+        operators/_lifecycle.py's. A scheduled ``index_tool compact``
+        fails loudly with :class:`~qcache_spark.lease.LeaseHeld` while
+        an admitter is live, instead of silently destroying its batch.
 
         Returns before/after file counts (None on never-persisted
         paths) plus the kept/removed superseded generations. Probe
         results are unchanged (pytest pins probe-parity across
         compact)."""
-        if self.path is None:
-            raise ValueError(
-                "compact requires a persisted index — call write() first"
-            )
-        if lease:
-            with self._writer_lease():
-                return self.compact(retain=retain, lease=False)
-        before = self._count_files(self._postings_dir())
-        postings, sets = self.postings, self.sets
-        if self.tombstones is not None:
-            # materialize pending deletions: the rewrite drops
-            # tombstoned rows, then the tombstones themselves
-            tomb = F.broadcast(self.tombstones.select("_id"))
-            postings = postings.join(tomb, "_id", "left_anti")
-            sets = sets.join(tomb, "_id", "left_anti")
-        self.generation += 1
-        try:
-            postings.repartition(self.bands, "_band").sortWithinPartitions(
-                "_bucket", "_id"
-            ).write.mode("overwrite").partitionBy("_band").parquet(
-                self._postings_dir()
-            )
-            sets.repartition(self.bands).write.mode("overwrite").parquet(
-                self._sets_dir()
-            )
-            self._write_meta(self._spark, self.path)
-        except Exception:
-            self.generation -= 1  # live pointer still names old dirs
-            raise
-        hfs.delete(self._spark, self._tombstones_dir())  # consumed
-        self._reload(self._spark)
-        kept, removed = self._apply_retention(retain)
-        after = self._count_files(self._postings_dir())
-        return {
-            "postings_files_before": before,
-            "postings_files_after": after,
-            "retained_generations": kept,
-            "removed_generations": removed,
-        }
+        with _lifecycle.writer(self, "compact", lease):
+            before = self._files()
+            # materialize pending deletions into the rewrite
+            postings = self._live(self.postings)
+            sets = self._live(self.sets)
 
-    def vacuum(self, lease: bool = True) -> dict:
-        """Delete ALL superseded generations now (the retention
-        window's terminal delete — run it when no reader planned
-        before the last flip can still be in flight). Takes the
-        single-writer lease; pending tombstones belong to the LIVE
-        generation and are untouched."""
-        if self.path is None:
-            raise ValueError(
-                "vacuum requires a persisted index — call write() first"
-            )
-        if lease:
-            with self._writer_lease():
-                return self.vacuum(lease=False)
-        removed = [
-            g for g in self._persisted_generations() if g < self.generation
-        ]
-        for g in removed:
-            self._delete_generation(g)
-        return {
-            "removed_generations": removed,
-            "live_generation": self.generation,
-        }
+            def rewrite():
+                postings_dir, sets_dir = self._dirs()
+                postings.repartition(self.bands, "_band").sortWithinPartitions(
+                    "_bucket", "_id"
+                ).write.mode("overwrite").partitionBy("_band").parquet(
+                    postings_dir
+                )
+                sets.repartition(self.bands).write.mode("overwrite").parquet(
+                    sets_dir
+                )
+
+            kept, removed = self._flip(rewrite, retain)
+            return {
+                "postings_files_before": before,
+                "postings_files_after": self._files(),
+                "retained_generations": kept,
+                "removed_generations": removed,
+            }
 
     def probe(
         self,
@@ -1276,99 +1031,78 @@ class MinHashIndex:
         intra-batch side is the LSH self-join over the batch alone
         (``minhash_lsh_pairs`` with this index's parameters), and
         ``append`` writes only survivors. Returns the surviving batch
-        rows with their original columns.
-
-        Single-writer enforcement (``lease=True``): the probe→append
-        critical section holds the index's admission lease — a
-        concurrent admitter raises :class:`qcache_spark.lease.LeaseHeld`
-        instead of double-admitting a cross-batch near-dup pair (both
-        would probe before either appends). Pass ``lease=False`` only
-        when the caller already holds the lease around a multi-admit
-        transaction."""
-        if self.path is None:
-            raise ValueError(
-                "admit requires a persisted index — call write() first"
-            )
-        if lease:
-            from qcache_spark.lease import IndexLease
-
-            with IndexLease(self._spark, self.path):
-                return self.admit(
+        rows with their original columns. The probe→append section
+        holds the writer lease (operators/_lifecycle.py)."""
+        with _lifecycle.writer(self, "admit", lease):
+            # ONE materialized batch base feeds all four consumers below
+            # (corpus probe, intra-batch self-join, survivor postings
+            # write, survivor sets write). Unshared, each consumer re-ran
+            # the batch's shingle+signature scan — 5-6 executions of the
+            # module's most expensive expression per admission
+            # (guide §1.2 step 1; measured ~2 s per scan at the bench's
+            # batch size). localCheckpoint, not persist: the signature
+            # expression tree is enormous, and a persisted frame still
+            # carries it as LOGICAL lineage — every downstream action
+            # re-analyzed the full tree on the driver (~1-1.5 s per
+            # consumer, measured; guide §7.3 "query planning" / §3.3
+            # "materialising an intermediate truncates the plan").
+            # Checkpoint blocks are O(batch) and freed by the context
+            # cleaner once the survivors frame is dropped. Trade-off:
+            # lineage is cut, so a lost executor fails the admission job
+            # instead of recomputing — an admission batch retry, guarded
+            # by the writer lease and the streaming watermark.
+            bbase = self._base(batch).localCheckpoint(eager=True)
+            dropped = self.probe(
+                batch, max_bucket_size=max_bucket_size,
+                verify_threshold=verify_threshold, _bbase=bbase,
+            ).select(F.col("batch_id").alias("_dropped"))
+            if intra_batch:
+                intra = minhash_lsh_pairs(
                     batch,
+                    id_col=self.id_col,
+                    text_col=self.text_col,
+                    num_perm=self.num_perm,
+                    bands=self.bands,
+                    shingle_size=self.shingle_size,
+                    seed=self.seed,
                     max_bucket_size=max_bucket_size,
                     verify_threshold=verify_threshold,
-                    intra_batch=intra_batch,
-                    lease=False,
+                    _base=bbase,
                 )
-        # ONE materialized batch base feeds all four consumers below
-        # (corpus probe, intra-batch self-join, survivor postings
-        # write, survivor sets write). Unshared, each consumer re-ran
-        # the batch's shingle+signature scan — 5-6 executions of the
-        # module's most expensive expression per admission
-        # (guide §1.2 step 1; measured ~2 s per scan at the bench's
-        # batch size). localCheckpoint, not persist: the signature
-        # expression tree is enormous, and a persisted frame still
-        # carries it as LOGICAL lineage — every downstream action
-        # re-analyzed the full tree on the driver (~1-1.5 s per
-        # consumer, measured; guide §7.3 "query planning" / §3.3
-        # "materialising an intermediate truncates the plan").
-        # Checkpoint blocks are O(batch) and freed by the context
-        # cleaner once the survivors frame is dropped. Trade-off:
-        # lineage is cut, so a lost executor fails the admission job
-        # instead of recomputing — an admission batch retry, guarded
-        # by the writer lease and the streaming watermark.
-        bbase = self._base(batch).localCheckpoint(eager=True)
-        dropped = self.probe(
-            batch, max_bucket_size=max_bucket_size,
-            verify_threshold=verify_threshold, _bbase=bbase,
-        ).select(F.col("batch_id").alias("_dropped"))
-        if intra_batch:
-            intra = minhash_lsh_pairs(
-                batch,
-                id_col=self.id_col,
-                text_col=self.text_col,
-                num_perm=self.num_perm,
-                bands=self.bands,
-                shingle_size=self.shingle_size,
-                seed=self.seed,
-                max_bucket_size=max_bucket_size,
-                verify_threshold=verify_threshold,
-                _base=bbase,
-            )
-            # pairs come back id_a < id_b: the higher id is dominated
-            dropped = dropped.union(
-                intra.select(F.col("id_b").alias("_dropped"))
-            )
-        # The dropped-id set is read three times (batch anti-join,
-        # base anti-join, and the caller's consumption of survivors)
-        # and its logical plan is the union of the probe and
-        # self-join pipelines — O(hundreds of operators). Checkpoint
-        # the O(dropped) id ROWS so downstream plans are anti-joins
-        # against an in-memory relation, not re-analyses of the whole
-        # pipeline (same planning-cost rationale as bbase above).
-        dropped_ids = dropped.distinct().localCheckpoint(eager=True)
-        survivors = batch.join(
-            dropped_ids.withColumnRenamed("_dropped", self.id_col),
-            self.id_col,
-            "left_anti",
-        )
-        # append() triggers the probe/self-join jobs via the write;
-        # the survivor frame is then re-read as stored postings, so no
-        # cache pin is needed beyond the write itself. lease=False:
-        # admit already holds the writer lease around probe→append.
-        # The survivors' base is the batch base minus dropped ids —
-        # row-identical to _base(survivors) (the projection is
-        # deterministic per row), sparing append its own two scans.
-        self.append(
-            survivors,
-            lease=False,
-            _base=bbase.join(
-                dropped_ids.withColumnRenamed("_dropped", "_id"),
-                "_id",
+                # pairs come back id_a < id_b: the higher id is dominated
+                dropped = dropped.union(
+                    intra.select(F.col("id_b").alias("_dropped"))
+                )
+            # The dropped-id set is read three times (batch anti-join,
+            # base anti-join, and the caller's consumption of survivors)
+            # and its logical plan is the union of the probe and
+            # self-join pipelines — O(hundreds of operators). Checkpoint
+            # the O(dropped) id ROWS so downstream plans are anti-joins
+            # against an in-memory relation, not re-analyses of the whole
+            # pipeline (same planning-cost rationale as bbase above).
+            dropped_ids = dropped.distinct().localCheckpoint(eager=True)
+            survivors = batch.join(
+                dropped_ids.withColumnRenamed("_dropped", self.id_col),
+                self.id_col,
                 "left_anti",
-            ),
-        )
-        return survivors
+            )
+            # append() triggers the probe/self-join jobs via the write;
+            # the survivor frame is then re-read as stored postings, so no
+            # cache pin is needed beyond the write itself. lease=False:
+            # admit already holds the writer lease around probe→append.
+            # The survivors' base is the batch base minus dropped ids —
+            # row-identical to _base(survivors) (the projection is
+            # deterministic per row), sparing append its own two scans.
+            self.append(
+                survivors,
+                lease=False,
+                _base=bbase.join(
+                    dropped_ids.withColumnRenamed("_dropped", "_id"),
+                    "_id",
+                    "left_anti",
+                ),
+            )
+            return survivors
 
 
 def ngram_jaccard_pairs(

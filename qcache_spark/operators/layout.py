@@ -28,6 +28,8 @@ from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from qcache_spark.operators import _lifecycle
+
 # Bumped when the z-value expression or the write layout changes
 # incompatibly (cached rewritten copies key their path on it).
 LAYOUT_FORMAT_VERSION = 1
@@ -207,8 +209,8 @@ class ZTable:
     key space (Delta's incremental ``OPTIMIZE ... ZORDER BY`` shape).
     The layout would otherwise decay as admission appends arrive.
 
-    Storage model (the MinHashIndex generation-flip discipline,
-    ``dedup.py:MinHashIndex.compact``, applied to a data table):
+    Storage model (the index generation-flip discipline of
+    operators/_lifecycle.py, applied to a data table):
 
     - ``path/chunk_NNNNNN/``  — immutable parquet chunk dirs; each is
       either *clustered* (range-partitioned + sorted on the frozen
@@ -222,10 +224,10 @@ class ZTable:
     (``.df``); a compact writes the NEW chunk first, then flips the
     meta in one sidecar rewrite, and superseded chunk dirs stay on
     disk for ``retain`` further flips (in-flight readers finish
-    against the old files) until aged out or ``vacuum()``-ed. Every
-    writer (append / compact / vacuum) takes the table's single-writer
-    lease — same fencing as the index writers; all filesystem touches
-    go through hadoopfs (object-store ready).
+    against the old files) until aged out or ``vacuum()``-ed. The
+    writers (append / compact / vacuum) take the single-writer lease
+    through operators/_lifecycle.py; all filesystem touches go through
+    hadoopfs (object-store ready).
 
     Appended values outside the frozen bounds clamp into the edge
     buckets of the key space — pruning stays CORRECT (it consults real
@@ -292,17 +294,10 @@ class ZTable:
 
     @classmethod
     def load(cls, spark, path: str) -> "ZTable":
-        from .. import hadoopfs as hfs
-
         path = path.rstrip("/")
-        meta = hfs.read_meta_sidecar(spark, path)
-        found = meta.get("format_version")
-        if found != ZTABLE_FORMAT_VERSION:
-            raise ZTableMismatch(
-                f"ZTable at {path!r} has format_version={found!r}, "
-                f"this code writes {ZTABLE_FORMAT_VERSION} — rebuild "
-                "with create()"
-            )
+        meta = _lifecycle.load_meta(
+            spark, path, ZTABLE_FORMAT_VERSION, ZTableMismatch, "ZTable"
+        )
         return cls(spark, path, meta)
 
     @property
@@ -321,25 +316,23 @@ class ZTable:
         no shuffle, no touch of existing chunks. The chunk joins the
         live set immediately (readers see it on their next meta
         resolve); it stays un-clustered until the next compact()."""
-        if lease:
-            with self._writer_lease():
-                return self.append(batch, lease=False)
-        missing = [c for c in self.cols if c not in batch.columns]
-        if missing:
-            raise ValueError(
-                f"append batch lacks z-spec columns {missing}"
-            )
-        name = self._new_chunk_name()
-        # overwrite: a name from next_chunk_id can only collide with a
-        # STRANDED dir (a crashed writer's output — live names were
-        # registered by the meta write that also persisted the bumped
-        # counter), so overwriting is the crash-retry semantics, never
-        # a data loss
-        batch.write.mode("overwrite").parquet(self._chunk_path(name))
-        self.chunks.append({"name": name, "clustered": False})
-        self._write_meta()
-        return {"chunk": name, "clustered_chunks": self._n_clustered(),
-                "arrival_chunks": self._n_arrival()}
+        with _lifecycle.writer(self, "append", lease):
+            missing = [c for c in self.cols if c not in batch.columns]
+            if missing:
+                raise ValueError(
+                    f"append batch lacks z-spec columns {missing}"
+                )
+            name = self._new_chunk_name()
+            # overwrite: a name from next_chunk_id can only collide
+            # with a STRANDED dir (a crashed writer's output — live
+            # names were registered by the meta write that also
+            # persisted the bumped counter), so overwriting is the
+            # crash-retry semantics, never a data loss
+            batch.write.mode("overwrite").parquet(self._chunk_path(name))
+            self.chunks.append({"name": name, "clustered": False})
+            self._write_meta()
+            return {"chunk": name, "clustered_chunks": self._n_clustered(),
+                    "arrival_chunks": self._n_arrival()}
 
     def admit(self, batch: DataFrame, lease: bool = True) -> DataFrame:
         """Admission-protocol adapter: the streaming machinery
@@ -367,53 +360,47 @@ class ZTable:
         meta: live set swaps the arrival chunks for the new one,
         generation bumps, and the swapped-out dirs are retained for
         ``retain`` further flips before deletion (0 = delete now)."""
-        if lease:
-            with self._writer_lease():
-                return self.compact(
-                    retain=retain, partitions=partitions, lease=False
-                )
-        arrivals = [c for c in self.chunks if not c["clustered"]]
-        if not arrivals:
+        with _lifecycle.writer(self, "compact", lease):
+            arrivals = [c for c in self.chunks if not c["clustered"]]
+            if not arrivals:
+                return {
+                    "compacted_chunks": 0,
+                    "new_chunk": None,
+                    "retained": [r["name"] for r in self.retired],
+                    "removed": [],
+                }
+            tail = self._spark.read.parquet(
+                *[self._chunk_path(c["name"]) for c in arrivals]
+            )
+            name = self._new_chunk_name()
+            zorder_write(
+                tail, self.cols, self._chunk_path(name),
+                bits=self.bits, partitions=partitions, bounds=self.bounds,
+            )
+            self.generation += 1
+            self.chunks = [c for c in self.chunks if c["clustered"]]
+            self.chunks.append({"name": name, "clustered": True})
+            self.retired.extend(
+                {"name": c["name"], "retired_at": self.generation}
+                for c in arrivals
+            )
+            removed = self._apply_retention(retain)
+            self._write_meta()
             return {
-                "compacted_chunks": 0,
-                "new_chunk": None,
+                "compacted_chunks": len(arrivals),
+                "new_chunk": name,
                 "retained": [r["name"] for r in self.retired],
-                "removed": [],
+                "removed": removed,
             }
-        tail = self._spark.read.parquet(
-            *[self._chunk_path(c["name"]) for c in arrivals]
-        )
-        name = self._new_chunk_name()
-        zorder_write(
-            tail, self.cols, self._chunk_path(name),
-            bits=self.bits, partitions=partitions, bounds=self.bounds,
-        )
-        self.generation += 1
-        self.chunks = [c for c in self.chunks if c["clustered"]]
-        self.chunks.append({"name": name, "clustered": True})
-        self.retired.extend(
-            {"name": c["name"], "retired_at": self.generation}
-            for c in arrivals
-        )
-        removed = self._apply_retention(retain)
-        self._write_meta()
-        return {
-            "compacted_chunks": len(arrivals),
-            "new_chunk": name,
-            "retained": [r["name"] for r in self.retired],
-            "removed": removed,
-        }
 
     def vacuum(self, lease: bool = True) -> dict:
         """Delete ALL retired chunk dirs now (terminal retention
         delete — run when no reader planned before the oldest
         retained flip can still be in flight)."""
-        if lease:
-            with self._writer_lease():
-                return self.vacuum(lease=False)
-        removed = self._apply_retention(0)
-        self._write_meta()
-        return {"removed": removed}
+        with _lifecycle.writer(self, "vacuum", lease):
+            removed = self._apply_retention(0)
+            self._write_meta()
+            return {"removed": removed}
 
     # ---------------------------------------------------------- audit
 
@@ -510,8 +497,3 @@ class ZTable:
         # + rename). The 1-row parquet relation it replaces cost a
         # full Spark job (~0.3 s) per meta flip (optimization r12).
         hfs.write_meta_sidecar(self._spark, self.path, meta)
-
-    def _writer_lease(self):
-        from ..lease import IndexLease
-
-        return IndexLease(self._spark, self.path)

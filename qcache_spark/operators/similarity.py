@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from qcache_spark import hadoopfs as hfs
+from qcache_spark.operators import _lifecycle
 
 
 def dot_with_literal(vec_col: Column, query: Sequence[float]) -> Column:
@@ -127,20 +128,30 @@ class IVFIndexMismatch(ValueError):
     version or build parameters; callers should rebuild."""
 
 
-def _count_parquet_files(spark, path: str) -> int | None:
-    # Hadoop FS recursive listing — works on HDFS/S3, not just local
-    # disk (None only when the path was never written).
-    return hfs.count_files(spark, path)
-
-
-class IVFIndex:
+class IVFIndex(_lifecycle.PersistedIndex):
     """Deterministic IVF index over an embedding table.
 
     Centroids are sampled deterministically (every stride-th vector by
     id order — reproducible without a Date/Random dependency), then
     refined with `iters` Lloyd steps computed distributively
     (groupBy(cluster).avg — a partial-aggregated shuffle, not a
-    collect)."""
+    collect). The lease, generation, retention and tombstone lifecycle
+    is operators/_lifecycle.py's."""
+
+    # Generation 0 lives as cluster_id= partitions at the path root
+    # (the layout every index written before compaction existed uses),
+    # later ones under data_g<N>. Tombstones sit beside the root, so
+    # spark.read.parquet(path) never mixes them in.
+    LAYOUT = _lifecycle.Layout(
+        ("data",), "data_generation", "_tombstones", root="cluster_id="
+    )
+
+    @property
+    def _tomb_col(self) -> str:
+        return self.id_col
+
+    def _stored(self) -> DataFrame:
+        return self.assigned
 
     def __init__(
         self,
@@ -166,6 +177,7 @@ class IVFIndex:
         self.store_pq = store_pq
         self.pq_m, self.pq_codes = pq_m, pq_codes
         self.pq_codebooks: list | None = None
+        self._spark = df.sparkSession
         src = df.select(id_col, F.col(vec_col).cast("array<double>").alias(vec_col))
 
         sample = (
@@ -277,7 +289,7 @@ class IVFIndex:
         ]
         probes = [ci for ci, _ in sorted(dists, key=lambda t: t[1])[:n_probe]]
         pruned = self._live_assigned().filter(F.col("cluster_id").isin(probes))
-        if getattr(self, "store_pq", False):
+        if self.store_pq:
             # IVFPQ: rank the probed clusters' candidates from the m
             # stored codes via the broadcast LUT (pure JVM; neither
             # the float column nor any Python touches the ranking
@@ -295,7 +307,7 @@ class IVFIndex:
             short_ids = [r[0] for r in approx.select(self.id_col).collect()]
             exact = pruned.filter(F.col(self.id_col).isin(short_ids))
             return cosine_topk(exact, q, k, self.id_col, self.vec_col)
-        if not getattr(self, "store_int8", False):
+        if not self.store_int8:
             return cosine_topk(pruned, q, k, self.id_col, self.vec_col)
         n_short = rerank or max(4 * k, k + 16)
         qnorm = math.sqrt(sum(x * x for x in q)) or 1.0
@@ -312,45 +324,18 @@ class IVFIndex:
         ).filter(F.col(self.id_col).isin(short_ids))
         return cosine_topk(exact, q, k, self.id_col, self.vec_col)
 
-    # Data lives at the path root for generation 0 (the layout every
-    # index written before compaction existed uses) and under
-    # ``data_g{N}`` afterwards — compact() builds the replacement NEXT
-    # to the live files and flips the meta pointer, the same no-
-    # mid-scan-overwrite discipline as MinHashIndex.compact.
-    def _data_dir(self) -> str:
-        g = getattr(self, "generation", 0)
-        return self.path if g == 0 else self.path.rstrip("/") + f"/data_g{g}"
-
-    def _tombstones_dir(self) -> str:
-        # generation-independent (and, for generation 0, outside the
-        # data root so spark.read.parquet(path) never mixes it in)
-        return self.path + "_tombstones"
-
     def _reload(self, spark) -> None:
-        self.assigned = spark.read.parquet(self._data_dir())
-        # Hadoop FS existence check, not os.path: on HDFS/S3 an os.*
-        # probe sees nothing and pending deletions would silently stop
-        # masking (VERDICT r9 Wrong #1).
-        self.tombstones = (
-            spark.read.parquet(self._tombstones_dir())
-            if hfs.exists(spark, self._tombstones_dir())
-            else None
-        )
+        self.assigned = spark.read.parquet(self._dirs()[0])
+        self.tombstones = self._read_tombstones(spark)
 
     def _live_assigned(self) -> DataFrame:
-        if getattr(self, "tombstones", None) is None:
-            return self.assigned
-        return self.assigned.join(
-            F.broadcast(self.tombstones.select(self.id_col)),
-            self.id_col,
-            "left_anti",
-        )
+        return self._live(self.assigned)
 
     def stats(self) -> dict:
-        """Operational health report (MinHashIndex.stats's analogue):
-        stored vs live vector counts, per-cluster row distribution
-        (skewed clusters = a centroid refit candidate), pending
-        tombstones, generation and data file count."""
+        """Operational health report: stored vs live vector counts,
+        per-cluster row distribution (skewed clusters = a centroid
+        refit candidate), pending tombstones, generation and data file
+        count."""
         per_cluster = {
             r["cluster_id"]: r["n"]
             for r in self.assigned.groupBy("cluster_id")
@@ -358,40 +343,14 @@ class IVFIndex:
             .collect()
         }
         n_vecs = sum(per_cluster.values())
-        n_tomb = (
-            self.tombstones.select(self.id_col).distinct().count()
-            if getattr(self, "tombstones", None) is not None
-            else 0
-        )
-        files = (
-            _count_parquet_files(self.assigned.sparkSession, self._data_dir())
-            if self.path is not None
-            else None
-        )
+        n_tomb = self._pending()
         return {
             "vectors_stored": n_vecs,
             "vectors_live": n_vecs - n_tomb,
-            "tombstones_pending": n_tomb,
-            "generation": getattr(self, "generation", 0),
-            "superseded_generations": (
-                [
-                    g
-                    for g in self._persisted_generations(
-                        self.assigned.sparkSession
-                    )
-                    if g < getattr(self, "generation", 0)
-                ]
-                if self.path is not None
-                else []
-            ),
-            "data_files": files,
+            **self._lifecycle_stats(n_tomb),
+            "data_files": self._files() if self.path is not None else None,
             "cluster_sizes": per_cluster,
         }
-
-    def _writer_lease(self):
-        from qcache_spark.lease import IndexLease
-
-        return IndexLease(self.assigned.sparkSession, self.path)
 
     def _write_distribution(self, data: DataFrame) -> DataFrame:
         """Distribute a frame for a partitionBy(cluster_id) write.
@@ -436,41 +395,6 @@ class IVFIndex:
             F.pmod(F.xxhash64(F.col(self.id_col)), F.lit(k)),
         )
 
-    def delete(self, ids, lease: bool = True) -> None:
-        """Retract vectors from the index (MinHashIndex.delete's
-        analogue): ``ids`` — a DataFrame carrying the id column, or an
-        iterable — are tombstoned with one O(|ids|) parquet append;
-        ``search``/``dup_probe``/``admit`` mask them with a broadcast
-        anti-join, so results equal an index rebuilt without those
-        vectors; the next ``compact()`` materializes the deletions
-        into the rewritten files and clears the tombstones. Tombstones
-        mask by ID (re-append a deleted id only after compact, or
-        under a fresh id — see MinHashIndex.delete). ``lease``: every
-        index writer holds the single-writer lease (VERDICT r10
-        Wrong #1); pass False only when the caller already holds it."""
-        if self.path is None:
-            raise ValueError(
-                "delete requires a persisted index — call write() first"
-            )
-        if lease:
-            with self._writer_lease():
-                return self.delete(ids, lease=False)
-        spark = self.assigned.sparkSession
-        # Tombstones carry the INDEX's id dtype, derived from the
-        # assigned table (ADVICE r9 #3: a hardcoded long schema made
-        # string-id deletions raise or silently anti-join nothing
-        # across a type mismatch).
-        id_type = self.assigned.schema[self.id_col].dataType
-        if isinstance(ids, DataFrame):
-            tdf = ids.select(F.col(self.id_col).cast(id_type))
-        else:
-            tdf = spark.createDataFrame(
-                [(i,) for i in ids],
-                T.StructType([T.StructField(self.id_col, id_type)]),
-            )
-        tdf.write.mode("append").parquet(self._tombstones_dir())
-        self._reload(spark)
-
     def write(self, spark, path: str) -> None:
         """Persist the assigned table partitioned by cluster_id: a
         probe then reads only n_probe/n_centroids of the FILES
@@ -483,12 +407,9 @@ class IVFIndex:
             # meta sidecar needs refreshing.
             self._write_meta(spark, path)
             return
-        # A previous occupant's tombstones live at path+"_tombstones" —
-        # OUTSIDE the data root the overwrite below replaces — and would
-        # silently mask this index's rows on the next _reload (ADVICE
-        # r9 #1). Clear them BEFORE writing, so a mid-write crash can
-        # never leave fresh data under stale tombstones.
-        hfs.delete(spark, path + "_tombstones")
+        # the previous occupant's tombstones live OUTSIDE the data root
+        # the overwrite below replaces (ADVICE r9 #1)
+        self._clear_previous(spark, path)
         data = self._live_assigned()  # a re-homed index materializes
         self.generation = 0           # its pending deletions
         # Hash-distribute on the partition key before the partitionBy
@@ -507,57 +428,14 @@ class IVFIndex:
         self.path = path
         self._reload(spark)
 
-    def _persisted_generations(self, spark) -> list:
-        """Generations whose data dirs exist on disk, ascending
-        (generation 0 lives as cluster_id= partitions at the path
-        root; later ones under data_g{N})."""
-        gens = set()
-        for name in hfs.list_names(spark, self.path):
-            if name.startswith("cluster_id="):
-                gens.add(0)
-            elif name.startswith("data_g"):
-                try:
-                    gens.add(int(name[len("data_g"):]))
-                except ValueError:
-                    pass
-        return sorted(gens)
-
-    def _delete_generation(self, spark, g: int) -> None:
-        # Hadoop FS deletes, not shutil: on an object store — the
-        # 100 TB home this rewrite discipline exists for (SCALING
-        # §17a) — shutil sees nothing and superseded generations
-        # would accumulate forever.
-        if g == 0:
-            # generation 0 lives at the path ROOT: remove only its
-            # cluster partitions (+ the write markers), never the new
-            # data_g dirs, the meta sidecar, or the writer lease
-            for name in hfs.list_names(spark, self.path):
-                full = self.path.rstrip("/") + "/" + name
-                if name.startswith("cluster_id="):
-                    hfs.delete(spark, full)
-                elif name == "_SUCCESS" or name.startswith("_committed"):
-                    hfs.delete(spark, full, recursive=False)
-        else:
-            hfs.delete(spark, self.path.rstrip("/") + f"/data_g{g}")
-
-    def _finish_rewrite(self, spark, retain: int) -> tuple:
-        """Post-flip cleanup shared by compact()/refit(): remove the
-        consumed tombstones, reload off the new generation, then age
-        out superseded generations beyond the newest ``retain`` (those
-        stay on disk for in-flight readers — ``vacuum()`` does the
-        final delete). Returns (file count, kept gens, removed gens)."""
-        hfs.delete(spark, self._tombstones_dir())
-        self._reload(spark)
-        superseded = [
-            g for g in self._persisted_generations(spark)
-            if g < self.generation
-        ]
-        kept = superseded[len(superseded) - retain:] if retain > 0 else []
-        removed = [g for g in superseded if g not in kept]
-        for g in removed:
-            self._delete_generation(spark, g)
-        after = _count_parquet_files(spark, self._data_dir())
-        return after, kept, removed
+    def _write_sorted(self, data: DataFrame) -> None:
+        """compact()/refit()'s rewrite: one id-sorted file per cluster
+        partition into the live generation's dir."""
+        self._write_distribution(data).sortWithinPartitions(
+            self.id_col
+        ).write.mode("overwrite").partitionBy("cluster_id").parquet(
+            self._dirs()[0]
+        )
 
     def compact(self, retain: int = 1, lease: bool = True) -> dict:
         """Rewrite the assigned table into one id-sorted file per
@@ -566,78 +444,24 @@ class IVFIndex:
         accumulates per-partition small files — each probe then pays
         per-file footer opens and loses row-group pruning. The rewrite
         (one shuffle: ``repartition(n_centroids, cluster_id)`` +
-        ``sortWithinPartitions(id)``) lands under generation-N+1 dirs
-        and the meta pointer flips only after it succeeds.
-
-        Reader safety: live files are never overwritten, and the
-        newest ``retain`` superseded generations are KEPT on disk
-        (default: 1 flip) so a search planned against the old files
-        completes after the flip — ``vacuum()`` (or a later compact
-        aging them out) does the actual delete. Consumed tombstone
-        control files are removed at the flip (O(KB), broadcast at
-        job launch — re-plan a not-yet-launched probe). ``lease=True``
-        holds the single-writer lease across plan→rewrite→flip→cleanup
-        (VERDICT r10 Wrong #1: an unguarded compact racing a
-        concurrent admit deletes the admit's freshly appended files).
+        ``sortWithinPartitions(id)``) lands under generation N+1 and
+        the meta pointer flips only after it succeeds; ``retain`` and
+        the reader-safety contract are operators/_lifecycle.py's.
 
         Returns before/after file counts (None on never-persisted
         paths) plus kept/removed superseded generations. Search
         results are unchanged (pytest + q119 gate pin it)."""
-        if self.path is None:
-            raise ValueError(
-                "compact requires a persisted index — call write() first"
-            )
-        if lease:
-            with self._writer_lease():
-                return self.compact(retain=retain, lease=False)
-        spark = self.assigned.sparkSession
-        old_gen = getattr(self, "generation", 0)
-        before = _count_parquet_files(spark, self._data_dir())
-        # materialize pending deletions into the rewrite
-        data = self._live_assigned()
-        self.generation = old_gen + 1
-        try:
-            self._write_distribution(data).sortWithinPartitions(
-                self.id_col
-            ).write.mode(
-                "overwrite"
-            ).partitionBy("cluster_id").parquet(self._data_dir())
-            self._write_meta(spark, self.path)
-        except Exception:
-            self.generation = old_gen
-            raise
-        after, kept, removed = self._finish_rewrite(spark, retain)
-        return {
-            "files_before": before,
-            "files_after": after,
-            "retained_generations": kept,
-            "removed_generations": removed,
-        }
-
-    def vacuum(self, lease: bool = True) -> dict:
-        """Delete ALL superseded generations now (the retention
-        window's terminal delete — run once no reader planned before
-        the last flip can still be in flight). Takes the single-writer
-        lease; pending tombstones belong to the LIVE generation and
-        are untouched."""
-        if self.path is None:
-            raise ValueError(
-                "vacuum requires a persisted index — call write() first"
-            )
-        if lease:
-            with self._writer_lease():
-                return self.vacuum(lease=False)
-        spark = self.assigned.sparkSession
-        removed = [
-            g for g in self._persisted_generations(spark)
-            if g < getattr(self, "generation", 0)
-        ]
-        for g in removed:
-            self._delete_generation(spark, g)
-        return {
-            "removed_generations": removed,
-            "live_generation": getattr(self, "generation", 0),
-        }
+        with _lifecycle.writer(self, "compact", lease):
+            before = self._files()
+            # materialize pending deletions into the rewrite
+            data = self._live_assigned()
+            kept, removed = self._flip(lambda: self._write_sorted(data), retain)
+            return {
+                "files_before": before,
+                "files_after": self._files(),
+                "retained_generations": kept,
+                "removed_generations": removed,
+            }
 
     def refit(self, retain: int = 1, lease: bool = True) -> dict:
         """Re-fit the centroids on the current LIVE corpus and rewrite
@@ -650,11 +474,9 @@ class IVFIndex:
         response. Runs the same deterministic k-means as ``__init__``
         (stride-seeded init by id order + ``iters`` Lloyd steps) over
         the live rows (pending tombstones materialized out), rewrites
-        one id-sorted file per cluster under generation N+1, flips the
-        meta pointer, and ages superseded generations past the
-        ``retain`` window — compact()'s reader-safe rewrite/retention
-        discipline (and its single-writer ``lease``), with int8 codes
-        re-derived when ``store_int8`` is set.
+        one id-sorted file per cluster under generation N+1 and flips
+        the meta pointer as compact() does, with int8 codes or PQ
+        codebooks re-derived when the index stores them.
 
         Determinism: ``refit`` after ``build(A) + append(B)`` equals a
         FRESH build on A∪B — same init sample (first n_centroids live
@@ -666,76 +488,55 @@ class IVFIndex:
         EXACTLY (6-dp cosines), which is the contract the q125 driver
         gate replays as the fresh-build SQL oracle. Returns
         before/after file counts and the refit corpus size."""
-        if self.path is None:
-            raise ValueError(
-                "refit requires a persisted index — call write() first"
+        with _lifecycle.writer(self, "refit", lease):
+            before = self._files()
+            base_cols = [
+                c
+                for c in self.assigned.columns
+                if c not in ("cluster_id", "_qvec", "_scale", "_pcodes", "_pnorm")
+            ]
+            live = self._live_assigned().select(*base_cols)
+            fresh = IVFIndex(
+                live,
+                n_centroids=self.n_centroids,
+                id_col=self.id_col,
+                vec_col=self.vec_col,
+                iters=self.iters if isinstance(self.iters, int) else 2,
+                store_int8=self.store_int8,
+                store_pq=self.store_pq,
+                pq_m=self.pq_m,
+                pq_codes=self.pq_codes,
             )
-        if lease:
-            with self._writer_lease():
-                return self.refit(retain=retain, lease=False)
-        spark = self.assigned.sparkSession
-        old_gen = getattr(self, "generation", 0)
-        old_centroids = self.centroids
-        before = _count_parquet_files(spark, self._data_dir())
-        base_cols = [
-            c
-            for c in self.assigned.columns
-            if c not in ("cluster_id", "_qvec", "_scale", "_pcodes", "_pnorm")
-        ]
-        live = self._live_assigned().select(*base_cols)
-        fresh = IVFIndex(
-            live,
-            n_centroids=self.n_centroids,
-            id_col=self.id_col,
-            vec_col=self.vec_col,
-            iters=self.iters if isinstance(self.iters, int) else 2,
-            store_int8=getattr(self, "store_int8", False),
-            store_pq=getattr(self, "store_pq", False),
-            pq_m=getattr(self, "pq_m", 4),
-            pq_codes=getattr(self, "pq_codes", 16),
-        )
-        old_books = getattr(self, "pq_codebooks", None)
-        self.centroids = fresh.centroids
-        self.pq_codebooks = fresh.pq_codebooks
-        self.generation = old_gen + 1
-        try:
-            self._write_distribution(fresh.assigned).sortWithinPartitions(
-                self.id_col
-            ).write.mode(
-                "overwrite"
-            ).partitionBy("cluster_id").parquet(self._data_dir())
-            self._write_meta(spark, self.path)
-        except Exception:
-            # live pointer still names the old dirs and geometry
-            self.generation = old_gen
-            self.centroids = old_centroids
-            self.pq_codebooks = old_books
-            raise
-        after, kept, removed = self._finish_rewrite(spark, retain)
-        return {
-            "files_before": before,
-            "files_after": after,
-            "retained_generations": kept,
-            "removed_generations": removed,
-            "vectors": self.assigned.count(),
-        }
+            kept, removed = self._flip(
+                lambda: self._write_sorted(fresh.assigned),
+                retain,
+                centroids=fresh.centroids,
+                pq_codebooks=fresh.pq_codebooks,
+            )
+            return {
+                "files_before": before,
+                "files_after": self._files(),
+                "retained_generations": kept,
+                "removed_generations": removed,
+                "vectors": self.assigned.count(),
+            }
 
     def _write_meta(self, spark, path: str) -> None:
         meta = {
             "format_version": IVF_FORMAT_VERSION,
-            "data_generation": getattr(self, "generation", 0),
+            self.LAYOUT.pointer: self.generation,
             "centroids": self.centroids,
             "id_col": self.id_col,
             "vec_col": self.vec_col,
             "n_centroids": self.n_centroids,
-            "iters": getattr(self, "iters", None),
-            "store_int8": getattr(self, "store_int8", False),
-            "store_pq": getattr(self, "store_pq", False),
-            "pq_m": getattr(self, "pq_m", 4),
-            "pq_codes": getattr(self, "pq_codes", 16),
+            "iters": self.iters,
+            "store_int8": self.store_int8,
+            "store_pq": self.store_pq,
+            "pq_m": self.pq_m,
+            "pq_codes": self.pq_codes,
             # m*n_codes*dsub floats (KBs) — persisted so appends encode
             # with the books the build trained
-            "pq_codebooks": getattr(self, "pq_codebooks", None),
+            "pq_codebooks": self.pq_codebooks,
         }
         # Driver-side text file through the Hadoop FS API (~ms, and
         # idempotent via tmp-write + rename). The previous 1-row
@@ -750,8 +551,7 @@ class IVFIndex:
         _assigned: DataFrame | None = None,
     ) -> None:
         """Admit a batch of new vectors (VERDICT r8's ingestion-loop
-        discipline, the MinHashIndex.append analogue for embeddings):
-        assign each batch vector to its nearest EXISTING centroid —
+        discipline): assign each batch vector to its nearest EXISTING centroid —
         the same argmin-L2 kernel the build used, so probes stay
         consistent with the persisted geometry — and append the
         assignments as new files inside the cluster_id partitions.
@@ -759,40 +559,29 @@ class IVFIndex:
         would silently invalidate every previously-assigned vector —
         rebuild when drift warrants it, the meta sidecar's version
         check makes stale mixes impossible to serve by accident).
-        Caller owns id uniqueness, as with MinHashIndex.append.
-        ``lease``: every index writer holds the single-writer lease
-        (an append racing a compact lands files the compact's
-        pre-planned rewrite never saw); pass False only when the
-        caller already holds it (``admit()`` does)."""
-        if self.path is None:
-            raise ValueError(
-                "append requires a persisted index — call write() first"
+        Caller owns id uniqueness, as with MinHashIndex.append."""
+        with _lifecycle.writer(self, "append", lease):
+            # ``_assigned``: batch rows with cluster_id already attached
+            # (admit passes its persisted home assignment, sparing this
+            # write a third Arrow assignment pass over the batch).
+            assigned = _assigned if _assigned is not None else batch.withColumn(
+                "cluster_id",
+                _assign_udf(self.centroids)(
+                    F.col(self.vec_col).cast("array<double>")
+                ),
             )
-        if lease:
-            with self._writer_lease():
-                return self.append(batch, lease=False, _assigned=_assigned)
-        spark = batch.sparkSession
-        # ``_assigned``: batch rows with cluster_id already attached
-        # (admit passes its persisted home assignment, sparing this
-        # write a third Arrow assignment pass over the batch).
-        assigned = _assigned if _assigned is not None else batch.withColumn(
-            "cluster_id",
-            _assign_udf(self.centroids)(
-                F.col(self.vec_col).cast("array<double>")
-            ),
-        )
-        if getattr(self, "store_int8", False):
-            assigned = self._with_quant(assigned)
-        if getattr(self, "store_pq", False):
-            assigned = self._with_pq(assigned)
-        # see write(): one file per cluster per append, not one per
-        # (input task, cluster)
-        assigned.repartition(
-            self.n_centroids, "cluster_id"
-        ).write.mode("append").partitionBy("cluster_id").parquet(
-            self._data_dir()
-        )
-        self._reload(spark)
+            if self.store_int8:
+                assigned = self._with_quant(assigned)
+            if self.store_pq:
+                assigned = self._with_pq(assigned)
+            # see write(): one file per cluster per append, not one per
+            # (input task, cluster)
+            assigned.repartition(
+                self.n_centroids, "cluster_id"
+            ).write.mode("append").partitionBy("cluster_id").parquet(
+                self._dirs()[0]
+            )
+            self._reload(self._spark)
 
     def _batch_payload(self, b: DataFrame) -> dict:
         """Driver-side per-cluster matrices of the O(batch) probe side:
@@ -937,157 +726,130 @@ class IVFIndex:
         intra_batch: bool = True,
         lease: bool = True,
     ) -> DataFrame:
-        """The embeddings admission step (MinHashIndex.admit's
-        analogue): drop batch vectors that near-duplicate the indexed
-        corpus (``dup_probe`` at ``threshold``/``n_probe``) or — with
-        ``intra_batch=True`` — a LOWER-id vector of the same batch
-        sharing the same HOME cluster (nearest centroid; the dominated
-        policy: a pair property, order-free, still dropped when the
-        dominating row is itself dropped). Appends only the survivors,
-        returns them with their original columns. All O(batch).
-
-        ``lease=True`` holds the index's admission lease across the
-        probe→append critical section (single-writer enforcement —
-        see MinHashIndex.admit); a concurrent admitter raises
-        :class:`qcache_spark.lease.LeaseHeld`."""
-        if self.path is None:
-            raise ValueError(
-                "admit requires a persisted index — call write() first"
+        """The embeddings admission step: drop batch vectors that
+        near-duplicate the indexed corpus (``dup_probe`` at
+        ``threshold``/``n_probe``) or — with ``intra_batch=True`` — a
+        LOWER-id vector of the same batch sharing the same HOME
+        cluster (nearest centroid; the dominated policy: a pair
+        property, order-free, still dropped when the dominating row
+        is itself dropped). Appends only the survivors, returns them
+        with their original columns. All O(batch). The probe→append
+        section holds the writer lease (operators/_lifecycle.py)."""
+        with _lifecycle.writer(self, "admit", lease):
+            vec = F.col(self.vec_col).cast("array<double>")
+            # ONE materialized Arrow assignment pass over the batch feeds
+            # the corpus probe (n_probe=1), the intra-batch home self-join
+            # and the survivor append — unshared, each ran its own
+            # JVM→Python→JVM matmul pass over the same rows (guide §4:
+            # cross the Python boundary once). localCheckpoint (eager) so
+            # downstream plans read an in-memory relation instead of
+            # re-planning the UDF lineage per consumer; blocks are
+            # O(batch), freed by the context cleaner when the survivors
+            # frame is dropped (retry trade-off as in MinHashIndex.admit).
+            home = batch.withColumn(
+                "cluster_id", _assign_udf(self.centroids)(vec)
+            ).localCheckpoint(eager=True)
+            # ONE per-cluster batch payload (driver-collected from the
+            # checkpointed home rows — the same bytes the old plan pulled
+            # to the driver for its JVM broadcast) feeds the home-cluster
+            # probe (n_probe=1) and the intra-batch stage below as a
+            # Python broadcast; each stage is a single numpy-Gram
+            # MapInPandas pass instead of a join whose condition ran a
+            # per-pair JVM `aggregate(zip_with(...))` dot (guide §4.2;
+            # measured: q117 sf1 admit 14.0 s -> sub-second for the
+            # pairwise stages). Neither stage needs it at n_probe > 1
+            # without intra_batch: dup_probe then collects its own.
+            bsel = home.select(
+                F.col(self.id_col).alias("batch_id"),
+                vec.alias("_vb"),
+                F.col("cluster_id"),
             )
-        if lease:
-            from qcache_spark.lease import IndexLease
+            payload = (
+                self._batch_payload(bsel) if n_probe == 1 or intra_batch else None
+            )
+            dropped = self.dup_probe(
+                batch,
+                threshold,
+                n_probe,
+                _assigned=home,
+                _payload=payload if n_probe == 1 else None,
+            ).select(F.col("batch_id").alias("_dropped"))
+            if intra_batch:
+                # dominated policy: drop a batch row iff a LOWER-id row of
+                # the same HOME cluster reaches the threshold against it.
+                # Work per task = rows_task x |batch ∩ cluster| matmul —
+                # the per-home-cluster |cluster ∩ batch|² self-join this
+                # replaces was the round's flagged quadratic stage
+                # (VERDICT r12 Wrong #1); the quadratic pair count still
+                # exists but is spread across the batch's scan tasks at
+                # BLAS speed, with no per-cluster giant task.
+                bc = batch.sparkSession.sparkContext.broadcast(payload)
+                id_type = self.assigned.schema[self.id_col].dataType
+                dom_schema = T.StructType([T.StructField("_dropped", id_type)])
 
-            with IndexLease(self.assigned.sparkSession, self.path):
-                return self.admit(
-                    batch,
-                    threshold=threshold,
-                    n_probe=n_probe,
-                    intra_batch=intra_batch,
-                    lease=False,
-                )
-        vec = F.col(self.vec_col).cast("array<double>")
-        # ONE materialized Arrow assignment pass over the batch feeds
-        # the corpus probe (n_probe=1), the intra-batch home self-join
-        # and the survivor append — unshared, each ran its own
-        # JVM→Python→JVM matmul pass over the same rows (guide §4:
-        # cross the Python boundary once). localCheckpoint (eager) so
-        # downstream plans read an in-memory relation instead of
-        # re-planning the UDF lineage per consumer; blocks are
-        # O(batch), freed by the context cleaner when the survivors
-        # frame is dropped (retry trade-off as in MinHashIndex.admit).
-        home = batch.withColumn(
-            "cluster_id", _assign_udf(self.centroids)(vec)
-        ).localCheckpoint(eager=True)
-        # ONE per-cluster batch payload (driver-collected from the
-        # checkpointed home rows — the same bytes the old plan pulled
-        # to the driver for its JVM broadcast) feeds BOTH pairwise
-        # stages below as a Python broadcast; each stage is a single
-        # numpy-Gram MapInPandas pass instead of a join whose
-        # condition ran a per-pair JVM `aggregate(zip_with(...))` dot
-        # (guide §4.2; measured: q117 sf1 admit 14.0 s -> sub-second
-        # for the pairwise stages).
-        bsel = home.select(
-            F.col(self.id_col).alias("batch_id"),
-            vec.alias("_vb"),
-            F.col("cluster_id"),
-        )
-        payload = self._batch_payload(bsel)
-        dropped = self.dup_probe(
-            batch,
-            threshold,
-            n_probe,
-            _assigned=home,
-            _payload=payload if n_probe == 1 else None,
-        ).select(F.col("batch_id").alias("_dropped"))
-        if intra_batch:
-            # dominated policy: drop a batch row iff a LOWER-id row of
-            # the same HOME cluster reaches the threshold against it.
-            # Work per task = rows_task x |batch ∩ cluster| matmul —
-            # the per-home-cluster |cluster ∩ batch|² self-join this
-            # replaces was the round's flagged quadratic stage
-            # (VERDICT r12 Wrong #1); the quadratic pair count still
-            # exists but is spread across the batch's scan tasks at
-            # BLAS speed, with no per-cluster giant task.
-            bc = batch.sparkSession.sparkContext.broadcast(payload)
-            id_type = self.assigned.schema[self.id_col].dataType
-            dom_schema = T.StructType([T.StructField("_dropped", id_type)])
+                def dominated_fn(iterator):
+                    data = bc.value
+                    for pdf in iterator:
+                        outs = []
+                        for cid, g in pdf.groupby("cluster_id"):
+                            hit = data.get(int(cid))
+                            if hit is None:
+                                continue
+                            b_ids, V, bn = hit
+                            X = np.vstack(g["_vb"].to_numpy()).astype(
+                                np.float64
+                            )
+                            xn = np.sqrt(np.einsum("ij,ij->i", X, X))
+                            C = (X @ V.T) / (xn[:, None] * bn[None, :])
+                            ids = g["batch_id"].to_numpy()
+                            mask = (C >= threshold) & (
+                                b_ids[None, :] < ids[:, None]
+                            )
+                            dom = ids[mask.any(axis=1)]
+                            if len(dom):
+                                outs.append(dom)
+                        if outs:
+                            yield pd.DataFrame(
+                                {"_dropped": np.concatenate(outs)}
+                            )
 
-            def dominated_fn(iterator):
-                data = bc.value
-                for pdf in iterator:
-                    outs = []
-                    for cid, g in pdf.groupby("cluster_id"):
-                        hit = data.get(int(cid))
-                        if hit is None:
-                            continue
-                        b_ids, V, bn = hit
-                        X = np.vstack(g["_vb"].to_numpy()).astype(
-                            np.float64
-                        )
-                        xn = np.sqrt(np.einsum("ij,ij->i", X, X))
-                        C = (X @ V.T) / (xn[:, None] * bn[None, :])
-                        ids = g["batch_id"].to_numpy()
-                        mask = (C >= threshold) & (
-                            b_ids[None, :] < ids[:, None]
-                        )
-                        dom = ids[mask.any(axis=1)]
-                        if len(dom):
-                            outs.append(dom)
-                    if outs:
-                        yield pd.DataFrame(
-                            {"_dropped": np.concatenate(outs)}
-                        )
-
-            dominated = bsel.mapInPandas(dominated_fn, dom_schema)
-            dropped = dropped.union(dominated)
-        # read three times (batch anti-join, home anti-join, and the
-        # caller's consumption of survivors) — checkpoint the
-        # O(dropped) id rows so each reader is an anti-join against an
-        # in-memory relation, not a re-run of the probe+self-join
-        dropped_ids = dropped.distinct().localCheckpoint(eager=True)
-        survivors = batch.join(
-            dropped_ids.withColumnRenamed("_dropped", self.id_col),
-            self.id_col,
-            "left_anti",
-        )
-        # lease=False: admit already holds the writer lease. The
-        # survivors' assignment is the home assignment minus dropped
-        # ids — row-identical to re-assigning the survivors (the
-        # centroids are fixed), sparing append its own Arrow pass.
-        self.append(
-            survivors,
-            lease=False,
-            _assigned=home.join(
+                dominated = bsel.mapInPandas(dominated_fn, dom_schema)
+                dropped = dropped.union(dominated)
+            # read three times (batch anti-join, home anti-join, and the
+            # caller's consumption of survivors) — checkpoint the
+            # O(dropped) id rows so each reader is an anti-join against an
+            # in-memory relation, not a re-run of the probe+self-join
+            dropped_ids = dropped.distinct().localCheckpoint(eager=True)
+            survivors = batch.join(
                 dropped_ids.withColumnRenamed("_dropped", self.id_col),
                 self.id_col,
                 "left_anti",
-            ),
-        )
-        return survivors
+            )
+            # lease=False: admit already holds the writer lease. The
+            # survivors' assignment is the home assignment minus dropped
+            # ids — row-identical to re-assigning the survivors (the
+            # centroids are fixed), sparing append its own Arrow pass.
+            self.append(
+                survivors,
+                lease=False,
+                _assigned=home.join(
+                    dropped_ids.withColumnRenamed("_dropped", self.id_col),
+                    self.id_col,
+                    "left_anti",
+                ),
+            )
+            return survivors
 
     @classmethod
     def load(cls, spark, path: str, expect: dict | None = None) -> "IVFIndex":
-        """Load a persisted index, refusing stale artifacts.
-
-        Raises IVFIndexMismatch when the sidecar's format_version
-        differs from the running code's IVF_FORMAT_VERSION (including
-        pre-versioning indexes with no tag at all), or when any key in
-        `expect` (e.g. {"n_centroids": 8, "iters": 1}) disagrees with
-        the persisted build parameters — the caller should rebuild."""
-        meta = hfs.read_meta_sidecar(spark, path)
-        found = meta.get("format_version")
-        if found != IVF_FORMAT_VERSION:
-            raise IVFIndexMismatch(
-                f"IVF index at {path!r} has format_version={found!r}, "
-                f"code expects {IVF_FORMAT_VERSION}; rebuild the index"
-            )
-        for key, want in (expect or {}).items():
-            if meta.get(key) != want:
-                raise IVFIndexMismatch(
-                    f"IVF index at {path!r} was built with "
-                    f"{key}={meta.get(key)!r}, caller expects {want!r}; "
-                    "rebuild the index"
-                )
+        """Load a persisted index; raises :class:`IVFIndexMismatch` on
+        a stale format version or an ``expect`` key (e.g.
+        {"n_centroids": 8, "iters": 1}) that differs from the persisted
+        build parameters."""
+        meta = _lifecycle.load_meta(
+            spark, path, IVF_FORMAT_VERSION, IVFIndexMismatch, "IVF index",
+            expect,
+        )
         index = cls.__new__(cls)
         index.centroids = meta["centroids"]
         index.id_col = meta["id_col"]
@@ -1100,7 +862,8 @@ class IVFIndex:
         index.pq_codes = meta.get("pq_codes", 16)
         index.pq_codebooks = meta.get("pq_codebooks")
         index.path = path
-        index.generation = meta.get("data_generation", 0)
+        index.generation = meta.get(cls.LAYOUT.pointer, 0)
+        index._spark = spark
         index._reload(spark)
         return index
 

@@ -241,7 +241,15 @@ class QCacheHandler(BaseHTTPRequestHandler):
         self.wfile.write(b"0\r\n\r\n")
 
     def _read_body(self) -> bytes:
-        length = int(self.headers.get("Content-Length", 0))
+        try:
+            length = int(self.headers.get("Content-Length", 0))
+        except ValueError:
+            length = -1
+        if length < 0:
+            # read(-1) would block until the client closes, and an
+            # unread body would be parsed as the next request
+            self.close_connection = True
+            raise MalformedQueryException("Invalid Content-Length header")
         raw = self.rfile.read(length)
         return _decode_body(raw, self.headers.get("Content-Encoding"))
 

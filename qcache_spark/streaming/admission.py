@@ -48,8 +48,7 @@ import json
 from pyspark.sql import DataFrame
 
 from qcache_spark import hadoopfs as hfs
-
-_PROGRESS_FILE = "_admission_progress.json"
+from qcache_spark.operators import _lifecycle
 
 
 class AdmissionScopeMismatch(RuntimeError):
@@ -62,16 +61,7 @@ class AdmissionScopeMismatch(RuntimeError):
 
 
 def _progress_path(index_path: str) -> str:
-    return index_path.rstrip("/") + "/" + _PROGRESS_FILE
-
-
-def _index_spark(index):
-    """The SparkSession an index was built/loaded with (MinHashIndex
-    keeps `_spark`; IVFIndex reaches it through `assigned`)."""
-    spark = getattr(index, "_spark", None)
-    if spark is None:
-        spark = index.assigned.sparkSession
-    return spark
+    return index_path.rstrip("/") + "/" + _lifecycle.PROGRESS_FILE
 
 
 def _read_progress(spark, index_path: str) -> dict:
@@ -163,15 +153,9 @@ def admit_foreach_batch(
     it visible as duplicate postings for that one batch, exactly like
     calling ``append`` twice, and ``on_batch`` (if given) receives
     ``(batch_id, survivors_count)`` for monitoring."""
-    if index.path is None:
-        raise ValueError(
-            "streaming admission requires a persisted index — call "
-            "write() first"
-        )
+    _lifecycle.require_persisted(index, "streaming admission")
     # Fail a scope mismatch at wiring time, not first-batch time.
-    _check_scope(
-        _read_progress(_index_spark(index), index.path), scope, index.path
-    )
+    _check_scope(_read_progress(index._spark, index.path), scope, index.path)
 
     def _admit(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession

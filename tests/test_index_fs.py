@@ -96,6 +96,7 @@ def test_index_modules_have_no_posix_fs_calls():
         r"makedirs|scandir)|(shutil|_shutil)\.\w+)$"
     )
     for rel in (
+        "operators/_lifecycle.py",
         "operators/dedup.py",
         "operators/similarity.py",
         "streaming/admission.py",
@@ -107,6 +108,88 @@ def test_index_modules_have_no_posix_fs_calls():
             if isinstance(node, ast.Call):
                 name = called_names(node.func)
                 assert not banned.match(name), f"{rel}:{node.lineno}: {name}()"
+
+
+def test_index_lifecycle_lives_only_in_lifecycle_module():
+    """The persisted-index lifecycle exists once: no package module
+    but operators/_lifecycle.py constructs an IndexLease (lease.py
+    defines it; the drift monitor leases a metrics path, not an
+    index), states the persisted-index refusal, or spells a
+    generation dir name."""
+    import ast
+
+    import qcache_spark
+
+    pkg = os.path.dirname(qcache_spark.__file__)
+    lease_ok = {"lease.py", os.path.join("streaming", "drift_monitor.py")}
+    # a generation dir name, not the postings_generation meta key
+    gen_dir = re.compile(r"(postings|sets|data)_g(?![a-z])")
+    offenders = []
+    for root, _, files in os.walk(pkg):
+        for name in files:
+            path = os.path.join(root, name)
+            rel = os.path.relpath(path, pkg)
+            if not name.endswith(".py") or rel == os.path.join(
+                "operators", "_lifecycle.py"
+            ):
+                continue
+            for node in ast.walk(ast.parse(open(path).read())):
+                lease = (
+                    isinstance(node, ast.Call)
+                    and (
+                        isinstance(node.func, ast.Name)
+                        and node.func.id == "IndexLease"
+                        or isinstance(node.func, ast.Attribute)
+                        and node.func.attr == "IndexLease"
+                    )
+                    and rel not in lease_ok
+                )
+                literal = (
+                    isinstance(node, ast.Constant)
+                    and isinstance(node.value, str)
+                    and (
+                        "requires a persisted index" in node.value
+                        or gen_dir.search(node.value)
+                    )
+                )
+                if lease or literal:
+                    offenders.append(f"{rel}:{node.lineno}")
+    assert not offenders, offenders
+
+
+@pytest.fixture(scope="module")
+def never_written(spark, sf_dir):
+    docs = load_table(spark, sf_dir, "documents").limit(20)
+    emb = load_table(spark, sf_dir, "embeddings").limit(20)
+    batch = docs.select("doc_id", "text")
+    return {
+        "minhash": (MinHashIndex(docs), {
+            "append": (batch,), "merge": (MinHashIndex(docs),),
+            "delete": ([1],), "compact": (), "vacuum": (), "admit": (batch,),
+        }),
+        "ivf": (IVFIndex(emb, n_centroids=2, iters=0), {
+            "append": (emb,), "delete": ([1],), "compact": (), "vacuum": (),
+            "refit": (), "admit": (emb,),
+        }),
+    }
+
+
+@pytest.mark.parametrize("lease", [True, False])
+@pytest.mark.parametrize(
+    "family,verb",
+    [("minhash", v) for v in
+     ("append", "merge", "delete", "compact", "vacuum", "admit")]
+    + [("ivf", v) for v in
+       ("append", "delete", "compact", "vacuum", "refit", "admit")],
+)
+def test_writer_verbs_refuse_never_written_index(never_written, family, verb, lease):
+    """Every writer verb of both families refuses an in-memory index
+    with a ValueError naming write(), with or without the lease."""
+    idx, args = never_written[family]
+    with pytest.raises(
+        ValueError, match=rf"^{verb} requires a persisted index .*write\(\)"
+    ):
+        getattr(idx, verb)(*args[verb], lease=lease)
 
 
 # ------------------------------------- full lifecycle over file: URIs

@@ -122,6 +122,31 @@ def test_ivf_admit_survivors_plan_is_truncated(spark, tmp_path, vecs):
     )
 
 
+def test_ivf_admit_collects_the_batch_once(spark, tmp_path, vecs):
+    """admit builds its driver-side batch payload only when a stage
+    reads it (n_probe=1 or intra_batch). At n_probe=2 dup_probe
+    collects the batch itself, so without intra_batch the admission
+    runs one Spark job fewer than with it (the intra-batch stage
+    itself runs inside the dropped-id checkpoint job)."""
+    path = _uri(tmp_path, "ivf_admit_jobs")
+    IVFIndex(vecs.filter("vec_id % 4 != 0"), n_centroids=4, iters=1).write(
+        spark, path
+    )
+    idx = IVFIndex.load(spark, path)
+    tracker = spark.sparkContext.statusTracker()
+    jobs = {}
+    for intra_batch, m in ((True, 0), (False, 2)):
+        before = set(tracker.getJobIdsForGroup(None))
+        idx.admit(
+            vecs.filter(f"vec_id % 4 = {m}"),
+            threshold=0.99,
+            n_probe=2,
+            intra_batch=intra_batch,
+        )
+        jobs[intra_batch] = len(set(tracker.getJobIdsForGroup(None)) - before)
+    assert jobs[False] < jobs[True], jobs
+
+
 # ------------------------------------------------- write file counts
 
 

@@ -1283,3 +1283,31 @@ def test_pipeline_drift_high_cardinality_400(server):
     )
     assert code == 400
     assert b"high-cardinality" in body
+
+
+@pytest.mark.parametrize("length", ["-1", "abc"])
+def test_bad_content_length_is_400_and_closes(server, length):
+    """A negative or non-numeric Content-Length is bad client input:
+    400 before any body read (read(-1) would block until the client
+    hangs up), and the connection closes so the unread body is never
+    parsed as a next request."""
+    import socket
+
+    host, port = server[len("http://"):].split(":")
+    with socket.create_connection((host, int(port)), timeout=10) as sock:
+        sock.sendall(
+            b"POST /qcache/dataset/bad_len HTTP/1.1\r\n"
+            b"Host: x\r\nContent-Type: text/csv\r\n"
+            b"Content-Length: " + length.encode() + b"\r\n\r\n"
+            b"foo,bar\n1,2\n"
+        )
+        data = b""
+        while True:
+            chunk = sock.recv(4096)
+            if not chunk:  # server closed the connection
+                break
+            data += chunk
+    assert data.startswith(b"HTTP/1.1 400"), data[:200]
+    assert b"Content-Length" in data
+    code, _, _ = call(server, "GET", "/qcache/dataset/bad_len?q=%7B%7D")
+    assert code == 404
