@@ -26,9 +26,8 @@ from pyspark.sql import types as T
 pd.set_option("mode.copy_on_write", True)
 
 from .errors import MalformedQueryException
-from .plans.compiler import compile_query
+from .plans import grammar as g
 from .plans.local import LocalResult, Unsupported, execute_local
-from .session import load_table
 
 # Compressed-parquet size gate for the local mirror. ~64 MiB parquet
 # ≈ a few hundred MiB in memory — the reference's own operating
@@ -133,37 +132,20 @@ def _to_spark(spark: SparkSession, pdf: pd.DataFrame) -> DataFrame:
     return spark.createDataFrame(pdf, schema=T.StructType(fields)).coalesce(1)
 
 
-def _walk_expr_refs(expr, out: set) -> bool:
-    """Collect bare (unquoted) string leaves of an alias expression."""
-    from .plans.filters import is_quoted
-
-    if isinstance(expr, str):
-        if not is_quoted(expr):
-            out.add(expr)
-        return True
-    if isinstance(expr, list):
-        return all(_walk_expr_refs(e, out) for e in expr[1:])
-    return True
-
-
-def _walk_filter_refs(f, out: set) -> bool:
-    from .plans.filters import is_quoted
-
-    if isinstance(f, str):
-        if not is_quoted(f):
-            out.add(f)
-        return True
-    if not isinstance(f, list):
-        return True
-    for part in f[1:]:
-        if isinstance(part, dict):
-            sub = referenced_input_columns(part)
-            if sub is None:
-                return False
-            out |= sub
-        elif isinstance(part, (list, str)):
-            if not _walk_filter_refs(part, out):
-                return False
+def _node_columns(node, out: set) -> bool:
+    """Add the column references of a filter or alias node to `out`:
+    its bare-string leaves, and every column an `in`-subquery reads.
+    False when a subquery may read every column."""
+    if isinstance(node, str):
+        if not g.is_quoted(node):
+            out.add(node)
+    elif isinstance(node, dict):
+        sub = referenced_input_columns(node)
+        if sub is None:
+            return False
+        out |= sub
+    elif isinstance(node, list):
+        return all(_node_columns(part, out) for part in node[1:])
     return True
 
 
@@ -173,37 +155,30 @@ def referenced_input_columns(q) -> set | None:
     of the ReadSchema pruning Catalyst does on the Spark path)."""
     if not isinstance(q, dict):
         return None
-    if "from" in q:
-        return referenced_input_columns(q["from"])
-    select = q.get("select")
+    if g.CLAUSE_FROM in q:
+        return referenced_input_columns(q[g.CLAUSE_FROM])
+    select = q.get(g.CLAUSE_SELECT)
     if not select or not isinstance(select, list):
         return None
     cols: set = set()
     for e in select:
         if isinstance(e, str):
             cols.add(e)
-        elif isinstance(e, list) and len(e) == 2:
+        elif g.is_aggregate_function(e):
             cols.add(e[1])
-        elif isinstance(e, list) and len(e) == 3 and e[0] == "=":
-            if not _walk_expr_refs(e[2], cols):
+        elif g.is_alias_assignment(e):
+            if not _node_columns(e[2], cols):
                 return None
-        elif e == ["count"] or (isinstance(e, list) and e == ["count"]):
-            pass
-        else:
+        elif e != ["count"]:
             return None
-    for clause in ("group_by", "distinct"):
+    for clause in (g.CLAUSE_GROUP_BY, g.CLAUSE_DISTINCT, g.CLAUSE_ORDER_BY):
         v = q.get(clause)
         if v:
             if not isinstance(v, list) or not all(isinstance(c, str) for c in v):
                 return None
-            cols |= set(v)
-    order = q.get("order_by")
-    if order:
-        if not isinstance(order, list) or not all(isinstance(c, str) for c in order):
-            return None
-        cols |= {c.lstrip("-") for c in order}
-    where = q.get("where")
-    if where is not None and not _walk_filter_refs(where, cols):
+            cols |= {c.lstrip("-") for c in v}  # "-" marks a descending order key
+    where = q.get(g.CLAUSE_WHERE)
+    if where is not None and not _node_columns(where, cols):
         return None
     return cols
 
@@ -241,12 +216,3 @@ def try_local(spark: SparkSession, sf_dir: str, table: str, q: dict):
     except Exception:  # a local gap must never fail the query
         return None
 
-
-def query_table(spark: SparkSession, sf_dir: str, table: str, q: dict) -> DataFrame:
-    """Run a qcache query dict against one of the testdata tables,
-    choosing the backend by data size. Returns a Spark DataFrame in
-    both cases (the fast path converts its pandas result via Arrow)."""
-    df = try_local(spark, sf_dir, table, q)
-    if df is not None:
-        return df
-    return compile_query(q, load_table(spark, sf_dir, table)).sliced

@@ -1,20 +1,13 @@
-"""Aggregate-function name table.
+"""Catalyst aggregate-function table, keyed by the names in grammar.py.
 
-The reference duck-types aggregate names straight onto pandas groupby
-methods (qcache/qframe/query.py:55-58) — `sum`, `count`, `min`,
-`max`, `mean`, `median`, `std`, `var`, `prod`, `first`, `last`,
-`nunique`, ... Unknown name → MalformedQueryException
-(test_qframe.py:334-338). We map that surface onto Spark's built-in
-(JVM, partial-aggregation-capable) aggregate expressions; every one
-of these does map-side combine before the shuffle, which is what
-makes the groupBy hold up at 100 TB.
+We map the reference's pandas groupby surface (qcache/qframe/query.py:
+55-58) onto Spark's built-in (JVM, partial-aggregation-capable)
+aggregate expressions; every one of these does map-side combine before
+the shuffle, which is what makes the groupBy hold up at 100 TB.
 """
 from __future__ import annotations
 
-from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-from ..errors import raise_malformed
 
 AGGREGATE_FUNCTIONS = {
     "sum": F.sum,
@@ -58,11 +51,3 @@ AGGREGATE_FUNCTIONS = {
     "kurt": F.kurtosis,
 }
 
-
-def compile_aggregate(fn_name: str, column: str, q) -> Column:
-    fn = AGGREGATE_FUNCTIONS.get(fn_name)
-    if fn is None:
-        raise_malformed(f"Unknown aggregation function '{fn_name}'", q)
-    # Output keeps the source column's name, matching the reference's
-    # `agg({col: fn})` result frame (query.py:50-58).
-    return fn(column).alias(column)

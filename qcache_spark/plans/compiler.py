@@ -5,10 +5,8 @@ The reference executes clause-at-a-time, eagerly, on pandas
 function producing an UNEXECUTED DataFrame — the JSON dict becomes a
 Catalyst logical plan, so predicate pushdown, column pruning,
 constant folding and partial aggregation all apply before anything
-runs. Clause order matches the reference pipeline exactly
-(query.py:216-226):
-
-    from → where → group_by → distinct → select → order_by → offset → limit
+runs. The grammar walker (grammar.py) validates the query and calls the
+Catalyst primitives below in clause order.
 
 Deliberate deviations (each documented where it happens):
 - `order_by` runs after projection (same as reference) but Spark sort
@@ -25,43 +23,12 @@ from typing import Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..errors import (
-    MalformedQueryException,
-    assert_integer,
-    assert_list,
-    raise_malformed,
-)
-from .aggregates import compile_aggregate
-from .expressions import apply_aliases
-from .filters import FilterCompiler
-
-CLAUSE_WHERE = "where"
-CLAUSE_GROUP_BY = "group_by"
-CLAUSE_DISTINCT = "distinct"
-CLAUSE_SELECT = "select"
-CLAUSE_ORDER_BY = "order_by"
-CLAUSE_OFFSET = "offset"
-CLAUSE_LIMIT = "limit"
-CLAUSE_FROM = "from"
-QUERY_CLAUSES = {
-    CLAUSE_WHERE,
-    CLAUSE_GROUP_BY,
-    CLAUSE_DISTINCT,
-    CLAUSE_SELECT,
-    CLAUSE_ORDER_BY,
-    CLAUSE_OFFSET,
-    CLAUSE_LIMIT,
-    CLAUSE_FROM,
-}
-
-
-def is_aggregate_function(expr) -> bool:
-    return type(expr) is list and len(expr) == 2
-
-
-def is_alias_assignment(expr) -> bool:
-    return type(expr) is list and len(expr) == 3 and expr[0] == "="
+from . import grammar
+from .aggregates import AGGREGATE_FUNCTIONS
+from .expressions import BINARY_OPERATORS, UNARY_FUNCTIONS
+from .filters import INTEGRAL_TYPES, _false_safe, _true_safe, marker_join, semi_join
 
 
 @dataclass
@@ -83,203 +50,106 @@ def compile_query(
     root_df: Optional[DataFrame] = None,
     enum_columns: frozenset = frozenset(),
 ) -> QueryResult:
-    if not isinstance(q, dict):
-        raise MalformedQueryException(f'Query must be a dictionary, not "{q}"')
-
-    key_set = set(q.keys())
-    if not key_set.issubset(QUERY_CLAUSES):
-        unknown = ", ".join(sorted(key_set.difference(QUERY_CLAUSES)))
-        raise MalformedQueryException(f"Unknown query clauses: {unknown}")
-
-    root = root_df if root_df is not None else df
-
-    if CLAUSE_FROM in q:
-        df = compile_query(q[CLAUSE_FROM], df, root_df=root, enum_columns=enum_columns).sliced
-
-    def run_subquery(sub_q: dict) -> DataFrame:
-        # in-subqueries run against the ROOT frame regardless of
-        # nesting depth (reference context.py:1-16).
-        return compile_query(sub_q, root, root_df=root, enum_columns=enum_columns).sliced
-
-    filter_compiler = FilterCompiler(df, enum_columns=enum_columns, subquery_fn=run_subquery)
-    filtered = filter_compiler.apply(q.get(CLAUSE_WHERE))
-
-    group_by = q.get(CLAUSE_GROUP_BY)
-    grouping_mode = None
-    grouping_sets = None
-    if isinstance(group_by, dict):
-        grouping_mode, grouping_sets, group_by = _parse_structured_group_by(group_by)
-    if group_by:
-        if grouping_mode is None:
-            assert_list("group_by", group_by)
-        missing = [c for c in group_by if c not in filtered.columns]
-        if missing:
-            raise_malformed("Group by column not in table", group_by)
-        if q.get(CLAUSE_DISTINCT) is not None:
-            raise_malformed("Cannot combine group_by and distinct", q)
-
-    distinct = q.get(CLAUSE_DISTINCT)
-    distinct_df = filtered
-    if distinct is not None and not group_by:
-        assert_list("distinct", distinct)
-        missing = [c for c in distinct if c not in filtered.columns]
-        if missing:
-            raise_malformed("Distinct column not in table", distinct)
-        distinct_df = filtered.dropDuplicates(distinct or None)
-
-    projected = _project(
-        distinct_df, q.get(CLAUSE_SELECT), group_by, grouping_mode, grouping_sets
-    )
-    ordered = _order_by(projected, q.get(CLAUSE_ORDER_BY))
-    sliced = _do_slice(ordered, q.get(CLAUSE_OFFSET), q.get(CLAUSE_LIMIT))
-    return QueryResult(sliced=sliced, unsliced=ordered)
+    sliced, unsliced = grammar.run(q, df, _CATALYST, root_df, enum_columns)
+    return QueryResult(sliced=sliced, unsliced=unsliced)
 
 
-_GROUPING_MODES = ("rollup", "cube", "grouping_sets")
+_KINDS = (("integral", INTEGRAL_TYPES), ("string", T.StringType), ("boolean", T.BooleanType))
 
 
-def _parse_structured_group_by(spec: dict):
-    """`{"group_by": {"rollup": [cols]}}` / `{"cube": [cols]}` /
-    `{"grouping_sets": [[cols], ...]}` — the grouping-sets family in
-    the JSON dialect (absent in the reference grammar; a strict
-    extension: plain-list group_by is untouched). Returns
-    (mode, sets_or_None, flat_column_list)."""
-    if len(spec) != 1:
-        raise_malformed(
-            "group_by dict must have exactly one of rollup/cube/grouping_sets", spec
-        )
-    ((mode, cols),) = spec.items()
-    if mode not in _GROUPING_MODES:
-        raise_malformed(f"Unknown grouping mode '{mode}'", spec)
-    if mode == "grouping_sets":
-        if (
-            not isinstance(cols, list)
-            or not cols
-            or not all(
-                isinstance(s, list) and all(isinstance(c, str) for c in s)
-                for s in cols
-            )
-        ):
-            raise_malformed(
-                "grouping_sets expects a non-empty list of column lists", spec
-            )
-        # flat key list = union in first-appearance order (the output
-        # columns); every set must draw from it by construction
-        flat = list(dict.fromkeys(c for s in cols for c in s))
-        if not flat:
-            raise_malformed("grouping_sets needs at least one column", spec)
-        return mode, cols, flat
-    if not isinstance(cols, list) or not cols or not all(
-        isinstance(c, str) for c in cols
-    ):
-        raise_malformed(f"{mode} expects a non-empty list of column names", spec)
-    return mode, None, cols
+class _Catalyst:
+    """grammar.Executor over Spark DataFrames and Columns."""
 
+    def columns(self, df):
+        return df.columns
 
-def _classify(project_q):
-    # Reference stores aggregates as a {column: fn} dict
-    # (query.py:119-130) — a later aggregate on the same column
-    # replaces the earlier one. Mirror that (also required: output
-    # keeps the column name, so duplicates would be ambiguous).
-    aggregate_by_col: dict = {}
-    alias_expressions = []
-    for expression in project_q:
-        if is_aggregate_function(expression):
-            fn, col = expression
-            aggregate_by_col[col] = fn
-        elif is_alias_assignment(expression):
-            alias_expressions.append(expression)
-        elif type(expression) is list:
-            raise_malformed("Invalid expression in select", expression)
-    aggregate_entries = [(fn, col) for col, fn in aggregate_by_col.items()]
-    return aggregate_entries, alias_expressions
+    def kind(self, df, name):
+        dtype = df.schema[name].dataType
+        return next((k for k, types in _KINDS if isinstance(dtype, types)), None)
 
+    def column(self, df, name):
+        return F.col(name)
 
-def _project(
-    df: DataFrame, project_q, group_by, grouping_mode=None, grouping_sets=None
-) -> DataFrame:
-    if not project_q:
-        if group_by:
-            raise_malformed(
-                "Aggregate function required when group_by is specified", project_q
-            )
-        return df
+    def literal(self, value):
+        return F.lit(value)
 
-    assert_list("project", project_q)
+    def compare(self, df, op, name, right):
+        left = F.col(name)
+        expr = grammar.COMPARISONS[op](left, right)
+        if op == "!=":
+            # NaN != x is True in pandas/NumPy, even when x is NaN too.
+            return _true_safe(expr, left, right)
+        return _false_safe(expr, left, right)
 
-    if project_q == [["count"]]:
-        # COUNT(*): stays lazy & distributed — a global aggregate with
+    def isnull(self, df, name):
+        return F.col(name).isNull()
+
+    def isin(self, df, name, values):
+        if not values:
+            return F.lit(False)
+        col = F.col(name)
+        return _false_safe(col.isin(values), col)
+
+    def rlike(self, df, name, regex):
+        col = F.col(name)
+        return _false_safe(col.rlike(regex), col)
+
+    def contains(self, df, name, needle):
+        col = F.col(name)
+        return _false_safe(col.contains(needle), col)
+
+    def bits(self, df, op, name, mask):
+        col = F.col(name)
+        masked = col.bitwiseAND(F.lit(mask))
+        hit = masked > 0 if op == "any_bits" else masked == F.lit(mask)
+        return _false_safe(hit, col)
+
+    semi_join = staticmethod(semi_join)
+    membership = staticmethod(marker_join)
+
+    def filter(self, df, predicate):
+        return df.filter(predicate)
+
+    def distinct(self, df, columns):
+        return df.dropDuplicates(columns or None)
+
+    def count(self, df):
+        # COUNT(*) stays lazy and distributed: a global aggregate with
         # map-side partial counts, not a driver-side len().
         return df.groupBy().agg(F.count(F.lit(1)).alias("count"))
 
-    aggregate_entries, alias_expressions = _classify(project_q)
+    def aggregate(self, df, keys, entries, grouping, where):
+        if where is not None:
+            df = df.filter(where)
+        # output keeps the source column's name, like the reference's
+        # `agg({col: fn})` result frame (query.py:50-58)
+        aggs = [AGGREGATE_FUNCTIONS[fn](col).alias(col) for fn, col in entries]
+        mode, sets = grouping or ("groupBy", None)
+        if mode == "grouping_sets":
+            return df.groupingSets(sets, *keys).agg(*aggs)
+        return getattr(df, mode)(*keys).agg(*aggs)  # groupBy / rollup / cube
 
-    if aggregate_entries and alias_expressions:
-        raise_malformed("Cannot mix aliasing and aggregation functions", project_q)
+    def unary(self, op, value):
+        return UNARY_FUNCTIONS[op](value)
 
-    if group_by:
-        if not aggregate_entries:
-            raise_malformed(
-                "Aggregate function required when group_by is specified", project_q
-            )
-        aggs = [compile_aggregate(fn, col, project_q) for fn, col in aggregate_entries]
-        for _, col in aggregate_entries:
-            if col not in df.columns:
-                raise_malformed("Selected columns not in table", [col])
-        if grouping_mode == "rollup":
-            grouped = df.rollup(*group_by)
-        elif grouping_mode == "cube":
-            grouped = df.cube(*group_by)
-        elif grouping_mode == "grouping_sets":
-            grouped = df.groupingSets(grouping_sets, *group_by)
-        else:
-            grouped = df.groupBy(*group_by)
-        df = grouped.agg(*aggs)
-    elif aggregate_entries:
-        if len(aggregate_entries) != len(project_q):
-            raise_malformed(
-                "Cannot mix aggregation functions and columns without group_by clause",
-                project_q,
-            )
-        for _, col in aggregate_entries:
-            if col not in df.columns:
-                raise_malformed("Selected columns not in table", [col])
-        aggs = [compile_aggregate(fn, col, project_q) for fn, col in aggregate_entries]
-        return df.groupBy().agg(*aggs)
-    elif alias_expressions:
-        df = apply_aliases(df, alias_expressions)
+    def binary(self, op, left, right):
+        return BINARY_OPERATORS[op](left, right)
 
-    columns = [e if type(e) is not list else e[1] for e in project_q]
-    missing = sorted(set(columns) - set(df.columns))
-    if missing:
-        raise_malformed("Selected columns not in table", missing)
-    return df.select(*columns)
+    def with_column(self, df, name, value):
+        return df.withColumn(name, value)
 
+    def select(self, df, columns):
+        return df if columns is None else df.select(*columns)
 
-def _order_by(df: DataFrame, order_q) -> DataFrame:
-    if not order_q:
-        return df
-    assert_list("order_by", order_q)
-    if not all(isinstance(c, str) for c in order_q):
-        raise_malformed("Invalid order by format", order_q)
-    cols = []
-    for e in order_q:
-        name = e[1:] if e.startswith("-") else e
-        if name not in df.columns:
-            raise_malformed("Order by column not in table", [name])
-        cols.append(F.col(name).desc() if e.startswith("-") else F.col(name).asc())
-    return df.orderBy(*cols)
+    def order(self, df, keys):
+        return df.orderBy(*[F.col(n).asc() if asc else F.col(n).desc() for n, asc in keys])
 
-
-def _do_slice(df: DataFrame, offset, limit) -> DataFrame:
-    # Validate BEFORE the falsy check: offset=0.0 / limit=0.0 must 400
-    # like the reference (qcache/qframe/common.py:12-14), not no-op.
-    if offset is not None:
-        assert_integer("offset", offset)
+    def slice(self, df, offset, limit):
         if offset:
             df = df.offset(offset)
-    if limit is not None:
-        assert_integer("limit", limit)
         if limit:
             df = df.limit(limit)
-    return df
+        return df
+
+
+_CATALYST = _Catalyst()

@@ -1,33 +1,18 @@
-"""Alias-expression compiler: `["=", dst, expr]` → `withColumn`.
+"""Catalyst function tables for alias expressions (`["=", dst, expr]`).
 
 The reference compiles these to a pandas `DataFrame.eval` string
 (qcache/qframe/query.py:78-116) so its function surface is "whatever
-numexpr supports" and its operator surface is "whatever pandas eval
-accepts". We build a Spark `Column` tree directly from a function
-table — same surface, but the expression stays inside Catalyst's
-whole-stage codegen instead of a string round-trip.
-
-Leaf rules match filters: numbers → literals, quoted strings →
-string literals, bare strings → column references. Aliases apply
-sequentially, so later aliases can reference earlier ones
-(query.py:99-105 accumulates the eval frame).
+numexpr supports". We build a Spark `Column` tree directly from these
+tables, keyed by the names in grammar.py — same surface, but the
+expression stays inside Catalyst's whole-stage codegen instead of a
+string round-trip.
 """
 from __future__ import annotations
 
-import re
-
-from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..errors import raise_malformed
-from .filters import is_quoted, unquote
+from .grammar import COMPARISONS
 
-ALIAS_STRING = r"^([A-Za-z0-9_-]+)$"
-ALIAS_RE = re.compile(ALIAS_STRING)
-
-# numexpr's unary function set (reference surface: query.py:44 `sin`,
-# tested `sqrt` test_qframe.py:482-486) plus a few Spark-native
-# extensions that the reference's eval would also have accepted.
 UNARY_FUNCTIONS = {
     "sin": F.sin,
     "cos": F.cos,
@@ -51,7 +36,6 @@ UNARY_FUNCTIONS = {
     "floor": F.floor,
     "ceil": F.ceil,
     "sign": F.signum,
-    # extensions beyond the reference (documented deviation)
     "upper": F.upper,
     "lower": F.lower,
     "length": F.length,
@@ -64,6 +48,7 @@ UNARY_FUNCTIONS = {
 # but the reference's contract is a value (engine inf, null on the
 # JSON wire — test_api.py:109-116). try_* yields null → matches the
 # wire contract without giving up ANSI's loud failures elsewhere.
+# Shifts take a literal bit count (the grammar checks it).
 BINARY_OPERATORS = {
     "+": lambda a, b: a + b,
     "-": lambda a, b: a - b,
@@ -75,64 +60,7 @@ BINARY_OPERATORS = {
     "&": lambda a, b: a.bitwiseAND(b),
     "|": lambda a, b: a.bitwiseOR(b),
     "^": lambda a, b: a.bitwiseXOR(b),
-    "==": lambda a, b: a == b,
-    "!=": lambda a, b: a != b,
-    "<": lambda a, b: a < b,
-    "<=": lambda a, b: a <= b,
-    ">": lambda a, b: a > b,
-    ">=": lambda a, b: a >= b,
+    "<<": F.shiftleft,
+    ">>": F.shiftright,
+    **COMPARISONS,
 }
-
-
-class ExpressionCompiler:
-    def __init__(self, columns):
-        self.columns = set(columns)
-
-    def leaf(self, expr) -> Column:
-        if isinstance(expr, str):
-            if is_quoted(expr):
-                return F.lit(unquote(expr))
-            if expr not in self.columns:
-                # reference: UndefinedVariableError → MalformedQueryException
-                raise_malformed(f"name '{expr}' is not defined", expr)
-            return F.col(expr)
-        return F.lit(expr)
-
-    def compile(self, expr) -> Column:
-        if not isinstance(expr, list):
-            return self.leaf(expr)
-        if len(expr) == 3:
-            op, a, b = expr
-            if op in ("<<", ">>"):
-                # Spark's shiftleft/shiftright take a literal bit count
-                if not isinstance(b, int) or isinstance(b, bool):
-                    raise_malformed("Shift amount must be an integer literal", expr)
-                shift = F.shiftleft if op == "<<" else F.shiftright
-                return shift(self.compile(a), b)
-            fn = BINARY_OPERATORS.get(op)
-            if fn is None:
-                raise_malformed("Unknown function in alias", expr)
-            return fn(self.compile(a), self.compile(b))
-        if len(expr) == 2:
-            op, a = expr
-            fn = UNARY_FUNCTIONS.get(op)
-            if fn is None:
-                raise_malformed("Unknown function in alias", expr)
-            return fn(self.compile(a))
-        raise_malformed("Invalid number of arguments", expr)
-
-
-def apply_aliases(df: DataFrame, expressions: list) -> DataFrame:
-    """Apply `["=", dst, src]` alias assignments in declaration order."""
-    result = df
-    for expression in expressions:
-        destination, source = expression[1], expression[2]
-        if not isinstance(destination, str):
-            raise_malformed("Invalid alias, must be a string", expression)
-        if not ALIAS_RE.match(destination):
-            raise_malformed(
-                f"Invalid alias, must match {ALIAS_STRING}", expression
-            )
-        compiler = ExpressionCompiler(result.columns)
-        result = result.withColumn(destination, compiler.compile(source))
-    return result

@@ -1,13 +1,10 @@
-"""`where`-clause compiler: qcache prefix-expression JSON → a single
-Spark `Column` predicate (or a semi/anti-join plan for subqueries).
+"""Catalyst pieces of the `where` clause: null safety and subquery joins.
 
-Semantics mirror the reference filter engine
-(qcache/qframe/pandas_filter.py:1-171) exactly, re-expressed
-declaratively so Catalyst can push predicates into the parquet scan:
+The grammar walker (grammar.py) validates a filter tree and calls the
+Catalyst executor (compiler.py), which builds one Spark `Column`
+predicate from these helpers so that Catalyst can push it into the
+parquet scan:
 
-- Leaf nodes (pandas_filter.py:15-25): numbers/bools are literals,
-  `'quoted strings'` are string literals, bare strings are COLUMN
-  references (unknown column → MalformedQueryException).
 - Null semantics are pandas/NumPy two-valued, not SQL three-valued:
   comparisons with null are False (`!=` is True), `like` on a null
   cell is False (pandas_filter.py:127 `na=False`), and `!` negates
@@ -21,47 +18,17 @@ declaratively so Catalyst can push predicates into the parquet scan:
   (pandas_filter.py:83-91, context.py:1-16). At the top level of the
   `where` tree it compiles to a left-semi join (and `!`-wrapped to a
   left-anti join). Nested at ANY depth inside a boolean tree, each
-  membership node is lifted to a marker join: the DISTINCT subquery
-  values are left-joined once with a constant marker column, and the
-  membership boolean in the compiled tree is `marker IS NOT NULL` —
-  never a driver-side collect, so a nested subquery over a large slice
-  stays distributed (Catalyst broadcasts the probe side when small).
+  membership node is lifted to a marker join (`marker_join`) — never a
+  driver-side collect, so a nested subquery over a large slice stays
+  distributed (Catalyst broadcasts the probe side when small).
 """
 from __future__ import annotations
-
-from typing import Callable, Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..errors import assert_len, assert_list, raise_malformed
-
-COMPARISON_OPERATORS = {
-    "==": lambda a, b: a == b,
-    "!=": lambda a, b: a != b,
-    "<": lambda a, b: a < b,
-    "<=": lambda a, b: a <= b,
-    ">": lambda a, b: a > b,
-    ">=": lambda a, b: a >= b,
-}
-ORDERED_COMPARISONS = {"<", "<=", ">", ">="}
-JOINING_OPERATORS = {"&", "|"}
 INTEGRAL_TYPES = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-
-
-def is_quoted(s: str) -> bool:
-    return len(s) >= 2 and (
-        (s[0] == "'" and s[-1] == "'") or (s[0] == '"' and s[-1] == '"')
-    )
-
-
-def unquote(s: str) -> str:
-    if s[:1] in ("'", '"'):
-        s = s[1:]
-    if s[-1:] in ("'", '"'):
-        s = s[:-1]
-    return s
 
 
 def _false_safe(expr: Column, *operands: Column) -> Column:
@@ -100,285 +67,49 @@ def _fresh_column_name(base: str, taken) -> str:
     return name
 
 
-class FilterCompiler:
-    """Compiles one `where` clause for one DataFrame.
+def semi_join(df: DataFrame, col_name: str, sub: DataFrame, anti: bool) -> DataFrame:
+    """Top-level `in`-subquery as a distributed (left-semi / left-anti)
+    join.
 
-    `subquery_fn(query_dict) -> DataFrame` runs a nested query against
-    the root frame (wired up by the query compiler to avoid a circular
-    import)."""
+    Scale note: the subquery side is usually a filtered/aggregated
+    slice → Catalyst/AQE will broadcast it when it is small; when it
+    is not, this is a shuffled semi join — still no driver
+    materialization, unlike the reference's collect-then-isin."""
+    probe_col = _fresh_column_name("__in_value__", df.columns)
+    return df.join(
+        sub.select(col_name).withColumnRenamed(col_name, probe_col),
+        on=F.col(col_name) == F.col(probe_col),
+        how="left_anti" if anti else "left_semi",
+    )
 
-    def __init__(
-        self,
-        df: DataFrame,
-        enum_columns: frozenset[str] = frozenset(),
-        subquery_fn: Optional[Callable[[dict], DataFrame]] = None,
-    ):
-        self.df = df
-        self.columns = set(df.columns)
-        self.enum_columns = enum_columns
-        self.subquery_fn = subquery_fn
-        # id(subquery-in node) -> membership Column, populated by
-        # apply() when nested subqueries are lifted to marker joins
-        self._membership: dict[int, Column] = {}
 
-    # -- public -------------------------------------------------------
+def marker_join(df: DataFrame, col_name: str, sub: DataFrame):
+    """Lift one nested `in`-subquery node: left-join the DISTINCT
+    subquery values carried in a uniquely named marker column; the
+    membership predicate is then `marker IS NOT NULL`. Returns
+    (joined frame, predicate); the caller drops the marker after
+    filtering.
 
-    def apply(self, filter_q) -> DataFrame:
-        """Filter the frame. Empty/missing where is a no-op
-        (pandas_filter.py:166-171)."""
-        if not filter_q:
-            return self.df
-        assert_list("where", filter_q)
+    Catalyst/AQE broadcasts the probe side when it is small (the common
+    dimension-slice case), so at scale this is a map-side hash probe
+    per membership node — never a materialization on the driver. Null
+    semantics match the reference's collect-then-isin
+    (pandas_filter.py:83-91): a null probe cell joins nothing → marker
+    null → False (and True under `!`), exactly the two-valued pandas
+    behavior.
 
-        # Top-level subquery patterns become semi/anti joins — the
-        # tightest plan (no marker column, no distinct needed).
-        if self._is_subquery_in(filter_q):
-            return self._semi_join(filter_q, anti=False)
-        if (
-            isinstance(filter_q, list)
-            and len(filter_q) == 2
-            and filter_q[0] == "!"
-            and self._is_subquery_in(filter_q[1])
-        ):
-            return self._semi_join(filter_q[1], anti=True)
-
-        nested = self._collect_subquery_nodes(filter_q)
-        if not nested:
-            return self.df.filter(self.compile(filter_q))
-        return self._apply_with_marker_joins(filter_q, nested)
-
-    def compile(self, q) -> Column:
-        """Compile a filter expression to a never-null boolean Column."""
-        if not isinstance(q, list):
-            return self._leaf(q)
-        if not q:
-            raise_malformed("Empty expression not allowed", q)
-
-        op = q[0]
-        if op in ("any_bits", "all_bits"):
-            return self._bitwise(q)
-        if op == "!":
-            assert_len(q, 2, "! is a single arity operator, invalid number of arguments")
-            return ~self.compile(q[1])
-        if op == "isnull":
-            assert_len(q, 2, "isnull is a single arity operator, invalid number of arguments")
-            return self._column(q[1]).isNull()
-        if op in COMPARISON_OPERATORS:
-            return self._comparison(q)
-        if op in JOINING_OPERATORS:
-            return self._join_op(q)
-        if op == "in":
-            return self._in(q)
-        if op in ("like", "ilike"):
-            return self._like(q)
-        if op == "contains":
-            return self._contains(q)
-        raise_malformed("Unknown operator", q)
-
-    # -- pieces -------------------------------------------------------
-
-    def _column(self, name) -> Column:
-        if not isinstance(name, str) or name not in self.columns:
-            raise_malformed("Unknown column", name)
-        return F.col(name)
-
-    def _leaf(self, q) -> Column:
-        if isinstance(q, str):
-            if is_quoted(q):
-                return F.lit(unquote(q))
-            return self._column(q)
-        return F.lit(q)
-
-    def _comparison(self, q) -> Column:
-        assert_len(q, 3)
-        op, col_name, arg = q
-        if op in ORDERED_COMPARISONS and col_name in self.enum_columns:
-            raise_malformed(
-                f"Invalid operation {op} for enum column", q
-            )
-        left = self._column(col_name)
-        right = self.compile(arg) if isinstance(arg, list) else self._leaf(arg)
-        expr = COMPARISON_OPERATORS[op](left, right)
-        if op == "!=":
-            # NaN != x is True in pandas/NumPy, even when x is NaN too.
-            return _true_safe(expr, left, right)
-        return _false_safe(expr, left, right)
-
-    def _join_op(self, q) -> Column:
-        if len(q) < 2:
-            raise_malformed("Invalid number of arguments", q)
-        parts = [self.compile(sub) for sub in q[1:]]
-        result = parts[0]
-        for p in parts[1:]:
-            result = (result & p) if q[0] == "&" else (result | p)
-        return result
-
-    def _bitwise(self, q) -> Column:
-        assert_len(q, 3)
-        op, column, arg = q
-        if not isinstance(arg, int) or isinstance(arg, bool):
-            raise_malformed("Invalid argument type, must be an integer", q)
-        col = self._column(column)
-        dtype = self.df.schema[column].dataType
-        if not isinstance(dtype, INTEGRAL_TYPES):
-            raise_malformed("Invalid column type, must be an integer", q)
-        masked = col.bitwiseAND(F.lit(arg))
-        if op == "any_bits":
-            return _false_safe(masked > 0, col)
-        return _false_safe(masked == F.lit(arg), col)
-
-    def _collect_subquery_nodes(self, q, out: Optional[list] = None) -> list:
-        """Depth-first collect of every `in`-subquery node nested inside
-        a boolean tree. The subquery's own dict is NOT walked — its
-        `where` clause is compiled recursively by `subquery_fn`."""
-        if out is None:
-            out = []
-        if self._is_subquery_in(q):
-            out.append(q)
-            return out
-        if isinstance(q, list):
-            for sub in q[1:]:
-                self._collect_subquery_nodes(sub, out)
-        return out
-
-    def _apply_with_marker_joins(self, filter_q, nested: list) -> DataFrame:
-        """Compile a filter tree containing nested `in`-subqueries
-        without any driver-side collect.
-
-        Each membership node gets one left join against the DISTINCT
-        subquery values carried in a uniquely named marker column; the
-        membership boolean inside the compiled tree is then simply
-        `marker IS NOT NULL`. Catalyst/AQE broadcasts the probe side
-        when it is small (the common dimension-slice case), so at scale
-        this is a map-side hash probe per membership node — never a
-        materialization on the driver. Null semantics match the
-        reference's collect-then-isin (pandas_filter.py:83-91): a null
-        probe cell joins nothing → marker null → False (and True under
-        `!`), exactly the two-valued pandas behavior.
-
-        Ordering deviation (documented like this module's other ones):
-        when AQE picks a SHUFFLED join for a large probe side, the
-        filtered frame's row order is no longer the scan order, so
-        offset/limit paging without an order_by may return different
-        pages than a collect-then-isin filter would. Per SURVEY §7 the
-        engine gives no order guarantee without order_by; callers that
-        page must sort.
-        """
-        df = self.df
-        markers: list[str] = []
-        for i, node in enumerate(nested):
-            col_name = node[1]
-            self._column(col_name)  # validates existence on the frame
-            marker = _fresh_column_name(f"__in_marker_{i}__", df.columns)
-            probe = (
-                self._subquery_column(node)
-                .distinct()  # a duplicated probe value must not fan out rows
-                .withColumnRenamed(col_name, marker)
-            )
-            df = df.join(probe, on=F.col(col_name) == F.col(marker), how="left")
-            self._membership[id(node)] = F.col(marker).isNotNull()
-            markers.append(marker)
-        return df.filter(self.compile(filter_q)).drop(*markers)
-
-    def _is_subquery_in(self, q) -> bool:
-        return (
-            isinstance(q, list)
-            and len(q) == 3
-            and q[0] == "in"
-            and isinstance(q[2], dict)
-        )
-
-    def _subquery_column(self, q) -> DataFrame:
-        _, col_name, sub_q = q
-        if self.subquery_fn is None:
-            raise_malformed("Subqueries not supported in this context", q)
-        sub_df = self.subquery_fn(sub_q)
-        if col_name not in sub_df.columns:
-            raise_malformed(f'Unknown column "{col_name}"', q)
-        return sub_df.select(col_name)
-
-    def _semi_join(self, q, anti: bool) -> DataFrame:
-        """`in`-subquery as a distributed (left-semi / left-anti) join.
-
-        Scale note: the subquery side is usually a filtered/aggregated
-        slice → Catalyst/AQE will broadcast it when it is small; when it
-        is not, this is a shuffled semi join — still no driver
-        materialization, unlike the reference's collect-then-isin."""
-        col_name = q[1]
-        self._column(col_name)  # validates existence
-        sub = self._subquery_column(q)
-        how = "left_anti" if anti else "left_semi"
-        probe_col = _fresh_column_name("__in_value__", self.df.columns)
-        return self.df.join(
-            sub.withColumnRenamed(col_name, probe_col),
-            on=F.col(col_name) == F.col(probe_col),
-            how=how,
-        )
-
-    def _in(self, q) -> Column:
-        assert_len(q, 3)
-        _, col_name, args = q
-        if isinstance(args, dict):
-            # Nested (non-top-level) subquery: apply() lifted this node
-            # to a marker join before compiling the tree — the
-            # membership boolean is ready. (Reference collects and
-            # isins, pandas_filter.py:83-91; the lift keeps identical
-            # two-valued semantics fully distributed.)
-            membership = self._membership.get(id(q))
-            if membership is None:
-                # Internal invariant, not a user error: compile() was
-                # called on a tree whose nested subquery node was never
-                # lifted by apply() — subqueries ARE supported, the
-                # caller just skipped the lift (ADVICE r4).
-                raise AssertionError(
-                    "internal: nested in-subquery node was not lifted to a "
-                    "marker join; call apply() rather than compile() on "
-                    "filter trees containing subqueries"
-                )
-            return membership
-        if not isinstance(args, (list, tuple)):
-            raise_malformed("Second argument must be a list", q)
-        if not args:
-            return F.lit(False)
-        # Values are used verbatim — no quote-stripping, no column refs
-        # (reference passes the raw list to isin).
-        col = self._column(col_name)
-        return _false_safe(col.isin(list(args)), col)
-
-    def _contains(self, q) -> Column:
-        """Literal substring containment (the reference's aspirational
-        `contains` op — skipped test at test_qframe.py:92-95; realized
-        here). Unlike like/ilike the pattern is NOT a regex."""
-        assert_len(q, 3)
-        _, column, raw = q
-        if not isinstance(raw, str) or not is_quoted(raw):
-            raise_malformed("contains expects a quoted string as second argument", q)
-        col = self._column(column)
-        if not isinstance(self.df.schema[column].dataType, T.StringType):
-            raise_malformed("Invalid column type for contains", q)
-        return _false_safe(col.contains(unquote(raw)), col)
-
-    def _like(self, q) -> Column:
-        assert_len(q, 3)
-        op, column, raw_expr = q
-        if not isinstance(raw_expr, str) or not is_quoted(raw_expr):
-            raise_malformed("like expects a quoted string as second argument", q)
-        regexp = unquote(raw_expr)
-        # Reference translation (pandas_filter.py:110-121): leading and
-        # trailing % are unanchored match, otherwise anchor with ^/$.
-        # Everything in between is passed through as a regex.
-        if not regexp.startswith("%"):
-            regexp = "^" + regexp
-        else:
-            regexp = regexp[1:]
-        if not regexp.endswith("%"):
-            regexp += "$"
-        else:
-            regexp = regexp[:-1]
-        if op == "ilike":
-            regexp = "(?i)" + regexp
-        col = self._column(column)
-        if not isinstance(self.df.schema[column].dataType, T.StringType):
-            raise_malformed("Invalid column type for (i)like", q)
-        # na=False: null cells never match (pandas_filter.py:127)
-        return _false_safe(col.rlike(regexp), col)
+    Ordering deviation: when AQE picks a SHUFFLED join for a large
+    probe side, the filtered frame's row order is no longer the scan
+    order, so offset/limit paging without an order_by may return
+    different pages than a collect-then-isin filter would. Per SURVEY
+    §7 the engine gives no order guarantee without order_by; callers
+    that page must sort.
+    """
+    marker = _fresh_column_name("__in_marker_0__", df.columns)
+    probe = (
+        sub.select(col_name)
+        .distinct()  # a duplicated probe value must not fan out rows
+        .withColumnRenamed(col_name, marker)
+    )
+    joined = df.join(probe, on=F.col(col_name) == F.col(marker), how="left")
+    return joined, F.col(marker).isNotNull()

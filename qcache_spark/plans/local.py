@@ -7,11 +7,10 @@ distributed Spark job has a ~100-250 ms floor per multi-stage query
 size. This module executes the SAME query dict against an in-memory
 pandas mirror — the reference's own operating regime — while the
 Catalyst path (plans/compiler.py) remains the only path above the
-size threshold. Semantics are defined by the Spark compiler
-(compiler.py / filters.py / expressions.py / aggregates.py, which in
-turn mirror qcache/qframe/*); a differential pytest suite pins the
-two backends together, and the DuckDB oracle gate runs over whichever
-backend serves the query.
+size threshold. Both run the one grammar walker (grammar.py), so they
+reject the same queries with the same messages; a differential pytest
+suite pins their values together, and the DuckDB oracle gate runs over
+whichever backend serves the query.
 
 The fast path is strictly best-effort: `Unsupported` (or any
 non-Malformed error) makes the router fall back to the Spark plan, so
@@ -20,25 +19,13 @@ one.
 """
 from __future__ import annotations
 
+import operator
 from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
 
-from ..errors import (
-    MalformedQueryException,
-    assert_integer,
-    assert_len,
-    assert_list,
-    raise_malformed,
-)
-from .compiler import (
-    QUERY_CLAUSES,
-    is_aggregate_function,
-    is_alias_assignment,
-)
-from .expressions import ALIAS_RE, ALIAS_STRING
-from .filters import COMPARISON_OPERATORS, ORDERED_COMPARISONS, is_quoted, unquote
+from . import grammar
 
 
 class Unsupported(Exception):
@@ -55,8 +42,8 @@ class LocalResult:
 # --------------------------------------------------------------- helpers
 
 
-def _is_stringy(s: pd.Series) -> bool:
-    return s.dtype == object or pd.api.types.is_string_dtype(s.dtype)
+def _is_stringy(dtype) -> bool:
+    return dtype == object or pd.api.types.is_string_dtype(dtype)
 
 
 def _half_up(values) -> np.ndarray:
@@ -89,414 +76,9 @@ def _half_up(values) -> np.ndarray:
     return out
 
 
-# --------------------------------------------------------------- filters
-
-
-class LocalFilter:
-    """pandas mirror of plans/filters.py FilterCompiler — two-valued
-    null semantics come for free on pandas, which is the semantics the
-    Spark encoding (_false_safe/_true_safe) was built to match."""
-
-    def __init__(self, pdf: pd.DataFrame, enum_columns=frozenset(), subquery_fn=None):
-        self.pdf = pdf
-        self.columns = set(pdf.columns)
-        self.enum_columns = enum_columns
-        self.subquery_fn = subquery_fn
-
-    def apply(self, filter_q) -> pd.DataFrame:
-        if not filter_q:
-            return self.pdf
-        assert_list("where", filter_q)
-        if self._is_subquery_in(filter_q):
-            return self._semi(filter_q, anti=False)
-        if (
-            isinstance(filter_q, list)
-            and len(filter_q) == 2
-            and filter_q[0] == "!"
-            and self._is_subquery_in(filter_q[1])
-        ):
-            return self._semi(filter_q[1], anti=True)
-        mask = self.compile(filter_q)
-        if np.isscalar(mask):
-            return self.pdf if mask else self.pdf.iloc[0:0]
-        return self.pdf[mask.astype(bool)]
-
-    def compile(self, q):
-        if not isinstance(q, list):
-            return self._leaf(q)
-        if not q:
-            raise_malformed("Empty expression not allowed", q)
-        op = q[0]
-        if op in ("any_bits", "all_bits"):
-            return self._bitwise(q)
-        if op == "!":
-            assert_len(q, 2, "! is a single arity operator, invalid number of arguments")
-            return ~self.compile(q[1])
-        if op == "isnull":
-            assert_len(q, 2, "isnull is a single arity operator, invalid number of arguments")
-            return self._column(q[1]).isna()
-        if op in COMPARISON_OPERATORS:
-            return self._comparison(q)
-        if op in ("&", "|"):
-            return self._join_op(q)
-        if op == "in":
-            return self._in(q)
-        if op in ("like", "ilike"):
-            return self._like(q)
-        if op == "contains":
-            return self._contains(q)
-        raise_malformed("Unknown operator", q)
-
-    def _column(self, name) -> pd.Series:
-        if not isinstance(name, str) or name not in self.columns:
-            raise_malformed("Unknown column", name)
-        return self.pdf[name]
-
-    def _leaf(self, q):
-        if isinstance(q, str):
-            if is_quoted(q):
-                return unquote(q)
-            return self._column(q)
-        return q
-
-    def _fcodes(self, col_name):
-        """(codes, uniques) when the mirror pre-factorized this column
-        (fastpath._load_mirror); (None, None) otherwise. Comparing the
-        int64 codes instead of 100k+ python strings is the difference
-        between ~0.3 ms and ~10 ms per string predicate."""
-        uniques = self.pdf.attrs.get("fcode_uniques", {}).get(col_name)
-        companion = f"__fcode_{col_name}"
-        if uniques is None or companion not in self.pdf.columns:
-            return None, None
-        return self.pdf[companion], np.asarray(uniques, dtype=object)
-
-    def _comparison(self, q):
-        assert_len(q, 3)
-        op, col_name, arg = q
-        if op in ORDERED_COMPARISONS and col_name in self.enum_columns:
-            raise_malformed(f"Invalid operation {op} for enum column", q)
-        if op in ("==", "!=") and isinstance(arg, str) and is_quoted(arg):
-            codes, uniques = self._fcodes(col_name)
-            if codes is not None:
-                hit = np.flatnonzero(uniques == unquote(arg))
-                code = hit[0] if len(hit) else -1
-                # null keys carry their own code (use_na_sentinel=False),
-                # never equal to a constant's: two-valued null semantics
-                # (null == 'x' -> False, null != 'x' -> True) fall out.
-                return (codes == code) if op == "==" else (codes != code)
-        left = self._column(col_name)
-        right = self.compile(arg) if isinstance(arg, list) else self._leaf(arg)
-        try:
-            result = {
-                "==": lambda a, b: a == b,
-                "!=": lambda a, b: a != b,
-                "<": lambda a, b: a < b,
-                "<=": lambda a, b: a <= b,
-                ">": lambda a, b: a > b,
-                ">=": lambda a, b: a >= b,
-            }[op](left, right)
-        except TypeError as exc:  # e.g. str col vs number — Spark path decides
-            raise Unsupported(str(exc))
-        # pandas object-dtype ==/!= against None already yields
-        # False/True (two-valued); numeric NaN likewise.
-        return result.fillna(op == "!=") if result.dtype == object else result
-
-    def _join_op(self, q):
-        if len(q) < 2:
-            raise_malformed("Invalid number of arguments", q)
-        parts = [self.compile(sub) for sub in q[1:]]
-        out = parts[0]
-        for p in parts[1:]:
-            out = (out & p) if q[0] == "&" else (out | p)
-        return out
-
-    def _bitwise(self, q):
-        assert_len(q, 3)
-        op, column, arg = q
-        if not isinstance(arg, int) or isinstance(arg, bool):
-            raise_malformed("Invalid argument type, must be an integer", q)
-        col = self._column(column)
-        if not pd.api.types.is_integer_dtype(col.dtype):
-            raise_malformed("Invalid column type, must be an integer", q)
-        masked = col & arg
-        return (masked > 0) if op == "any_bits" else (masked == arg)
-
-    def _is_subquery_in(self, q) -> bool:
-        return (
-            isinstance(q, list) and len(q) == 3 and q[0] == "in" and isinstance(q[2], dict)
-        )
-
-    def _subquery_values(self, q) -> pd.Series:
-        _, col_name, sub_q = q
-        if self.subquery_fn is None:
-            raise_malformed("Subqueries not supported in this context", q)
-        sub = self.subquery_fn(sub_q)
-        if col_name not in sub.columns:
-            raise_malformed(f'Unknown column "{col_name}"', q)
-        return sub[col_name]
-
-    def _semi(self, q, anti: bool) -> pd.DataFrame:
-        col_name = q[1]
-        self._column(col_name)
-        values = self._subquery_values(q)
-        mask = self.pdf[col_name].isin(values.dropna())
-        return self.pdf[~mask] if anti else self.pdf[mask]
-
-    def _in(self, q):
-        assert_len(q, 3)
-        _, col_name, args = q
-        if isinstance(args, dict):
-            values = self._subquery_values(q)
-            return self._column(col_name).isin(values.dropna())
-        if not isinstance(args, (list, tuple)):
-            raise_malformed("Second argument must be a list", q)
-        col = self._column(col_name)
-        if not args:
-            return pd.Series(False, index=col.index)
-        return col.isin(list(args))
-
-    def _check_string(self, column, q, what):
-        col = self._column(column)
-        if not _is_stringy(col):
-            raise_malformed(f"Invalid column type for {what}", q)
-        return col
-
-    def _contains(self, q):
-        assert_len(q, 3)
-        _, column, raw = q
-        if not isinstance(raw, str) or not is_quoted(raw):
-            raise_malformed("contains expects a quoted string as second argument", q)
-        col = self._check_string(column, q, "contains")
-        return col.str.contains(unquote(raw), regex=False, na=False)
-
-    def _like(self, q):
-        assert_len(q, 3)
-        op, column, raw_expr = q
-        if not isinstance(raw_expr, str) or not is_quoted(raw_expr):
-            raise_malformed("like expects a quoted string as second argument", q)
-        regexp = unquote(raw_expr)
-        # identical anchor translation to filters.py:_like
-        if not regexp.startswith("%"):
-            regexp = "^" + regexp
-        else:
-            regexp = regexp[1:]
-        if not regexp.endswith("%"):
-            regexp += "$"
-        else:
-            regexp = regexp[:-1]
-        if op == "ilike":
-            regexp = "(?i)" + regexp
-        col = self._check_string(column, q, "(i)like")
-        codes, uniques = self._fcodes(column)
-        if codes is not None:
-            # evaluate the pattern once per distinct value, then map
-            # through the int codes (na=False: a null value never
-            # matches, and NaN sits in uniques as its own code)
-            m = pd.Series(uniques).str.contains(regexp, regex=True, na=False)
-            return pd.Series(
-                np.isin(codes.to_numpy(), np.flatnonzero(m.to_numpy())),
-                index=self.pdf.index,
-            )
-        return col.str.contains(regexp, regex=True, na=False)
-
-
-# ----------------------------------------------------------- expressions
-
-
-_UNARY = {
-    "sin": np.sin, "cos": np.cos, "tan": np.tan,
-    "arcsin": np.arcsin, "arccos": np.arccos, "arctan": np.arctan,
-    "sinh": np.sinh, "cosh": np.cosh, "tanh": np.tanh,
-    "arcsinh": np.arcsinh, "arccosh": np.arccosh, "arctanh": np.arctanh,
-    "exp": np.exp, "expm1": np.expm1, "abs": np.abs,
-}
-
-
-class LocalExpressions:
-    """pandas mirror of plans/expressions.py ExpressionCompiler."""
-
-    def __init__(self, pdf: pd.DataFrame):
-        self.pdf = pdf
-        self.columns = set(pdf.columns)
-
-    def leaf(self, expr):
-        if isinstance(expr, str):
-            if is_quoted(expr):
-                return unquote(expr)
-            if expr not in self.columns:
-                raise_malformed(f"name '{expr}' is not defined", expr)
-            return self.pdf[expr]
-        return expr
-
-    def compile(self, expr):
-        if not isinstance(expr, list):
-            return self.leaf(expr)
-        if len(expr) == 3:
-            return self._binary(expr)
-        if len(expr) == 2:
-            return self._unary(expr)
-        raise_malformed("Invalid number of arguments", expr)
-
-    def _binary(self, expr):
-        op, a_q, b_q = expr
-        if op in ("<<", ">>"):
-            if not isinstance(b_q, int) or isinstance(b_q, bool):
-                raise_malformed("Shift amount must be an integer literal", expr)
-            a = self.compile(a_q)
-            return (a << b_q) if op == "<<" else (a >> b_q)
-        known = {"+", "-", "*", "/", "**", "%", "//", "&", "|", "^",
-                 "==", "!=", "<", "<=", ">", ">=",}
-        if op not in known:
-            raise_malformed("Unknown function in alias", expr)
-        a = self.compile(a_q)
-        b = self.compile(b_q)
-        with np.errstate(all="ignore"):
-            if op == "/":
-                return self._try_divide(a, b)
-            if op == "//":
-                r = np.floor(self._try_divide(a, b))
-                # Spark floor() yields LONG
-                if isinstance(r, pd.Series) and not r.isna().any():
-                    return r.astype("int64")
-                return r
-            if op == "%":
-                return self._try_mod(a, b)
-            if op == "**":
-                # Spark pow always yields double
-                with np.errstate(all="ignore"):
-                    frac_exp = np.asarray(b) != np.floor(np.asarray(b))
-                self._guard_domain(
-                    a, np.asarray(np.asarray(a) < 0) & np.asarray(frac_exp), "pow"
-                )
-                r = np.power(a, b)
-                return pd.Series(r, dtype="float64") if hasattr(r, "__len__") else float(r)
-            fn = {
-                "+": lambda x, y: x + y, "-": lambda x, y: x - y,
-                "*": lambda x, y: x * y, "&": lambda x, y: x & y,
-                "|": lambda x, y: x | y, "^": lambda x, y: x ^ y,
-                "==": lambda x, y: x == y, "!=": lambda x, y: x != y,
-                "<": lambda x, y: x < y, "<=": lambda x, y: x <= y,
-                ">": lambda x, y: x > y, ">=": lambda x, y: x >= y,
-            }[op]
-            try:
-                return fn(a, b)
-            except TypeError as exc:
-                raise Unsupported(str(exc))
-
-    @staticmethod
-    def _try_divide(a, b):
-        # try_divide: null (NaN) on zero divisor instead of inf/raise
-        r = np.true_divide(a, b)
-        zero = b == 0
-        if np.isscalar(r):
-            return float("nan") if zero else r
-        r = pd.Series(r) if not isinstance(r, pd.Series) else r
-        if np.isscalar(zero):
-            return r.mask(pd.Series(zero, index=r.index)) if zero else r
-        return r.mask(zero)
-
-    @staticmethod
-    def _try_mod(a, b):
-        # Spark %/try_mod follows the dividend's sign (Java %), unlike
-        # Python's % — np.fmod matches; fmod(x, 0) is NaN.
-        r = np.fmod(a, b)
-        zero = b == 0
-        if np.isscalar(r):
-            return float("nan") if zero else r
-        r = pd.Series(r) if not isinstance(r, pd.Series) else r
-        if not np.isscalar(zero):
-            r = r.mask(zero)
-        elif zero:
-            r = r.mask(pd.Series(True, index=r.index))
-        return r
-
-    @staticmethod
-    def _guard_domain(a, bad_mask, what: str):
-        """Decline to Spark when inputs sit outside the function's
-        real domain: numpy yields NaN there, but the pandas→Spark
-        conversion cannot distinguish NaN from null (NaN becomes null
-        on the wire) while the Catalyst plan returns a true NaN —
-        the one case the two backends' values cannot be reconciled
-        (found by the hypothesis differential fuzz)."""
-        if np.isscalar(a):
-            if bad_mask:
-                raise Unsupported(f"{what} outside real domain")
-        elif bool(np.nansum(bad_mask)):
-            raise Unsupported(f"{what} outside real domain")
-
-    def _unary(self, expr):
-        op, a_q = expr
-        a = self.compile(a_q)
-        with np.errstate(all="ignore"):
-            if op in _UNARY:
-                if op in ("arcsin", "arccos"):
-                    self._guard_domain(a, np.abs(a) > 1, op)
-                elif op == "arccosh":
-                    self._guard_domain(a, np.asarray(a) < 1, op)
-                elif op == "arctanh":
-                    self._guard_domain(a, np.abs(a) >= 1, op)
-                return _UNARY[op](a)
-            if op == "-":
-                return -a
-            if op == "sqrt":
-                self._guard_domain(a, np.asarray(a) < 0, op)
-                return np.sqrt(np.asarray(a, dtype="float64")) if np.isscalar(a) else np.sqrt(a.astype("float64"))
-            if op in ("log", "log10", "log1p"):
-                # Spark returns null outside the domain; numpy returns
-                # -inf at the boundary — mask to NaN to match.
-                fn = {"log": np.log, "log10": np.log10, "log1p": np.log1p}[op]
-                bound = -1 if op == "log1p" else 0
-                r = fn(a)
-                if np.isscalar(r):
-                    return float("nan") if a <= bound else r
-                return pd.Series(r, index=a.index).mask(a <= bound)
-            if op in ("floor", "ceil"):
-                fn = np.floor if op == "floor" else np.ceil
-                r = fn(a)
-                # Spark floor/ceil return LONG
-                if not np.isscalar(r) and not pd.Series(r).isna().any():
-                    return pd.Series(r, index=a.index).astype("int64")
-                return r
-            if op == "sign":
-                r = np.sign(a)
-                return pd.Series(r, index=a.index).astype("float64") if not np.isscalar(r) else float(r)
-            if op in ("upper", "lower", "trim", "length"):
-                if np.isscalar(a):
-                    raise Unsupported("string fn on scalar")
-                if not _is_stringy(a):
-                    raise Unsupported(f"{op} on non-string column")
-                if op == "upper":
-                    return a.str.upper()
-                if op == "lower":
-                    return a.str.lower()
-                if op == "trim":
-                    return a.str.strip()
-                r = a.str.len()
-                # Spark length() is INT
-                return r.astype("int32") if not r.isna().any() else r
-        raise_malformed("Unknown function in alias", expr)
-
-
-def _apply_aliases(pdf: pd.DataFrame, expressions: list) -> pd.DataFrame:
-    out = pdf.copy(deep=False)
-    for expression in expressions:
-        destination, source = expression[1], expression[2]
-        if not isinstance(destination, str):
-            raise_malformed("Invalid alias, must be a string", expression)
-        if not ALIAS_RE.match(destination):
-            raise_malformed(f"Invalid alias, must match {ALIAS_STRING}", expression)
-        value = LocalExpressions(out).compile(source)
-        if isinstance(value, pd.Series):
-            out[destination] = value
-        else:
-            out[destination] = pd.Series([value] * len(out), index=out.index)
-    return out
-
-
 # ------------------------------------------------------------ aggregates
 
 
-# fn -> (pre-transform, post-divide-by-count, final-scale)
 _LOCAL_AGGS = {
     "sum", "count", "min", "max", "mean", "avg", "median", "std", "var",
     "prod", "product", "nunique", "count_distinct", "msum", "mavg",
@@ -635,176 +217,298 @@ def _agg_frames(pdf, group_by, entries, agg_mask=None):
 # --------------------------------------------------------------- executor
 
 
+_UNARY = {
+    "sin": np.sin, "cos": np.cos, "tan": np.tan,
+    "arcsin": np.arcsin, "arccos": np.arccos, "arctan": np.arctan,
+    "sinh": np.sinh, "cosh": np.cosh, "tanh": np.tanh,
+    "arcsinh": np.arcsinh, "arccosh": np.arccosh, "arctanh": np.arctanh,
+    "exp": np.exp, "expm1": np.expm1, "abs": np.abs,
+}
+_BINARY = {
+    "+": operator.add, "-": operator.sub, "*": operator.mul,
+    "&": operator.and_, "|": operator.or_, "^": operator.xor,
+    "<<": operator.lshift, ">>": operator.rshift,
+    **grammar.COMPARISONS,
+}
+
+
+def _fcodes(pdf, col_name):
+    """(codes, uniques) when the mirror pre-factorized this column
+    (fastpath._load_mirror); (None, None) otherwise. Comparing the
+    int64 codes instead of 100k+ python strings is the difference
+    between ~0.3 ms and ~10 ms per string predicate."""
+    uniques = pdf.attrs.get("fcode_uniques", {}).get(col_name)
+    companion = f"__fcode_{col_name}"
+    if uniques is None or companion not in pdf.columns:
+        return None, None
+    return pdf[companion], np.asarray(uniques, dtype=object)
+
+
+def _try_divide(a, b):
+    # try_divide: null (NaN) on zero divisor instead of inf/raise
+    r = np.true_divide(a, b)
+    zero = b == 0
+    if np.isscalar(r):
+        return float("nan") if zero else r
+    r = pd.Series(r) if not isinstance(r, pd.Series) else r
+    if np.isscalar(zero):
+        return r.mask(pd.Series(zero, index=r.index)) if zero else r
+    return r.mask(zero)
+
+
+def _try_mod(a, b):
+    # Spark %/try_mod follows the dividend's sign (Java %), unlike
+    # Python's % — np.fmod matches; fmod(x, 0) is NaN.
+    r = np.fmod(a, b)
+    zero = b == 0
+    if np.isscalar(r):
+        return float("nan") if zero else r
+    r = pd.Series(r) if not isinstance(r, pd.Series) else r
+    if not np.isscalar(zero):
+        r = r.mask(zero)
+    elif zero:
+        r = r.mask(pd.Series(True, index=r.index))
+    return r
+
+
+def _guard_domain(a, bad_mask, what: str):
+    """Decline to Spark when inputs sit outside the function's
+    real domain: numpy yields NaN there, but the pandas→Spark
+    conversion cannot distinguish NaN from null (NaN becomes null
+    on the wire) while the Catalyst plan returns a true NaN —
+    the one case the two backends' values cannot be reconciled
+    (found by the hypothesis differential fuzz)."""
+    if np.isscalar(a):
+        if bad_mask:
+            raise Unsupported(f"{what} outside real domain")
+    elif bool(np.nansum(bad_mask)):
+        raise Unsupported(f"{what} outside real domain")
+
+
+class _Pandas:
+    """grammar.Executor over pandas frames and Series. Two-valued null
+    semantics come for free on pandas. Columns named `__fcode_<col>`
+    are the mirror's pre-factorized codes (fastpath._load_mirror):
+    predicates, grouping and distinct use them when present, and a
+    select-all hides them."""
+
+    def columns(self, pdf):
+        return list(pdf.columns)
+
+    def kind(self, pdf, name):
+        dtype = pdf[name].dtype
+        if pd.api.types.is_bool_dtype(dtype):
+            return "boolean"
+        if pd.api.types.is_integer_dtype(dtype):
+            return "integral"
+        if _is_stringy(dtype):
+            return "string"
+        return None
+
+    def column(self, pdf, name):
+        return pdf[name]
+
+    def literal(self, value):
+        # np.bool_ so that `~` is a boolean not (~True is -2)
+        return np.bool_(value) if isinstance(value, bool) else value
+
+    def compare(self, pdf, op, name, right):
+        if op in ("==", "!=") and isinstance(right, str):
+            codes, uniques = _fcodes(pdf, name)
+            if codes is not None:
+                hit = np.flatnonzero(uniques == right)
+                code = hit[0] if len(hit) else -1
+                # null keys carry their own code (use_na_sentinel=False),
+                # never equal to a constant's: two-valued null semantics
+                # (null == 'x' -> False, null != 'x' -> True) fall out.
+                return (codes == code) if op == "==" else (codes != code)
+        try:
+            result = grammar.COMPARISONS[op](pdf[name], right)
+        except TypeError as exc:  # e.g. str col vs number — Spark path decides
+            raise Unsupported(str(exc))
+        # pandas object-dtype ==/!= against None already yields
+        # False/True (two-valued); numeric NaN likewise.
+        return result.fillna(op == "!=") if result.dtype == object else result
+
+    def isnull(self, pdf, name):
+        return pdf[name].isna()
+
+    def isin(self, pdf, name, values):
+        col = pdf[name]
+        return col.isin(values) if values else pd.Series(False, index=col.index)
+
+    def rlike(self, pdf, name, regex):
+        codes, uniques = _fcodes(pdf, name)
+        if codes is not None:
+            # evaluate the pattern once per distinct value, then map
+            # through the int codes (na=False: a null value never
+            # matches, and NaN sits in uniques as its own code)
+            m = pd.Series(uniques).str.contains(regex, regex=True, na=False)
+            return pd.Series(
+                np.isin(codes.to_numpy(), np.flatnonzero(m.to_numpy())),
+                index=pdf.index,
+            )
+        return pdf[name].str.contains(regex, regex=True, na=False)
+
+    def contains(self, pdf, name, needle):
+        return pdf[name].str.contains(needle, regex=False, na=False)
+
+    def bits(self, pdf, op, name, mask):
+        masked = pdf[name] & mask
+        return (masked > 0) if op == "any_bits" else (masked == mask)
+
+    def semi_join(self, pdf, name, sub, anti):
+        hit = pdf[name].isin(sub[name].dropna())
+        return pdf[~hit] if anti else pdf[hit]
+
+    def membership(self, pdf, name, sub):
+        return pdf, pdf[name].isin(sub[name].dropna())
+
+    def filter(self, pdf, mask):
+        if np.isscalar(mask):
+            return pdf if mask else pdf.iloc[0:0]
+        return pdf[mask.astype(bool)]
+
+    def distinct(self, pdf, columns):
+        # Dedup on the pre-factorized int64 codes when every subset
+        # column has one: pandas re-factorizes object columns inside
+        # duplicated() (~30 ms on 600 k rows), the codes skip that.
+        companions = [f"__fcode_{c}" for c in columns]
+        if columns and all(f in pdf.columns for f in companions):
+            return pdf.loc[~pdf.duplicated(subset=companions)]
+        return pdf.drop_duplicates(subset=columns or None)
+
+    def count(self, pdf):
+        return pd.DataFrame({"count": [len(pdf)]})
+
+    def aggregate(self, pdf, keys, entries, grouping, where):
+        if grouping is not None:
+            # rollup / cube / grouping_sets: the Catalyst plan serves them
+            raise Unsupported("structured group_by (rollup/cube/grouping_sets)")
+        mask = None
+        if where is not None and np.isscalar(where):
+            pdf = self.filter(pdf, where)
+        elif where is not None:
+            # Fuse the filter into the aggregation: mask the group codes
+            # instead of materializing a filtered copy of the frame (the
+            # copy is the dominant cost when the predicate keeps most rows).
+            mask = where.astype(bool).to_numpy()
+        return _agg_frames(pdf, keys, entries, mask)
+
+    def unary(self, op, a):
+        with np.errstate(all="ignore"):
+            if op in _UNARY:
+                if op in ("arcsin", "arccos"):
+                    _guard_domain(a, np.abs(a) > 1, op)
+                elif op == "arccosh":
+                    _guard_domain(a, np.asarray(a) < 1, op)
+                elif op == "arctanh":
+                    _guard_domain(a, np.abs(a) >= 1, op)
+                return _UNARY[op](a)
+            if op == "-":
+                return -a
+            if op == "sqrt":
+                _guard_domain(a, np.asarray(a) < 0, op)
+                return np.sqrt(np.asarray(a, dtype="float64")) if np.isscalar(a) else np.sqrt(a.astype("float64"))
+            if op in ("log", "log10", "log1p"):
+                # Spark returns null outside the domain; numpy returns
+                # -inf at the boundary — mask to NaN to match.
+                fn = {"log": np.log, "log10": np.log10, "log1p": np.log1p}[op]
+                bound = -1 if op == "log1p" else 0
+                r = fn(a)
+                if np.isscalar(r):
+                    return float("nan") if a <= bound else r
+                return pd.Series(r, index=a.index).mask(a <= bound)
+            if op in ("floor", "ceil"):
+                fn = np.floor if op == "floor" else np.ceil
+                r = fn(a)
+                # Spark floor/ceil return LONG
+                if not np.isscalar(r) and not pd.Series(r).isna().any():
+                    return pd.Series(r, index=a.index).astype("int64")
+                return r
+            if op == "sign":
+                r = np.sign(a)
+                return pd.Series(r, index=a.index).astype("float64") if not np.isscalar(r) else float(r)
+            # upper / lower / trim / length
+            if np.isscalar(a):
+                raise Unsupported("string fn on scalar")
+            if not _is_stringy(a.dtype):
+                raise Unsupported(f"{op} on non-string column")
+            if op == "upper":
+                return a.str.upper()
+            if op == "lower":
+                return a.str.lower()
+            if op == "trim":
+                return a.str.strip()
+            r = a.str.len()
+            # Spark length() is INT
+            return r.astype("int32") if not r.isna().any() else r
+
+    def binary(self, op, a, b):
+        with np.errstate(all="ignore"):
+            if op == "/":
+                return _try_divide(a, b)
+            if op == "//":
+                r = np.floor(_try_divide(a, b))
+                # Spark floor() yields LONG
+                if isinstance(r, pd.Series) and not r.isna().any():
+                    return r.astype("int64")
+                return r
+            if op == "%":
+                return _try_mod(a, b)
+            if op == "**":
+                # Spark pow always yields double
+                frac_exp = np.asarray(b) != np.floor(np.asarray(b))
+                _guard_domain(a, np.asarray(np.asarray(a) < 0) & np.asarray(frac_exp), "pow")
+                r = np.power(a, b)
+                return pd.Series(r, dtype="float64") if hasattr(r, "__len__") else float(r)
+            try:
+                return _BINARY[op](a, b)
+            except TypeError as exc:
+                raise Unsupported(str(exc))
+
+    def with_column(self, pdf, name, value):
+        out = pdf.copy(deep=False)
+        if not isinstance(value, pd.Series):
+            value = pd.Series([value] * len(out), index=out.index)
+        out[name] = value
+        return out
+
+    def select(self, pdf, columns):
+        if columns is None:
+            return pdf[[c for c in pdf.columns if not c.startswith("__fcode_")]]
+        return pdf[columns]
+
+    def order(self, pdf, keys):
+        # Spark sorts nulls as SMALLEST (asc → first, desc → last); pandas
+        # has one na_position per call, so do a stable multi-pass sort from
+        # the least-significant key.
+        for name, asc in reversed(keys):
+            pdf = pdf.sort_values(
+                name,
+                ascending=asc,
+                kind="mergesort",
+                na_position="first" if asc else "last",
+            )
+        return pdf
+
+    def slice(self, pdf, offset, limit):
+        if offset:
+            pdf = pdf.iloc[offset:]
+        if limit:
+            pdf = pdf.iloc[:limit]
+        return pdf
+
+
+_PANDAS = _Pandas()
+
+
 def execute_local(
     q: dict,
     pdf: pd.DataFrame,
     root_pdf: pd.DataFrame | None = None,
     enum_columns: frozenset = frozenset(),
 ) -> LocalResult:
-    """Execute a qcache query dict on a pandas frame. Clause order
-    mirrors compile_query (compiler.py:96-128):
-    from → where → group_by/distinct → select → order_by → slice."""
-    if not isinstance(q, dict):
-        raise MalformedQueryException(f'Query must be a dictionary, not "{q}"')
-    key_set = set(q.keys())
-    if not key_set.issubset(QUERY_CLAUSES):
-        unknown = ", ".join(sorted(key_set.difference(QUERY_CLAUSES)))
-        raise MalformedQueryException(f"Unknown query clauses: {unknown}")
-
-    root = root_pdf if root_pdf is not None else pdf
-
-    if "from" in q:
-        pdf = execute_local(q["from"], pdf, root_pdf=root, enum_columns=enum_columns).sliced
-
-    def run_subquery(sub_q):
-        return execute_local(sub_q, root, root_pdf=root, enum_columns=enum_columns).sliced
-
-    lf = LocalFilter(pdf, enum_columns, run_subquery)
-    where_q = q.get("where")
-    group_by = q.get("group_by")
-    if isinstance(group_by, dict):
-        # rollup / cube / grouping_sets: Catalyst-only surface — the
-        # router falls back to the Spark plan (compiler._project)
-        raise Unsupported("structured group_by (rollup/cube/grouping_sets)")
-    agg_mask = None
-    if (
-        where_q
-        and group_by
-        and isinstance(where_q, list)
-        and not lf._is_subquery_in(where_q)
-    ):
-        # Fuse filter into aggregation: mask the group codes instead
-        # of materializing a filtered copy of the frame (the copy is
-        # the dominant cost when the predicate keeps most rows).
-        assert_list("where", where_q)
-        mask = lf.compile(where_q)
-        if not np.isscalar(mask):
-            agg_mask = mask.astype(bool).to_numpy()
-            filtered = pdf
-        else:
-            filtered = pdf if mask else pdf.iloc[0:0]
-    else:
-        filtered = lf.apply(where_q)
-    if group_by:
-        assert_list("group_by", group_by)
-        missing = [c for c in group_by if c not in filtered.columns]
-        if missing:
-            raise_malformed("Group by column not in table", group_by)
-        if q.get("distinct") is not None:
-            raise_malformed("Cannot combine group_by and distinct", q)
-
-    distinct = q.get("distinct")
-    distinct_df = filtered
-    if distinct is not None and not group_by:
-        assert_list("distinct", distinct)
-        missing = [c for c in distinct if c not in filtered.columns]
-        if missing:
-            raise_malformed("Distinct column not in table", distinct)
-        # Dedup on the pre-factorized int64 codes when every subset
-        # column has one: pandas re-factorizes object columns inside
-        # duplicated() (~30 ms on 600 k rows), the codes skip that.
-        companions = [f"__fcode_{c}" for c in (distinct or [])]
-        if distinct and all(f in filtered.columns for f in companions):
-            distinct_df = filtered.loc[~filtered.duplicated(subset=companions)]
-        else:
-            distinct_df = filtered.drop_duplicates(subset=distinct or None)
-
-    projected = _project(distinct_df, q.get("select"), group_by, agg_mask)
-    ordered = _order_by(projected, q.get("order_by"))
-    unsliced_len = len(ordered)
-    sliced = _slice(ordered, q.get("offset"), q.get("limit"))
-    return LocalResult(sliced=sliced, unsliced_len=unsliced_len)
-
-
-def _project(pdf, project_q, group_by, agg_mask=None):
-    if not project_q:
-        if group_by:
-            raise_malformed(
-                "Aggregate function required when group_by is specified", project_q
-            )
-        # hide the mirror's pre-factorized companion columns
-        return pdf[[c for c in pdf.columns if not c.startswith("__fcode_")]]
-    assert_list("project", project_q)
-    if project_q == [["count"]]:
-        return pd.DataFrame({"count": [len(pdf)]})
-
-    aggregate_by_col: dict = {}
-    alias_expressions = []
-    for expression in project_q:
-        if is_aggregate_function(expression):
-            fn, col = expression
-            aggregate_by_col[col] = fn
-        elif is_alias_assignment(expression):
-            alias_expressions.append(expression)
-        elif type(expression) is list:
-            raise_malformed("Invalid expression in select", expression)
-    aggregate_entries = [(fn, col) for col, fn in aggregate_by_col.items()]
-
-    if aggregate_entries and alias_expressions:
-        raise_malformed("Cannot mix aliasing and aggregation functions", project_q)
-
-    if group_by:
-        if not aggregate_entries:
-            raise_malformed(
-                "Aggregate function required when group_by is specified", project_q
-            )
-        for _, col in aggregate_entries:
-            if col not in pdf.columns:
-                raise_malformed("Selected columns not in table", [col])
-        pdf = _agg_frames(pdf, group_by, aggregate_entries, agg_mask)
-    elif aggregate_entries:
-        if len(aggregate_entries) != len(project_q):
-            raise_malformed(
-                "Cannot mix aggregation functions and columns without group_by clause",
-                project_q,
-            )
-        for _, col in aggregate_entries:
-            if col not in pdf.columns:
-                raise_malformed("Selected columns not in table", [col])
-        return _agg_frames(pdf, None, aggregate_entries)
-    elif alias_expressions:
-        pdf = _apply_aliases(pdf, alias_expressions)
-
-    columns = [e if type(e) is not list else e[1] for e in project_q]
-    missing = sorted(set(columns) - set(pdf.columns))
-    if missing:
-        raise_malformed("Selected columns not in table", missing)
-    return pdf[columns]
-
-
-def _order_by(pdf, order_q):
-    if not order_q:
-        return pdf
-    assert_list("order_by", order_q)
-    if not all(isinstance(c, str) for c in order_q):
-        raise_malformed("Invalid order by format", order_q)
-    keys = []
-    for e in order_q:
-        name = e[1:] if e.startswith("-") else e
-        if name not in pdf.columns:
-            raise_malformed("Order by column not in table", [name])
-        keys.append((name, not e.startswith("-")))
-    # Spark sorts nulls as SMALLEST (asc → first, desc → last); pandas
-    # has one na_position per call, so do a stable multi-pass sort from
-    # the least-significant key.
-    out = pdf
-    for name, asc in reversed(keys):
-        out = out.sort_values(
-            name,
-            ascending=asc,
-            kind="mergesort",
-            na_position="first" if asc else "last",
-        )
-    return out
-
-
-def _slice(pdf, offset, limit):
-    if offset is not None:
-        assert_integer("offset", offset)
-        if offset:
-            pdf = pdf.iloc[offset:]
-    if limit is not None:
-        assert_integer("limit", limit)
-        if limit:
-            pdf = pdf.iloc[:limit]
-    return pdf
+    """Execute a qcache query dict on a pandas frame."""
+    sliced, unsliced = grammar.run(q, pdf, _PANDAS, root_pdf, enum_columns)
+    return LocalResult(sliced=sliced, unsliced_len=len(unsliced))

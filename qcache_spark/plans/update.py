@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..errors import assert_len, raise_malformed
-from .filters import COMPARISON_OPERATORS, is_quoted, unquote
+from .grammar import COMPARISONS, is_quoted, unquote
 
 SELF_REFERRING_OPERATORS = {
     "+": lambda a, b: a + b,
@@ -87,11 +87,11 @@ def _build_update_mask(df: DataFrame, update_q) -> Column:
             mask = mask | (p == col)
         return F.coalesce(mask, F.lit(False))
 
-    if operator in COMPARISON_OPERATORS:
+    if operator in COMPARISONS:
         assert_len(update_q, 3)
         arg1 = _prepare_arg(df, update_q[1])
         arg2 = _prepare_arg(df, update_q[2])
-        expr = COMPARISON_OPERATORS[operator](arg1, arg2)
+        expr = COMPARISONS[operator](arg1, arg2)
         if operator == "!=":
             return F.coalesce(expr, F.lit(True))
         return F.coalesce(expr, F.lit(False))

@@ -23,17 +23,17 @@ from qcache_spark.errors import MalformedQueryException
 from qcache_spark.plans.local import Unsupported, execute_local
 
 ROWS = [
-    {"rid": 0, "i": 1, "f": 1.5, "s": "abc"},
-    {"rid": 1, "i": 2, "f": None, "s": "ABC"},
-    {"rid": 2, "i": 3, "f": -0.5, "s": None},
-    {"rid": 3, "i": 4, "f": 2.5, "s": "xyz"},
-    {"rid": 4, "i": 0, "f": 0.0, "s": ""},
-    {"rid": 5, "i": 7, "f": 1.5, "s": "abcd"},
-    {"rid": 6, "i": 2, "f": None, "s": "abc"},
-    {"rid": 7, "i": 7, "f": 4.0, "s": None},
+    {"rid": 0, "i": 1, "f": 1.5, "s": "abc", "b": True},
+    {"rid": 1, "i": 2, "f": None, "s": "ABC", "b": False},
+    {"rid": 2, "i": 3, "f": -0.5, "s": None, "b": True},
+    {"rid": 3, "i": 4, "f": 2.5, "s": "xyz", "b": False},
+    {"rid": 4, "i": 0, "f": 0.0, "s": "", "b": False},
+    {"rid": 5, "i": 7, "f": 1.5, "s": "abcd", "b": True},
+    {"rid": 6, "i": 2, "f": None, "s": "abc", "b": True},
+    {"rid": 7, "i": 7, "f": 4.0, "s": None, "b": False},
     # negative money-scale tie: -2.00005 * 10000 is EXACTLY -20000.5,
     # exercising msum/dsum's away-from-zero rounding on negatives
-    {"rid": 8, "i": -3, "f": -2.00005, "s": "neg"},
+    {"rid": 8, "i": -3, "f": -2.00005, "s": "neg", "b": True},
 ]
 
 CMP = ["==", "!=", "<", "<=", ">", ">="]
@@ -54,9 +54,14 @@ def _filter_tree():
     leaf = st.one_of(int_cmp, float_cmp, str_cmp, col_cmp, in_list, like, isnull).map(list)
 
     def extend(children):
+        # operands of !/&/| also draw boolean literals and bare columns:
+        # the boolean column "b" is a predicate, the others are not
+        operand = st.one_of(
+            children, children, st.booleans(), st.sampled_from(["b", "i", "s"])
+        )
         return st.one_of(
-            st.tuples(st.sampled_from(["&", "|"]), children, children).map(list),
-            st.tuples(st.just("!"), children).map(list),
+            st.tuples(st.sampled_from(["&", "|"]), operand, operand).map(list),
+            st.tuples(st.just("!"), operand).map(list),
         )
 
     return st.recursive(leaf, extend, max_leaves=4)
@@ -78,8 +83,8 @@ def _query():
                 [["rid", "i", "f", "s"], ["rid", "s", "i"], ["rid", "f"]]
             ),
             "order_by": st.just(["rid"]),
-            "offset": st.sampled_from([0, 2]),
-            "limit": st.sampled_from([3, 100]),
+            "offset": st.sampled_from([0, 2, -1]),
+            "limit": st.sampled_from([3, 100, -2]),
         },
     )
     aliased = st.builds(
@@ -189,17 +194,22 @@ def frames(spark):
 @given(q=_query())
 def test_local_matches_catalyst(frames, q):
     sdf, pdf = frames
+    catalyst_error = None
+    try:
+        result = compile_query(q, sdf)
+        spark_rows = result.sliced.collect()
+    except Exception as exc:  # at plan build or at collect
+        catalyst_error = exc
     try:
         local = execute_local(q, pdf)
     except Unsupported:
         return  # router would fall back — fine by contract
     except MalformedQueryException:
         # both backends must 400 identically
-        with pytest.raises(MalformedQueryException):
-            compile_query(q, sdf)
+        assert isinstance(catalyst_error, MalformedQueryException), (q, catalyst_error)
         return
-    result = compile_query(q, sdf)
-    spark_rows = result.sliced.collect()
+    # a query Catalyst cannot run must not return rows locally
+    assert catalyst_error is None, (q, catalyst_error)
     cols = result.sliced.columns
     assert list(local.sliced.columns) == cols, (q, local.sliced.columns, cols)
     got = _pdf_rows(local.sliced, cols)

@@ -73,6 +73,11 @@ BATTERY = [
     ("lineitem", {"select": [["dsum", "l_extendedprice"], ["davg", "l_tax"]], "group_by": ["l_returnflag"]}),
     ("nation", {"select": ["n_nationkey", ["=", "neg", ["-", "n_nationkey"]],
         ["=", "lg", ["log", "n_nationkey"]]]}),
+    # negating a boolean literal is a boolean (no rows), not ~True == -2
+    ("orders", {"where": ["!", True], "select": ["o_orderkey"]}),
+    # a global COUNT(*) under a group_by counts the filtered rows
+    ("lineitem", {"where": [">", "l_quantity", 45], "group_by": ["l_returnflag"],
+        "select": [["count"]]}),
 ]
 
 
@@ -120,6 +125,12 @@ def test_local_matches_spark(spark, sf_dir, idx):
         {"where": ["like", "o_orderkey", "'x'"]},
         {"bogus_clause": 1},
         {"select": [["sum", "o_totalprice"], "o_orderkey"]},
+        {"limit": -1},
+        {"offset": -1},
+        {"where": ["!", "o_orderkey"]},
+        {"where": ["&", "o_orderkey", ["==", "o_orderkey", 1]]},
+        {"where": [["==", "o_orderkey", 1]]},
+        {"select": ["nope", 5]},
     ],
 )
 def test_local_errors_match_spark(spark, sf_dir, bad):
@@ -223,3 +234,38 @@ def test_fcode_fast_paths_match_spark(spark, tmp_path):
             key=repr,
         )
         assert l_rows == c_rows, q
+
+
+def test_grammar_lives_only_in_grammar_module():
+    """The query grammar's validation exists once: no executor module
+    in plans/ raises a grammar error itself. update.py's restricted
+    update grammar is separate and exempt."""
+    import ast
+
+    import qcache_spark.plans as plans
+
+    checks = {"raise_malformed", "assert_len", "assert_list", "assert_integer",
+              "MalformedQueryException"}
+    pkg = os.path.dirname(plans.__file__)
+    offenders = []
+    for name in ("local.py", "filters.py", "expressions.py", "aggregates.py", "compiler.py"):
+        for node in ast.walk(ast.parse(open(os.path.join(pkg, name)).read())):
+            if isinstance(node, ast.Call):
+                fn = node.func
+                called = fn.id if isinstance(fn, ast.Name) else getattr(fn, "attr", None)
+                if called in checks:
+                    offenders.append(f"{name}:{node.lineno}")
+    assert not offenders, offenders
+
+
+def test_catalyst_tables_cover_grammar_names():
+    """Every operator, function and aggregate the grammar accepts has
+    a Catalyst implementation, and no Catalyst table entry is
+    unreachable."""
+    from qcache_spark.plans import grammar
+    from qcache_spark.plans.aggregates import AGGREGATE_FUNCTIONS
+    from qcache_spark.plans.expressions import BINARY_OPERATORS, UNARY_FUNCTIONS
+
+    assert set(AGGREGATE_FUNCTIONS) == grammar.AGGREGATE_FUNCTIONS
+    assert set(UNARY_FUNCTIONS) == grammar.UNARY_FUNCTIONS
+    assert set(BINARY_OPERATORS) == grammar.BINARY_OPERATORS

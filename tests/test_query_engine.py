@@ -881,13 +881,13 @@ def test_group_by_structured_falls_back_to_spark(spark, sf_dir):
             pd.DataFrame({"g": ["a"], "v": [1]}),
         )
     # end-to-end through the router at a fastpath-eligible size
-    from qcache_spark import fastpath
+    from __spark_entry__ import _gq
 
     q = {
         "group_by": {"rollup": ["l_returnflag"]},
         "select": ["l_returnflag", ["count", "l_orderkey"]],
     }
-    out = fastpath.query_table(spark, sf_dir, "lineitem", q)
+    out = _gq(spark, sf_dir, "lineitem", q)
     rows = {r["l_returnflag"]: r["l_orderkey"] for r in out.collect()}
     assert None in rows  # grand-total row present
     assert rows[None] == sum(v for k, v in rows.items() if k is not None)

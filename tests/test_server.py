@@ -111,6 +111,24 @@ def test_malformed_query_400(server):
     assert "selcet" in json.loads(body)["error"]
 
 
+@pytest.mark.parametrize(
+    "bad",
+    [
+        {"limit": -1},
+        {"offset": -1},
+        {"where": ["!", "o_orderkey"]},
+        {"where": ["&", "o_orderkey", ["==", "o_orderkey", 1]]},
+        {"where": [["==", "o_orderkey", 1]]},
+        {"select": ["nope", 5]},
+    ],
+)
+def test_grammar_errors_are_400_not_500(server, bad):
+    store(server, "grammar400", "o_orderkey,o_comment\n1,a\n2,b\n")
+    code, body, _ = query(server, "grammar400", bad)
+    assert code == 400, (bad, code, body)
+    assert "error" in json.loads(body)
+
+
 def sql_post(base, sql, accept="application/json"):
     return call(
         base, "POST", "/qcache/sql", sql.encode(), {"Accept": accept}
