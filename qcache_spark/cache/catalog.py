@@ -11,12 +11,19 @@ Reference behavior preserved (qcache/dataset_cache.py:1-81):
 - max-age eviction, applied lazily on access (dataset_cache.py:28-36)
 - replacing a key deletes the old entry first (app.py:241-243)
 
-Spark upgrade over the reference: "eviction" unpersists a DataFrame —
-with MEMORY_AND_DISK the executor storage layer ALSO spills
-gracefully under pressure before our bookkeeping ever evicts, so the
-cache degrades to disk instead of dropping data on the floor
-(SURVEY.md §4). Size estimates come from the optimized plan's
-statistics (parquet/AQE stats) once materialized.
+A dataset is stored in one of two forms:
+- driver-resident: a small CSV/JSON store (fastpath.resident_table)
+  is kept as a pyarrow Table and served by the driver-local executor.
+  Storing it runs no Spark job; a Spark frame over it is built only
+  for a request that needs one (CacheItem.frame), and neither
+  persisted nor kept, so `byte_size` counts the only copy.
+- persisted: everything else (larger, bucketed, other column types)
+  is a Spark plan persisted MEMORY_AND_DISK. Its "eviction" unpersists
+  the DataFrame, and the executor storage layer ALSO spills gracefully
+  under pressure before our bookkeeping ever evicts, so the cache
+  degrades to disk instead of dropping data on the floor (SURVEY.md
+  §4). Size estimates come from the optimized plan's statistics
+  (parquet/AQE stats) once materialized.
 """
 from __future__ import annotations
 
@@ -28,9 +35,11 @@ import threading
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
+from .. import fastpath
 from ..errors import (
     DatasetTooLargeException,
     MalformedQueryException,
@@ -48,7 +57,8 @@ def _next_version() -> int:
 
 @dataclass
 class CacheItem:
-    df: DataFrame
+    # the persisted frame, or None for a driver-resident item
+    df: DataFrame | None
     byte_size: int
     row_count: int
     enum_columns: frozenset = frozenset()
@@ -63,6 +73,17 @@ class CacheItem:
     bucket_table: str | None = None
     bucket_path: str | None = None
     bucket_by: tuple[tuple[str, ...], int] | None = None
+    # the driver-resident form, or None for a persisted item
+    table: pa.Table | None = None
+
+    def frame(self, spark: SparkSession) -> DataFrame:
+        """The dataset as a Spark frame. For a driver-resident item
+        this is a new frame over the Arrow table on every call: no
+        Spark job, and neither persisted nor kept on the item, so the
+        JVM copy it holds lives only as long as the request using it."""
+        if self.table is None:
+            return self.df
+        return spark.createDataFrame(self.table)
 
 
 def estimate_size(df: DataFrame) -> int:
@@ -88,8 +109,11 @@ class DatasetCatalog:
     # -- internals ----------------------------------------------------
 
     def _evict(self, key: str) -> None:
-        item = self._items.pop(key)
-        item.df.unpersist(blocking=False)
+        self._release(self._items.pop(key))
+
+    def _release(self, item: CacheItem) -> None:
+        if item.table is None:
+            item.df.unpersist(blocking=False)
         self._drop_bucketed(item)
 
     @staticmethod
@@ -142,6 +166,35 @@ class DatasetCatalog:
         )
         return df.sparkSession.table(table), table, path, (cols, int(n))
 
+    def _store(self, key: str, data, bucket_by, version: int, **fields) -> CacheItem:
+        """A new item holding `data`: a pyarrow Table is kept as the
+        driver-resident form; a DataFrame is bucketed if asked, then
+        persisted and counted."""
+        if isinstance(data, pa.Table):
+            return CacheItem(
+                df=None,
+                table=data,
+                byte_size=fastpath.resident_size(data),
+                row_count=data.num_rows,
+                version=version,
+                **fields,
+            )
+        table = path = spec = None
+        if bucket_by is not None:
+            data, table, path, spec = self._write_bucketed(key, data, bucket_by, version)
+        df = data.persist(StorageLevel.MEMORY_AND_DISK)
+        row_count = df.count()
+        return CacheItem(
+            df=df,
+            byte_size=estimate_size(df),
+            row_count=row_count,
+            version=version,
+            bucket_table=table,
+            bucket_path=path,
+            bucket_by=spec,
+            **fields,
+        )
+
     def _ensure_free(self, byte_count: int) -> int:
         """LRU eviction until byte_count fits; returns datasets evicted
         (dataset_cache.py:60-81)."""
@@ -168,14 +221,15 @@ class DatasetCatalog:
     def insert(
         self,
         key: str,
-        df: DataFrame,
+        data,
         enum_columns: frozenset = frozenset(),
         bucket_by: tuple | None = None,
     ) -> CacheItem:
-        """Cache a dataset. `bucket_by=(cols, num_buckets)` opts into
-        the bucketed physical layout (see _write_bucketed); without it
-        the dataset is an in-memory persisted plan, the reference's
-        behavior."""
+        """Cache a dataset: a pyarrow Table (fastpath.resident_table)
+        stays driver-resident; a DataFrame becomes an in-memory
+        persisted plan, the reference's behavior, or with
+        `bucket_by=(cols, num_buckets)` the bucketed physical layout
+        (see _write_bucketed)."""
         with self._lock:
             # write-then-swap, mirroring replace_df: the new version is
             # fully written/persisted BEFORE the old entry is touched,
@@ -183,28 +237,14 @@ class DatasetCatalog:
             # leaves the previously stored dataset intact. The new
             # bucketed table name carries the fresh version, so the
             # write never collides with the old files.
-            version = _next_version()
-            table = path = spec = None
-            if bucket_by is not None:
-                df, table, path, spec = self._write_bucketed(key, df, bucket_by, version)
-            df = df.persist(StorageLevel.MEMORY_AND_DISK)
-            row_count = df.count()
-            size = estimate_size(df)
+            item = self._store(
+                key, data, bucket_by, _next_version(), enum_columns=frozenset(enum_columns)
+            )
             if key in self._items:
                 # replace: reference deletes the old entry first
                 # (app.py:241-243) — but only once the new one is safe
                 self._evict(key)
-            self._ensure_free(size)
-            item = CacheItem(
-                df=df,
-                byte_size=size,
-                row_count=row_count,
-                enum_columns=frozenset(enum_columns),
-                version=version,
-                bucket_table=table,
-                bucket_path=path,
-                bucket_by=spec,
-            )
+            self._ensure_free(item.byte_size)
             self._items[key] = item
             return item
 
@@ -224,39 +264,33 @@ class DatasetCatalog:
             item.access_count += 1
             return item
 
-    def replace_df(self, key: str, df: DataFrame) -> CacheItem:
+    def replace_df(self, key: str, data) -> CacheItem:
         """Atomic copy-on-write swap used by the update statement: the
-        new plan is persisted and materialized BEFORE the old entry is
-        dropped, so concurrent readers never see a half-written table
-        (SURVEY.md §1.3)."""
+        new version is materialized BEFORE the old entry is dropped,
+        so concurrent readers never see a half-written table
+        (SURVEY.md §1.3). `data` is the updated dataset: a pyarrow
+        Table (fastpath.update applied it on the driver) is stored
+        driver-resident; a Spark plan over a driver-resident item
+        comes back as Arrow (one Spark job) in the stored schema,
+        unless its rows no longer qualify; a bucketed item keeps its
+        declared layout."""
         with self._lock:
             old = self.get(key)
-            version = _next_version()
-            table = path = spec = None
-            if old.bucket_by is not None:
-                # updates keep the declared physical layout; the new
-                # version's table is fully written before the swap
-                df, table, path, spec = self._write_bucketed(
-                    key, df, old.bucket_by, version
-                )
-            new_df = df.persist(StorageLevel.MEMORY_AND_DISK)
-            row_count = new_df.count()
-            size = estimate_size(new_df)
-            item = CacheItem(
-                df=new_df,
-                byte_size=size,
-                row_count=row_count,
+            if isinstance(data, DataFrame) and old.table is not None:
+                table = fastpath.resident_table(data.toArrow(), old.table.schema)
+                if table is not None:
+                    data = table
+            item = self._store(
+                key,
+                data,
+                old.bucket_by,
+                _next_version(),
                 enum_columns=old.enum_columns,
                 creation_time=old.creation_time,
                 last_access_time=time.time(),
                 access_count=old.access_count,
-                version=version,
-                bucket_table=table,
-                bucket_path=path,
-                bucket_by=spec,
             )
-            old.df.unpersist(blocking=False)
-            self._drop_bucketed(old)
+            self._release(old)
             self._items[key] = item
             return item
 
@@ -283,9 +317,9 @@ class DatasetCatalog:
         with self._lock:
             return list(self._items)
 
-    def snapshot_items(self) -> list[tuple[str, DataFrame, int]]:
-        """Untracked read of (key, df, version) for every entry — used
-        by the SQL endpoint's view sync, which must not perturb LRU
-        order, access counts, or age eviction the way `get` does."""
+    def snapshot_items(self) -> list[tuple[str, CacheItem]]:
+        """Untracked read of (key, item) for every entry — used by the
+        SQL endpoint's dataset listing, which must not perturb LRU order,
+        access counts, or age eviction the way `get` does."""
         with self._lock:
-            return [(k, it.df, it.version) for k, it in self._items.items()]
+            return list(self._items.items())

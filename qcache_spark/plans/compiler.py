@@ -54,7 +54,12 @@ def compile_query(
     return QueryResult(sliced=sliced, unsliced=unsliced)
 
 
-_KINDS = (("integral", INTEGRAL_TYPES), ("string", T.StringType), ("boolean", T.BooleanType))
+_KINDS = (
+    ("integral", INTEGRAL_TYPES),
+    ("fractional", (T.FloatType, T.DoubleType)),
+    ("string", T.StringType),
+    ("boolean", T.BooleanType),
+)
 
 
 class _Catalyst:

@@ -19,10 +19,21 @@ literals, `'quoted strings'` are string literals, bare strings are
 column references. Filter predicates follow pandas two-valued null
 semantics: a comparison or match with null is False (`!=` is True),
 and `!`/`&`/`|` combine those plain booleans.
+
+Types: where the executor knows a column's kind, operands must agree.
+A comparison needs two numbers, two strings or two booleans; an
+arithmetic or bitwise operator and a math function need numbers. Spark
+casts across kinds (and fails at run time when the cast does), pandas
+compares by identity, so a mixed-kind query is a 400 on both. The one
+cast both keep is a quoted literal that spells a number (`'1000.5'`)
+where a number is needed: against a numeric operand or in arithmetic
+it reads as that number. A boolean never compares with a number: under
+ANSI mode Catalyst refuses `flag == 1` at analysis.
 """
 from __future__ import annotations
 
 import functools
+import math
 import operator
 import re
 from typing import Protocol
@@ -75,12 +86,16 @@ SHIFTS = frozenset({"<<", ">>"})
 BINARY_OPERATORS = frozenset(
     {"+", "-", "*", "/", "**", "%", "//", "&", "|", "^"} | set(COMPARISONS) | SHIFTS
 )
+STRING_FUNCTIONS = frozenset({"upper", "lower", "length", "trim"})
 UNARY_FUNCTIONS = frozenset({
     "sin", "cos", "tan", "arcsin", "arccos", "arctan",
     "sinh", "cosh", "tanh", "arcsinh", "arccosh", "arctanh",
     "log", "log10", "log1p", "exp", "expm1", "sqrt", "abs",
-    "floor", "ceil", "sign", "upper", "lower", "length", "trim", "-",
-})
+    "floor", "ceil", "sign", "-",
+}) | STRING_FUNCTIONS
+
+# Executor column kinds, grouped into the families that compare.
+_FAMILIES = {"integral": "number", "fractional": "number", "string": "string", "boolean": "boolean"}
 
 # The reference duck-types aggregate names onto pandas groupby methods
 # (query.py:55-58); unknown names are malformed (test_qframe.py:334-338).
@@ -131,6 +146,34 @@ def like_regex(op: str, pattern: str) -> str:
     return "(?i)" + regexp if op == "ilike" else regexp
 
 
+_NUMBER_TEXT = re.compile(r"[+-]?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?", re.ASCII)
+
+
+def _as_number(value):
+    """The finite number a quoted literal spells (`'1000.5'` → 1000.5,
+    `'7'` → 7), or None."""
+    if isinstance(value, str) and is_quoted(value):
+        text = unquote(value).strip()
+        if _NUMBER_TEXT.fullmatch(text):
+            if text.lstrip("+-").isdigit():
+                return int(text)
+            number = float(text)
+            return number if math.isfinite(number) else None
+    return None
+
+
+def _literal_family(value) -> str | None:
+    """The family of a literal operand: a bool, a number or a
+    (quoted) string; None for null."""
+    if isinstance(value, bool):
+        return "boolean"
+    if isinstance(value, (int, float)):
+        return "number"
+    if isinstance(value, str):
+        return "string"
+    return None
+
+
 def _named(op, names) -> bool:
     return isinstance(op, str) and op in names
 
@@ -144,7 +187,8 @@ class Executor(Protocol):
     construct by raising its own exception."""
 
     def columns(self, frame) -> list: ...
-    def kind(self, frame, name: str) -> str | None: ...  # "integral" | "string" | "boolean"
+    # "integral" | "fractional" | "string" | "boolean", None if other
+    def kind(self, frame, name: str) -> str | None: ...
     def column(self, frame, name: str): ...
     def literal(self, value): ...
     def compare(self, frame, op: str, name: str, right): ...
@@ -402,7 +446,19 @@ class _Predicate:
         name = self.column(name)
         if op in ORDERED_COMPARISONS and name in self.enum_columns:
             raise_malformed(f"Invalid operation {op} for enum column", q)
+        if self.family(name) == "number" and _as_number(arg) is not None:
+            arg = _as_number(arg)
+        if isinstance(arg, list):
+            right = "boolean"  # a predicate
+        elif isinstance(arg, str) and not is_quoted(arg):
+            right = self.family(self.column(arg))
+        else:
+            right = _literal_family(arg)
+        _check_comparable(self.family(name), right, q)
         return self.ex.compare(self.frame, op, name, self.compile(arg))
+
+    def family(self, name: str) -> str | None:
+        return _FAMILIES.get(self.ex.kind(self.frame, name))
 
     def bits(self, q):
         assert_len(q, 3)
@@ -434,7 +490,12 @@ class _Predicate:
 
     def like(self, q):
         name, pattern = self._string_column(q, "like", "Invalid column type for (i)like")
-        return self.ex.rlike(self.frame, name, like_regex(q[0], pattern))
+        regex = like_regex(q[0], pattern)
+        try:
+            re.compile(regex)
+        except re.error as e:
+            raise_malformed(f"Invalid (i)like pattern: {e}", q)
+        return self.ex.rlike(self.frame, name, regex)
 
     def contains(self, q):
         """Literal substring containment (the reference's aspirational
@@ -452,32 +513,63 @@ class _Expression:
         self.columns = set(ex.columns(frame))
 
     def compile(self, expr):
+        return self.typed(expr)[0]
+
+    def typed(self, expr):
+        """(value, family) of an expression; the family is None where
+        the kind is unknown."""
         ex = self.ex
         if not isinstance(expr, list):
             if not isinstance(expr, str):
-                return ex.literal(expr)
+                return ex.literal(expr), _literal_family(expr)
             if is_quoted(expr):
-                return ex.literal(unquote(expr))
+                return ex.literal(unquote(expr)), "string"
             if expr not in self.columns:
                 # reference: UndefinedVariableError → MalformedQueryException
                 raise_malformed(f"name '{expr}' is not defined", expr)
-            return ex.column(self.frame, expr)
+            return ex.column(self.frame, expr), _FAMILIES.get(ex.kind(self.frame, expr))
         if len(expr) == 3:
             op, a, b = expr
             if _named(op, SHIFTS):
                 # the bit count is a literal (Spark's shiftleft/shiftright)
                 if not isinstance(b, int) or isinstance(b, bool):
                     raise_malformed("Shift amount must be an integer literal", expr)
-                return ex.binary(op, self.compile(a), b)
+                return ex.binary(op, self.number(a, expr), b), "number"
             if not _named(op, BINARY_OPERATORS):
                 raise_malformed("Unknown function in alias", expr)
-            return ex.binary(op, self.compile(a), self.compile(b))
+            if op in COMPARISONS:
+                (left, lf), (right, rf) = self.typed(a), self.typed(b)
+                if lf == "number" and _as_number(b) is not None:
+                    right, rf = self.typed(_as_number(b))
+                elif rf == "number" and _as_number(a) is not None:
+                    left, lf = self.typed(_as_number(a))
+                _check_comparable(lf, rf, expr)
+                return ex.binary(op, left, right), "boolean"
+            return ex.binary(op, self.number(a, expr), self.number(b, expr)), "number"
         if len(expr) == 2:
             op, a = expr
             if not _named(op, UNARY_FUNCTIONS):
                 raise_malformed("Unknown function in alias", expr)
-            return ex.unary(op, self.compile(a))
+            if op in STRING_FUNCTIONS:
+                value = self.compile(a)
+                return ex.unary(op, value), "number" if op == "length" else "string"
+            return ex.unary(op, self.number(a, expr)), "number"
         raise_malformed("Invalid number of arguments", expr)
+
+    def number(self, expr, node):
+        """An operand that must be numeric (or of an unknown kind); a
+        quoted literal that spells a number reads as it."""
+        if _as_number(expr) is not None:
+            expr = _as_number(expr)
+        value, family = self.typed(expr)
+        if family not in (None, "number"):
+            raise_malformed(f"Invalid operand type for {node[0]}, must be numeric", node)
+        return value
+
+
+def _check_comparable(left, right, node) -> None:
+    if left and right and left != right:
+        raise_malformed(f"Cannot compare {left} with {right}", node)
 
 
 def _check_column(name, columns) -> None:

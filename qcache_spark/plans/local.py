@@ -301,6 +301,8 @@ class _Pandas:
             return "boolean"
         if pd.api.types.is_integer_dtype(dtype):
             return "integral"
+        if pd.api.types.is_float_dtype(dtype):
+            return "fractional"
         if _is_stringy(dtype):
             return "string"
         return None

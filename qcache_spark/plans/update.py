@@ -18,14 +18,25 @@ Semantics preserved from the reference:
 - The update-`where` grammar is the restricted subset: comparisons,
   `in` with a literal list, `isnull` — no &/|/!/like/bits
   (update.py:15-48).
+
+A driver-resident dataset (an Arrow table, cache/catalog.py) takes
+the simple statements without Spark: `update_arrow` applies literal
+assignments under a column-vs-literal `where` with pyarrow.compute,
+and declines everything else to `compile_update`.
 """
 from __future__ import annotations
 
+import functools
+import math
+
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..errors import assert_len, raise_malformed
 from .grammar import COMPARISONS, is_quoted, unquote
+from .local import Unsupported
 
 SELF_REFERRING_OPERATORS = {
     "+": lambda a, b: a + b,
@@ -143,3 +154,90 @@ def compile_update(q: dict, df: DataFrame) -> DataFrame:
         )
 
     return result.select(*original_columns)
+
+
+_ARROW_COMPARISONS = {
+    "==": pc.equal,
+    "!=": pc.not_equal,
+    "<": pc.less,
+    "<=": pc.less_equal,
+    ">": pc.greater,
+    ">=": pc.greater_equal,
+}
+_NUMBER_TYPES = (pa.int64(), pa.float64())
+
+
+def _arrow_literal(value, column: pa.ChunkedArray, assign: bool = False) -> pa.Scalar:
+    """`value` as a scalar of the column's own kind: a quoted string
+    for a string column, a bool for a bool column, a finite number
+    for a numeric one (an assignment must keep the column's type).
+    Raises Unsupported for anything else, e.g. a column reference,
+    null, or a kind Spark would cast."""
+    typ = column.type
+    if isinstance(value, str):
+        if is_quoted(value) and typ == pa.string():
+            return pa.scalar(unquote(value), pa.string())
+    elif isinstance(value, bool):
+        if typ == pa.bool_():
+            return pa.scalar(value, pa.bool_())
+    elif isinstance(value, int):
+        if typ in _NUMBER_TYPES and -(1 << 63) <= value < (1 << 63):
+            return pa.scalar(value if typ == pa.int64() else float(value), typ)
+    elif isinstance(value, float) and math.isfinite(value):
+        if typ == pa.float64() or (typ == pa.int64() and not assign):
+            return pa.scalar(value, pa.float64())
+    raise Unsupported(f"update literal {value!r} for a {typ} column")
+
+
+def _arrow_column(table: pa.Table, name) -> pa.ChunkedArray:
+    if not isinstance(name, str) or name not in table.column_names:
+        raise Unsupported("update names no column of the table")
+    return table.column(name)
+
+
+def _arrow_mask(table: pa.Table, where) -> pa.ChunkedArray:
+    """`_build_update_mask` over an Arrow table: null compares False
+    (True for `!=`)."""
+    if not isinstance(where, list) or not where:
+        raise Unsupported("update where")
+    op = where[0]
+    if op == "isnull" and len(where) == 2:
+        return pc.is_null(_arrow_column(table, where[1]))
+    if op == "in" and len(where) == 3 and isinstance(where[2], list):
+        column = _arrow_column(table, where[1])
+        masks = [pc.equal(column, _arrow_literal(v, column)) for v in where[2]]
+        if not masks:
+            return pa.repeat(False, len(table))
+        return pc.fill_null(functools.reduce(pc.or_kleene, masks), False)
+    if isinstance(op, str) and op in _ARROW_COMPARISONS and len(where) == 3:
+        column = _arrow_column(table, where[1])
+        if column.type == pa.float64() and pc.any(pc.is_nan(column)).as_py():
+            # Spark orders NaN above every number; Arrow compares it False
+            raise Unsupported("NaN in a compared float column")
+        mask = _ARROW_COMPARISONS[op](column, _arrow_literal(where[2], column))
+        return pc.fill_null(mask, op == "!=")
+    raise Unsupported(f"update where operator {op!r}")
+
+
+def update_arrow(q: dict, table: pa.Table) -> pa.Table:
+    """The post-update table for a statement of literal assignments
+    (`[column, literal]`) under a `where` of `isnull`, a literal `in`
+    list or a column-vs-literal comparison, every literal of its
+    column's kind; the same rows and values `compile_update` gives,
+    computed with no Spark job. Raises Unsupported for any other
+    statement, malformed ones included, so the caller compiles it on
+    Spark and answers exactly as before."""
+    updates = q.get("update")
+    if "where" not in q or not isinstance(updates, list):
+        raise Unsupported("update statement")
+    mask = _arrow_mask(table, q["where"])
+    for update in updates:
+        if not isinstance(update, list) or len(update) != 2:
+            raise Unsupported("update clause")
+        name, value = update
+        column = _arrow_column(table, name)
+        i = table.column_names.index(name)
+        table = table.set_column(
+            i, table.field(i), pc.if_else(mask, _arrow_literal(value, column, assign=True), column)
+        )
+    return table

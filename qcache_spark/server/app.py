@@ -36,14 +36,18 @@ gzip (stdlib) and LZ4 (if importable) request/response codecs
 with {"error": msg}; unknown key → 404; bad content type → 415;
 bad accept → 406; non-UTF-8 charset → 400 (README.rst:429-431).
 
-This layer is deliberately thin driver-side code: every query body is
-compiled to a lazy plan and only the result PAGE (post-limit) is
-collected — the reference's whole-table-in-one-process constraint is
-replaced by Spark's distributed execution underneath the same API.
+This layer is deliberately thin driver-side code. A small dataset is
+driver-resident (cache/catalog.py): its queries run on the
+driver-local executor through the fastpath router, with no Spark job,
+the reference's own regime. Every other query body is compiled to a
+lazy plan and only the result PAGE (post-limit) is collected — the
+reference's whole-table-in-one-process constraint is replaced by
+Spark's distributed execution underneath the same API.
 """
 from __future__ import annotations
 
 import base64
+import contextlib
 import gzip
 import hmac
 import json
@@ -56,6 +60,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql import SparkSession
 
+from .. import fastpath
 from ..cache import DatasetCatalog
 from ..errors import (
     DatasetTooLargeException,
@@ -63,15 +68,25 @@ from ..errors import (
     UnknownDatasetException,
 )
 from ..plans import compile_query, compile_update
-from ..sources import (
+from ..sources import (  # noqa: F401 — from_csv/from_json_records: see below
     apply_stand_in_columns,
+    frame_from_pandas,
     from_csv,
     from_json_records,
+    parse_csv,
+    parse_json_records,
     parse_stand_in_header,
     rows_to_csv,
     rows_to_json,
 )
 from .statistics import Statistics
+
+# The store path parses with parse_csv/parse_json_records, so that a
+# small body never becomes a Spark frame. from_csv/from_json_records
+# are no longer called here, but perfbench/tracing.py looks them up on
+# this module to wrap them, and a traced run fails without them. Until
+# the tracer wraps the parse functions, its `ingest.parse_ms` has no
+# samples from HTTP stores.
 
 try:  # optional codec, preferred by the reference when available
     import lz4.frame as _lz4
@@ -175,6 +190,10 @@ class ResultCache:
 class QCacheHandler(BaseHTTPRequestHandler):
     server_version = "qcache-spark/0.1"
     protocol_version = "HTTP/1.1"
+    # TCP_NODELAY: _send writes the headers and the body separately,
+    # and with Nagle on the body waits for the client's delayed ACK
+    # (~40 ms on every keep-alive response)
+    disable_nagle_algorithm = True
 
     # injected by make_server
     spark: SparkSession = None
@@ -322,6 +341,11 @@ class QCacheHandler(BaseHTTPRequestHandler):
             self._error(406, f"Not acceptable: {e}")
         except DatasetTooLargeException as e:
             self._error(413, str(e))
+        except UnknownDatasetException as e:
+            # the dataset went (evicted or deleted) after the handler
+            # looked it up, e.g. while an update compiled
+            self.stats.inc("miss_count")
+            self._error(404, f"Unknown dataset: {e}")
         except MalformedQueryException as e:
             self._error(400, str(e))
         except Exception as e:  # noqa: BLE001
@@ -412,13 +436,17 @@ class QCacheHandler(BaseHTTPRequestHandler):
         bucket_by = _parse_bucket_header(self.headers.get("X-QCache-bucket-by"))
         body = self._read_body().decode("utf-8")
         if ctype == CONTENT_TYPE_CSV:
-            df, enum_columns = from_csv(self.spark, body, types, stand_ins)
+            pdf, enum_columns = parse_csv(body, types)
         else:
-            df, enum_columns = from_json_records(self.spark, body, types, stand_ins)
+            pdf, enum_columns = parse_json_records(body, types)
+        table = None
+        if bucket_by is None and not stand_ins:
+            table = fastpath.resident_table(pdf)
+        data = table if table is not None else frame_from_pandas(self.spark, pdf, stand_ins)
         if key in self.catalog:
             self.stats.inc("replace_count")
         self.stats.inc("store_count")
-        item = self.catalog.insert(key, df, enum_columns, bucket_by=bucket_by)
+        item = self.catalog.insert(key, data, enum_columns, bucket_by=bucket_by)
         self.stats.append("store_durations", time.perf_counter() - t0)
         self.stats.append("store_row_counts", item.row_count)
         self._send(201)
@@ -440,11 +468,15 @@ class QCacheHandler(BaseHTTPRequestHandler):
         self.stats.inc("hit_count")
 
         stand_ins = parse_stand_in_header(self.headers.get("X-QCache-stand-in-columns"))
-        df = apply_stand_in_columns(item.df, stand_ins)
 
         if isinstance(q, dict) and "update" in q:
-            new_df = compile_update(q, df)
-            self.catalog.replace_df(key, new_df)
+            updated = None
+            if item.table is not None and not stand_ins:
+                updated = fastpath.update(q, item.table)
+                self.stats.inc("local_fallback_count" if updated is None else "local_query_count")
+            if updated is None:
+                updated = compile_update(q, self._frame(item, stand_ins))
+            self.catalog.replace_df(key, updated)
             self.stats.append("query_durations", time.perf_counter() - t0)
             self._send(200)
             return
@@ -465,51 +497,64 @@ class QCacheHandler(BaseHTTPRequestHandler):
                 )
                 return
 
-        result = compile_query(q, df, enum_columns=item.enum_columns)
         stream = self.headers.get("X-QCache-Stream", "").strip().lower()
-        if stream in ("csv", "true", "1"):
-            # Chunked CSV egress (VERDICT r8 missing #2): the scale-safe
-            # path for a LEGITIMATE big export — bounded driver memory
-            # via toLocalIterator, bypassing the materialization cap
-            # the client explicitly opted around. CSV only (row-framed;
-            # a JSON array cannot be emitted incrementally under the
-            # same wire contract), no unsliced-length header (it would
-            # cost a full count job before the first byte), no result
-            # cache (the body never exists in one piece).
-            if accept != CONTENT_TYPE_CSV:
-                self._error(
-                    406,
-                    "X-QCache-Stream supports text/csv only; "
-                    "set Accept: text/csv",
-                )
+        stream = stream in ("csv", "true", "1")
+        local = None
+        if item.table is not None and not stand_ins and not stream:
+            local = fastpath.execute(
+                q, fastpath.arrow_loader(item.table), item.enum_columns
+            )
+            self.stats.inc("local_fallback_count" if local is None else "local_query_count")
+        if local is not None:
+            columns = list(local.sliced.columns)
+            if 0 < self.max_result_rows < len(local.sliced):
+                self._too_many_rows()
                 return
-            self._stream_csv(result.sliced)
-            self.stats.append("query_durations", time.perf_counter() - t0)
-            return
-        if self.max_result_rows > 0:
-            # Driver-materialization cap (VERDICT r7 missing #1): the
-            # reference contract returns whole tables for `{}` queries,
-            # fine for its in-memory scale — but a 100 TB deployment
-            # must be able to refuse a driver-OOM-sized page. limit
-            # cap+1 = detect overflow without counting the full result.
-            rows = result.sliced.limit(self.max_result_rows + 1).collect()
-            if len(rows) > self.max_result_rows:
-                self._error(
-                    413,
-                    f"Result exceeds the server's {self.max_result_rows}-row "
-                    "materialization cap; add a limit/offset window to the "
-                    "query (server option max_result_rows)",
-                )
+            rows = fastpath.result_rows(local.sliced)
+            unsliced_len = local.unsliced_len
+        else:
+            result = compile_query(
+                q, self._frame(item, stand_ins), enum_columns=item.enum_columns
+            )
+            if stream:
+                # Chunked CSV egress (VERDICT r8 missing #2): the scale-safe
+                # path for a LEGITIMATE big export — bounded driver memory
+                # via toLocalIterator, bypassing the materialization cap
+                # the client explicitly opted around. CSV only (row-framed;
+                # a JSON array cannot be emitted incrementally under the
+                # same wire contract), no unsliced-length header (it would
+                # cost a full count job before the first byte), no result
+                # cache (the body never exists in one piece).
+                if accept != CONTENT_TYPE_CSV:
+                    self._error(
+                        406,
+                        "X-QCache-Stream supports text/csv only; "
+                        "set Accept: text/csv",
+                    )
+                    return
+                self._stream_csv(result.sliced)
+                self.stats.append("query_durations", time.perf_counter() - t0)
                 return
-        else:
-            rows = result.sliced.collect()
-        if isinstance(q, dict) and (q.get("limit") or q.get("offset")):
-            unsliced_len = result.unsliced_len()  # second job, pre-slice plan
-        else:
-            # no slicing → the page IS the full result; skip the count job
-            unsliced_len = len(rows)
+            columns = result.sliced.columns
+            if self.max_result_rows > 0:
+                # Driver-materialization cap (VERDICT r7 missing #1): the
+                # reference contract returns whole tables for `{}` queries,
+                # fine for its in-memory scale — but a 100 TB deployment
+                # must be able to refuse a driver-OOM-sized page. limit
+                # cap+1 = detect overflow without counting the full result.
+                rows = result.sliced.limit(self.max_result_rows + 1).collect()
+                if len(rows) > self.max_result_rows:
+                    self._too_many_rows()
+                    return
+            else:
+                rows = result.sliced.collect()
+            if isinstance(q, dict) and (q.get("limit") or q.get("offset")):
+                unsliced_len = result.unsliced_len()  # second job, pre-slice plan
+            else:
+                # no slicing → the page IS the full result; skip the count job
+                unsliced_len = len(rows)
         if accept == CONTENT_TYPE_CSV:
-            body = rows_to_csv(rows, result.sliced.columns).encode("utf-8")
+            body = rows_to_csv(rows, columns).encode("utf-8")
         else:
             body = rows_to_json(rows).encode("utf-8")
         if cache_key is not None:
@@ -522,6 +567,17 @@ class QCacheHandler(BaseHTTPRequestHandler):
             extra_headers={"X-QCache-unsliced-length": str(unsliced_len)},
         )
 
+    def _frame(self, item, stand_ins):
+        """The dataset as a Spark frame, with query-time stand-ins."""
+        return apply_stand_in_columns(item.frame(self.spark), stand_ins)
+
+    def _too_many_rows(self) -> None:
+        self._error(
+            413,
+            f"Result exceeds the server's {self.max_result_rows}-row "
+            "materialization cap; add a limit/offset window to the "
+            "query (server option max_result_rows)",
+        )
 
     # -- explain endpoint ---------------------------------------------
 
@@ -549,8 +605,7 @@ class QCacheHandler(BaseHTTPRequestHandler):
             return
         self.stats.inc("hit_count")
         stand_ins = parse_stand_in_header(self.headers.get("X-QCache-stand-in-columns"))
-        df = apply_stand_in_columns(item.df, stand_ins)
-        result = compile_query(q, df, enum_columns=item.enum_columns)
+        result = compile_query(q, self._frame(item, stand_ins), enum_columns=item.enum_columns)
         plan = result.sliced._jdf.queryExecution().explainString(
             self.spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                 "formatted"
@@ -583,12 +638,12 @@ class QCacheHandler(BaseHTTPRequestHandler):
         self.stats.inc("hit_count")
 
         stand_ins = parse_stand_in_header(self.headers.get("X-QCache-stand-in-columns"))
-        df = apply_stand_in_columns(item.df, stand_ins)
+        df = self._frame(item, stand_ins)
 
         def resolve(other_key: str):
             # second dataset for two-dataset ops (snapshot_diff's
             # params.right); raises UnknownDatasetException -> 404
-            return self.catalog.get(other_key).df
+            return self.catalog.get(other_key).frame(self.spark)
 
         try:
             result = run_pipeline_op(df, spec, resolve=resolve)
@@ -619,31 +674,52 @@ class QCacheHandler(BaseHTTPRequestHandler):
     # driver-OOM-sized result pages with a 413
     max_result_rows: int = 0
 
-    def _sync_sql_views(self) -> None:
-        """Mirror the catalog into Spark temp views (create/replace
-        changed versions, drop views whose dataset is gone). Uses the
-        catalog's untracked snapshot so listing does not perturb LRU /
-        access counts. Temp views are per-SparkSession: in a sharded
-        deployment each server runs its own session, so names cannot
-        collide across nodes."""
-        with self._sql_view_lock:
-            current: dict[str, int] = {}
-            for key, df, version in self.catalog.snapshot_items():
-                if not self._SQL_NAME_RE.match(key):
-                    continue  # not addressable from SQL; documented
-                current[key] = version
-                if self._sql_views.get(key) != version:
-                    df.createOrReplaceTempView(key)
-            for stale in set(self._sql_views) - set(current):
-                self.spark.catalog.dropTempView(stale)
-            self._sql_views.clear()
-            self._sql_views.update(current)
+    def _sql_datasets(self) -> dict:
+        """The SQL-addressable datasets, by lower-cased view name (Spark
+        resolves view names case-insensitively). Uses the catalog's
+        untracked snapshot so listing does not perturb LRU / access
+        counts."""
+        return {
+            key.lower(): item
+            for key, item in self.catalog.snapshot_items()
+            if self._SQL_NAME_RE.match(key)  # other keys: documented
+        }
 
-    def _check_sql_read_only(self, sql: str) -> None:
+    @contextlib.contextmanager
+    def _sql_views_for(self, datasets: dict, names: set):
+        """Temp views over the datasets a statement reads, for as long
+        as it runs. A view over a driver-resident dataset holds a JVM
+        copy of it that the catalog does not count, so no view outlives
+        the statements reading it: each is counted by its users and
+        dropped by the last one. Temp views are per-SparkSession: in a
+        sharded deployment each server runs its own session, so names
+        cannot collide across nodes."""
+        registered = []
+        try:
+            with self._sql_view_lock:
+                for name in names:
+                    item = datasets[name]
+                    users, version = self._sql_views.get(name, (0, None))
+                    if version != item.version:
+                        item.frame(self.spark).createOrReplaceTempView(name)
+                    self._sql_views[name] = (users + 1, item.version)
+                    registered.append(name)
+            yield
+        finally:
+            with self._sql_view_lock:
+                for name in registered:
+                    users, version = self._sql_views.pop(name)
+                    if users > 1:
+                        self._sql_views[name] = (users - 1, version)
+                    else:
+                        self.spark.catalog.dropTempView(name)
+
+    def _check_sql_read_only(self, sql: str, datasets: dict) -> set:
         """Reject anything that is not a single read-only query over
-        REGISTERED datasets. Two structural checks on the parsed plan
-        (never on the raw SQL text, which comments/quoting can
-        obfuscate — e.g. ``text/**/.`/etc/passwd``` defeats any regex):
+        stored `datasets`; return the names of those it reads. Two
+        structural checks on the parsed plan (never on the raw SQL
+        text, which comments/quoting can obfuscate — e.g.
+        ``text/**/.`/etc/passwd``` defeats any regex):
 
         1. Catalyst's own command classes (Command = runnable side
            effect, ParsedStatement = DDL/DML surface like
@@ -651,7 +727,7 @@ class QCacheHandler(BaseHTTPRequestHandler):
         2. Every ``UnresolvedRelation`` in the plan — including plans
            nested inside subquery EXPRESSIONS, which ``toJSON``
            serializes but ``children()`` does not reach — must be a
-           single-part name that is a registered view or a CTE alias
+           single-part name that is a stored dataset or a CTE alias
            defined in the statement. Path-based tables parse as
            multi-part ``[format, /path]`` identifiers and so can never
            match; catalog/global-temp tables (``db.t``,
@@ -678,8 +754,7 @@ class QCacheHandler(BaseHTTPRequestHandler):
                 )
 
         tree = json.loads(jplan.toJSON())
-        with self._sql_view_lock:
-            allowed = {name.lower() for name in self._sql_views}
+        allowed = set(datasets)
         relations: list[str] = []
 
         def walk(node) -> None:
@@ -702,6 +777,7 @@ class QCacheHandler(BaseHTTPRequestHandler):
                     walk(v)
 
         walk(tree)
+        names = set()
         for ident in relations:
             # single-part identifiers serialize as "[name]"
             name = (
@@ -716,6 +792,8 @@ class QCacheHandler(BaseHTTPRequestHandler):
                     f"Unknown dataset: {str(ident)[:200]}; the SQL "
                     "endpoint serves registered datasets by name only"
                 )
+            names.add(name.lower())
+        return names & set(datasets)
 
     def _run_sql(self, sql_text: str) -> None:
         """POST <prefix>/sql — run one read-only Spark SQL statement
@@ -733,13 +811,14 @@ class QCacheHandler(BaseHTTPRequestHandler):
         # single-statement enforcement is the PARSER's (parsePlan errors
         # on trailing content after one statement) — a raw ';' scan here
         # would spuriously 400 literals like WHERE s = 'a;b'
-        self._sync_sql_views()
-        self._check_sql_read_only(sql)
+        datasets = self._sql_datasets()
+        names = self._check_sql_read_only(sql, datasets)
         try:
-            df = self.spark.sql(sql)
-            # cap driver-side materialization: an accidental cross join
-            # between stored datasets must not OOM the server
-            rows = df.limit(self.sql_max_rows + 1).collect()
+            with self._sql_views_for(datasets, names):
+                df = self.spark.sql(sql)
+                # cap driver-side materialization: an accidental cross
+                # join between stored datasets must not OOM the server
+                rows = df.limit(self.sql_max_rows + 1).collect()
         except MalformedQueryException:
             raise
         except Exception as e:
@@ -827,8 +906,9 @@ def make_server(
             "url_prefix": url_prefix,
             "sql_max_rows": sql_max_rows,
             "max_result_rows": max_result_rows,
-            # per-server SQL view registry (shared by all handler
-            # instances of THIS server via the bound class)
+            # per-server SQL view registry, name → (users, version)
+            # (shared by all handler instances of THIS server via the
+            # bound class)
             "_sql_views": {},
             "_sql_view_lock": threading.Lock(),
         },

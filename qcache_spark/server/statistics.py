@@ -17,6 +17,11 @@ class Statistics:
         "store_count",
         "replace_count",
         "result_cache_hit_count",
+        # which executor answered a query or update on a
+        # driver-resident dataset: the driver-local one, or Spark after
+        # the router declined
+        "local_query_count",
+        "local_fallback_count",
     )
     BUFFERS = (
         "query_durations",

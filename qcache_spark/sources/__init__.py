@@ -8,8 +8,11 @@ from .files import (
 )
 from .ingest import (
     apply_stand_in_columns,
+    frame_from_pandas,
     from_csv,
     from_json_records,
+    parse_csv,
+    parse_json_records,
     parse_stand_in_header,
     rows_to_csv,
     rows_to_json,
@@ -21,8 +24,11 @@ __all__ = [
     "read_parquet",
     "write_parquet",
     "apply_stand_in_columns",
+    "frame_from_pandas",
     "from_csv",
     "from_json_records",
+    "parse_csv",
+    "parse_json_records",
     "parse_stand_in_header",
     "rows_to_csv",
     "rows_to_json",

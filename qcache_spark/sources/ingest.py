@@ -95,14 +95,9 @@ def parse_stand_in_header(header: Optional[str]) -> list[tuple[str, str]]:
     return pairs
 
 
-def from_csv(
-    spark: SparkSession,
-    csv_text: str,
-    types: Optional[dict] = None,
-    stand_in_columns: Optional[list[tuple[str, str]]] = None,
-) -> tuple[DataFrame, set]:
-    """CSV body → DataFrame (Arrow-accelerated createDataFrame).
-    Returns (df, enum_columns)."""
+def parse_csv(csv_text: str, types: Optional[dict] = None) -> tuple[pd.DataFrame, set]:
+    """CSV body → pandas frame, with the reference's null and type-hint
+    rules. Returns (frame, enum_columns)."""
     dtypes, enum_columns = _parse_type_hints(types)
     try:
         pdf = pd.read_csv(
@@ -116,9 +111,28 @@ def from_csv(
     # pandas upcasts int columns with nulls to float; Spark keeps
     # nullable long — preserve pandas-visible behavior by letting the
     # inferred dtype stand (SURVEY.md §7 "hard parts").
-    df = _create_df(spark, pdf)
-    df = apply_stand_in_columns(df, stand_in_columns)
-    return df, enum_columns
+    return pdf, enum_columns
+
+
+def from_csv(
+    spark: SparkSession,
+    csv_text: str,
+    types: Optional[dict] = None,
+    stand_in_columns: Optional[list[tuple[str, str]]] = None,
+) -> tuple[DataFrame, set]:
+    """CSV body → DataFrame (Arrow-accelerated createDataFrame).
+    Returns (df, enum_columns)."""
+    pdf, enum_columns = parse_csv(csv_text, types)
+    return frame_from_pandas(spark, pdf, stand_in_columns), enum_columns
+
+
+def frame_from_pandas(
+    spark: SparkSession,
+    pdf: pd.DataFrame,
+    stand_in_columns: Optional[list[tuple[str, str]]] = None,
+) -> DataFrame:
+    """A parsed body as a Spark frame, stand-in columns applied."""
+    return apply_stand_in_columns(_create_df(spark, pdf), stand_in_columns)
 
 
 def _create_df(spark: SparkSession, pdf: pd.DataFrame) -> DataFrame:
@@ -167,14 +181,10 @@ def _create_df(spark: SparkSession, pdf: pd.DataFrame) -> DataFrame:
     return spark.createDataFrame([], T.StructType(fields))
 
 
-def from_json_records(
-    spark: SparkSession,
-    data: str | list,
-    types: Optional[dict] = None,
-    stand_in_columns: Optional[list[tuple[str, str]]] = None,
-) -> tuple[DataFrame, set]:
-    """JSON list-of-objects body → DataFrame
-    (reference from_dicts, qcache/qframe/__init__.py:57-69)."""
+def parse_json_records(data: str | list, types: Optional[dict] = None) -> tuple[pd.DataFrame, set]:
+    """JSON list-of-objects body → pandas frame
+    (reference from_dicts, qcache/qframe/__init__.py:57-69). Returns
+    (frame, enum_columns)."""
     if isinstance(data, str):
         data = json.loads(data)
     if not isinstance(data, list):
@@ -186,9 +196,18 @@ def from_json_records(
             pdf[col] = pdf[col].astype(str)
         elif type_name == "float":
             pdf[col] = pdf[col].astype(float)
-    df = _create_df(spark, pdf)
-    df = apply_stand_in_columns(df, stand_in_columns)
-    return df, enum_columns
+    return pdf, enum_columns
+
+
+def from_json_records(
+    spark: SparkSession,
+    data: str | list,
+    types: Optional[dict] = None,
+    stand_in_columns: Optional[list[tuple[str, str]]] = None,
+) -> tuple[DataFrame, set]:
+    """JSON list-of-objects body → DataFrame. Returns (df, enum_columns)."""
+    pdf, enum_columns = parse_json_records(data, types)
+    return frame_from_pandas(spark, pdf, stand_in_columns), enum_columns
 
 
 def rows_to_csv(rows: list, columns: list[str]) -> str:

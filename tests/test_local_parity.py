@@ -78,6 +78,13 @@ BATTERY = [
     # a global COUNT(*) under a group_by counts the filtered rows
     ("lineitem", {"where": [">", "l_quantity", 45], "group_by": ["l_returnflag"],
         "select": [["count"]]}),
+    # a quoted literal that spells a number reads as that number where
+    # a number is needed (Catalyst casts it)
+    ("orders", {"where": [">", "o_totalprice", "'300000.5'"],
+        "select": ["o_orderkey", "o_totalprice"]}),
+    ("orders", {"where": ["==", "o_orderkey", "'7'"],
+        "select": ["o_orderkey", ["=", "k", ["+", "o_orderkey", "'1'"]],
+                   ["=", "c", ["<", "'2.5e5'", "o_totalprice"]]]}),
 ]
 
 
@@ -131,6 +138,19 @@ def test_local_matches_spark(spark, sf_dir, idx):
         {"where": ["&", "o_orderkey", ["==", "o_orderkey", 1]]},
         {"where": [["==", "o_orderkey", 1]]},
         {"select": ["nope", 5]},
+        # operands of mismatched kinds: Spark casts (and fails at run
+        # time), pandas compares by identity
+        {"where": ["==", "o_orderpriority", 5]},
+        {"where": ["<", "o_orderkey", "'x'"]},
+        {"where": [">", "o_totalprice", "'1000.5x'"]},
+        {"where": ["==", "o_custkey", "o_orderpriority"]},
+        {"where": ["==", "o_orderkey", ["<", "o_custkey", 3]]},
+        {"select": [["=", "y", ["+", "o_orderpriority", 1]]]},
+        {"select": [["=", "y", ["sqrt", "o_orderstatus"]]]},
+        {"select": [["=", "y", ["==", "o_orderstatus", 1]]]},
+        # a like pattern that is no regex
+        {"where": ["like", "o_orderpriority", "'[a'"]},
+        {"where": ["ilike", "o_orderpriority", "'%(%'"]},
     ],
 )
 def test_local_errors_match_spark(spark, sf_dir, bad):
@@ -269,3 +289,17 @@ def test_catalyst_tables_cover_grammar_names():
     assert set(AGGREGATE_FUNCTIONS) == grammar.AGGREGATE_FUNCTIONS
     assert set(UNARY_FUNCTIONS) == grammar.UNARY_FUNCTIONS
     assert set(BINARY_OPERATORS) == grammar.BINARY_OPERATORS
+
+
+def test_in_list_values_are_not_column_references():
+    """The values of an `in` list are literals: a string list must not
+    defeat column pruning; an `in`-subquery still adds its columns."""
+    assert referenced_input_columns(
+        {"select": ["a"], "where": ["in", "a", ["x", "y"]]}
+    ) == {"a"}
+    assert referenced_input_columns(
+        {"select": ["a"], "where": ["&", ["in", "b", ["a", "c", "d"]], ["==", "a", "e"]]}
+    ) == {"a", "b", "e"}
+    assert referenced_input_columns(
+        {"select": ["a"], "where": ["in", "a", {"where": [">", "c", 1], "select": ["a"]}]}
+    ) == {"a", "c"}

@@ -758,6 +758,41 @@ def test_update_division_by_zero_yields_null(spark):
     assert got == {0: None, 3: 3.0}
 
 
+@pytest.mark.parametrize(
+    "q",
+    [
+        {"update": [["+", "i", 1]], "where": ["==", "i", 1]},
+        {"update": [["i", "j"]], "where": ["==", "i", 1]},
+        {"update": [["s", None]], "where": ["==", "i", 1]},
+        {"update": [["i", "'7'"]], "where": ["==", "i", 1]},
+        {"update": [["i", 1.5]], "where": ["==", "i", 1]},
+        {"update": [["i", 1 << 63]], "where": ["==", "i", 1]},
+        {"update": [["i", 0]], "where": ["==", "s", 1]},
+        {"update": [["i", 0]], "where": ["==", "i", "j"]},
+        {"update": [["i", 0]], "where": ["<", "f", 1.0]},
+        {"update": [["i", 0]], "where": ["&", ["==", "i", 1], ["==", "j", 2]]},
+        {"update": [["i", 0]], "where": ["in", "s", ["'a'", None]]},
+        {"update": [["nope", 0]], "where": ["==", "i", 1]},
+        {"update": [["i", 0]]},
+    ],
+)
+def test_update_arrow_declines_outside_its_subset(q):
+    """The driver-side update takes literal assignments of the
+    column's own kind under a column-vs-literal `where`; anything else
+    (here: self-referring, column values, null, cross-kind, an ordered
+    compare on a float column holding NaN, logical operators, unknown
+    columns, a missing where) is left to compile_update."""
+    import pyarrow as pa
+
+    from qcache_spark.plans.local import Unsupported
+    from qcache_spark.plans.update import update_arrow
+
+    table = pa.table({"i": pa.array([1, 2], pa.int64()), "j": pa.array([2, 2], pa.int64()),
+                      "f": [float("nan"), 1.5], "s": ["a", None]})
+    with pytest.raises(Unsupported):
+        update_arrow(q, table)
+
+
 def test_load_table_events_on_foreign_session(spark, sf_dir):
     """load_table must read events.parquet TIMESTAMP(NANOS) on a
     caller-supplied session (e.g. the driver harness, which does not

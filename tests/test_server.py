@@ -1329,3 +1329,325 @@ def test_bad_content_length_is_400_and_closes(server, length):
     assert b"Content-Length" in data
     code, _, _ = call(server, "GET", "/qcache/dataset/bad_len?q=%7B%7D")
     assert code == 404
+
+
+# ------------------------------------------- driver-resident datasets
+
+DIFF_CSV = """id,name,grade,score,flag,ratio
+1,ann,a,10.5,True,0.25
+2,bob,b,,False,
+3,,a,7.25,True,1.5
+4,dora,c,-2.5,False,0.5
+5,ed,b,,True,-0.75
+6,flo,a,3.0,False,2.0
+"""
+
+# Every multi-row query is ordered and every float is exact in binary,
+# so the two executors must agree byte for byte.
+DIFF_BATTERY = [
+    {"order_by": ["id"]},
+    {"where": ["isnull", "score"], "select": ["id", "score"], "order_by": ["id"]},
+    {"where": ["!=", "score", 7.25], "select": ["id", "score", "ratio"], "order_by": ["id"]},
+    {"where": ["==", "grade", "'a'"], "select": ["id", "grade"], "order_by": ["-id"]},
+    {"where": ["&", "flag", [">", "ratio", 0]], "select": ["id", "flag"], "order_by": ["id"]},
+    {"where": ["in", "name", ["ann", "ed", "zed"]], "select": ["id"], "order_by": ["id"]},
+    {"where": ["like", "name", "'%o%'"], "select": ["name"], "order_by": ["name"]},
+    {"select": ["id", ["=", "twice", ["*", "score", 2]], ["=", "up", ["upper", "name"]],
+                ["=", "q", ["/", "id", "ratio"]]], "order_by": ["id"]},
+    {"group_by": ["grade"], "select": ["grade", ["sum", "score"], ["count", "id"],
+                                      ["max", "ratio"], ["mean", "score"]],
+     "order_by": ["grade"]},
+    # declined locally (pandas cannot take the min of strings with
+    # nulls), so Catalyst answers the resident key too
+    {"select": [["sum", "id"], ["max", "score"], ["min", "name"]]},
+    {"select": [["count"]]},
+    {"where": ["in", "id", {"where": [">", "score", 5], "select": ["id"]}],
+     "select": ["id", "name"], "order_by": ["id"]},
+    {"where": ["|", ["in", "id", {"where": ["<", "ratio", 0], "select": ["id"]}],
+               ["==", "name", "'ann'"]], "select": ["id"], "order_by": ["id"]},
+    {"distinct": ["grade", "flag"], "select": ["grade", "flag"], "order_by": ["grade", "flag"]},
+    {"select": ["id", "name"], "order_by": ["name", "-id"], "offset": 1, "limit": 3},
+    {"from": {"group_by": ["grade"], "select": ["grade", ["count", "id"]]},
+     "where": [">", "id", 1], "select": ["grade", "id"], "order_by": ["grade"]},
+    {"where": [">", "id", 100], "select": ["id", "name"]},
+    {"where": [">", "id", 100], "select": ["id"], "limit": 2},
+    # a quoted number reads as the number where one is needed
+    {"where": [">", "score", "'5.5'"], "select": ["id", ["=", "next", ["+", "id", "'1'"]]],
+     "order_by": ["id"]},
+]
+
+
+def _local_counts(base):
+    snap = json.loads(call(base, "GET", "/qcache/statistics")[1])
+    return snap.get("local_query_count", 0), snap.get("local_fallback_count", 0)
+
+
+@pytest.fixture
+def resident_server(spark):
+    srv = make_server(spark, max_cache_size=1 << 30)
+    serve_forever_in_thread(srv)
+    yield f"http://127.0.0.1:{srv.server_address[1]}", srv.RequestHandlerClass.catalog
+    srv.shutdown()
+
+
+def test_resident_and_persisted_datasets_answer_identically(resident_server, monkeypatch):
+    """The same queries on a driver-resident key (local executor) and
+    on a Spark-persisted key (threshold patched to 0, Catalyst) give
+    byte-identical bodies and unsliced lengths, in JSON and CSV."""
+    from qcache_spark import fastpath
+
+    base, catalog = resident_server
+    types = {"X-QCache-types": "grade=enum"}
+    assert store(base, "resident", DIFF_CSV, headers=types)[0] == 201
+    with monkeypatch.context() as m:
+        m.setattr(fastpath, "MAX_FASTPATH_BYTES", 0)
+        assert store(base, "persisted", DIFF_CSV, headers=types)[0] == 201
+    assert catalog.get("resident").table is not None
+    assert catalog.get("persisted").table is None
+    _local_counts(base)
+    for q in DIFF_BATTERY:
+        for accept in ("application/json", "text/csv"):
+            code_r, body_r, head_r = query(base, "resident", q, accept)
+            code_p, body_p, head_p = query(base, "persisted", q, accept)
+            assert code_r == code_p == 200, (q, body_r, body_p)
+            assert body_r == body_p, (q, accept, body_r, body_p)
+            assert (head_r["X-QCache-unsliced-length"]
+                    == head_p["X-QCache-unsliced-length"]), q
+    assert _local_counts(base) == (2 * (len(DIFF_BATTERY) - 1), 2)
+
+
+DIFF_UPDATES = [
+    {"update": [["name", "'zed'"]], "where": ["==", "grade", "'a'"]},
+    {"update": [["score", 1.5], ["ratio", 4]], "where": ["isnull", "score"]},
+    {"update": [["flag", False]], "where": ["in", "name", ["'bob'", "'ed'"]]},
+    {"update": [["id", 40]], "where": ["<", "ratio", 0.5]},
+    {"update": [["name", "'x'"]], "where": ["!=", "name", "'ann'"]},
+    {"update": [["score", 0]], "where": [">=", "id", 3.5]},
+    {"update": [["grade", "'b'"]], "where": ["in", "id", []]},
+    # self-referring: outside the Arrow subset, so Spark applies it
+    {"update": [["+", "id", 100]], "where": ["==", "flag", True]},
+]
+
+
+def test_resident_and_persisted_updates_agree(resident_server, monkeypatch):
+    """Updates applied on the driver to a resident key leave the same
+    table as Spark leaves on a persisted key; the key stays resident
+    in its stored schema."""
+    from qcache_spark import fastpath
+
+    base, catalog = resident_server
+    types = {"X-QCache-types": "grade=enum"}
+    assert store(base, "resident_u", DIFF_CSV, headers=types)[0] == 201
+    with monkeypatch.context() as m:
+        m.setattr(fastpath, "MAX_FASTPATH_BYTES", 0)
+        assert store(base, "persisted_u", DIFF_CSV, headers=types)[0] == 201
+    schema = catalog.get("resident_u").table.schema
+    _local_counts(base)
+    for upd in DIFF_UPDATES:
+        for key in ("resident_u", "persisted_u"):
+            code, body, _ = call(base, "POST", f"/qcache/dataset/{key}/q",
+                                 json.dumps(upd).encode(), {"Accept": "application/json"})
+            assert code == 200, (key, upd, body)
+        for accept in ("application/json", "text/csv"):
+            _, body_r, _ = query(base, "resident_u", {"order_by": ["id"]}, accept)
+            _, body_p, _ = query(base, "persisted_u", {"order_by": ["id"]}, accept)
+            assert body_r == body_p, (upd, body_r, body_p)
+    item = catalog.get("resident_u")
+    assert item.table is not None and item.table.schema == schema
+    assert item.byte_size == item.table.nbytes + 100
+    # 7 updates on the driver and 1 on Spark; 2 reads per update
+    n = len(DIFF_UPDATES)
+    assert _local_counts(base) == (n - 1 + 2 * n, 1)
+
+
+def test_local_fallback_is_counted(resident_server):
+    """A query the local executor declines (a global aggregate over no
+    rows) is answered by Catalyst and counted as a fallback."""
+    base, _ = resident_server
+    store(base, "fb")
+    _local_counts(base)
+    code, body, _ = query(base, "fb", {"where": [">", "foo", 9], "select": [["sum", "bar"]]})
+    assert code == 200 and json.loads(body) == [{"bar": None}]
+    code, body, _ = query(base, "fb", {"select": [["sum", "bar"]]})
+    assert code == 200 and json.loads(body) == [{"bar": 60}]
+    assert _local_counts(base) == (1, 1)
+
+
+def test_resident_store_rules(resident_server):
+    """Only a non-empty, unbucketed store of int64/float64/bool/string
+    columns is kept driver-resident."""
+    base, catalog = resident_server
+    store(base, "r_ok", "a,b,c,d\n1,1.5,x,True\n")
+    store(base, "r_empty", "a,b\n")
+    store(base, "r_json_mixed", json.dumps([{"a": 1}, {"a": "x"}]), "application/json")
+    store(base, "r_bucketed", headers={"X-QCache-bucket-by": "foo:2"})
+    store(base, "r_stand_in", headers={"X-QCache-stand-in-columns": "baz=10"})
+    table = catalog.get("r_ok").table
+    assert table is not None
+    assert [str(t) for t in table.schema.types] == ["int64", "double", "string", "bool"]
+    assert catalog.get("r_ok").byte_size == table.nbytes + 100
+    for key in ("r_empty", "r_json_mixed", "r_bucketed", "r_stand_in"):
+        assert catalog.get(key).table is None, key
+
+
+def _job_mark(spark, group):
+    """The id of a marker job run in job group `group`: every job the
+    server runs later has a larger id."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        spark.range(1).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_resident_store_and_reads_run_no_spark_job(resident_server, spark):
+    """A small store, the four small-table read shapes (== +
+    distinct + limit, group_by aggregate, order_by + offset/limit,
+    in-list) and a literal update run no Spark job; the update keeps
+    the dataset resident with its Arrow schema and size formula."""
+    import numpy as np
+
+    base, catalog = resident_server
+    rng = np.random.default_rng(7)
+    n = 500
+    rows = ["text1,classifier,text2,text3,some_number,float1,float2,float3,path"]
+    for i in range(n):
+        rows.append(
+            f"t{rng.integers(10)},cls_{rng.integers(10)},w{i},v{i % 37},"
+            f"{rng.integers(40)},{rng.random() * 1000:.6f},{rng.random() * 1000:.6f},"
+            f"{rng.random() * 1000:.6f},/data/part-{rng.integers(10000)}"
+        )
+    shapes = [
+        {"where": ["&", ["==", "classifier", "'cls_3'"], ["<", "float1", 700.5]],
+         "distinct": ["text1", "classifier", "some_number"],
+         "select": ["text1", "classifier", "some_number"], "limit": 50},
+        {"where": [">", "float2", 100.25], "group_by": ["text1"],
+         "select": ["text1", ["sum", "some_number"], ["max", "float3"], ["count", "path"]]},
+        {"where": ["<", "float3", 900.5], "select": ["text2", "some_number", "float1"],
+         "order_by": ["-float1", "text2"], "offset": 7, "limit": 20},
+        {"where": ["&", ["in", "some_number", [1, 5, 9, 20, 33]], [">", "float2", 50.5]],
+         "select": ["classifier", "some_number", "float2", "text3"],
+         "order_by": ["float2", "text3"], "limit": 100},
+    ]
+    before = max(_job_mark(spark, "resident-before"))
+    assert store(base, "mb", "\n".join(rows) + "\n")[0] == 201
+    for q in shapes:
+        code, body, headers = query(base, "mb", q)
+        assert code == 200, body
+        assert int(headers["X-QCache-unsliced-length"]) >= len(json.loads(body)) > 0
+    item = catalog.get("mb")
+    schema = item.table.schema
+    code, _, _ = call(
+        base, "POST", "/qcache/dataset/mb/q",
+        json.dumps({"update": [["some_number", 99]], "where": ["==", "text1", "'t3'"]}).encode(),
+        {"Accept": "application/json"},
+    )
+    assert code == 200
+    after = min(_job_mark(spark, "resident-after"))
+    assert after - before - 1 == 0
+
+    updated = catalog.get("mb")
+    assert updated.version != item.version
+    assert updated.table is not None and updated.table.schema == schema
+    assert updated.byte_size == updated.table.nbytes + 100
+    _, body, _ = query(base, "mb", {"where": ["==", "text1", "'t3'"],
+                                    "select": [["min", "some_number"]]})
+    assert json.loads(body) == [{"some_number": 99}]
+
+
+def test_keep_alive_status_has_no_delayed_ack_floor(server):
+    """With Nagle's algorithm on, a keep-alive response body waited
+    for the client's delayed ACK (~40 ms)."""
+    import http.client
+    import statistics
+    import time
+
+    host, port = server.split("//")[1].split(":")
+    conn = http.client.HTTPConnection(host, int(port))
+    try:
+        times = []
+        for _ in range(20):
+            t0 = time.perf_counter()
+            conn.request("GET", "/qcache/status")
+            resp = conn.getresponse()
+            assert resp.read() == b"OK"
+            times.append(time.perf_counter() - t0)
+    finally:
+        conn.close()
+    assert statistics.median(times) < 0.010, times
+
+
+@pytest.mark.parametrize(
+    "bad",
+    [
+        {"where": ["==", "s", 5]},
+        {"where": ["<", "i", "'x'"]},
+        {"where": ["==", "i", "s"]},
+        {"where": ["==", "f", "'1.5x'"]},
+        {"where": ["==", "b", 1]},
+        {"where": ["!=", "i", True]},
+        {"select": [["=", "y", ["+", "s", 1]]]},
+        {"select": [["=", "y", ["sqrt", "s"]]]},
+        {"where": ["like", "s", "'[a'"]},
+    ],
+)
+@pytest.mark.parametrize("resident", [True, False])
+def test_type_mismatch_and_bad_pattern_are_400(resident_server, monkeypatch, bad, resident):
+    from qcache_spark import fastpath
+
+    base, catalog = resident_server
+    if not resident:
+        monkeypatch.setattr(fastpath, "MAX_FASTPATH_BYTES", 0)
+    store(base, "mixed", "i,f,s,b\n1,1.5,a,True\n2,2.5,b,False\n")
+    assert (catalog.get("mixed").table is not None) == resident
+    code, body, _ = query(base, "mixed", bad)
+    assert code == 400, (bad, code, body)
+    assert "error" in json.loads(body)
+
+
+def test_update_of_a_dataset_gone_meanwhile_is_404(resident_server, monkeypatch):
+    """An update whose dataset is evicted or deleted while it is
+    applied answers 404 like any miss (the client re-stores), not 500."""
+    base, catalog = resident_server
+    store(base, "gone")
+    replace_df = catalog.replace_df
+
+    def delete_then_replace(key, data):
+        catalog.delete(key)
+        return replace_df(key, data)
+
+    monkeypatch.setattr(catalog, "replace_df", delete_then_replace)
+    code, body, _ = call(
+        base, "POST", "/qcache/dataset/gone/q",
+        json.dumps({"update": [["bar", 0]], "where": ["==", "foo", 1]}).encode(),
+        {"Accept": "application/json"},
+    )
+    assert code == 404, body
+    assert json.loads(body) == {"error": "Unknown dataset: gone"}
+
+
+def test_sql_over_resident_datasets_keeps_no_spark_copy(resident_server, spark):
+    """A SQL statement reads a driver-resident dataset through a temp
+    view that lives only while statements use it: afterwards no view
+    and no Spark frame remain, and the cache size is unchanged."""
+    import concurrent.futures
+
+    base, catalog = resident_server
+    store(base, "sqlres")
+    store(base, "sqlres2", "foo,baz\n1,x\n3,y\n")
+    size = json.loads(call(base, "GET", "/qcache/statistics")[1])["cache_size"]
+    sql = ("SELECT a.foo AS foo, a.bar AS bar, b.baz AS baz FROM sqlres a "
+           "JOIN sqlres2 b ON a.foo = b.foo ORDER BY foo")
+    with concurrent.futures.ThreadPoolExecutor(4) as pool:
+        answers = list(pool.map(lambda _: sql_post(base, sql), range(8)))
+    for code, body, _ in answers:
+        assert code == 200, body
+        assert json.loads(body) == [{"foo": 1, "bar": 10, "baz": "x"},
+                                    {"foo": 3, "bar": 30, "baz": "y"}]
+    views = {t.name for t in spark.catalog.listTables()}
+    assert not views & {"sqlres", "sqlres2"}, views
+    assert catalog.get("sqlres").df is None and catalog.get("sqlres2").df is None
+    snap = json.loads(call(base, "GET", "/qcache/statistics")[1])
+    assert snap["cache_size"] == size
