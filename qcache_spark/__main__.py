@@ -56,11 +56,16 @@ def main(argv: list[str] | None = None) -> int:
     from .server import make_server, serve_forever_in_thread
     from .session import get_spark
 
-    spark = get_spark(cpus=args.cpus) if args.cpus else get_spark()
-    if not args.debug:
-        spark.sparkContext.setLogLevel("ERROR")
+    def boot():
+        spark = get_spark(cpus=args.cpus) if args.cpus else get_spark()
+        if not args.debug:
+            spark.sparkContext.setLogLevel("ERROR")
+        return spark
+
+    # the session boots on a background thread: the port is bound and
+    # served at once, and only requests that use Spark wait for it
     server = make_server(
-        spark,
+        boot,
         host=args.host,
         port=args.port,
         max_cache_size=args.size,
@@ -85,10 +90,18 @@ def main(argv: list[str] | None = None) -> int:
     )
     thread = serve_forever_in_thread(server)
     try:
-        thread.join()
+        error = server.session.exception()  # waits for the boot
+        if error is None:
+            thread.join()
     except KeyboardInterrupt:
-        server.shutdown()
-    return 0
+        error = None
+    if error is not None:
+        # a server whose Spark requests can only fail must not stay up
+        print(f"Spark session failed to start: {type(error).__name__}: {error}",
+              file=sys.stderr, flush=True)
+    server.shutdown()
+    server.server_close()
+    return 1 if error is not None else 0
 
 
 if __name__ == "__main__":

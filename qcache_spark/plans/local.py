@@ -131,6 +131,16 @@ def _agg_frames(pdf, group_by, entries, agg_mask=None):
                 plans.append((col, [t], None))
         elif fn == "count":
             plans.append((col, [_count_temp(s, nullable)], None))
+        elif fn in ("min", "max") and nullable and s.dtype == object:
+            # pandas cannot order strings mixed with nulls: reduce the
+            # sorted factorize codes (null → NaN, skipped), then decode;
+            # an all-null group's NaN decodes to the trailing None
+            codes, uniques = pd.factorize(s, sort=True)
+            temps[t] = pd.Series(np.where(codes < 0, np.nan, codes), index=pdf.index)
+            agg_map[t] = fn
+            decode = np.append(np.asarray(uniques, dtype=object), None)
+            plans.append((col, [t], lambda v, d=decode: pd.Series(
+                d[v.fillna(len(d) - 1).to_numpy(dtype="int64")], index=v.index)))
         elif fn in ("min", "max", "median", "mean", "avg", "std", "var",
                     "nunique", "count_distinct"):
             builtin = {

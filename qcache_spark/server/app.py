@@ -56,8 +56,11 @@ import threading
 import time
 import urllib.parse
 from collections import OrderedDict
+from concurrent.futures import Future
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from typing import Callable
 
+import pyarrow as pa
 from pyspark.sql import SparkSession
 
 from .. import fastpath
@@ -196,11 +199,18 @@ class QCacheHandler(BaseHTTPRequestHandler):
     disable_nagle_algorithm = True
 
     # injected by make_server
-    spark: SparkSession = None
+    session: Future = None  # of the SparkSession
     catalog: DatasetCatalog = None
     stats: Statistics = None
     result_cache: ResultCache | None = None
     basic_auth: str | None = None  # "user:password" or None
+
+    @property
+    def spark(self) -> SparkSession:
+        """The Spark session. Waits while it boots, so only the
+        requests that use Spark wait; raises the boot error, which
+        _guard turns into a 500, if the boot failed."""
+        return self.session.result()
 
     def _check_auth(self) -> bool:
         """Basic auth parity (reference qcache/app.py:33-85). Returns
@@ -737,13 +747,14 @@ class QCacheHandler(BaseHTTPRequestHandler):
            name the serialization could mangle simply won't match and
            is rejected.
         """
+        spark = self.spark  # outside the try: a failed boot is a 500
         try:
-            jplan = self.spark._jsparkSession.sessionState().sqlParser().parsePlan(sql)
+            jplan = spark._jsparkSession.sessionState().sqlParser().parsePlan(sql)
         except Exception as e:  # Py4J wraps ParseException
             first = str(e).splitlines()
             detail = next((l for l in first if l.strip()), "parse error")
             raise MalformedQueryException(f"SQL parse error: {detail[:300]}")
-        jvm = self.spark._jvm
+        jvm = spark._jvm
         for cls_name in (
             "org.apache.spark.sql.catalyst.plans.logical.Command",
             "org.apache.spark.sql.catalyst.plans.logical.ParsedStatement",
@@ -851,8 +862,32 @@ class _NotAcceptable(Exception):
     pass
 
 
+def _guard_session(spark: SparkSession) -> SparkSession:
+    """Defense-in-depth behind _check_sql_read_only's structural
+    relation allowlist: even if a path-based table expression reached
+    the analyzer, SQL-on-files resolution is off for the session.
+    DataFrameReader paths (spark.read.parquet) are unaffected."""
+    spark.conf.set("spark.sql.runSQLOnFiles", "false")
+    return spark
+
+
+def _boot(factory: Callable[[], SparkSession], session: Future) -> None:
+    """The boot thread: build and guard the session, publish it, then
+    run one tiny job so that the first request that uses Spark does not
+    pay the cold JVM's first job (the LocalRelation path that
+    CacheItem.frame takes). The session is published before the
+    warm-up, so no waiting request also waits for it."""
+    try:
+        spark = _guard_session(factory())
+    except Exception as e:  # noqa: BLE001 - raised to every waiter
+        session.set_exception(e)
+        return
+    session.set_result(spark)
+    spark.createDataFrame(pa.table({"x": [1]})).collect()
+
+
 def make_server(
-    spark: SparkSession,
+    spark: SparkSession | Callable[[], SparkSession],
     host: str = "127.0.0.1",
     port: int = 0,
     max_cache_size: int = 1 << 30,
@@ -878,14 +913,20 @@ def make_server(
     without TLS is refused like the reference's run() ("TLS must be
     enabled to use basic auth!", qcache/app.py:338-341) unless
     `allow_plaintext_auth` explicitly opts in (tests / reverse-proxy
-    deployments that terminate TLS upstream)."""
+    deployments that terminate TLS upstream).
+
+    `spark` is a SparkSession or a zero-argument callable that returns
+    one. A callable runs on a daemon thread once the port is bound, so
+    the server answers before Spark is up: status, statistics, stores
+    that become driver-resident and the reads, literal updates and
+    deletes of resident keys. A request that uses Spark waits for the
+    session (QCacheHandler.spark). `server.session` is the Future of
+    it; it raises the callable's error if the boot failed."""
     if basic_auth and not certfile and not allow_plaintext_auth:
         raise ValueError("TLS must be enabled to use basic auth")
-    # defense-in-depth behind _check_sql_read_only's structural
-    # relation allowlist: even if a path-based table expression reached
-    # the analyzer, SQL-on-files resolution is off for the session.
-    # DataFrameReader paths (spark.read.parquet) are unaffected.
-    spark.conf.set("spark.sql.runSQLOnFiles", "false")
+    session: Future = Future()
+    if not callable(spark):
+        session.set_result(_guard_session(spark))
     catalog = DatasetCatalog(max_cache_size, max_age)
     stats = Statistics(statistics_buffer_size)
     catalog.on_evict = lambda count, duration: (
@@ -898,7 +939,7 @@ def make_server(
         "BoundQCacheHandler",
         (QCacheHandler,),
         {
-            "spark": spark,
+            "session": session,
             "catalog": catalog,
             "stats": stats,
             "result_cache": ResultCache(result_cache_entries) if result_cache_entries else None,
@@ -925,6 +966,11 @@ def make_server(
             ctx.load_verify_locations(cafile)
             ctx.verify_mode = ssl.CERT_REQUIRED
         server.socket = ctx.wrap_socket(server.socket, server_side=True)
+    server.session = session
+    if callable(spark):
+        threading.Thread(
+            target=_boot, args=(spark, session), name="spark-boot", daemon=True
+        ).start()
     return server
 
 

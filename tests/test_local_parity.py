@@ -8,6 +8,8 @@ import math
 import os
 import sys
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -85,7 +87,32 @@ BATTERY = [
     ("orders", {"where": ["==", "o_orderkey", "'7'"],
         "select": ["o_orderkey", ["=", "k", ["+", "o_orderkey", "'1'"]],
                    ["=", "c", ["<", "'2.5e5'", "o_totalprice"]]]}),
+    # min/max over strings with nulls skip the nulls; over only nulls
+    # (the whole column, or one group) they are null
+    ("strings", {"select": [["min", "name"]]}),
+    ("strings", {"select": [["max", "name"], ["min", "none"]]}),
+    ("strings", {"group_by": ["g"], "select": ["g", ["min", "name"], ["max", "none"]]}),
+    ("strings", {"where": ["!=", "g", "'a'"], "group_by": ["g"], "select": ["g", ["max", "name"]]}),
 ]
+
+# Battery tables written at test time: no sf table has a nullable
+# string column.
+TEST_TABLES = {
+    "strings": pa.table({
+        "g": pa.array(["a", "a", "b", "b", "c", "a"], pa.string()),
+        "name": pa.array(["bob", None, None, "ann", None, "Zoe"], pa.string()),
+        "none": pa.array([None] * 6, pa.string()),
+    }),
+}
+
+
+@pytest.fixture(scope="module")
+def table_dir(sf_dir, tmp_path_factory):
+    """The directory that holds a battery table's parquet file."""
+    d = tmp_path_factory.mktemp("battery")
+    for name, table in TEST_TABLES.items():
+        pq.write_table(table, str(d / f"{name}.parquet"))
+    return lambda table: str(d) if table in TEST_TABLES else sf_dir
 
 
 def _norm(v):
@@ -103,10 +130,10 @@ def _rows(df):
 
 
 @pytest.mark.parametrize("idx", range(len(BATTERY)))
-def test_local_matches_spark(spark, sf_dir, idx):
+def test_local_matches_spark(spark, table_dir, idx):
     table, q = BATTERY[idx]
-    sdf = compile_query(q, load_table(spark, sf_dir, table)).sliced
-    pdf = _load_mirror(os.path.join(sf_dir, f"{table}.parquet"))
+    sdf = compile_query(q, load_table(spark, table_dir(table), table)).sliced
+    pdf = _load_mirror(os.path.join(table_dir(table), f"{table}.parquet"))
     cols = referenced_input_columns(q)
     if cols is not None and cols.issubset(pdf.columns):
         pdf = pdf[sorted(cols)]

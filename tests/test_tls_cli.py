@@ -9,9 +9,11 @@ import base64
 import json
 import os
 import re
+import signal
 import ssl
 import subprocess
 import sys
+import time
 import urllib.error
 import urllib.parse
 import urllib.request
@@ -193,3 +195,68 @@ def test_cli_boots_and_serves():
     finally:
         proc.terminate()
         proc.wait(timeout=30)
+
+
+def _session_members(sid: int) -> list[int]:
+    """Live processes of session ``sid`` (zombies have exited)."""
+    members = []
+    for name in os.listdir("/proc"):
+        if not name.isdigit():
+            continue
+        try:
+            with open(f"/proc/{name}/stat") as f:
+                stat = f.read()
+        except OSError:
+            continue
+        state, _ppid, _pgrp, session = stat[stat.rindex(")") + 2:].split()[:4]
+        if int(session) == sid and state != "Z":
+            members.append(int(name))
+    return members
+
+
+def test_cli_stopped_while_spark_boots_leaves_no_process(tmp_path):
+    """SIGTERM to the server while its Spark session is still booting:
+    the server and the JVM it was starting are gone within 30 s."""
+    proc = subprocess.Popen(
+        [sys.executable, "-m", "qcache_spark", "--port", "0",
+         "--host", "127.0.0.1", "--cpus", "2"],
+        cwd=REPO, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True,
+        env=dict(os.environ, TMPDIR=str(tmp_path)), start_new_session=True,
+    )
+    try:
+        line = proc.stdout.readline()
+        m = re.search(r"Starting on port (\d+)", line)
+        assert m, f"unexpected startup line: {line!r}"
+        req = urllib.request.Request(
+            f"http://127.0.0.1:{m.group(1)}/qcache/dataset/early",
+            data=b"x,y\n1,10\n", method="POST",
+            headers={"Content-Type": "text/csv"},
+        )
+        with urllib.request.urlopen(req, timeout=60) as resp:
+            assert resp.status == 201
+        proc.send_signal(signal.SIGTERM)
+        proc.wait(timeout=30)
+        deadline = time.monotonic() + 30
+        while _session_members(proc.pid) and time.monotonic() < deadline:
+            time.sleep(0.1)
+        assert not _session_members(proc.pid)
+    finally:
+        for pid in _session_members(proc.pid):
+            os.kill(pid, signal.SIGKILL)
+        proc.wait(timeout=30)
+
+
+def test_cli_exits_when_spark_fails_to_boot(monkeypatch, capsys):
+    """A server whose Spark session cannot start does not stay up half
+    working: main reports the error on stderr and returns 1."""
+    import qcache_spark.session
+    from qcache_spark.__main__ import main
+
+    def no_spark(*args, **kwargs):
+        raise RuntimeError("JVM would not start")
+
+    monkeypatch.setattr(qcache_spark.session, "get_spark", no_spark)
+    assert main(["--port", "0", "--host", "127.0.0.1"]) == 1
+    out, err = capsys.readouterr()
+    assert "Starting on port" in out
+    assert "JVM would not start" in err
