@@ -271,13 +271,13 @@ class DatasetCatalog:
         (SURVEY.md §1.3). `data` is the updated dataset: a pyarrow
         Table (fastpath.update applied it on the driver) is stored
         driver-resident; a Spark plan over a driver-resident item
-        comes back as Arrow (one Spark job) in the stored schema,
+        comes back as Arrow (one Spark job), stored driver-resident
         unless its rows no longer qualify; a bucketed item keeps its
         declared layout."""
         with self._lock:
             old = self.get(key)
             if isinstance(data, DataFrame) and old.table is not None:
-                table = fastpath.resident_table(data.toArrow(), old.table.schema)
+                table = fastpath.resident_table(data.toArrow())
                 if table is not None:
                     data = table
             item = self._store(

@@ -322,6 +322,8 @@ class _Walk:
         aggregates, aliases = _classify(project_q)
         if aggregates and aliases:
             raise_malformed("Cannot mix aliasing and aggregation functions", project_q)
+        if aggregates:
+            _check_unique_outputs(project_q)
         if group_by:
             if not aggregates:
                 raise_malformed(
@@ -630,20 +632,28 @@ def _structured_group_by(spec: dict):
 
 def _classify(project_q):
     """Split a select list into [(fn, column)] aggregates and alias
-    assignments. Like the reference's {column: fn} dict
-    (query.py:119-130), a later aggregate on a column replaces an
-    earlier one; the output keeps the column name."""
-    aggregate_by_col: dict = {}
+    assignments."""
+    aggregates = []
     aliases = []
     for expression in project_q:
         if is_aggregate_function(expression):
-            fn, col = expression
-            aggregate_by_col[col] = fn
+            aggregates.append(tuple(expression))
         elif is_alias_assignment(expression):
             aliases.append(expression)
         elif not isinstance(expression, str):
             raise_malformed("Invalid expression in select", expression)
-    return [(fn, col) for col, fn in aggregate_by_col.items()], aliases
+    return aggregates, aliases
+
+
+def _check_unique_outputs(project_q) -> None:
+    """An aggregate keeps its column's name and cannot be aliased, so
+    two entries of one name (two aggregates over a column, or one
+    beside the column itself) would give two output columns that no
+    client can tell apart."""
+    names = [e if isinstance(e, str) else e[1] for e in project_q]
+    for i, name in enumerate(names):
+        if name in names[:i]:
+            raise_malformed("Duplicate output column", name)
 
 
 def _check_aggregates(entries, columns, project_q) -> None:

@@ -171,9 +171,12 @@ def _arrow_literal(value, column: pa.ChunkedArray, assign: bool = False) -> pa.S
     """`value` as a scalar of the column's own kind: a quoted string
     for a string column, a bool for a bool column, a finite number
     for a numeric one (an assignment must keep the column's type).
-    Raises Unsupported for anything else, e.g. a column reference,
-    null, or a kind Spark would cast."""
+    A dictionary column's kind is its value type. Raises Unsupported
+    for anything else, e.g. a column reference, null, or a kind Spark
+    would cast."""
     typ = column.type
+    if pa.types.is_dictionary(typ):
+        typ = typ.value_type
     if isinstance(value, str):
         if is_quoted(value) and typ == pa.string():
             return pa.scalar(unquote(value), pa.string())
@@ -237,7 +240,8 @@ def update_arrow(q: dict, table: pa.Table) -> pa.Table:
         name, value = update
         column = _arrow_column(table, name)
         i = table.column_names.index(name)
+        # a dictionary column comes back plain
         table = table.set_column(
-            i, table.field(i), pc.if_else(mask, _arrow_literal(value, column, assign=True), column)
+            i, name, pc.if_else(mask, _arrow_literal(value, column, assign=True), column)
         )
     return table

@@ -444,7 +444,7 @@ class QCacheHandler(BaseHTTPRequestHandler):
         types = _parse_types_header(self.headers.get("X-QCache-types"))
         stand_ins = parse_stand_in_header(self.headers.get("X-QCache-stand-in-columns"))
         bucket_by = _parse_bucket_header(self.headers.get("X-QCache-bucket-by"))
-        body = self._read_body().decode("utf-8")
+        body = self._read_body()
         if ctype == CONTENT_TYPE_CSV:
             pdf, enum_columns = parse_csv(body, types)
         else:

@@ -7,8 +7,11 @@ Mirrors the reference contract:
 - Type hints: `string` forces object dtype, `float` forces float64,
   `enum` forces category (qcache/app.py:150-168). Enum maps to Spark
   StringType plus an engine-side marker that rejects </> filters
-  (test_qframe.py:627-629); storage-wise parquet/Tungsten dictionary-
-  encode low-cardinality strings already.
+  (test_qframe.py:627-629). Storage needs no hint: a driver-resident
+  table keeps any repeated string or int64 column as an Arrow
+  dictionary when that is smaller (fastpath.resident_table), and a
+  persisted plan's in-memory columnar cache applies Spark's own
+  column compression (`spark.sql.inMemoryColumnarStorage.compressed`).
 - Stand-in columns: add a missing column as a typed constant or a copy
   of another column, resolved left-to-right
   (qcache/qframe/__init__.py:26-38, test_api.py:530-537).
@@ -95,18 +98,21 @@ def parse_stand_in_header(header: Optional[str]) -> list[tuple[str, str]]:
     return pairs
 
 
-def parse_csv(csv_text: str, types: Optional[dict] = None) -> tuple[pd.DataFrame, set]:
+def parse_csv(body: bytes | str, types: Optional[dict] = None) -> tuple[pd.DataFrame, set]:
     """CSV body → pandas frame, with the reference's null and type-hint
-    rules. Returns (frame, enum_columns)."""
+    rules. Returns (frame, enum_columns). A bytes body is read as UTF-8
+    by the parser itself, with no decoded copy of it; one that is not
+    UTF-8 is malformed."""
     dtypes, enum_columns = _parse_type_hints(types)
     try:
         pdf = pd.read_csv(
-            io.StringIO(csv_text),
+            io.BytesIO(body) if isinstance(body, bytes) else io.StringIO(body),
             na_values=[""],
             keep_default_na=False,
             dtype=dtypes or None,
         )
     except (pd.errors.EmptyDataError, pd.errors.ParserError, ValueError) as e:
+        # ValueError covers UnicodeDecodeError
         raise MalformedQueryException(f"Invalid CSV body: {e}")
     # pandas upcasts int columns with nulls to float; Spark keeps
     # nullable long — preserve pandas-visible behavior by letting the
@@ -116,7 +122,7 @@ def parse_csv(csv_text: str, types: Optional[dict] = None) -> tuple[pd.DataFrame
 
 def from_csv(
     spark: SparkSession,
-    csv_text: str,
+    csv_text: bytes | str,
     types: Optional[dict] = None,
     stand_in_columns: Optional[list[tuple[str, str]]] = None,
 ) -> tuple[DataFrame, set]:
@@ -181,12 +187,16 @@ def _create_df(spark: SparkSession, pdf: pd.DataFrame) -> DataFrame:
     return spark.createDataFrame([], T.StructType(fields))
 
 
-def parse_json_records(data: str | list, types: Optional[dict] = None) -> tuple[pd.DataFrame, set]:
+def parse_json_records(data: bytes | str | list, types: Optional[dict] = None) -> tuple[pd.DataFrame, set]:
     """JSON list-of-objects body → pandas frame
     (reference from_dicts, qcache/qframe/__init__.py:57-69). Returns
-    (frame, enum_columns)."""
-    if isinstance(data, str):
-        data = json.loads(data)
+    (frame, enum_columns). A body that is not JSON, or not UTF-8, is
+    malformed."""
+    if isinstance(data, (bytes, str)):
+        try:
+            data = json.loads(data)
+        except ValueError as e:  # JSONDecodeError, UnicodeDecodeError
+            raise MalformedQueryException(f"Invalid JSON body: {e}")
     if not isinstance(data, list):
         raise_malformed("JSON body must be a list of records", type(data).__name__)
     _, enum_columns = _parse_type_hints(types)
@@ -201,7 +211,7 @@ def parse_json_records(data: str | list, types: Optional[dict] = None) -> tuple[
 
 def from_json_records(
     spark: SparkSession,
-    data: str | list,
+    data: bytes | str | list,
     types: Optional[dict] = None,
     stand_in_columns: Optional[list[tuple[str, str]]] = None,
 ) -> tuple[DataFrame, set]:

@@ -178,6 +178,11 @@ def test_local_matches_spark(spark, table_dir, idx):
         # a like pattern that is no regex
         {"where": ["like", "o_orderpriority", "'[a'"]},
         {"where": ["ilike", "o_orderpriority", "'%(%'"]},
+        # two aggregates over one column: both outputs would be named
+        # after it
+        {"group_by": ["o_orderpriority"],
+         "select": ["o_orderpriority", ["min", "o_totalprice"], ["max", "o_totalprice"]]},
+        {"select": [["min", "o_totalprice"], ["max", "o_totalprice"]]},
     ],
 )
 def test_local_errors_match_spark(spark, sf_dir, bad):

@@ -344,17 +344,14 @@ def test_group_by_other_fns(calculation_frame, fn, expected):
 def test_remaining_aggregate_names(calculation_frame):
     # the duck-typed pandas-method surface: std/var/prod (first/last
     # are order-dependent in the reference and partition-dependent in
-    # Spark — covered as "returns a value from the group")
-    # (a later aggregate on the same column replaces the earlier one,
-    # matching the reference's {column: fn} dict — query.py:119-130)
-    got = {
-        r["foo"]: r["bar"]
-        for r in compile_query(
+    # Spark — covered as "returns a value from the group").
+    # Two aggregates over one column would both be named after it, so
+    # the query is malformed rather than one of them silently dropped.
+    with pytest.raises(MalformedQueryException, match="Duplicate output column: 'bar'"):
+        compile_query(
             {"select": ["foo", ["sum", "bar"], ["max", "bar"]], "group_by": ["foo"]},
             calculation_frame,
-        ).sliced.collect()
-    }
-    assert got[1] == 11  # max wins, not sum
+        )
 
     import math
 
@@ -792,6 +789,36 @@ def test_update_arrow_declines_outside_its_subset(q):
     with pytest.raises(Unsupported):
         update_arrow(q, table)
 
+
+
+@pytest.mark.parametrize(
+    "q",
+    [
+        {"update": [["s", "'z'"]], "where": ["==", "s", "'a'"]},
+        {"update": [["i", 7]], "where": ["in", "s", ["'a'", "'c'"]]},
+        {"update": [["s", "'b'"], ["i", 0]], "where": ["<", "i", 2]},
+        {"update": [["f", 0.5]], "where": ["isnull", "s"]},
+        {"update": [["i", 3]], "where": ["!=", "s", "'b'"]},
+        {"update": [["s", "'a'"]], "where": [">=", "i", 1.5]},
+    ],
+)
+def test_update_arrow_takes_dictionary_columns(q):
+    """A dictionary column is compared and assigned like its value
+    type: the same rows and values as on the plain table."""
+    import pyarrow as pa
+
+    from qcache_spark import fastpath
+    from qcache_spark.plans.update import update_arrow
+
+    plain = pa.table({"i": pa.array([1, 2, 1, 2], pa.int64()), "s": ["a", None, "c", "a"],
+                      "f": [1.0, 2.0, 3.0, 4.0]})
+    encoded = plain
+    for name in ("i", "s"):
+        i = encoded.column_names.index(name)
+        encoded = encoded.set_column(i, name, encoded.column(name).dictionary_encode())
+    expected = update_arrow(q, plain).to_pylist()
+    assert update_arrow(q, encoded).to_pylist() == expected
+    assert fastpath.update(q, encoded).to_pylist() == expected
 
 def test_load_table_events_on_foreign_session(spark, sf_dir):
     """load_table must read events.parquet TIMESTAMP(NANOS) on a

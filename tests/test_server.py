@@ -1354,8 +1354,8 @@ DIFF_BATTERY = [
     {"where": ["like", "name", "'%o%'"], "select": ["name"], "order_by": ["name"]},
     {"select": ["id", ["=", "twice", ["*", "score", 2]], ["=", "up", ["upper", "name"]],
                 ["=", "q", ["/", "id", "ratio"]]], "order_by": ["id"]},
-    {"group_by": ["grade"], "select": ["grade", ["sum", "score"], ["count", "id"],
-                                      ["max", "ratio"], ["mean", "score"]],
+    {"group_by": ["grade"], "select": ["grade", ["sum", "score"], ["count", "name"],
+                                      ["max", "id"], ["mean", "ratio"]],
      "order_by": ["grade"]},
     # min/max of strings skip the nulls; over only nulls they are null
     {"select": [["sum", "id"], ["max", "score"], ["min", "name"]]},
@@ -1383,6 +1383,20 @@ def _local_counts(base):
     return snap.get("local_query_count", 0), snap.get("local_fallback_count", 0)
 
 
+def _same_answers(base, key_r, key_p, queries):
+    """Each query answers the resident key `key_r` and the persisted
+    key `key_p` with the same body and unsliced length, in JSON and
+    CSV."""
+    for q in queries:
+        for accept in ("application/json", "text/csv"):
+            code_r, body_r, head_r = query(base, key_r, q, accept)
+            code_p, body_p, head_p = query(base, key_p, q, accept)
+            assert code_r == code_p == 200, (q, body_r, body_p)
+            assert body_r == body_p, (q, accept, body_r, body_p)
+            assert (head_r["X-QCache-unsliced-length"]
+                    == head_p["X-QCache-unsliced-length"]), q
+
+
 @pytest.fixture
 def resident_server(spark):
     srv = make_server(spark, max_cache_size=1 << 30)
@@ -1406,14 +1420,7 @@ def test_resident_and_persisted_datasets_answer_identically(resident_server, mon
     assert catalog.get("resident").table is not None
     assert catalog.get("persisted").table is None
     _local_counts(base)
-    for q in DIFF_BATTERY:
-        for accept in ("application/json", "text/csv"):
-            code_r, body_r, head_r = query(base, "resident", q, accept)
-            code_p, body_p, head_p = query(base, "persisted", q, accept)
-            assert code_r == code_p == 200, (q, body_r, body_p)
-            assert body_r == body_p, (q, accept, body_r, body_p)
-            assert (head_r["X-QCache-unsliced-length"]
-                    == head_p["X-QCache-unsliced-length"]), q
+    _same_answers(base, "resident", "persisted", DIFF_BATTERY)
     assert _local_counts(base) == (2 * len(DIFF_BATTERY), 0)
 
 
@@ -1430,10 +1437,18 @@ DIFF_UPDATES = [
 ]
 
 
+def _value_types(schema):
+    """A schema with each dictionary type replaced by its value type."""
+    import pyarrow as pa
+
+    return [(f.name, f.type.value_type if pa.types.is_dictionary(f.type) else f.type)
+            for f in schema]
+
+
 def test_resident_and_persisted_updates_agree(resident_server, monkeypatch):
     """Updates applied on the driver to a resident key leave the same
     table as Spark leaves on a persisted key; the key stays resident
-    in its stored schema."""
+    with its stored column types."""
     from qcache_spark import fastpath
 
     base, catalog = resident_server
@@ -1454,7 +1469,9 @@ def test_resident_and_persisted_updates_agree(resident_server, monkeypatch):
             _, body_p, _ = query(base, "persisted_u", {"order_by": ["id"]}, accept)
             assert body_r == body_p, (upd, body_r, body_p)
     item = catalog.get("resident_u")
-    assert item.table is not None and item.table.schema == schema
+    # an assigned column is stored again by the size rule: `name`, all
+    # 'x' now, may be a dictionary where it was plain
+    assert item.table is not None and _value_types(item.table.schema) == _value_types(schema)
     assert item.byte_size == item.table.nbytes + 100
     # 7 updates on the driver and 1 on Spark; 2 reads per update
     n = len(DIFF_UPDATES)
@@ -1556,6 +1573,192 @@ def test_resident_store_and_reads_run_no_spark_job(resident_server, spark):
     _, body, _ = query(base, "mb", {"where": ["==", "text1", "'t3'"],
                                     "select": [["min", "some_number"]]})
     assert json.loads(body) == [{"some_number": 99}]
+
+
+def _mb_csv(n, seed):
+    """A memory_benchmark-shaped CSV: 10-value text1 and classifier, a
+    37-value text3, a 40-value some_number, a unique text2 and text8,
+    floats, a path and a nullable 5-value note."""
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    rows = ["text1,classifier,text2,text3,text8,some_number,float1,float2,float3,note,path"]
+    for i in range(n):
+        note = f"n{rng.integers(5)}" if rng.random() < 0.7 else ""
+        rows.append(
+            f"t{rng.integers(10)},cls_{rng.integers(10)},w{i},v{i % 37},x{i},"
+            f"{rng.integers(40)},{rng.random() * 1000:.6f},{rng.random() * 1000:.6f},"
+            f"{rng.random() * 1000:.6f},{note},/data/part-{rng.integers(10000)}"
+        )
+    return "\n".join(rows) + "\n"
+
+
+# The four small-table read shapes, each ordered so that the two
+# executors must agree byte for byte, an ordered select-all and an
+# isnull filter on the nullable dictionary column.
+ENCODED_BATTERY = [
+    {"where": ["&", ["==", "classifier", "'cls_3'"], ["<", "float1", 700.5]],
+     "distinct": ["text1", "classifier", "some_number"],
+     "select": ["text1", "classifier", "some_number"],
+     "order_by": ["text1", "some_number"], "limit": 50},
+    {"where": [">", "float2", 100.25], "group_by": ["text1"],
+     "select": ["text1", ["sum", "some_number"], ["max", "float3"], ["count", "note"]],
+     "order_by": ["text1"]},
+    {"where": ["<", "float3", 900.5], "select": ["text2", "some_number", "float1"],
+     "order_by": ["-float1", "text2"], "offset": 7, "limit": 20},
+    {"where": ["&", ["in", "some_number", [1, 5, 9, 20, 33]], [">", "float2", 50.5]],
+     "select": ["classifier", "some_number", "float2", "text3"],
+     "order_by": ["float2", "text3"], "limit": 100},
+    {"order_by": ["text2"]},
+    {"where": ["isnull", "note"], "select": ["text2", "note", "some_number"],
+     "order_by": ["-text2"], "limit": 30},
+]
+
+
+
+def test_resident_columns_follow_the_size_rule():
+    """A string or int64 column is a dictionary with the narrowest
+    index when that is smaller than the plain array; float, bool and
+    unique columns stay plain; the executor gets the plain dtypes."""
+    import pandas as pd
+    import pyarrow as pa
+
+    from qcache_spark.fastpath import arrow_loader, resident_table
+
+    n = 1000
+    pdf = pd.DataFrame({
+        "k128": [f"v{i % 128}" for i in range(n)],
+        "k129": [f"v{i % 129}" for i in range(n)],
+        "unique": [f"u{i}" for i in range(n)],
+        "one_repeat": [f"long-value-{min(i, n - 2)}" for i in range(n)],
+        "ints": [i % 3 for i in range(n)],
+        "unique_ints": list(range(n)),
+        "f": [float(i % 3) for i in range(n)],
+        "b": [i % 2 == 0 for i in range(n)],
+        "nulls": ["x" if i % 2 else None for i in range(n)],
+    })
+    table = resident_table(pdf)
+    dictionary = pa.dictionary
+    assert dict(zip(table.column_names, table.schema.types)) == {
+        "k128": dictionary(pa.int8(), pa.string()),
+        "k129": dictionary(pa.int16(), pa.string()),
+        "unique": pa.string(),
+        "one_repeat": pa.string(),
+        "ints": dictionary(pa.int8(), pa.int64()),
+        "unique_ints": pa.int64(),
+        "f": pa.float64(),
+        "b": pa.bool_(),
+        "nulls": dictionary(pa.int8(), pa.string()),
+    }
+    assert table.column("nulls").null_count == n // 2
+    for name in ("k128", "k129", "unique", "one_repeat", "ints", "unique_ints", "nulls"):
+        plain = pa.array(pdf[name], from_pandas=True)
+        encoded = plain.dictionary_encode()
+        index = pa.int8() if len(encoded.dictionary) <= 128 else pa.int16()
+        encoded = pa.DictionaryArray.from_arrays(encoded.indices.cast(index), encoded.dictionary)
+        smaller = encoded if encoded.nbytes < plain.nbytes else plain
+        assert table.column(name).nbytes == smaller.nbytes, name
+    assert all(c.num_chunks == 1 for c in table.columns)
+    loaded = arrow_loader(table)(None)
+    pd.testing.assert_frame_equal(loaded, pdf)
+    assert loaded["k128"][0] is loaded["k128"][128]  # shares the dictionary's objects
+    assert list(arrow_loader(table)({"ints", "nulls"}).columns) == ["ints", "nulls"]
+
+
+def test_encoded_resident_table_answers_like_persisted(resident_server, monkeypatch, spark):
+    """A memory_benchmark table keeps its repeated columns as
+    dictionaries, is sized by them, and answers reads, a declined
+    query and SQL exactly as the same CSV stored persisted."""
+    import pyarrow as pa
+
+    from qcache_spark import fastpath
+    from qcache_spark.sources import parse_csv
+
+    base, catalog = resident_server
+    csv = _mb_csv(2000, 11)
+    assert store(base, "enc", csv)[0] == 201
+    with monkeypatch.context() as m:
+        m.setattr(fastpath, "MAX_FASTPATH_BYTES", 0)
+        assert store(base, "enc_p", csv)[0] == 201
+    item = catalog.get("enc")
+    assert catalog.get("enc_p").table is None
+    types = dict(zip(item.table.column_names, item.table.schema.types))
+    for name in ("text1", "classifier", "text3", "some_number", "note"):
+        assert pa.types.is_dictionary(types[name]), name
+    assert types["text2"] == types["text8"] == pa.string()
+    assert types["float1"] == pa.float64()
+    plain = pa.Table.from_pandas(parse_csv(csv.encode())[0], preserve_index=False)
+    assert item.byte_size == item.table.nbytes + 100 < plain.nbytes + 100
+
+    _local_counts(base)
+    _same_answers(base, "enc", "enc_p", ENCODED_BATTERY)
+    assert _local_counts(base) == (2 * len(ENCODED_BATTERY), 0)
+
+    # declined by the local executor: Catalyst reads the Arrow table
+    declined = {"where": [">", "some_number", 100],
+                "select": [["sum", "some_number"], ["max", "text1"]]}
+    _same_answers(base, "enc", "enc_p", [declined])
+    assert _local_counts(base) == (0, 2)
+    assert item.frame(spark).dtypes == catalog.get("enc_p").df.dtypes
+    code, body, _ = sql_post(
+        base, "SELECT typeof(text1) AS t, typeof(some_number) AS n, count(*) AS c "
+              "FROM enc GROUP BY 1, 2")
+    assert code == 200, body
+    assert json.loads(body) == [{"t": "string", "n": "bigint", "c": 2000}]
+
+
+def test_encoded_updates_run_no_spark_job_and_match_persisted(resident_server, monkeypatch,
+                                                              spark):
+    """The cache_aside update, and literal updates that assign or
+    filter on dictionary columns, run on the driver with no Spark job
+    and leave the same table as Spark leaves on a persisted key."""
+    import pyarrow as pa
+
+    from qcache_spark import fastpath
+
+    base, catalog = resident_server
+    csv = _mb_csv(2000, 12)
+    assert store(base, "enc_u", csv)[0] == 201
+    with monkeypatch.context() as m:
+        m.setattr(fastpath, "MAX_FASTPATH_BYTES", 0)
+        assert store(base, "enc_up", csv)[0] == 201
+    updates = [
+        {"update": [["text8", "'tag'"]], "where": ["==", "classifier", "'cls_3'"]},
+        {"update": [["classifier", "'cls_new'"], ["some_number", 99]],
+         "where": ["in", "text1", ["'t1'", "'t2'"]]},
+        {"update": [["note", "'n9'"]], "where": ["<", "some_number", 5]},
+        {"update": [["float1", 0.5]], "where": ["isnull", "note"]},
+    ]
+    _local_counts(base)
+    before = max(_job_mark(spark, "encoded-before"))
+    for upd in updates:
+        code, body, _ = call(base, "POST", "/qcache/dataset/enc_u/q",
+                             json.dumps(upd).encode(), {"Accept": "application/json"})
+        assert code == 200, (upd, body)
+    after = min(_job_mark(spark, "encoded-after"))
+    assert after - before - 1 == 0
+    assert _local_counts(base) == (len(updates), 0)
+    for upd in updates:
+        code, body, _ = call(base, "POST", "/qcache/dataset/enc_up/q",
+                             json.dumps(upd).encode(), {"Accept": "application/json"})
+        assert code == 200, (upd, body)
+    _same_answers(base, "enc_u", "enc_up", ENCODED_BATTERY)
+    item = catalog.get("enc_u")
+    assert item.byte_size == item.table.nbytes + 100
+    for name in ("text1", "classifier", "some_number", "note"):
+        assert pa.types.is_dictionary(item.table.schema.field(name).type), name
+
+
+@pytest.mark.parametrize(
+    "ctype,body",
+    [("text/csv", b"a,b\n1,\xff\n"), ("application/json", b'[{"a": "\xff"}]')],
+)
+def test_store_body_that_is_not_utf8_is_400(server, ctype, body):
+    code, resp, _ = call(server, "POST", "/qcache/dataset/not_utf8", body,
+                         {"Content-Type": ctype})
+    assert code == 400, resp
+    assert "utf-8" in json.loads(resp)["error"]
+    assert call(server, "GET", "/qcache/dataset/not_utf8?q=%7B%7D")[0] == 404
 
 
 def test_keep_alive_status_has_no_delayed_ack_floor(server):
