@@ -1,159 +1,182 @@
-"""`update` statement compiler — copy-on-write.
+"""The `update` statement, written once for both executors — copy-on-write.
+
+    {"update": [[column, value] | [operator, column, value], ...],
+     "where": comparison | ["in", column, [values]] | ["isnull", column]}
 
 The reference mutates the cached pandas frame in place
-(qcache/qframe/update.py:106-114). Spark DataFrames are immutable, so
-an update compiles to a NEW full-table plan:
-
-    df.withColumn(c, when(mask, new_value).otherwise(col(c)))
-
+(qcache/qframe/update.py:106-114). Here an update builds a NEW table
 and the catalog swaps the cached entry atomically (§1.3 of SURVEY.md).
+`run` checks the whole statement against the table's columns first,
+so every MalformedQueryException is raised before an executor does
+any work and both executors reject the same statements with the same
+messages. It then drives one of two executors:
+
+- Catalyst (`compile_update`, any Spark frame): a lazy plan that
+  keeps the mask as a column, then replaces each assigned column
+  with `when(mask, new).otherwise(old)`.
+- Arrow (`update_arrow`, a driver-resident table, cache/catalog.py):
+  pyarrow.compute, with no Spark job. It takes literal assignments
+  under a column-vs-literal `where`, every literal of its column's
+  kind, and raises Unsupported for any other valid statement, which
+  the caller then compiles on Spark.
+
 Semantics preserved from the reference:
 
 - The row mask is computed ONCE against the pre-update table
   (update.py:106: filter built before any assignment), even if an
   update rewrites a column the mask reads.
-- Updates apply in declaration order; self-referring updates
-  (`["+", col, 2]` meaning `col += 2`) see the result of earlier
-  updates in the same statement (update.py:56-75).
+- Updates apply in declaration order; a self-referring update
+  (`["+", col, 2]` meaning `col += 2`) or a column value sees the
+  result of earlier updates in the same statement (update.py:56-75).
 - The update-`where` grammar is the restricted subset: comparisons,
-  `in` with a literal list, `isnull` — no &/|/!/like/bits
-  (update.py:15-48).
-
-A driver-resident dataset (an Arrow table, cache/catalog.py) takes
-the simple statements without Spark: `update_arrow` applies literal
-assignments under a column-vs-literal `where` with pyarrow.compute,
-and declines everything else to `compile_update`.
+  `in` with a list, `isnull` — no &/|/!/like/bits (update.py:15-48).
+  Bare strings are column references, in the `in` list too, and
+  `'quoted'` strings are string literals (update.py:5-12). A
+  comparison with null is False (`!=`: True).
 """
 from __future__ import annotations
 
 import functools
 import math
+import operator
+from typing import NamedTuple
 
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..errors import assert_len, raise_malformed
-from .grammar import COMPARISONS, is_quoted, unquote
+from .expressions import BINARY_OPERATORS
+from .grammar import COMPARISONS, SHIFTS, _named, is_quoted, unquote
 from .local import Unsupported
 
-SELF_REFERRING_OPERATORS = {
-    "+": lambda a, b: a + b,
-    "-": lambda a, b: a - b,
-    "*": lambda a, b: a * b,
-    "/": lambda a, b: F.try_divide(a, b),
-    "&": lambda a, b: a.bitwiseAND(b),
-    "|": lambda a, b: a.bitwiseOR(b),
-    "^": lambda a, b: a.bitwiseXOR(b),
-    "%": lambda a, b: F.try_mod(a, b),
-    "**": lambda a, b: F.pow(a, b),
-}
-
+# `[operator, column, value]`: column = column <operator> value
+UPDATE_OPERATORS = frozenset({"+", "-", "*", "/", "%", "**", "&", "|", "^"}) | SHIFTS
 MASK_COL = "__qcache_update_mask__"
 
 
-def _prepare_arg(df: DataFrame, arg) -> Column:
-    """Literal vs column resolution for update args
-    (reference update.py:5-12)."""
+class _Column(NamedTuple):
+    """A column operand; a literal operand is its Python value."""
+
+    name: str
+
+
+def _operand(arg, columns):
     if isinstance(arg, str):
         if is_quoted(arg):
-            return F.lit(unquote(arg))
-        if arg not in df.columns:
+            return unquote(arg)
+        if arg not in columns:
             raise_malformed("Unknown column", arg)
-        return F.col(arg)
-    return F.lit(arg)
+        return _Column(arg)
+    if arg is not None and not isinstance(arg, (bool, int, float)):
+        raise_malformed("Invalid update value", arg)
+    return arg
 
 
-def _build_update_mask(df: DataFrame, update_q) -> Column:
-    if type(update_q) is not list:
-        raise_malformed("Expressions must be lists", update_q)
-    if not update_q:
-        raise_malformed("Empty expression not allowed", update_q)
-
-    operator = update_q[0]
-    if operator == "isnull":
-        assert_len(update_q, 2, "Invalid length of isnull query")
-        col = update_q[1]
-        if not isinstance(col, str) or col not in df.columns:
-            raise_malformed("Unknown column for 'isnull'", update_q)
-        return F.col(col).isNull()
-
-    if operator == "in":
-        if len(update_q) != 3:
-            raise_malformed("Invalid length of 'in' query", update_q)
-        _, column, values = update_q
-        if column not in df.columns:
-            raise_malformed(
-                "First argument to 'in' must be a column present in frame", update_q
-            )
+def _where(where, columns) -> tuple:
+    """The checked `where` as (executor primitive, *arguments)."""
+    if type(where) is not list:
+        raise_malformed("Expressions must be lists", where)
+    if not where:
+        raise_malformed("Empty expression not allowed", where)
+    op = where[0]
+    if op == "isnull":
+        assert_len(where, 2, "Invalid length of isnull query")
+        if not _named(where[1], columns):
+            raise_malformed("Unknown column for 'isnull'", where)
+        return "isnull", where[1]
+    if op == "in":
+        assert_len(where, 3, "Invalid length of 'in' query")
+        _, name, values = where
+        if not _named(name, columns):
+            raise_malformed("First argument to 'in' must be a column present in frame", where)
         if not isinstance(values, (list, tuple)):
-            raise_malformed("Second argument to 'in' must be a list", update_q)
+            raise_malformed("Second argument to 'in' must be a list", where)
+        return "isin", name, [_operand(v, columns) for v in values]
+    if _named(op, COMPARISONS):
+        assert_len(where, 3)
+        return "compare", op, _operand(where[1], columns), _operand(where[2], columns)
+    raise_malformed(f"Unknown operator '{op}'", where)
+
+
+def _clause(clause, columns) -> tuple:
+    """The checked update clause as (operator or None, column, value)."""
+    if not isinstance(clause, (list, tuple)) or len(clause) not in (2, 3):
+        raise_malformed("Invalid update clause", clause)
+    op, name, value = clause if len(clause) == 3 else (None, *clause)
+    if not _named(name, columns):
+        raise_malformed("Unknown column in update", clause)
+    if op is None:
+        return None, name, _operand(value, columns)
+    if not _named(op, UPDATE_OPERATORS):
+        raise_malformed("Invalid update operator", clause)
+    if op in SHIFTS and (not isinstance(value, int) or isinstance(value, bool)):
+        # the bit count is a literal (Spark's shiftleft/shiftright)
+        raise_malformed("Shift amount must be an integer literal", clause)
+    return op, name, _operand(value, columns)
+
+
+def run(q: dict, frame, ex):
+    """Check update statement `q` against the frame's columns, then
+    apply it to `frame` with executor `ex`: the mask first, fixed
+    before any assignment, then each assignment in order."""
+    if "where" not in q:
+        raise_malformed("Update query requires a where clause", q)
+    columns = ex.columns(frame)
+    primitive, *args = _where(q["where"], columns)
+    clauses = q["update"]
+    if type(clauses) is not list:
+        raise_malformed("Invalid update clause", clauses)
+    clauses = [_clause(clause, columns) for clause in clauses]
+    frame, mask = ex.fix_mask(frame, getattr(ex, primitive)(frame, *args))
+    for op, name, value in clauses:
+        frame = ex.assign(frame, mask, op, name, value)
+    return frame
+
+
+class _Catalyst:
+    """Spark Columns over the DataFrame being updated."""
+
+    def columns(self, df):
+        return df.columns
+
+    def value(self, arg):
+        return F.col(arg.name) if isinstance(arg, _Column) else F.lit(arg)
+
+    def isnull(self, df, name):
+        return F.col(name).isNull()
+
+    def isin(self, df, name, values):
         if not values:
             return F.lit(False)
-        prepared = [_prepare_arg(df, v) for v in values]
-        col = F.col(column)
-        mask = prepared[0] == col
-        for p in prepared[1:]:
-            mask = mask | (p == col)
-        return F.coalesce(mask, F.lit(False))
+        matches = [self.value(v) == F.col(name) for v in values]
+        return F.coalesce(functools.reduce(operator.or_, matches), F.lit(False))
 
-    if operator in COMPARISONS:
-        assert_len(update_q, 3)
-        arg1 = _prepare_arg(df, update_q[1])
-        arg2 = _prepare_arg(df, update_q[2])
-        expr = COMPARISONS[operator](arg1, arg2)
-        if operator == "!=":
-            return F.coalesce(expr, F.lit(True))
-        return F.coalesce(expr, F.lit(False))
+    def compare(self, df, op, left, right):
+        expr = COMPARISONS[op](self.value(left), self.value(right))
+        return F.coalesce(expr, F.lit(op == "!="))
 
-    raise_malformed(f"Unknown operator '{operator}'", update_q)
+    def fix_mask(self, df, mask):
+        # a column of its own, so assignments to what it reads leave
+        # it, named apart from the table's own
+        name = MASK_COL
+        while name in df.columns:
+            name += "_"
+        return df.withColumn(name, mask), F.col(name)
+
+    def assign(self, df, mask, op, name, value):
+        old = F.col(name)
+        if op is None:
+            new = self.value(value)
+        else:
+            new = BINARY_OPERATORS[op](old, value if op in SHIFTS else self.value(value))
+        return df.withColumn(name, F.when(mask, new).otherwise(old))
 
 
 def compile_update(q: dict, df: DataFrame) -> DataFrame:
     """Return the post-update table as a new lazy plan."""
-    if "where" not in q:
-        raise_malformed("Update query requires a where clause", q)
-
-    original_columns = list(df.columns)
-    mask = _build_update_mask(df, q["where"])
-    # Materialize the mask as a column so every subsequent conditional
-    # reads the PRE-update predicate even if updates rewrite its inputs.
-    result = df.withColumn(MASK_COL, mask)
-
-    updates = q["update"]
-    if type(updates) is not list:
-        raise_malformed("Invalid update clause", updates)
-
-    for update in updates:
-        if not isinstance(update, (list, tuple)):
-            raise_malformed("Invalid update clause", update)
-        if len(update) == 2:
-            column, value = update
-            if column not in result.columns:
-                raise_malformed("Unknown column in update", update)
-            new_value = _prepare_arg(result, value)
-        elif len(update) == 3:
-            op, column, value = update
-            if column not in result.columns:
-                raise_malformed("Unknown column in update", update)
-            if op in ("<<", ">>"):
-                if not isinstance(value, int) or isinstance(value, bool):
-                    raise_malformed("Shift amount must be an integer literal", update)
-                shift = F.shiftleft if op == "<<" else F.shiftright
-                new_value = shift(F.col(column), value)
-            else:
-                fn = SELF_REFERRING_OPERATORS.get(op)
-                if fn is None:
-                    raise_malformed("Invalid update operator", update)
-                new_value = fn(F.col(column), _prepare_arg(result, value))
-        else:
-            raise_malformed("Invalid update clause", update)
-        result = result.withColumn(
-            column, F.when(F.col(MASK_COL), new_value).otherwise(F.col(column))
-        )
-
-    return result.select(*original_columns)
+    return run(q, df, _Catalyst()).select(*df.columns)
 
 
 _ARROW_COMPARISONS = {
@@ -168,18 +191,18 @@ _NUMBER_TYPES = (pa.int64(), pa.float64())
 
 
 def _arrow_literal(value, column: pa.ChunkedArray, assign: bool = False) -> pa.Scalar:
-    """`value` as a scalar of the column's own kind: a quoted string
-    for a string column, a bool for a bool column, a finite number
-    for a numeric one (an assignment must keep the column's type).
-    A dictionary column's kind is its value type. Raises Unsupported
+    """`value` as a scalar of the column's own kind: a string for a
+    string column, a bool for a bool column, a finite number for a
+    numeric one (an assignment must keep the column's type). A
+    dictionary column's kind is its value type. Raises Unsupported
     for anything else, e.g. a column reference, null, or a kind Spark
     would cast."""
     typ = column.type
     if pa.types.is_dictionary(typ):
         typ = typ.value_type
     if isinstance(value, str):
-        if is_quoted(value) and typ == pa.string():
-            return pa.scalar(unquote(value), pa.string())
+        if typ == pa.string():
+            return pa.scalar(value, pa.string())
     elif isinstance(value, bool):
         if typ == pa.bool_():
             return pa.scalar(value, pa.bool_())
@@ -192,34 +215,43 @@ def _arrow_literal(value, column: pa.ChunkedArray, assign: bool = False) -> pa.S
     raise Unsupported(f"update literal {value!r} for a {typ} column")
 
 
-def _arrow_column(table: pa.Table, name) -> pa.ChunkedArray:
-    if not isinstance(name, str) or name not in table.column_names:
-        raise Unsupported("update names no column of the table")
-    return table.column(name)
+class _Arrow:
+    """pyarrow.compute over the table; null compares False (True for
+    `!=`)."""
 
+    def columns(self, table):
+        return table.column_names
 
-def _arrow_mask(table: pa.Table, where) -> pa.ChunkedArray:
-    """`_build_update_mask` over an Arrow table: null compares False
-    (True for `!=`)."""
-    if not isinstance(where, list) or not where:
-        raise Unsupported("update where")
-    op = where[0]
-    if op == "isnull" and len(where) == 2:
-        return pc.is_null(_arrow_column(table, where[1]))
-    if op == "in" and len(where) == 3 and isinstance(where[2], list):
-        column = _arrow_column(table, where[1])
-        masks = [pc.equal(column, _arrow_literal(v, column)) for v in where[2]]
+    def isnull(self, table, name):
+        return pc.is_null(table.column(name))
+
+    def isin(self, table, name, values):
+        column = table.column(name)
+        masks = [pc.equal(column, _arrow_literal(v, column)) for v in values]
         if not masks:
             return pa.repeat(False, len(table))
         return pc.fill_null(functools.reduce(pc.or_kleene, masks), False)
-    if isinstance(op, str) and op in _ARROW_COMPARISONS and len(where) == 3:
-        column = _arrow_column(table, where[1])
+
+    def compare(self, table, op, left, right):
+        if not isinstance(left, _Column):
+            raise Unsupported("update where on a literal")
+        column = table.column(left.name)
         if column.type == pa.float64() and pc.any(pc.is_nan(column)).as_py():
             # Spark orders NaN above every number; Arrow compares it False
             raise Unsupported("NaN in a compared float column")
-        mask = _ARROW_COMPARISONS[op](column, _arrow_literal(where[2], column))
+        mask = _ARROW_COMPARISONS[op](column, _arrow_literal(right, column))
         return pc.fill_null(mask, op == "!=")
-    raise Unsupported(f"update where operator {op!r}")
+
+    def fix_mask(self, table, mask):
+        return table, mask  # an array: assignments cannot move it
+
+    def assign(self, table, mask, op, name, value):
+        if op is not None:
+            raise Unsupported("self-referring update")
+        column = table.column(name)
+        new = pc.if_else(mask, _arrow_literal(value, column, assign=True), column)
+        # a dictionary column comes back plain
+        return table.set_column(table.column_names.index(name), name, new)
 
 
 def update_arrow(q: dict, table: pa.Table) -> pa.Table:
@@ -227,21 +259,7 @@ def update_arrow(q: dict, table: pa.Table) -> pa.Table:
     (`[column, literal]`) under a `where` of `isnull`, a literal `in`
     list or a column-vs-literal comparison, every literal of its
     column's kind; the same rows and values `compile_update` gives,
-    computed with no Spark job. Raises Unsupported for any other
-    statement, malformed ones included, so the caller compiles it on
-    Spark and answers exactly as before."""
-    updates = q.get("update")
-    if "where" not in q or not isinstance(updates, list):
-        raise Unsupported("update statement")
-    mask = _arrow_mask(table, q["where"])
-    for update in updates:
-        if not isinstance(update, list) or len(update) != 2:
-            raise Unsupported("update clause")
-        name, value = update
-        column = _arrow_column(table, name)
-        i = table.column_names.index(name)
-        # a dictionary column comes back plain
-        table = table.set_column(
-            i, name, pc.if_else(mask, _arrow_literal(value, column, assign=True), column)
-        )
-    return table
+    computed with no Spark job. Raises MalformedQueryException for a
+    malformed statement, like `compile_update`, and Unsupported for
+    any other valid one, which the caller then compiles on Spark."""
+    return run(q, table, _Arrow())

@@ -34,7 +34,7 @@ Content negotiation CSV/JSON both directions (app.py:116-137);
 gzip (stdlib) and LZ4 (if importable) request/response codecs
 (qcache/compression.py:24-67). Errors: MalformedQueryException → 400
 with {"error": msg}; unknown key → 404; bad content type → 415;
-bad accept → 406; non-UTF-8 charset → 400 (README.rst:429-431).
+bad accept → 406; non-UTF-8 charset (README.rst:429-431) or body → 400.
 
 This layer is deliberately thin driver-side code. A small dataset is
 driver-resident (cache/catalog.py): its queries run on the
@@ -77,8 +77,8 @@ from ..sources import (  # noqa: F401 — from_csv/from_json_records: see below
     from_csv,
     from_json_records,
     parse_csv,
+    parse_header_pairs,
     parse_json_records,
-    parse_stand_in_header,
     rows_to_csv,
     rows_to_json,
 )
@@ -123,20 +123,19 @@ def _encode_body(raw: bytes, accept_encoding: str) -> tuple[bytes, str | None]:
     return raw, None
 
 
-def _parse_types_header(header: str | None) -> dict:
-    """`X-QCache-types: foo=string;bar=float` (qcache/app.py:150-168)."""
-    if not header:
-        return {}
-    types = {}
-    for part in header.split(";"):
-        part = part.strip()
-        if not part:
-            continue
-        if "=" not in part:
-            raise MalformedQueryException(f"Invalid type hint: {part}")
-        column, type_name = part.split("=", 1)
-        types[column.strip()] = type_name.strip()
-    return types
+def _parse_json(text: str, what: str):
+    try:
+        return json.loads(text)
+    except json.JSONDecodeError as e:
+        raise MalformedQueryException(f"Invalid {what} JSON: {e}")
+
+
+def _render(rows, columns, accept: str) -> bytes:
+    """A result page in the negotiated type. rows_to_csv/rows_to_json
+    are looked up on this module per call, where a tracer wraps them."""
+    if accept == CONTENT_TYPE_CSV:
+        return rows_to_csv(rows, columns).encode("utf-8")
+    return rows_to_json(rows).encode("utf-8")
 
 
 def _parse_bucket_header(header: str | None):
@@ -170,8 +169,9 @@ class ResultCache:
     this is the qcache value proposition (repeated dashboard queries
     hit memory, not Spark) made explicit."""
 
-    def __init__(self, max_entries: int = 256):
-        self.max_entries = max_entries
+    MAX_ENTRIES = 256
+
+    def __init__(self):
         self._lock = threading.Lock()
         self._entries: OrderedDict[tuple, tuple[bytes, int]] = OrderedDict()
 
@@ -186,7 +186,7 @@ class ResultCache:
         with self._lock:
             self._entries[key] = (body, unsliced_len)
             self._entries.move_to_end(key)
-            while len(self._entries) > self.max_entries:
+            while len(self._entries) > self.MAX_ENTRIES:
                 self._entries.popitem(last=False)
 
 
@@ -202,7 +202,7 @@ class QCacheHandler(BaseHTTPRequestHandler):
     session: Future = None  # of the SparkSession
     catalog: DatasetCatalog = None
     stats: Statistics = None
-    result_cache: ResultCache | None = None
+    result_cache: ResultCache = None
     basic_auth: str | None = None  # "user:password" or None
 
     @property
@@ -282,6 +282,24 @@ class QCacheHandler(BaseHTTPRequestHandler):
         raw = self.rfile.read(length)
         return _decode_body(raw, self.headers.get("Content-Encoding"))
 
+    def _read_text(self) -> str:
+        """The body of a query, pipeline, explain or SQL request."""
+        try:
+            return self._read_body().decode("utf-8")
+        except UnicodeDecodeError as e:
+            raise MalformedQueryException(f"Request body is not utf-8: {e}")
+
+    def _dataset(self, key: str):
+        """The catalog item of `key`, counted as a hit; an unknown key
+        raises UnknownDatasetException, which _guard answers with 404."""
+        item = self.catalog.get(key)
+        self.stats.inc("hit_count")
+        return item
+
+    def _stand_ins(self) -> list[tuple[str, str]]:
+        header = self.headers.get("X-QCache-stand-in-columns")
+        return parse_header_pairs(header, "stand-in column")
+
     def _content_type(self) -> str:
         header = self.headers.get("Content-Type", CONTENT_TYPE_CSV)
         parts = [p.strip() for p in header.split(";")]
@@ -352,8 +370,9 @@ class QCacheHandler(BaseHTTPRequestHandler):
         except DatasetTooLargeException as e:
             self._error(413, str(e))
         except UnknownDatasetException as e:
-            # the dataset went (evicted or deleted) after the handler
-            # looked it up, e.g. while an update compiled
+            # an unknown key, or one that went (evicted or deleted)
+            # after the handler looked it up, e.g. while an update
+            # compiled
             self.stats.inc("miss_count")
             self._error(404, f"Unknown dataset: {e}")
         except MalformedQueryException as e:
@@ -401,19 +420,15 @@ class QCacheHandler(BaseHTTPRequestHandler):
     def _do_post(self):
         route, key, _ = self._route()
         if route == "dataset_q":
-            body = self._read_body().decode("utf-8")
-            self._run_query(key, body)
+            self._run_query(key, self._read_text())
         elif route == "dataset_pipeline":
-            body = self._read_body().decode("utf-8")
-            self._run_pipeline(key, body)
+            self._run_pipeline(key, self._read_text())
         elif route == "dataset_explain":
-            body = self._read_body().decode("utf-8")
-            self._run_explain(key, body)
+            self._run_explain(key, self._read_text())
         elif route == "dataset":
             self._store_dataset(key)
         elif route == "sql":
-            body = self._read_body().decode("utf-8")
-            self._run_sql(body)
+            self._run_sql(self._read_text())
         else:
             self._error(404, "Not found")
 
@@ -441,8 +456,8 @@ class QCacheHandler(BaseHTTPRequestHandler):
     def _store_dataset(self, key: str) -> None:
         t0 = time.perf_counter()
         ctype = self._content_type()
-        types = _parse_types_header(self.headers.get("X-QCache-types"))
-        stand_ins = parse_stand_in_header(self.headers.get("X-QCache-stand-in-columns"))
+        types = dict(parse_header_pairs(self.headers.get("X-QCache-types"), "type hint"))
+        stand_ins = self._stand_ins()
         bucket_by = _parse_bucket_header(self.headers.get("X-QCache-bucket-by"))
         body = self._read_body()
         if ctype == CONTENT_TYPE_CSV:
@@ -464,20 +479,9 @@ class QCacheHandler(BaseHTTPRequestHandler):
     def _run_query(self, key: str, q_text: str) -> None:
         t0 = time.perf_counter()
         accept = self._accept_type()
-        try:
-            q = json.loads(q_text)
-        except json.JSONDecodeError as e:
-            raise MalformedQueryException(f"Invalid query JSON: {e}")
-
-        try:
-            item = self.catalog.get(key)
-        except UnknownDatasetException:
-            self.stats.inc("miss_count")
-            self._error(404, f"Unknown dataset: {key}")
-            return
-        self.stats.inc("hit_count")
-
-        stand_ins = parse_stand_in_header(self.headers.get("X-QCache-stand-in-columns"))
+        q = _parse_json(q_text, "query")
+        item = self._dataset(key)
+        stand_ins = self._stand_ins()
 
         if isinstance(q, dict) and "update" in q:
             updated = None
@@ -492,7 +496,7 @@ class QCacheHandler(BaseHTTPRequestHandler):
             return
 
         cache_key = None
-        if self.result_cache is not None and not stand_ins:
+        if not stand_ins:
             cache_key = (key, item.version, q_text, accept)
             hit = self.result_cache.get(cache_key)
             if hit is not None:
@@ -563,10 +567,7 @@ class QCacheHandler(BaseHTTPRequestHandler):
             else:
                 # no slicing → the page IS the full result; skip the count job
                 unsliced_len = len(rows)
-        if accept == CONTENT_TYPE_CSV:
-            body = rows_to_csv(rows, columns).encode("utf-8")
-        else:
-            body = rows_to_json(rows).encode("utf-8")
+        body = _render(rows, columns, accept)
         if cache_key is not None:
             self.result_cache.put(cache_key, body, unsliced_len)
         self.stats.append("query_durations", time.perf_counter() - t0)
@@ -599,23 +600,14 @@ class QCacheHandler(BaseHTTPRequestHandler):
         exchanges are all visible). Compilation only; nothing
         executes. Same 400/404 discipline as the query endpoint;
         update statements are rejected (they have no read plan)."""
-        try:
-            q = json.loads(body_text)
-        except json.JSONDecodeError as e:
-            raise MalformedQueryException(f"Invalid query JSON: {e}")
+        q = _parse_json(body_text, "query")
         if isinstance(q, dict) and "update" in q:
             raise MalformedQueryException(
                 "explain supports read queries only, not updates"
             )
-        try:
-            item = self.catalog.get(key)
-        except UnknownDatasetException:
-            self.stats.inc("miss_count")
-            self._error(404, f"Unknown dataset: {key}")
-            return
-        self.stats.inc("hit_count")
-        stand_ins = parse_stand_in_header(self.headers.get("X-QCache-stand-in-columns"))
-        result = compile_query(q, self._frame(item, stand_ins), enum_columns=item.enum_columns)
+        item = self._dataset(key)
+        frame = self._frame(item, self._stand_ins())
+        result = compile_query(q, frame, enum_columns=item.enum_columns)
         plan = result.sliced._jdf.queryExecution().explainString(
             self.spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                 "formatted"
@@ -634,38 +626,16 @@ class QCacheHandler(BaseHTTPRequestHandler):
 
         t0 = time.perf_counter()
         accept = self._accept_type()
-        try:
-            spec = json.loads(body_text)
-        except json.JSONDecodeError as e:
-            raise MalformedQueryException(f"Invalid pipeline JSON: {e}")
-
-        try:
-            item = self.catalog.get(key)
-        except UnknownDatasetException:
-            self.stats.inc("miss_count")
-            self._error(404, f"Unknown dataset: {key}")
-            return
-        self.stats.inc("hit_count")
-
-        stand_ins = parse_stand_in_header(self.headers.get("X-QCache-stand-in-columns"))
-        df = self._frame(item, stand_ins)
+        spec = _parse_json(body_text, "pipeline")
+        df = self._frame(self._dataset(key), self._stand_ins())
 
         def resolve(other_key: str):
             # second dataset for two-dataset ops (snapshot_diff's
-            # params.right); raises UnknownDatasetException -> 404
+            # params.right); an unknown key is _guard's 404
             return self.catalog.get(other_key).frame(self.spark)
 
-        try:
-            result = run_pipeline_op(df, spec, resolve=resolve)
-        except UnknownDatasetException as e:
-            self.stats.inc("miss_count")
-            self._error(404, str(e))
-            return
-        rows = result.collect()
-        if accept == CONTENT_TYPE_CSV:
-            body = rows_to_csv(rows, result.columns).encode("utf-8")
-        else:
-            body = rows_to_json(rows).encode("utf-8")
+        result = run_pipeline_op(df, spec, resolve=resolve)
+        body = _render(result.collect(), result.columns, accept)
         self.stats.append("query_durations", time.perf_counter() - t0)
         self._send(200, body, accept)
 
@@ -841,10 +811,7 @@ class QCacheHandler(BaseHTTPRequestHandler):
                 f"Result exceeds the {self.sql_max_rows}-row limit; "
                 "add a LIMIT clause"
             )
-        if accept == CONTENT_TYPE_CSV:
-            body = rows_to_csv(rows, df.columns).encode("utf-8")
-        else:
-            body = rows_to_json(rows).encode("utf-8")
+        body = _render(rows, df.columns, accept)
         self.stats.append("query_durations", time.perf_counter() - t0)
         self._send(
             200,
@@ -893,7 +860,6 @@ def make_server(
     max_cache_size: int = 1 << 30,
     max_age: float = 0,
     statistics_buffer_size: int = 1000,
-    result_cache_entries: int = 256,
     basic_auth: str | None = None,
     certfile: str | None = None,
     keyfile: str | None = None,
@@ -942,7 +908,7 @@ def make_server(
             "session": session,
             "catalog": catalog,
             "stats": stats,
-            "result_cache": ResultCache(result_cache_entries) if result_cache_entries else None,
+            "result_cache": ResultCache(),
             "basic_auth": basic_auth,
             "url_prefix": url_prefix,
             "sql_max_rows": sql_max_rows,

@@ -12,8 +12,8 @@ from .ingest import (
     from_csv,
     from_json_records,
     parse_csv,
+    parse_header_pairs,
     parse_json_records,
-    parse_stand_in_header,
     rows_to_csv,
     rows_to_json,
 )
@@ -28,8 +28,8 @@ __all__ = [
     "from_csv",
     "from_json_records",
     "parse_csv",
+    "parse_header_pairs",
     "parse_json_records",
-    "parse_stand_in_header",
     "rows_to_csv",
     "rows_to_json",
 ]

@@ -82,8 +82,11 @@ def apply_stand_in_columns(df: DataFrame, stand_ins: Optional[Iterable[tuple[str
     return df
 
 
-def parse_stand_in_header(header: Optional[str]) -> list[tuple[str, str]]:
-    """`X-QCache-stand-in-columns: foo=10;bar=baz` → [(col, value), ...]"""
+def parse_header_pairs(header: Optional[str], what: str) -> list[tuple[str, str]]:
+    """`foo=a;bar=b` → [("foo", "a"), ("bar", "b")] in header order, for
+    `X-QCache-types: foo=string;bar=float` (qcache/app.py:150-168) and
+    `X-QCache-stand-in-columns: foo=10;bar=baz`. A part without `=` is
+    malformed; the error names it as `what`."""
     if not header:
         return []
     pairs = []
@@ -92,7 +95,7 @@ def parse_stand_in_header(header: Optional[str]) -> list[tuple[str, str]]:
         if not part:
             continue
         if "=" not in part:
-            raise MalformedQueryException(f"Invalid stand-in column: {part}")
+            raise MalformedQueryException(f"Invalid {what}: {part}")
         column, value = part.split("=", 1)
         pairs.append((column.strip(), value.strip()))
     return pairs

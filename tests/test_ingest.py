@@ -4,8 +4,12 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
+
+from qcache_spark import MalformedQueryException
 from qcache_spark.sources import (
     from_csv,
+    parse_header_pairs,
     read_csv,
     read_json,
     read_orc,
@@ -61,3 +65,14 @@ def test_parquet_partitioned_write_prunes(spark, tmp_path):
     # partition pruning visible in the scan: only one partition dir read
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [isnotnull(bucket" in plan
+
+
+def test_header_pairs_keep_order_and_name_the_header_in_errors():
+    """One parser reads `X-QCache-types` and `X-QCache-stand-in-columns`:
+    pairs in header order, blanks skipped, a bad part named per header."""
+    assert parse_header_pairs(None, "type hint") == []
+    assert parse_header_pairs(" b = x ;; a=y=z ", "stand-in column") == [("b", "x"), ("a", "y=z")]
+    with pytest.raises(MalformedQueryException, match="^Invalid type hint: foo$"):
+        parse_header_pairs("a=string;foo", "type hint")
+    with pytest.raises(MalformedQueryException, match="^Invalid stand-in column: bar$"):
+        parse_header_pairs("bar", "stand-in column")

@@ -691,6 +691,16 @@ def test_update_mask_fixed_before_updates(spark):
     assert sorted([(r["a"], r["b"]) for r in result.collect()]) == [(5, 0), (99, 1)]
 
 
+def test_update_mask_leaves_a_column_of_its_name(spark):
+    import pyarrow as pa
+
+    from qcache_spark.plans.update import MASK_COL
+
+    frame = spark.createDataFrame(pa.table({"a": [1, 2], MASK_COL: ["x", "y"]}))
+    q = {"update": [["+", "a", 10]], "where": ["==", "a", 1]}
+    assert [tuple(r) for r in compile_update(q, frame).collect()] == [(11, "x"), (2, "y")]
+
+
 def test_update_where_in_list(basic_frame):
     q = {"update": [["baz", 0]], "where": ["in", "foo", ["'aaa'", "'ccc'"]]}
     got = {r["foo"]: r["baz"] for r in compile_update(q, basic_frame).collect()}
@@ -767,18 +777,20 @@ def test_update_division_by_zero_yields_null(spark):
         {"update": [["i", 0]], "where": ["==", "s", 1]},
         {"update": [["i", 0]], "where": ["==", "i", "j"]},
         {"update": [["i", 0]], "where": ["<", "f", 1.0]},
-        {"update": [["i", 0]], "where": ["&", ["==", "i", 1], ["==", "j", 2]]},
         {"update": [["i", 0]], "where": ["in", "s", ["'a'", None]]},
-        {"update": [["nope", 0]], "where": ["==", "i", 1]},
-        {"update": [["i", 0]]},
+        {"update": [["i", 0]], "where": ["in", "i", ["j"]]},
+        {"update": [["i", 0]], "where": ["==", 1, "i"]},
+        {"update": [["s", "'x'"]], "where": ["==", "i", "'1'"]},
     ],
 )
 def test_update_arrow_declines_outside_its_subset(q):
     """The driver-side update takes literal assignments of the
-    column's own kind under a column-vs-literal `where`; anything else
-    (here: self-referring, column values, null, cross-kind, an ordered
-    compare on a float column holding NaN, logical operators, unknown
-    columns, a missing where) is left to compile_update."""
+    column's own kind under a column-vs-literal `where`; any other
+    valid statement (here: self-referring, column values, null,
+    cross-kind, an ordered compare on a float column holding NaN, a
+    column in the in-list, a literal on the left) is left to
+    compile_update. Malformed statements raise on both executors
+    (test_malformed_update_is_one_error_on_both_executors)."""
     import pyarrow as pa
 
     from qcache_spark.plans.local import Unsupported
@@ -789,6 +801,55 @@ def test_update_arrow_declines_outside_its_subset(q):
     with pytest.raises(Unsupported):
         update_arrow(q, table)
 
+
+
+MALFORMED_UPDATES = [
+    ({"update": [["nope", 0]], "where": ["==", "i", 1]}, "Unknown column in update"),
+    ({"update": [["i", 0]]}, "Update query requires a where clause"),
+    ({"update": [["i", 0]], "where": ["&", ["==", "i", 1], ["==", "j", 2]]}, "Unknown operator '&'"),
+    ({"update": [["i", 0]], "where": ["isnull", "i", "j"]}, "Invalid length of isnull query"),
+    ({"update": [["i", 0]], "where": ["isnull", "nope"]}, "Unknown column for 'isnull'"),
+    ({"update": [["i", 0]], "where": ["in", "i", 1]}, "Second argument to 'in' must be a list"),
+    ({"update": [["i", 0]], "where": ["in", "nope", [1]]}, "First argument to 'in' must be a column"),
+    ({"update": [["i", 0]], "where": ["in", "i", ["nope"]]}, "Unknown column"),
+    ({"update": [["i", 0]], "where": ["like", "s", "'a%'"]}, "Unknown operator 'like'"),
+    ({"update": [["i", 0]], "where": [["=="], "i", 1]}, "Unknown operator"),
+    ({"update": [["i", 0]], "where": ["==", "i"]}, "Invalid number of arguments"),
+    ({"update": [["i", 0]], "where": ["==", "i", "nope"]}, "Unknown column"),
+    ({"update": [["i", 0]], "where": ["==", "i", [1]]}, "Invalid update value"),
+    ({"update": [["i", 0]], "where": "i"}, "Expressions must be lists"),
+    ({"update": [["i", 0]], "where": []}, "Empty expression not allowed"),
+    ({"update": [["<<", "i", 1.5]], "where": ["==", "i", 1]}, "Shift amount must be an integer"),
+    ({"update": [[">>", "i", "j"]], "where": ["==", "i", 1]}, "Shift amount must be an integer"),
+    ({"update": [["//", "i", 2]], "where": ["==", "i", 1]}, "Invalid update operator"),
+    ({"update": [[["+"], "i", 2]], "where": ["==", "i", 1]}, "Invalid update operator"),
+    ({"update": [["+", "nope", 2]], "where": ["==", "i", 1]}, "Unknown column in update"),
+    ({"update": [["i", 1, 2, 3]], "where": ["==", "i", 1]}, "Invalid update clause"),
+    ({"update": ["i"], "where": ["==", "i", 1]}, "Invalid update clause"),
+    ({"update": {"i": 0}, "where": ["==", "i", 1]}, "Invalid update clause"),
+    ({"update": [["i", {"v": 1}]], "where": ["==", "i", 1]}, "Invalid update value"),
+    # a valid first clause does not let a malformed second one through
+    ({"update": [["i", 0], ["s", "nope"]], "where": ["==", "i", 1]}, "Unknown column"),
+]
+
+
+@pytest.mark.parametrize("q, message", MALFORMED_UPDATES)
+def test_malformed_update_is_one_error_on_both_executors(spark, q, message):
+    """One walker checks a statement for both executors, so the
+    Catalyst and the Arrow update reject it with the same message,
+    before either builds anything."""
+    import pyarrow as pa
+
+    from qcache_spark.plans.update import update_arrow
+
+    table = pa.table({"i": pa.array([1, 2], pa.int64()), "j": pa.array([2, 2], pa.int64()),
+                      "s": ["a", None]})
+    with pytest.raises(MalformedQueryException) as on_arrow:
+        update_arrow(q, table)
+    with pytest.raises(MalformedQueryException) as on_spark:
+        compile_update(q, spark.createDataFrame(table))
+    assert str(on_arrow.value) == str(on_spark.value)
+    assert str(on_arrow.value).startswith(message)
 
 
 @pytest.mark.parametrize(

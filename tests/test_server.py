@@ -4,8 +4,10 @@ CSV/JSON combos, pagination header, type hints, stand-in columns,
 updates, eviction, statistics, error codes."""
 from __future__ import annotations
 
+import contextlib
 import gzip
 import json
+import threading
 import urllib.error
 import urllib.parse
 import urllib.request
@@ -25,12 +27,12 @@ def server(spark):
     srv.shutdown()
 
 
-def call(base, method, path, body=None, headers=None):
+def call(base, method, path, body=None, headers=None, timeout=None):
     req = urllib.request.Request(
         base + path, data=body, method=method, headers=headers or {}
     )
     try:
-        with urllib.request.urlopen(req) as resp:
+        with urllib.request.urlopen(req, timeout=timeout) as resp:
             return resp.status, resp.read(), dict(resp.headers)
     except urllib.error.HTTPError as e:
         return e.code, e.read(), dict(e.headers)
@@ -1169,11 +1171,11 @@ def test_pipeline_snapshot_diff(server):
     m = {r["metric"]: r["n_rows"] for r in json.loads(body)}
     assert m["changed"] == 0 and m["unchanged"] == 2 and "col:qty" not in m
     # unknown right dataset -> 404; bad keys -> 400
-    code, _, _ = pipeline(
+    code, body, _ = pipeline(
         server, "snap_old",
         {"op": "snapshot_diff", "params": {"right": "nope", "keys": ["id"]}},
     )
-    assert code == 404
+    assert code == 404 and json.loads(body) == {"error": "Unknown dataset: nope"}
     code, _, _ = pipeline(
         server, "snap_old",
         {"op": "snapshot_diff", "params": {"right": "snap_new", "keys": []}},
@@ -1930,3 +1932,95 @@ def test_a_failed_boot_fails_the_requests_that_need_spark():
     finally:
         srv.shutdown()
         srv.server_close()
+
+
+@contextlib.contextmanager
+def _server_without_spark(boot):
+    """A server whose session factory blocks until the block exits
+    (`boot="blocked"`) or has already raised (`"failed"`): whatever it
+    answers needed no Spark."""
+    released = threading.Event()
+
+    def factory():
+        if boot == "blocked":
+            released.wait(120)
+        raise RuntimeError("no JVM here")
+
+    srv = make_server(factory)
+    serve_forever_in_thread(srv)
+    try:
+        if boot == "failed":
+            assert isinstance(srv.session.exception(60), RuntimeError)
+        yield f"http://127.0.0.1:{srv.server_address[1]}", srv
+    finally:
+        released.set()
+        srv.session.exception(60)
+        srv.shutdown()
+        srv.server_close()
+
+
+@pytest.mark.parametrize(
+    "path,body",
+    [
+        ("/qcache/dataset/k/q", b'{"where": ["==", "a", "\xff"]}'),
+        ("/qcache/dataset/k/pipeline", b'{"op": "\xff"}'),
+        ("/qcache/dataset/k/explain", b'{"where": ["==", "a", "\xff"]}'),
+        ("/qcache/sql", b"SELECT '\xff'"),
+    ],
+)
+def test_query_body_that_is_not_utf8_is_400(path, body):
+    with _server_without_spark("blocked") as (base, _):
+        code, resp, _ = call(base, "POST", path, body, {"Accept": "application/json"}, timeout=5)
+    assert code == 400, resp
+    assert "utf-8" in json.loads(resp)["error"]
+
+
+@pytest.mark.parametrize(
+    "method,path,body",
+    [
+        ("GET", "/qcache/dataset/absent?q=%7B%7D", None),
+        ("POST", "/qcache/dataset/absent/q", b"{}"),
+        ("POST", "/qcache/dataset/absent/explain", b"{}"),
+        ("POST", "/qcache/dataset/absent/pipeline", b'{"op": "cardinality"}'),
+    ],
+)
+def test_unknown_dataset_is_one_404(server, method, path, body):
+    """Every route that reads a dataset answers an unknown key with the
+    same 404 body and counts one miss and no hit."""
+    call(server, "GET", "/qcache/statistics")  # reset the counters
+    code, resp, _ = call(server, method, path, body, {"Accept": "application/json"})
+    assert code == 404
+    assert json.loads(resp) == {"error": "Unknown dataset: absent"}
+    snap = json.loads(call(server, "GET", "/qcache/statistics")[1])
+    assert snap.get("miss_count") == 1 and not snap.get("hit_count"), snap
+
+
+MALFORMED_RESIDENT_UPDATES = [
+    {"update": [["nope", 5]], "where": ["==", "foo", 1]},
+    {"update": [["bar", 5]]},
+    {"update": [["bar", 5]], "where": ["&", ["==", "foo", 1], ["==", "bar", 2]]},
+    {"update": [["<<", "bar", 1.5]], "where": ["==", "foo", 1]},
+    {"update": [["+", "bar", "nope"]], "where": ["==", "foo", 1]},
+]
+
+
+@pytest.mark.parametrize("upd", MALFORMED_RESIDENT_UPDATES)
+@pytest.mark.parametrize("boot", ["blocked", "failed"])
+def test_malformed_update_on_a_resident_key_needs_no_session(upd, boot):
+    """A malformed update on a driver-resident key is a 400 at once,
+    whether the Spark boot is still running or has failed; even the
+    statements the Arrow update does not apply are checked first."""
+    import time
+
+    with _server_without_spark(boot) as (base, srv):
+        assert store(base, "upd")[0] == 201
+        assert srv.RequestHandlerClass.catalog.get("upd").table is not None
+        t0 = time.perf_counter()
+        code, body, _ = call(base, "POST", "/qcache/dataset/upd/q", json.dumps(upd).encode(),
+                             {"Accept": "application/json"}, timeout=5)
+        assert code == 400, body
+        assert time.perf_counter() - t0 < 1.0
+        assert srv.session.done() == (boot == "failed")
+        code, body, _ = query(base, "upd", {"order_by": ["foo"]})
+        assert code == 200 and json.loads(body) == [
+            {"foo": 1, "bar": 10}, {"foo": 2, "bar": 20}, {"foo": 3, "bar": 30}]
