@@ -1,10 +1,11 @@
 """Size-thresholded router: qcache grammar queries on SMALL tables run
-on the driver-local executor (plans/local.py); everything else —
-larger tables, unsupported constructs, or ANY local-executor error —
-takes the Catalyst plan. One router (`execute`) serves two sources:
+on the driver executor (plans/arrow.py) over an Arrow table, in place;
+everything else — larger tables, unsupported constructs, or ANY
+driver-executor error — takes the Catalyst plan. One router
+(`execute`) serves two sources:
 - the server's driver-resident datasets, kept by the catalog as Arrow
-  tables (`resident_table`) and converted per query (`arrow_loader`);
-- parquet tables read through a cached pandas mirror (`try_local`,
+  tables (`resident_table`);
+- parquet tables read through a cached Arrow mirror (`try_local`,
   used by `__spark_entry__._gq`).
 
 Rationale (VERDICT r1, task 3): the reference's design point is small
@@ -23,17 +24,11 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Row, SparkSession
-from pyspark.sql import types as T
-
-# Copy-on-write makes column pruning and row filtering lazy views
-# instead of eager block copies — the difference between ~90 ms and
-# ~160 ms on a 600 k-row aggregate. It is the pandas-3 default; set
-# explicitly for pandas 2.
-pd.set_option("mode.copy_on_write", True)
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from .errors import MalformedQueryException
 from .plans import grammar as g
-from .plans.local import LocalResult, Unsupported, execute_local
+from .plans.arrow import LocalResult, Unsupported, execute_local, plain
 from .plans.update import update_arrow
 
 # The size gate of both local sources, 64 MiB by default; the env var
@@ -48,13 +43,13 @@ from .plans.update import update_arrow
 #   277 vs 872 ms at 50 MiB and 1 020 vs 1 536 ms at 201 MiB,
 #   filtered_page 149 vs 960 ms and 454 vs 1 888 ms. Up to 3x the gate
 #   there is no latency crossover, so the gate bounds driver memory
-#   (every read converts the columns it touches to pandas), not speed.
-#   On a cluster Catalyst scales out and the crossover moves down.
+#   (the table, plus the columns a read filters, sorts or groups), not
+#   speed. On a cluster Catalyst scales out and the crossover moves down.
 MAX_FASTPATH_BYTES = int(
     os.environ.get("QCACHE_SPARK_FASTPATH_MAX_BYTES", str(64 * 1024 * 1024))
 )
 
-_MIRROR_CACHE: dict[tuple[str, float], pd.DataFrame] = {}
+_MIRROR_CACHE: dict[tuple[str, float], pa.Table] = {}
 
 
 def _table_path(sf_dir: str, name: str) -> str:
@@ -73,92 +68,48 @@ def _parquet_size(path: str) -> int:
     return 1 << 62  # missing → let the Spark path raise its error
 
 
-class _SharedUniques(dict):
-    """The mirror's factorize uniques by column. pandas 2.2 deep-copies
-    `DataFrame.attrs` into every frame derived from the mirror, so a
-    deep copy returns this same mapping: the uniques are never
-    modified, and copying them took an equality filter on a
-    5000-value column of 600 k rows from 3.1 to 4.2 ms (4 CPUs)."""
-
-    def __deepcopy__(self, memo):
-        return self
-
-
-def _load_mirror(path: str) -> pd.DataFrame:
+def _load_mirror(path: str) -> pa.Table:
+    """A parquet table as the driver executor's Arrow table, cached by
+    path and mtime: a string column of at most max(1000, rows/100)
+    distinct values is read as a dictionary (its dictionary pages
+    kept, so predicates and grouping run once per distinct value), and
+    nanosecond timestamps truncate to micros, as load_table does."""
     key = (path, os.path.getmtime(path))
-    pdf = _MIRROR_CACHE.get(key)
-    if pdf is None:
-        import pyarrow.dataset as ds
-        import pyarrow.types as pat
+    table = _MIRROR_CACHE.get(key)
+    if table is None:
+        import pyarrow.parquet as pq  # the server never reads a mirror
 
-        tbl = ds.dataset(path).to_table()
-        for field in tbl.schema:
-            if (pat.is_integer(field.type) or pat.is_boolean(field.type)) and (
-                tbl.column(field.name).null_count > 0
-            ):
-                # int/bool with nulls decays to float/object in pandas
-                # and would change the result schema vs the Spark path
-                raise Unsupported(f"nullable {field.type} column {field.name}")
-        pdf = tbl.to_pandas()
-        for col in pdf.columns:
-            if pd.api.types.is_datetime64_any_dtype(pdf[col].dtype):
-                # match load_table: nanos truncate to micros
-                pdf[col] = pdf[col].astype("datetime64[us]")
-        # Pre-factorize low-cardinality string columns once per mirror:
-        # group-by then hashes int64 codes instead of strings (the
-        # dominant cost of a 600 k-row string groupby). The companion
-        # code columns ride through filters like any other column.
-        uniques_map = _SharedUniques()
-        for col in list(pdf.columns):
-            s = pdf[col]
-            if s.dtype == object and len(s) > 10000:
-                codes, uniques = pd.factorize(s, use_na_sentinel=False)
-                if len(uniques) <= max(1000, len(s) // 100):
-                    pdf[f"__fcode_{col}"] = codes.astype("int64")
-                    uniques_map[col] = uniques
-        pdf.attrs["fcode_uniques"] = uniques_map
+        schema = pq.ParquetDataset(path).schema  # a file or a directory of them
+        strings = [f.name for f in schema if pa.types.is_string(f.type)]
+        table = pq.read_table(path, read_dictionary=strings).unify_dictionaries()
+        table = table.combine_chunks()
+        limit = max(1000, table.num_rows // 100)
+        for i, field in enumerate(table.schema):
+            column = table.column(i)
+            if pa.types.is_dictionary(field.type):
+                if column.num_chunks and len(column.chunk(0).dictionary) > limit:
+                    table = table.set_column(i, field.name, plain(column))
+            elif pa.types.is_timestamp(field.type) and field.type.unit == "ns":
+                us = pa.timestamp("us", field.type.tz)
+                table = table.set_column(i, field.name, column.cast(us, safe=False))
         if len(_MIRROR_CACHE) > 32:
             _MIRROR_CACHE.clear()
-        _MIRROR_CACHE[key] = pdf
-    return pdf
+        _MIRROR_CACHE[key] = table
+    return table
 
 
-def _to_spark(spark: SparkSession, pdf: pd.DataFrame) -> DataFrame:
-    fields = []
-    for col in pdf.columns:
-        dt = pdf[col].dtype
-        if pd.api.types.is_datetime64_any_dtype(dt):
-            # Naive datetimes (the parquet TIMESTAMP(NANOS) events table
-            # via pyarrow) must surface as timestamp_ntz to match what
-            # the Spark 4.1 parquet reader yields on the Spark path;
-            # tz-aware ones are true instants → timestamp (ltz).
-            if getattr(dt, "tz", None) is not None:
-                spark_t: T.DataType = T.TimestampType()
-            else:
-                spark_t = T.TimestampNTZType()
-        elif dt == np.int64:
-            spark_t = T.LongType()
-        elif dt == np.int32:
-            spark_t = T.IntegerType()
-        elif dt == np.float64:
-            spark_t = T.DoubleType()
-        elif dt == np.float32:
-            spark_t = T.FloatType()
-        elif dt == np.bool_:
-            spark_t = T.BooleanType()
-        elif dt == object or pd.api.types.is_string_dtype(dt):
-            non_null = pdf[col].dropna()
-            if len(non_null) and not all(isinstance(v, str) for v in non_null.iloc[:100]):
-                raise Unsupported(f"non-string object column {col}")
-            spark_t = T.StringType()
-        else:
-            raise Unsupported(f"dtype {dt} of column {col}")
-        fields.append(T.StructField(str(col), spark_t, True))
+def _to_spark(spark: SparkSession, table: pa.Table) -> DataFrame:
+    """A local result as a Spark frame with the schema the Spark path
+    gives: PySpark's own Arrow type mapping, with a tz-naive timestamp
+    (the parquet TIMESTAMP(NANOS) events table) as timestamp_ntz, the
+    type the Spark 4.1 parquet reader yields."""
+    table = pa.table([plain(c) for c in table.columns], names=table.column_names)
+    schema = from_arrow_schema(table.schema, prefer_timestamp_ntz=True)
     # createDataFrame slices the Arrow batches across defaultParallelism
     # (32) partitions; a later collect/toPandas then schedules 32 tasks
     # for a result that is small by contract (post-slice). One partition
     # halves the fetch round trip (~63 ms -> ~32 ms measured).
-    return spark.createDataFrame(pdf, schema=T.StructType(fields)).coalesce(1)
+    return spark.createDataFrame(table, schema=schema).coalesce(1)
 
 
 def _node_columns(node, out: set) -> bool:
@@ -183,8 +134,8 @@ def _node_columns(node, out: set) -> bool:
 
 def referenced_input_columns(q) -> set | None:
     """Input columns a grammar query can touch, or None for 'all'
-    (crude column pruning for the local mirror — the pandas analogue
-    of the ReadSchema pruning Catalyst does on the Spark path)."""
+    (crude column pruning for the driver executor — the analogue of
+    the ReadSchema pruning Catalyst does on the Spark path)."""
     if not isinstance(q, dict):
         return None
     if g.CLAUSE_FROM in q:
@@ -215,27 +166,26 @@ def referenced_input_columns(q) -> set | None:
     return cols
 
 
-def execute(q, load, enum_columns: frozenset = frozenset()) -> LocalResult | None:
+def execute(q, table: pa.Table, enum_columns: frozenset = frozenset()) -> LocalResult | None:
     """The small-table router, shared by the server and
-    `__spark_entry__._gq`: run `q` on the driver-local executor over
-    the pandas frame `load(columns)` returns for the columns the query
-    reads (`load(None)` gives every column; `load` returns None when
-    it cannot prune to `columns`). Returns None when the caller should
-    take the Catalyst plan: the executor declined (`Unsupported`) or
-    hit any other local gap. MalformedQueryException propagates, so an
-    invalid query gets the same 400 from either executor."""
+    `__spark_entry__._gq`: run `q` on the driver executor over the
+    columns of `table` the query reads (a zero-copy `select`). Returns
+    None when the caller should take the Catalyst plan: the executor
+    declined (`Unsupported`) or hit any other local gap.
+    MalformedQueryException propagates, so an invalid query gets the
+    same 400 from either executor."""
     try:
         cols = referenced_input_columns(q)
-        pruned = load(cols) if cols is not None else None
-        if pruned is not None:
+        if cols is not None and cols.issubset(table.column_names):
             try:
-                # pruned run: filter/groupby copy only touched columns
+                # pruned run: filters, sorts and groups touch only these
+                pruned = table.select([c for c in table.column_names if c in cols])
                 return execute_local(q, pruned, enum_columns=enum_columns)
             except MalformedQueryException:
                 # a reference the walker missed could make the pruned
-                # frame 400 a valid query — re-validate unpruned
+                # table 400 a valid query — re-validate unpruned
                 pass
-        return execute_local(q, load(None), enum_columns=enum_columns)
+        return execute_local(q, table, enum_columns=enum_columns)
     except MalformedQueryException:
         raise
     except Exception:  # Unsupported, or a local gap: never fail the query
@@ -243,28 +193,21 @@ def execute(q, load, enum_columns: frozenset = frozenset()) -> LocalResult | Non
 
 
 def try_local(spark: SparkSession, sf_dir: str, table: str, q: dict):
-    """The router over a parquet table's pandas mirror: a Spark
+    """The router over a parquet table's Arrow mirror: a Spark
     DataFrame of the local result, or None when the caller should take
     the Catalyst plan (table too big, or the router declined)."""
     path = _table_path(sf_dir, table)
     if _parquet_size(path) > MAX_FASTPATH_BYTES:
         return None
     try:
-        pdf = _load_mirror(path)
-    except Exception:  # e.g. Unsupported nullable int column
+        mirror = _load_mirror(path)
+    except Exception:  # e.g. a file pyarrow cannot read
         return None
-
-    def load(cols):
-        if cols is None:
-            return pdf
-        if not cols.issubset(pdf.columns):
-            return None
-        return pdf[sorted(cols) + [
-            f"__fcode_{c}" for c in sorted(cols) if f"__fcode_{c}" in pdf.columns
-        ]]
-
-    result = execute(q, load)
-    return None if result is None else _to_spark(spark, result.sliced)
+    result = execute(q, mirror)
+    try:
+        return None if result is None else _to_spark(spark, result.sliced)
+    except TypeError:  # a column type Spark's Arrow mapping lacks
+        return None
 
 
 # -- driver-resident datasets ---------------------------------------
@@ -273,9 +216,8 @@ def resident_table(data, decide=None) -> pa.Table | None:
     """`data` (a pandas frame or an Arrow table) as a driver-resident
     Arrow table, or None when it must be stored in Spark instead: it
     is empty, larger than MAX_FASTPATH_BYTES, or has a column that is
-    not int64, float64, bool or string. An int64 or bool column must
-    also be null-free, since pandas would widen it on the way back.
-    Every string and int64 column of a pandas frame is stored in the
+    not int64, float64, bool or string (nulls allowed in each). Every
+    string and int64 column of a pandas frame is stored in the
     form `_decide` picks; so are the plain ones of an Arrow table that
     `decide` names (default: all of them), while its other columns
     keep their arrays."""
@@ -296,9 +238,7 @@ def resident_table(data, decide=None) -> pa.Table | None:
         return None  # e.g. an object column of mixed types
     for f in table.schema:
         typ = f.type.value_type if pa.types.is_dictionary(f.type) else f.type
-        if typ not in _RESIDENT_TYPES or (
-            typ in _NULL_FREE_TYPES and table.column(f.name).null_count
-        ):
+        if typ not in _RESIDENT_TYPES:
             return None
     if table.num_rows == 0 or resident_size(table) > MAX_FASTPATH_BYTES:
         return None
@@ -306,7 +246,6 @@ def resident_table(data, decide=None) -> pa.Table | None:
 
 
 _RESIDENT_TYPES = (pa.int64(), pa.float64(), pa.bool_(), pa.string())
-_NULL_FREE_TYPES = (pa.int64(), pa.bool_())
 _ENCODED_TYPES = (pa.string(), pa.int64())
 _INDEX_TYPES = (pa.int8(), pa.int16(), pa.int32())
 
@@ -352,11 +291,11 @@ def _decide(codes: np.ndarray, dictionary: pa.Array) -> pa.Array | None:
         return dictionary  # every value distinct: it is the plain column
     index = next(t for t in _INDEX_TYPES if k <= 1 << (t.bit_width - 1))
     if dictionary.type == pa.int64():
-        plain = 8 * n
+        plain_bytes = 8 * n
     else:  # an int32 offset and the UTF-8 bytes of every value
         lengths = np.append(pc.binary_length(dictionary).to_numpy(), 0)
-        plain = 4 * n + int(lengths[codes].sum())
-    if n * index.bit_width // 8 + dictionary.nbytes >= plain:
+        plain_bytes = 4 * n + int(lengths[codes].sum())
+    if n * index.bit_width // 8 + dictionary.nbytes >= plain_bytes:
         return None
     nulls = codes < 0
     indices = pa.array(codes.astype(index.to_pandas_dtype()), mask=nulls if nulls.any() else None)
@@ -375,46 +314,6 @@ def resident_size(table: pa.Table) -> int:
     return table.nbytes + 100
 
 
-def _decoded(chunk: pa.DictionaryArray) -> np.ndarray:
-    """A dictionary chunk as numpy: int64, or object strings that
-    share the dictionary's Python objects, with None for a null."""
-    values = chunk.dictionary.to_numpy(zero_copy_only=False)
-    if not chunk.null_count:
-        return values.take(chunk.indices.to_numpy())
-    values = np.append(values, None)
-    return values.take(chunk.indices.cast(pa.int32()).fill_null(len(values) - 1).to_numpy())
-
-
-def _to_pandas(table: pa.Table) -> pd.DataFrame:
-    """A driver-resident table as the executor's frame: a dictionary
-    column is decoded to the plain dtype, never to a Categorical,
-    whose comparisons, sorts and `kind` differ."""
-    columns = {}
-    for name, column in zip(table.column_names, table.columns):
-        if pa.types.is_dictionary(column.type):
-            parts = [_decoded(c) for c in column.chunks]
-            columns[name] = parts[0] if len(parts) == 1 else np.concatenate(parts)
-        else:
-            columns[name] = column.to_pandas()
-    # the index keeps the row count when no column is read (a count)
-    return pd.DataFrame(columns, index=pd.RangeIndex(table.num_rows), copy=False)
-
-
-def arrow_loader(table: pa.Table):
-    """`execute`'s `load` over a driver-resident table: the columns a
-    query reads, in table order, converted to pandas per call."""
-    names = table.column_names
-
-    def load(cols):
-        if cols is None:
-            return _to_pandas(table)
-        if not cols.issubset(names):
-            return None
-        return _to_pandas(table.select([c for c in names if c in cols]))
-
-    return load
-
-
 def update(q: dict, table: pa.Table) -> pa.Table | None:
     """An update statement applied to a driver-resident table on the
     driver (plans/update.py:update_arrow), each assigned column stored
@@ -429,9 +328,9 @@ def update(q: dict, table: pa.Table) -> pa.Table | None:
     return resident_table(updated, {name for name, _ in q["update"]})
 
 
-def result_rows(pdf: pd.DataFrame) -> list[Row]:
+def result_rows(table: pa.Table) -> list[Row]:
     """A local result page as Spark Rows of plain Python values, so it
     renders through the same CSV/JSON code as collected Catalyst rows."""
-    make = Row(*[str(c) for c in pdf.columns])
-    values = [pdf.iloc[:, i].tolist() for i in range(pdf.shape[1])]
+    make = Row(*table.column_names)
+    values = [column.to_pylist() for column in table.columns]
     return [make(*row) for row in zip(*values)] if values else []

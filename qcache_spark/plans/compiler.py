@@ -28,7 +28,14 @@ from pyspark.sql import types as T
 from . import grammar
 from .aggregates import AGGREGATE_FUNCTIONS
 from .expressions import BINARY_OPERATORS, UNARY_FUNCTIONS
-from .filters import INTEGRAL_TYPES, _false_safe, _true_safe, marker_join, semi_join
+from .filters import (
+    INTEGRAL_TYPES,
+    _false_safe,
+    _true_safe,
+    java_regex,
+    marker_join,
+    semi_join,
+)
 
 
 @dataclass
@@ -97,7 +104,7 @@ class _Catalyst:
 
     def rlike(self, df, name, regex):
         col = F.col(name)
-        return _false_safe(col.rlike(regex), col)
+        return _false_safe(col.rlike(java_regex(regex)), col)
 
     def contains(self, df, name, needle):
         col = F.col(name)

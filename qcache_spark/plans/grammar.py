@@ -10,22 +10,22 @@ the engine running it: the clause set and order, the node shapes, the
 operator, function and aggregate names, and every
 MalformedQueryException a query can raise. `run` walks a query and
 calls the primitives of an `Executor`. The Catalyst compiler
-(compiler.py) and the driver-local pandas executor (local.py) each
-implement them, so the two differ in speed but never in which queries
-they reject.
+(compiler.py) and the driver executor over Arrow tables (arrow.py)
+each implement them, so the two differ in speed but never in which
+queries they reject.
 
 Leaf rules (reference pandas_filter.py:15-25): numbers and booleans are
 literals, `'quoted strings'` are string literals, bare strings are
-column references. Filter predicates follow pandas two-valued null
-semantics: a comparison or match with null is False (`!=` is True),
+column references. Filter predicates follow the reference's pandas
+two-valued null semantics: a comparison or match with null is False (`!=` is True),
 and `!`/`&`/`|` combine those plain booleans.
 
 Types: where the executor knows a column's kind, operands must agree.
 A comparison needs two numbers, two strings or two booleans; an
 arithmetic or bitwise operator and a math function need numbers. Spark
-casts across kinds (and fails at run time when the cast does), pandas
-compares by identity, so a mixed-kind query is a 400 on both. The one
-cast both keep is a quoted literal that spells a number (`'1000.5'`)
+casts across kinds (and fails at run time when the cast does), the
+reference's pandas compares by identity, so a mixed-kind query is a
+400 on both executors. The one cast kept is a quoted literal that spells a number (`'1000.5'`)
 where a number is needed: against a numeric operand or in arithmetic
 it reads as that number. A boolean never compares with a number: under
 ANSI mode Catalyst refuses `flag == 1` at analysis.
@@ -65,8 +65,7 @@ QUERY_CLAUSES = {
     CLAUSE_LIMIT,
 }
 
-# Python's operators build the comparison on a Spark Column and on a
-# pandas Series alike.
+# Python's operators build the comparison on a Spark Column.
 COMPARISONS = {
     "==": operator.eq,
     "!=": operator.ne,
@@ -109,6 +108,8 @@ GROUPING_MODES = ("rollup", "cube", "grouping_sets")
 
 ALIAS_STRING = r"^([A-Za-z0-9_-]+)$"
 ALIAS_RE = re.compile(ALIAS_STRING)
+# A regex group name that Java's (Catalyst's) regex engine can hold
+JAVA_GROUP_NAME = re.compile(r"[A-Za-z][A-Za-z0-9]*")
 
 
 def is_quoted(s: str) -> bool:
@@ -237,8 +238,7 @@ class _Walk:
             frame = self.query(q[CLAUSE_FROM], frame)[0]
 
         group_by = q.get(CLAUSE_GROUP_BY)
-        # With a group_by the filter is handed to the aggregation (the
-        # pandas executor fuses it into the group codes).
+        # With a group_by the filter is handed to the aggregation.
         frame, where = self.where(frame, q.get(CLAUSE_WHERE), defer=bool(group_by))
         grouping = None
         if isinstance(group_by, dict):
@@ -494,9 +494,14 @@ class _Predicate:
         name, pattern = self._string_column(q, "like", "Invalid column type for (i)like")
         regex = like_regex(q[0], pattern)
         try:
-            re.compile(regex)
+            groups = re.compile(regex).groupindex
         except re.error as e:
             raise_malformed(f"Invalid (i)like pattern: {e}", q)
+        for group in groups:
+            if not JAVA_GROUP_NAME.fullmatch(group):
+                raise_malformed(
+                    f"Invalid (i)like pattern: group name {group!r} must be "
+                    "a letter then letters or digits", q)
         return self.ex.rlike(self.frame, name, regex)
 
     def contains(self, q):

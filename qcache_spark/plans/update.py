@@ -37,7 +37,6 @@ Semantics preserved from the reference:
 from __future__ import annotations
 
 import functools
-import math
 import operator
 from typing import NamedTuple
 
@@ -49,7 +48,7 @@ from pyspark.sql import functions as F
 from ..errors import assert_len, raise_malformed
 from .expressions import BINARY_OPERATORS
 from .grammar import COMPARISONS, SHIFTS, _named, is_quoted, unquote
-from .local import Unsupported
+from . import arrow
 
 # `[operator, column, value]`: column = column <operator> value
 UPDATE_OPERATORS = frozenset({"+", "-", "*", "/", "%", "**", "&", "|", "^"}) | SHIFTS
@@ -179,77 +178,34 @@ def compile_update(q: dict, df: DataFrame) -> DataFrame:
     return run(q, df, _Catalyst()).select(*df.columns)
 
 
-_ARROW_COMPARISONS = {
-    "==": pc.equal,
-    "!=": pc.not_equal,
-    "<": pc.less,
-    "<=": pc.less_equal,
-    ">": pc.greater,
-    ">=": pc.greater_equal,
-}
-_NUMBER_TYPES = (pa.int64(), pa.float64())
-
-
-def _arrow_literal(value, column: pa.ChunkedArray, assign: bool = False) -> pa.Scalar:
-    """`value` as a scalar of the column's own kind: a string for a
-    string column, a bool for a bool column, a finite number for a
-    numeric one (an assignment must keep the column's type). A
-    dictionary column's kind is its value type. Raises Unsupported
-    for anything else, e.g. a column reference, null, or a kind Spark
-    would cast."""
-    typ = column.type
-    if pa.types.is_dictionary(typ):
-        typ = typ.value_type
-    if isinstance(value, str):
-        if typ == pa.string():
-            return pa.scalar(value, pa.string())
-    elif isinstance(value, bool):
-        if typ == pa.bool_():
-            return pa.scalar(value, pa.bool_())
-    elif isinstance(value, int):
-        if typ in _NUMBER_TYPES and -(1 << 63) <= value < (1 << 63):
-            return pa.scalar(value if typ == pa.int64() else float(value), typ)
-    elif isinstance(value, float) and math.isfinite(value):
-        if typ == pa.float64() or (typ == pa.int64() and not assign):
-            return pa.scalar(value, pa.float64())
-    raise Unsupported(f"update literal {value!r} for a {typ} column")
-
-
 class _Arrow:
-    """pyarrow.compute over the table; null compares False (True for
-    `!=`)."""
+    """pyarrow.compute over the table, with the read executor's
+    literal, compare and mask primitives (arrow.py)."""
 
     def columns(self, table):
         return table.column_names
 
     def isnull(self, table, name):
-        return pc.is_null(table.column(name))
+        return arrow.predicate(pc.is_null(table.column(name)), True)
 
     def isin(self, table, name, values):
-        column = table.column(name)
-        masks = [pc.equal(column, _arrow_literal(v, column)) for v in values]
-        if not masks:
-            return pa.repeat(False, len(table))
-        return pc.fill_null(functools.reduce(pc.or_kleene, masks), False)
+        return arrow.isin(table.column(name), values)
 
     def compare(self, table, op, left, right):
         if not isinstance(left, _Column):
-            raise Unsupported("update where on a literal")
+            raise arrow.Unsupported("update where on a literal")
         column = table.column(left.name)
-        if column.type == pa.float64() and pc.any(pc.is_nan(column)).as_py():
-            # Spark orders NaN above every number; Arrow compares it False
-            raise Unsupported("NaN in a compared float column")
-        mask = _ARROW_COMPARISONS[op](column, _arrow_literal(right, column))
-        return pc.fill_null(mask, op == "!=")
+        result = arrow.compare(op, column, arrow.literal(right, column.type))
+        return arrow.predicate(result, op == "!=")
 
     def fix_mask(self, table, mask):
-        return table, mask  # an array: assignments cannot move it
+        return table, pa.array(mask)  # an array: assignments cannot move it
 
     def assign(self, table, mask, op, name, value):
         if op is not None:
-            raise Unsupported("self-referring update")
+            raise arrow.Unsupported("self-referring update")
         column = table.column(name)
-        new = pc.if_else(mask, _arrow_literal(value, column, assign=True), column)
+        new = pc.if_else(mask, arrow.literal(value, column.type, assign=True), column)
         # a dictionary column comes back plain
         return table.set_column(table.column_names.index(name), name, new)
 
@@ -262,4 +218,7 @@ def update_arrow(q: dict, table: pa.Table) -> pa.Table:
     computed with no Spark job. Raises MalformedQueryException for a
     malformed statement, like `compile_update`, and Unsupported for
     any other valid one, which the caller then compiles on Spark."""
-    return run(q, table, _Arrow())
+    try:
+        return run(q, table, _Arrow())
+    except pa.ArrowException as exc:
+        raise arrow.Unsupported(str(exc)) from exc

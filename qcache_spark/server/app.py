@@ -515,13 +515,11 @@ class QCacheHandler(BaseHTTPRequestHandler):
         stream = stream in ("csv", "true", "1")
         local = None
         if item.table is not None and not stand_ins and not stream:
-            local = fastpath.execute(
-                q, fastpath.arrow_loader(item.table), item.enum_columns
-            )
+            local = fastpath.execute(q, item.table, item.enum_columns)
             self.stats.inc("local_fallback_count" if local is None else "local_query_count")
         if local is not None:
-            columns = list(local.sliced.columns)
-            if 0 < self.max_result_rows < len(local.sliced):
+            columns = local.sliced.column_names
+            if 0 < self.max_result_rows < local.sliced.num_rows:
                 self._too_many_rows()
                 return
             rows = fastpath.result_rows(local.sliced)

@@ -1,17 +1,19 @@
-"""Property-based differential gate for the driver-local executor:
+"""Property-based differential gate for the driver executor:
 random full query dicts (filters, aliases, aggregation, distinct,
-order/slice) run through BOTH plans/local.py and the Catalyst
-compiler over the same rows; any value divergence fails. This is the
-fastpath's wrong-answer insurance beyond the hand-written 42-case
-battery in test_local_parity.py — null semantics, dtype edges, and
-clause interactions get explored instead of enumerated."""
+order/slice) run through BOTH plans/arrow.py and the Catalyst
+compiler over the same Arrow table, the executor once on its plain
+form and once with every string and int64 column dictionary-encoded,
+as a resident table may store them; any value divergence fails. This
+is the fastpath's wrong-answer insurance beyond the hand-written
+battery in test_local_parity.py — null and NaN semantics, dtype edges,
+and clause interactions get explored instead of enumerated."""
 from __future__ import annotations
 
 import math
 import os
 import sys
 
-import pandas as pd
+import pyarrow as pa
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -20,7 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from qcache_spark import compile_query
 from qcache_spark.errors import MalformedQueryException
-from qcache_spark.plans.local import Unsupported, execute_local
+from qcache_spark.plans.arrow import Unsupported, execute_local
 
 ROWS = [
     {"rid": 0, "i": 1, "f": 1.5, "s": "abc", "b": True},
@@ -34,7 +36,14 @@ ROWS = [
     # negative money-scale tie: -2.00005 * 10000 is EXACTLY -20000.5,
     # exercising msum/dsum's away-from-zero rounding on negatives
     {"rid": 8, "i": -3, "f": -2.00005, "s": "neg", "b": True},
+    # NaN beside the nulls: equal to itself, above every number
+    {"rid": 9, "i": 4, "f": float("nan"), "s": "xyz", "b": False},
 ]
+SCHEMA = pa.schema([("rid", pa.int64()), ("i", pa.int64()), ("f", pa.float64()),
+                    ("s", pa.string()), ("b", pa.bool_())])
+TABLE = pa.Table.from_pylist(ROWS, SCHEMA)
+ENCODED = pa.table([c.dictionary_encode() if f.type in (pa.string(), pa.int64()) else c
+                    for f, c in zip(SCHEMA, TABLE.columns)], names=SCHEMA.names)
 
 CMP = ["==", "!=", "<", "<=", ">", ">="]
 
@@ -168,22 +177,15 @@ def _norm(v):
     return str(v)
 
 
-def _pdf_rows(pdf: pd.DataFrame, cols):
-    out = []
-    for _, r in pdf.iterrows():
-        out.append(tuple(
-            _norm(None if pd.isna(r[c]) and not isinstance(r[c], str) else r[c])
-            for c in cols
-        ))
-    return sorted(out)
+def _table_rows(table: pa.Table, cols):
+    return sorted(tuple(_norm(r[c]) for c in cols) for r in table.to_pylist())
 
 
 @pytest.fixture(scope="module")
-def frames(spark):
-    sdf = spark.createDataFrame(pd.DataFrame(ROWS)).coalesce(1).cache()
+def frame(spark):
+    sdf = spark.createDataFrame(TABLE).coalesce(1).cache()
     sdf.count()
-    pdf = pd.DataFrame(ROWS)  # same construction both sides
-    return sdf, pdf
+    return sdf
 
 
 @settings(
@@ -192,27 +194,27 @@ def frames(spark):
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
 )
 @given(q=_query())
-def test_local_matches_catalyst(frames, q):
-    sdf, pdf = frames
+def test_local_matches_catalyst(frame, q):
     catalyst_error = None
     try:
-        result = compile_query(q, sdf)
+        result = compile_query(q, frame)
         spark_rows = result.sliced.collect()
     except Exception as exc:  # at plan build or at collect
         catalyst_error = exc
-    try:
-        local = execute_local(q, pdf)
-    except Unsupported:
-        return  # router would fall back — fine by contract
-    except MalformedQueryException:
-        # both backends must 400 identically
-        assert isinstance(catalyst_error, MalformedQueryException), (q, catalyst_error)
-        return
-    # a query Catalyst cannot run must not return rows locally
-    assert catalyst_error is None, (q, catalyst_error)
-    cols = result.sliced.columns
-    assert list(local.sliced.columns) == cols, (q, local.sliced.columns, cols)
-    got = _pdf_rows(local.sliced, cols)
-    want = sorted(tuple(_norm(r[c]) for c in cols) for r in spark_rows)
-    assert got == want, (q, got, want)
-    assert local.unsliced_len == result.unsliced_len(), q
+    for table in (TABLE, ENCODED):
+        try:
+            local = execute_local(q, table)
+        except Unsupported:
+            continue  # router would fall back — fine by contract
+        except MalformedQueryException:
+            # both backends must 400 identically
+            assert isinstance(catalyst_error, MalformedQueryException), (q, catalyst_error)
+            continue
+        # a query Catalyst cannot run must not return rows locally
+        assert catalyst_error is None, (q, catalyst_error)
+        cols = result.sliced.columns
+        assert local.sliced.column_names == cols, (q, local.sliced.column_names, cols)
+        got = _table_rows(local.sliced, cols)
+        want = sorted(tuple(_norm(r[c]) for c in cols) for r in spark_rows)
+        assert got == want, (q, got, want)
+        assert local.unsliced_len == result.unsliced_len(), q

@@ -1,4 +1,4 @@
-"""Differential gate: the driver-local executor (plans/local.py) must
+"""Differential gate: the driver executor (plans/arrow.py) must
 produce IDENTICAL results — values and Spark schema — to the Catalyst
 compiler for every grammar construct. This is what lets the fastpath
 router serve small tables locally without a correctness risk."""
@@ -21,7 +21,7 @@ from qcache_spark.fastpath import (
     _to_spark,
     referenced_input_columns,
 )
-from qcache_spark.plans.local import execute_local
+from qcache_spark.plans.arrow import execute_local
 from qcache_spark.session import load_table
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
@@ -93,11 +93,35 @@ BATTERY = [
     ("strings", {"select": [["max", "name"], ["min", "none"]]}),
     ("strings", {"group_by": ["g"], "select": ["g", ["min", "name"], ["max", "none"]]}),
     ("strings", {"where": ["!=", "g", "'a'"], "group_by": ["g"], "select": ["g", ["max", "name"]]}),
+    # a named group is Python's spelling; Catalyst gets Java's
+    ("strings", {"where": ["like", "name", "'%(?P<n>o)%'"], "select": ["name"]}),
+    # outside the real domain a math function is NaN, log* is null
+    ("domain", {"select": ["k", ["=", "y", ["sqrt", "x"]]]}),
+    ("domain", {"select": ["k", ["=", "y", ["arcsin", "x"]]]}),
+    ("domain", {"select": ["k", ["=", "y", ["arccos", "x"]]]}),
+    ("domain", {"select": ["k", ["=", "y", ["arccosh", "x"]]]}),
+    ("domain", {"select": ["k", ["=", "y", ["arctanh", "x"]]]}),
+    ("domain", {"select": ["k", ["=", "y", ["**", "x", 0.5]], ["=", "z", ["**", 1, "x"]]]}),
+    ("domain", {"select": ["k", ["=", "y", ["log1p", "x"]], ["=", "z", ["log10", "x"]]]}),
+    # NaN equals itself and ranks above every number
+    ("domain", {"where": ["|", [">", "x", 1.5], ["==", "x", "x"]], "select": ["k", "x"]}),
+    ("domain", {"where": ["!", ["<=", "x", 0.5]], "select": ["k"]}),
+    ("domain", {"select": ["k", "x", ["=", "c", ["<", "x", 2]]], "order_by": ["-x", "k"], "limit": 4}),
+    ("domain", {"select": ["k", "x"], "order_by": ["x", "k"], "offset": 1, "limit": 3}),
+    ("domain", {"group_by": ["g"], "select": ["g", ["max", "x"], ["median", "k"]]}),
+    ("domain", {"group_by": ["g"], "select": ["g", ["median", "x"], ["count", "k"]]}),
+    ("domain", {"group_by": ["g"], "select": ["g", ["min", "x"], ["std", "k"]]}),
 ]
 
 # Battery tables written at test time: no sf table has a nullable
-# string column.
+# string column or a NaN.
+NAN = float("nan")
 TEST_TABLES = {
+    "domain": pa.table({
+        "k": pa.array(range(9), pa.int64()),
+        "g": ["a", "a", "a", "b", "b", "b", "c", "c", "d"],
+        "x": pa.array([-2.0, -1.0, 0.0, 0.5, 1.0, 2.0, None, NAN, NAN], pa.float64()),
+    }),
     "strings": pa.table({
         "g": pa.array(["a", "a", "b", "b", "c", "a"], pa.string()),
         "name": pa.array(["bob", None, None, "ann", None, "Zoe"], pa.string()),
@@ -133,11 +157,11 @@ def _rows(df):
 def test_local_matches_spark(spark, table_dir, idx):
     table, q = BATTERY[idx]
     sdf = compile_query(q, load_table(spark, table_dir(table), table)).sliced
-    pdf = _load_mirror(os.path.join(table_dir(table), f"{table}.parquet"))
+    mirror = _load_mirror(os.path.join(table_dir(table), f"{table}.parquet"))
     cols = referenced_input_columns(q)
-    if cols is not None and cols.issubset(pdf.columns):
-        pdf = pdf[sorted(cols)]
-    ldf = _to_spark(spark, execute_local(q, pdf).sliced)
+    if cols is not None and cols.issubset(mirror.column_names):
+        mirror = mirror.select(sorted(cols))
+    ldf = _to_spark(spark, execute_local(q, mirror).sliced)
     assert [(f.name, f.dataType.simpleString()) for f in sdf.schema.fields] == [
         (f.name, f.dataType.simpleString()) for f in ldf.schema.fields
     ]
@@ -186,39 +210,34 @@ def test_local_matches_spark(spark, table_dir, idx):
     ],
 )
 def test_local_errors_match_spark(spark, sf_dir, bad):
-    pdf = _load_mirror(os.path.join(sf_dir, "orders.parquet"))
+    mirror = _load_mirror(os.path.join(sf_dir, "orders.parquet"))
     with pytest.raises(MalformedQueryException):
         compile_query(bad, load_table(spark, sf_dir, "orders")).sliced.collect()
     with pytest.raises(MalformedQueryException):
-        execute_local(bad, pdf)
+        execute_local(bad, mirror)
 
 
 def test_empty_global_agg_declines(sf_dir):
-    # zero-row global aggregates cannot round-trip typed nulls through
-    # pandas — the local executor must decline so the router falls
-    # back to the Spark plan (which the oracle suite gates).
-    from qcache_spark.plans.local import Unsupported
+    # zero-row global aggregates are typed nulls: the local executor
+    # declines so the router falls back to the Spark plan (which the
+    # oracle suite gates).
+    from qcache_spark.plans.arrow import Unsupported
 
-    pdf = _load_mirror(os.path.join(sf_dir, "lineitem.parquet"))
+    mirror = _load_mirror(os.path.join(sf_dir, "lineitem.parquet"))
     with pytest.raises(Unsupported):
         execute_local(
             {"where": ["<", "l_quantity", -1], "select": [["sum", "l_quantity"]]},
-            pdf,
+            mirror,
         )
 
 
 def test_half_up_negative_ties_match_spark(spark):
     """Spark round() is HALF_UP = ties away from zero: round(-2.5) is
-    -3. The local mirror's _half_up must take the same side for
-    NEGATIVE ties (it used to round toward +inf). The chosen literals
-    scale to EXACT x.5 doubles (e.g. -2.00005 * 10000 == -20000.5),
-    so the tie branch is actually exercised end-to-end."""
+    -3. The local executor must take the same side for NEGATIVE ties.
+    The chosen literals scale to EXACT x.5 doubles (e.g. -2.00005 *
+    10000 == -20000.5), so the tie branch is actually exercised
+    end-to-end."""
     import pandas as pd
-
-    from qcache_spark.plans.local import _half_up
-
-    ties = pd.Series([-2.5, -0.5, 0.5, 2.5, -2.4, -2.6, 0.49999999999999994])
-    assert list(_half_up(ties)) == [-3.0, -1.0, 1.0, 3.0, -2.0, -3.0, 0.0]
 
     vals = [-2.00005, -0.00005, 2.00005, -3.00015, -7.62345, None]
     pdf = pd.DataFrame(
@@ -233,23 +252,22 @@ def test_half_up_negative_ties_match_spark(spark):
         "order_by": ["g"],
     }
     sdf = compile_query(q, spark.createDataFrame(pdf)).sliced
-    ldf = _to_spark(spark, execute_local(q, pdf).sliced)
+    ldf = _to_spark(spark, execute_local(q, pa.Table.from_pandas(pdf)).sliced)
     assert _rows(sdf) == _rows(ldf)
 
 
 def test_unsliced_len_matches(spark, sf_dir):
     q = {"select": ["o_orderkey"], "order_by": ["o_orderkey"], "offset": 5, "limit": 10}
     qr = compile_query(q, load_table(spark, sf_dir, "orders"))
-    pdf = _load_mirror(os.path.join(sf_dir, "orders.parquet"))
-    assert execute_local(q, pdf).unsliced_len == qr.unsliced_len()
+    mirror = _load_mirror(os.path.join(sf_dir, "orders.parquet"))
+    assert execute_local(q, mirror).unsliced_len == qr.unsliced_len()
 
 
 def test_fcode_fast_paths_match_spark(spark, tmp_path):
-    """The factorize-code predicate/distinct fast paths (r5 latency
-    work) only engage above 10k rows — larger than any sf0.001 table —
-    so exercise them explicitly: a 20k-row low-cardinality string
-    column WITH nulls, mirror-loaded (codes present), compared
-    query-for-query against the Catalyst path."""
+    """The mirror reads a low-cardinality string column as a
+    dictionary, whose predicates run once per distinct value: a
+    20k-row one WITH nulls, compared query-for-query against the
+    Catalyst path."""
     import pandas as pd
 
     n = 20000
@@ -260,7 +278,7 @@ def test_fcode_fast_paths_match_spark(spark, tmp_path):
     path = str(tmp_path / "cats.parquet")
     pdf.to_parquet(path)
     mirror = _load_mirror(path)
-    assert "__fcode_cat" in mirror.columns  # precondition: codes exist
+    assert pa.types.is_dictionary(mirror.schema.field("cat").type)  # precondition
 
     sdf = spark.read.parquet(path)
     queries = [
@@ -278,11 +296,11 @@ def test_fcode_fast_paths_match_spark(spark, tmp_path):
         local = execute_local(q, mirror).sliced
         catalyst = compile_query(q, sdf).sliced
         l_rows = sorted(
-            (tuple(_norm(v) for v in t) for t in local.itertuples(index=False)),
+            (tuple(_norm(v) for v in r.values()) for r in local.to_pylist()),
             key=repr,
         )
         c_rows = sorted(
-            (tuple(_norm(r[c]) for c in local.columns) for r in catalyst.collect()),
+            (tuple(_norm(r[c]) for c in local.column_names) for r in catalyst.collect()),
             key=repr,
         )
         assert l_rows == c_rows, q
@@ -300,7 +318,7 @@ def test_grammar_lives_only_in_grammar_module():
               "MalformedQueryException"}
     pkg = os.path.dirname(plans.__file__)
     offenders = []
-    for name in ("local.py", "filters.py", "expressions.py", "aggregates.py", "compiler.py"):
+    for name in ("arrow.py", "filters.py", "expressions.py", "aggregates.py", "compiler.py"):
         for node in ast.walk(ast.parse(open(os.path.join(pkg, name)).read())):
             if isinstance(node, ast.Call):
                 fn = node.func
@@ -308,6 +326,38 @@ def test_grammar_lives_only_in_grammar_module():
                 if called in checks:
                     offenders.append(f"{name}:{node.lineno}")
     assert not offenders, offenders
+
+
+def test_driver_executor_reads_arrow_in_place():
+    """The driver executor imports no pandas, and the router's read
+    path (`execute`, `try_local` with its mirror and Spark frame,
+    `result_rows`) converts nothing to pandas: a read runs on the
+    Arrow table where it lies."""
+    import ast
+
+    import qcache_spark.fastpath as fastpath
+    import qcache_spark.plans as plans
+
+    executor = ast.parse(open(os.path.join(os.path.dirname(plans.__file__), "arrow.py")).read())
+    imported = set()
+    for node in ast.walk(executor):
+        if isinstance(node, ast.Import):
+            imported |= {alias.name.split(".")[0] for alias in node.names}
+        elif isinstance(node, ast.ImportFrom) and node.module:
+            imported.add(node.module.split(".")[0])
+    assert "pandas" not in imported, imported
+
+    read_path = {"execute", "try_local", "_load_mirror", "_to_spark", "result_rows"}
+    router = ast.parse(open(fastpath.__file__).read())
+    defined = {fn.name for fn in router.body if isinstance(fn, ast.FunctionDef)}
+    assert read_path <= defined
+    conversions = [
+        f"{fn.name}:{node.lineno}"
+        for fn in router.body if isinstance(fn, ast.FunctionDef) and fn.name in read_path
+        for node in ast.walk(fn)
+        if isinstance(node, ast.Call) and getattr(node.func, "attr", None) == "to_pandas"
+    ]
+    assert not conversions, conversions
 
 
 def test_catalyst_tables_cover_grammar_names():

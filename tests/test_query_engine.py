@@ -776,7 +776,7 @@ def test_update_division_by_zero_yields_null(spark):
         {"update": [["i", 1 << 63]], "where": ["==", "i", 1]},
         {"update": [["i", 0]], "where": ["==", "s", 1]},
         {"update": [["i", 0]], "where": ["==", "i", "j"]},
-        {"update": [["i", 0]], "where": ["<", "f", 1.0]},
+        {"update": [["f", float("nan")]], "where": ["==", "i", 1]},
         {"update": [["i", 0]], "where": ["in", "s", ["'a'", None]]},
         {"update": [["i", 0]], "where": ["in", "i", ["j"]]},
         {"update": [["i", 0]], "where": ["==", 1, "i"]},
@@ -787,19 +787,38 @@ def test_update_arrow_declines_outside_its_subset(q):
     """The driver-side update takes literal assignments of the
     column's own kind under a column-vs-literal `where`; any other
     valid statement (here: self-referring, column values, null,
-    cross-kind, an ordered compare on a float column holding NaN, a
-    column in the in-list, a literal on the left) is left to
+    cross-kind, a NaN literal, a column in the in-list, a literal on
+    the left) is left to
     compile_update. Malformed statements raise on both executors
     (test_malformed_update_is_one_error_on_both_executors)."""
     import pyarrow as pa
 
-    from qcache_spark.plans.local import Unsupported
+    from qcache_spark.plans.arrow import Unsupported
     from qcache_spark.plans.update import update_arrow
 
     table = pa.table({"i": pa.array([1, 2], pa.int64()), "j": pa.array([2, 2], pa.int64()),
                       "f": [float("nan"), 1.5], "s": ["a", None]})
     with pytest.raises(Unsupported):
         update_arrow(q, table)
+
+
+@pytest.mark.parametrize("op", ["==", "!=", "<", "<=", ">", ">="])
+def test_update_arrow_compares_nan_like_spark(spark, op):
+    """NaN equals itself and ranks above every number, null matches
+    no comparison but `!=`: the Arrow update masks the rows Spark
+    masks."""
+    import pyarrow as pa
+
+    from qcache_spark.plans.update import update_arrow
+
+    nan = float("nan")
+    table = pa.table({"k": pa.array([0, 1, 2, 3], pa.int64()), "f": [nan, 1.5, None, -2.0]})
+    for literal in (1.5, 0, -3.5):
+        q = {"update": [["k", 9]], "where": [op, "f", literal]}
+        want = sorted((r["k"], repr(r["f"])) for r in compile_update(
+            q, spark.createDataFrame(table)).collect())
+        got = sorted((r["k"], repr(r["f"])) for r in update_arrow(q, table).to_pylist())
+        assert got == want, (q, got, want)
 
 
 
@@ -994,14 +1013,14 @@ def test_group_by_structured_malformed(spark):
 def test_group_by_structured_falls_back_to_spark(spark, sf_dir):
     """The local executor must decline structured group_by (Unsupported,
     not Malformed) so the router serves it from the Catalyst plan."""
-    from qcache_spark.plans.local import Unsupported, execute_local
+    import pyarrow as pa
 
-    import pandas as pd
+    from qcache_spark.plans.arrow import Unsupported, execute_local
 
     with pytest.raises(Unsupported):
         execute_local(
             {"group_by": {"rollup": ["g"]}, "select": ["g", ["sum", "v"]]},
-            pd.DataFrame({"g": ["a"], "v": [1]}),
+            pa.table({"g": ["a"], "v": [1]}),
         )
     # end-to-end through the router at a fastpath-eligible size
     from __spark_entry__ import _gq

@@ -1621,11 +1621,12 @@ ENCODED_BATTERY = [
 def test_resident_columns_follow_the_size_rule():
     """A string or int64 column is a dictionary with the narrowest
     index when that is smaller than the plain array; float, bool and
-    unique columns stay plain; the executor gets the plain dtypes."""
+    unique columns stay plain; decoded, the columns are the frame's."""
     import pandas as pd
     import pyarrow as pa
 
-    from qcache_spark.fastpath import arrow_loader, resident_table
+    from qcache_spark.fastpath import resident_table
+    from qcache_spark.plans import arrow
 
     n = 1000
     pdf = pd.DataFrame({
@@ -1661,10 +1662,8 @@ def test_resident_columns_follow_the_size_rule():
         smaller = encoded if encoded.nbytes < plain.nbytes else plain
         assert table.column(name).nbytes == smaller.nbytes, name
     assert all(c.num_chunks == 1 for c in table.columns)
-    loaded = arrow_loader(table)(None)
-    pd.testing.assert_frame_equal(loaded, pdf)
-    assert loaded["k128"][0] is loaded["k128"][128]  # shares the dictionary's objects
-    assert list(arrow_loader(table)({"ints", "nulls"}).columns) == ["ints", "nulls"]
+    decoded = pa.table([arrow.plain(c) for c in table.columns], names=table.column_names)
+    assert decoded.equals(pa.Table.from_pandas(pdf, preserve_index=False))
 
 
 def test_encoded_resident_table_answers_like_persisted(resident_server, monkeypatch, spark):
@@ -1797,6 +1796,8 @@ def test_keep_alive_status_has_no_delayed_ack_floor(server):
         {"select": [["=", "y", ["+", "s", 1]]]},
         {"select": [["=", "y", ["sqrt", "s"]]]},
         {"where": ["like", "s", "'[a'"]},
+        # a group name Java's regex cannot hold
+        {"where": ["like", "s", "'%(?P<a_b>a)%'"]},
     ],
 )
 @pytest.mark.parametrize("resident", [True, False])
@@ -1811,6 +1812,69 @@ def test_type_mismatch_and_bad_pattern_are_400(resident_server, monkeypatch, bad
     code, body, _ = query(base, "mixed", bad)
     assert code == 400, (bad, code, body)
     assert "error" in json.loads(body)
+
+
+def test_named_group_like_patterns_answer_alike(resident_server, monkeypatch):
+    """A like pattern with a named group, Python's `(?P<n>...)`, and
+    its backreference `(?P=n)` get one answer on a resident key and a
+    persisted one, where Java spells them `(?<n>...)` and `\\k<n>`.
+    RE2 has no backreferences, so that query falls back on the
+    resident key."""
+    from qcache_spark import fastpath
+
+    base, catalog = resident_server
+    csv = "i,s\n1,foo\n2,bar\n3,boo\n4,\n5,Bob\n"
+    store(base, "groups", csv)
+    with monkeypatch.context() as m:
+        m.setattr(fastpath, "MAX_FASTPATH_BYTES", 0)
+        store(base, "groups_p", csv)
+    assert catalog.get("groups").table is not None
+    assert catalog.get("groups_p").table is None
+    queries = [
+        {"where": ["like", "s", "'%(?P<n>o)%'"], "select": ["i"], "order_by": ["i"]},
+        {"where": ["ilike", "s", "'(?P<first>b)%'"], "select": ["i", "s"], "order_by": ["i"]},
+        {"where": ["like", "s", "'%(?P<n>o)(?P=n)%'"], "select": ["i"], "order_by": ["i"]},
+    ]
+    _local_counts(base)
+    _same_answers(base, "groups", "groups_p", queries)
+    assert _local_counts(base) == (4, 2)
+    assert json.loads(query(base, "groups", queries[2])[1]) == [{"i": 1}, {"i": 3}]
+
+
+def test_nullable_bool_and_int_columns_stay_resident(resident_server, monkeypatch):
+    """A bool column with an empty cell is stored resident and answers
+    like the persisted store; so is an int64 column that a Spark-run
+    update leaves with a null."""
+    from qcache_spark import fastpath
+
+    base, catalog = resident_server
+    csv = "a,b,c\n1,True,x\n2,,y\n3,False,x\n"
+    store(base, "nulls", csv)
+    with monkeypatch.context() as m:
+        m.setattr(fastpath, "MAX_FASTPATH_BYTES", 0)
+        store(base, "nulls_p", csv)
+    table = catalog.get("nulls").table
+    assert table is not None and table.column("b").null_count == 1
+    assert catalog.get("nulls_p").table is None
+    queries = [
+        {"order_by": ["a"]},
+        {"where": ["!", "b"], "select": ["a", "b"], "order_by": ["a"]},
+        {"where": ["isnull", "b"], "select": ["a", "c"]},
+        {"group_by": ["b"], "select": ["b", ["sum", "a"]], "order_by": ["-b"]},
+    ]
+    _local_counts(base)
+    _same_answers(base, "nulls", "nulls_p", queries)
+    assert _local_counts(base) == (2 * len(queries), 0)
+
+    # a null literal is outside the Arrow update: Spark applies it
+    upd = {"update": [["a", None]], "where": ["==", "c", "'y'"]}
+    for key in ("nulls", "nulls_p"):
+        code, body, _ = call(base, "POST", f"/qcache/dataset/{key}/q",
+                             json.dumps(upd).encode(), {"Accept": "application/json"})
+        assert code == 200, body
+    table = catalog.get("nulls").table
+    assert table is not None and table.column("a").null_count == 1
+    _same_answers(base, "nulls", "nulls_p", queries)
 
 
 def test_update_of_a_dataset_gone_meanwhile_is_404(resident_server, monkeypatch):
