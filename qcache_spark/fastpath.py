@@ -52,10 +52,6 @@ MAX_FASTPATH_BYTES = int(
 _MIRROR_CACHE: dict[tuple[str, float], pa.Table] = {}
 
 
-def _table_path(sf_dir: str, name: str) -> str:
-    return os.path.join(sf_dir, f"{name}.parquet")
-
-
 def _parquet_size(path: str) -> int:
     if os.path.isfile(path):
         return os.path.getsize(path)
@@ -196,7 +192,7 @@ def try_local(spark: SparkSession, sf_dir: str, table: str, q: dict):
     """The router over a parquet table's Arrow mirror: a Spark
     DataFrame of the local result, or None when the caller should take
     the Catalyst plan (table too big, or the router declined)."""
-    path = _table_path(sf_dir, table)
+    path = os.path.join(sf_dir, f"{table}.parquet")
     if _parquet_size(path) > MAX_FASTPATH_BYTES:
         return None
     try:

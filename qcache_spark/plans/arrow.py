@@ -30,6 +30,7 @@ only make a query slower, never wrong.
 """
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass
 
 import numpy as np
@@ -297,8 +298,9 @@ _ARROW_AGGREGATES = {
 }
 # computed here from each group's values in row order
 _SEQUENTIAL = {"median", "std", "var"}
-# Welford's update takes one numpy step per value of the largest group
-_MAX_SEQUENTIAL_STEPS = 20000
+# One numpy step of Welford's update across groups costs about as much
+# as this many rows of the float loop (measured on a 4-CPU x86 host)
+_ROWS_PER_NUMPY_STEP = 100
 _SCALES = {"msum": 1e4, "mavg": 1e4, "dsum": 1e6, "davg": 1e6}
 
 
@@ -307,6 +309,13 @@ def _key(column):
     if pa.types.is_floating(column.type):
         return pc.if_else(pc.equal(column, 0.0), pa.scalar(0.0, column.type), column)
     return column
+
+
+def half_up(values):
+    """Spark's HALF_UP round to a whole number: a tie goes away from
+    zero (-2.5 is -3), and a value just below a tie stays below
+    (0.49999999999999994 is 0, where floor(x + 0.5) gives 1)."""
+    return pc.round(values, 0, "half_towards_infinity")
 
 
 def _fits_long(values, rows: int) -> bool:
@@ -320,7 +329,10 @@ def _aggregate(t: pa.Table, keys: list, entries: list) -> pa.Table:
     its column's name. Spark's null rules hold: an all-null group
     gives null (count: 0)."""
     n = t.num_rows
-    columns = {f"k{i}": _key(t.column(k)) for i, k in enumerate(keys)}
+    # a global aggregate groups by a constant: Arrow's scalar kernels
+    # have no `list`, and their float sum is pairwise, not sequential
+    columns = {f"k{i}": _key(t.column(k)) for i, k in enumerate(keys)} or {"all": np.zeros(n, np.int8)}
+    by = list(columns)
     specs = []
     for i, (fn, name) in enumerate(entries):
         v = t.column(name) if fn == "count" else plain(t.column(name))
@@ -332,7 +344,7 @@ def _aggregate(t: pa.Table, keys: list, entries: list) -> pa.Table:
             # the HALF_UP-rounded fixed-point values summed as longs. A
             # NaN or infinity fails msum's cast to long under ANSI mode
             # and is null after dsum's cast to decimal; count(c) keeps it.
-            scaled = pc.round(pc.multiply(_double(v), _SCALES[fn]), 0, "half_towards_infinity")
+            scaled = half_up(pc.multiply(_double(v), _SCALES[fn]))
             infinite = pc.invert(pc.is_finite(scaled))
             if fn in ("dsum", "davg"):
                 scaled = _null_where(infinite, scaled)
@@ -368,7 +380,7 @@ def _aggregate(t: pa.Table, keys: list, entries: list) -> pa.Table:
     work = pa.table(columns)
     # one thread: each group's values are met in row order, as Spark
     # meets them in one partition
-    out = work.group_by([f"k{i}" for i in range(len(keys))], use_threads=False).aggregate(specs)
+    out = work.group_by(by, use_threads=False).aggregate(specs)
     results = [out.column(f"k{i}") for i in range(len(keys))]
     for i, (fn, _) in enumerate(entries):
         col = f"v{i}"
@@ -420,26 +432,43 @@ class _Groups:
     def variance(self, root: bool) -> pa.Array:
         """Spark's var_samp (stddev_samp with `root`): Welford's update
         over the values in row order, as one partition computes it, so
-        the last bits agree too; null below two values."""
-        if self.counts.max(initial=0) > _MAX_SEQUENTIAL_STEPS:
-            raise Unsupported("std/var of a group this large")
+        the last bits agree too; null below two values. The update runs
+        once per row position across groups (numpy) or once per row (a
+        float loop), whichever takes fewer steps."""
+        with np.errstate(all="ignore"):
+            if self.counts.max(initial=0) * _ROWS_PER_NUMPY_STEP < len(self.values):
+                m2 = self._m2_across_groups()
+            else:
+                m2 = np.array([_welford_m2(self.values[s:s + c].tolist())
+                               for s, c in zip(self.starts, self.counts)])
+            result = m2 / (self.counts - 1)
+        return pa.array(np.sqrt(result) if root else result, mask=self.counts < 2)
+
+    def _m2_across_groups(self) -> np.ndarray:
         by_size = np.argsort(-self.counts, kind="stable")
         sizes = self.counts[by_size]
         starts = self.starts[by_size]
-        avg = np.zeros(len(sizes))
-        m2 = np.zeros(len(sizes))
-        with np.errstate(all="ignore"):
-            for k in range(sizes[0] if len(sizes) else 0):
-                live = np.searchsorted(-sizes, -k, side="left")  # groups with > k values
-                delta = self.values[starts[:live] + k] - avg[:live]
-                delta_n = delta / (k + 1)
-                avg[:live] += delta_n
-                m2[:live] += delta * (delta - delta_n)
-            result = np.empty(len(sizes))
-            result[by_size] = m2 / (sizes - 1)
-        if root:
-            result = np.sqrt(result)
-        return pa.array(result, mask=self.counts < 2)
+        avg, m2 = np.zeros((2, len(sizes)))
+        for k in range(sizes[0]):
+            live = np.searchsorted(-sizes, -k, side="left")  # groups with > k values
+            delta = self.values[starts[:live] + k] - avg[:live]
+            delta_n = delta / (k + 1)
+            avg[:live] += delta_n
+            m2[:live] += delta * (delta - delta_n)
+        return m2[np.argsort(by_size)]
+
+
+def _welford_m2(values: list) -> float:
+    """Spark's CentralMomentAgg update over one group's values in
+    Python floats, IEEE doubles as the JVM's: the squared deviations."""
+    n = avg = m2 = 0.0
+    for x in values:
+        n += 1.0
+        delta = x - avg
+        delta_n = delta / n
+        avg += delta_n
+        m2 += delta * (delta - delta_n)
+    return m2
 
 
 # -- the grammar's executor --------------------------------------------
@@ -451,6 +480,21 @@ _KINDS = (
     (pa.types.is_string, "string"),
     (pa.types.is_boolean, "boolean"),
 )
+
+
+# Where RE2 (match_substring_regex) and Java's regex (Catalyst's rlike)
+# part ways, checked on Spark 4.1 and pyarrow 16.1. By pattern alone:
+# `\101` is octal in RE2 but a backreference in Java, and `\0` is NUL in
+# RE2 but an error; a `[` or `&&` inside a class nests or intersects in
+# Java only; `{,n}` is literal in RE2 and an error in Java.
+_JAVA_SYNTAX = re.compile(r"\\[0-9]|\{,|\[(?:\\.|[^]\\])*?(?:\[|&&)")
+# By value: Java's `$` also matches before a final line break, its `.`
+# stops at \r, \x85, \u2028 and \u2029 too, and its `\s`/`\v` take \x0b
+# and \f otherwise than RE2's.
+_LINE_BREAKS = "[\n\x0b\x0c\r\x85\u2028\u2029]"
+# Java's `(?i)` folds ASCII only and its `\b` is Unicode-aware; RE2's
+# are the other way round. Both agree on ASCII values and patterns.
+_UNICODE_SENSITIVE = re.compile(r"\(\?[a-zA-Z]*i|\\[bB]")
 
 
 class Reader:
@@ -490,7 +534,17 @@ class Reader:
         return isin(t.column(name), values)
 
     def rlike(self, t, name, regex):
-        return self._match(t, name, lambda v: pc.match_substring_regex(v, regex))
+        unicode = _UNICODE_SENSITIVE.search(regex)
+        if _JAVA_SYNTAX.search(regex) or unicode and not regex.isascii():
+            raise Unsupported(f"{regex!r} reads otherwise in Java's regex")
+
+        def match(values):
+            if (pc.any(pc.match_substring_regex(values, _LINE_BREAKS)).as_py()
+                    or unicode and pc.all(pc.string_is_ascii(values)).as_py() is False):
+                raise Unsupported(f"{regex!r} reads these values otherwise in Java's regex")
+            return pc.match_substring_regex(values, regex)
+
+        return self._match(t, name, match)
 
     def contains(self, t, name, needle):
         return self._match(t, name, lambda v: pc.match_substring(v, needle))

@@ -28,14 +28,7 @@ from pyspark.sql import types as T
 from . import grammar
 from .aggregates import AGGREGATE_FUNCTIONS
 from .expressions import BINARY_OPERATORS, UNARY_FUNCTIONS
-from .filters import (
-    INTEGRAL_TYPES,
-    _false_safe,
-    _true_safe,
-    java_regex,
-    marker_join,
-    semi_join,
-)
+from .filters import INTEGRAL_TYPES, _false_safe, _true_safe, java_regex, marker_join, semi_join
 
 
 @dataclass

@@ -24,6 +24,8 @@ parquet scan:
 """
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -53,34 +55,21 @@ def _true_safe(expr: Column, *operands: Column) -> Column:
     return expr
 
 
+# an escape, a character class (a ] right after [ or [^ is a member),
+# or Python's spelling of a named group or its backreference
+_NAMED_GROUPS = re.compile(r"\\.|\[\^?\]?(?:\\.|[^]\\])*\]|\(\?P<|\(\?P=(\w+)\)")
+
+
 def java_regex(regex: str) -> str:
     """A like pattern's Python regex in Java's spelling of named
     groups: `(?P<name>` is `(?<name>` and `(?P=name)` is `\\k<name>`.
     Escaped characters and character classes are left as they are."""
-    out, i, in_class = [], 0, False
-    while i < len(regex):
-        c = regex[i]
-        if c == "\\":
-            out.append(regex[i:i + 2])
-            i += 2
-            continue
-        if in_class:
-            in_class = c != "]"
-        elif c == "[":
-            # a ] right after [ or [^ is a member, not the end
-            j = i + 1 + (regex[i + 1:i + 2] == "^")
-            j += regex[j:j + 1] == "]"
-            out.append(regex[i:j])
-            i, in_class = j, True
-            continue
-        elif regex.startswith("(?P<", i):
-            c, i = "(?<", i + 3
-        elif regex.startswith("(?P=", i):
-            end = regex.index(")", i)
-            c, i = f"\\k<{regex[i + 4:end]}>", end
-        out.append(c)
-        i += 1
-    return "".join(out)
+    def respell(m):
+        if m.group(1):
+            return f"\\k<{m.group(1)}>"
+        return "(?<" if m.group(0) == "(?P<" else m.group(0)
+
+    return _NAMED_GROUPS.sub(respell, regex)
 
 
 def _fresh_column_name(base: str, taken) -> str:

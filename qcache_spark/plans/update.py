@@ -178,18 +178,9 @@ def compile_update(q: dict, df: DataFrame) -> DataFrame:
     return run(q, df, _Catalyst()).select(*df.columns)
 
 
-class _Arrow:
-    """pyarrow.compute over the table, with the read executor's
-    literal, compare and mask primitives (arrow.py)."""
-
-    def columns(self, table):
-        return table.column_names
-
-    def isnull(self, table, name):
-        return arrow.predicate(pc.is_null(table.column(name)), True)
-
-    def isin(self, table, name, values):
-        return arrow.isin(table.column(name), values)
+class _Arrow(arrow.Reader):
+    """pyarrow.compute over the table: the read executor's `columns`,
+    `isnull` and `isin`, and its literal, compare and mask primitives."""
 
     def compare(self, table, op, left, right):
         if not isinstance(left, _Column):

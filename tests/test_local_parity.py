@@ -8,6 +8,7 @@ import math
 import os
 import sys
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
@@ -68,6 +69,12 @@ BATTERY = [
     ("orders", {"where": ["in", "o_orderkey", []], "select": ["o_orderkey"]}),
     ("lineitem", {"select": [["std", "l_quantity"], ["var", "l_extendedprice"], ["prod", "l_discount"]],
         "group_by": ["l_linestatus"]}),
+    # global: one group of every row; a float sum adds in row order
+    ("lineitem", {"select": [["var", "l_extendedprice"], ["std", "l_quantity"], ["median", "l_tax"]]}),
+    ("lineitem", {"select": [["sum", "l_extendedprice"], ["mean", "l_discount"]]}),
+    # many small groups: Welford's update runs across groups
+    ("lineitem", {"group_by": ["l_orderkey"], "select": ["l_orderkey", ["std", "l_extendedprice"],
+        ["var", "l_tax"]]}),
     ("nation", {"select": ["n_name", ["=", "u", ["upper", "n_name"]], ["=", "l", ["length", "n_name"]]]}),
     ("orders", {"select": ["o_orderkey", ["=", "m", ["%", "o_orderkey", 7]],
         ["=", "f", ["//", "o_totalprice", 1000]]], "limit": 30}),
@@ -231,6 +238,41 @@ def test_empty_global_agg_declines(sf_dir):
         )
 
 
+@pytest.mark.parametrize(
+    "op, values, pattern",
+    [
+        # Java's `$` also matches before a final line break
+        ("like", ["abc\n", "abc"], "abc"),
+        ("like", ["abc\r\n"], "%c"),
+        # Java's `.` stops at \r, its `\s` takes \x0b
+        ("like", ["a\rc"], "a.c"),
+        ("like", ["a\x0bc"], "a\\sc"),
+        # Java's (?i) folds ASCII only, its \b is Unicode-aware
+        ("ilike", ["É", "é"], "é"),
+        ("ilike", ["\u212a"], "k"),
+        ("like", ["é"], "%\\bé%"),
+        # a class in a class, an intersection, octal, `{,n}`
+        ("like", ["b"], "[[:alpha:]]"),
+        ("like", ["b"], "[a-z&&[^b]]"),
+        ("like", ["A"], "\\101"),
+        ("like", ["aaa"], "a{,3}"),
+    ],
+)
+def test_like_declines_where_java_reads_otherwise(op, values, pattern):
+    """RE2 and Java's regex (the Catalyst rlike) answer these values
+    or patterns differently, so the driver executor leaves them to
+    Catalyst, plain and dictionary-encoded alike."""
+    from qcache_spark.plans.arrow import Unsupported
+
+    q = {"where": [op, "s", f"'{pattern}'"]}
+    for s in (pa.array(values), pa.array(values).dictionary_encode()):
+        with pytest.raises(Unsupported):
+            execute_local(q, pa.table({"s": s}))
+    # an ASCII (?i) or \b pattern on ASCII values is answered
+    if (op == "ilike" or "\\b" in pattern) and pattern.isascii():
+        execute_local(q, pa.table({"s": ["abc", "xyz"]}))
+
+
 def test_half_up_negative_ties_match_spark(spark):
     """Spark round() is HALF_UP = ties away from zero: round(-2.5) is
     -3. The local executor must take the same side for NEGATIVE ties.
@@ -238,6 +280,11 @@ def test_half_up_negative_ties_match_spark(spark):
     10000 == -20000.5), so the tie branch is actually exercised
     end-to-end."""
     import pandas as pd
+
+    from qcache_spark.plans.arrow import half_up
+
+    ties = pa.array([-2.5, -0.5, 0.5, 2.5, -2.4, -2.6, 0.49999999999999994, -20000.5])
+    assert half_up(ties).to_pylist() == [-3.0, -1.0, 1.0, 3.0, -2.0, -3.0, 0.0, -20001.0]
 
     vals = [-2.00005, -0.00005, 2.00005, -3.00015, -7.62345, None]
     pdf = pd.DataFrame(
@@ -254,6 +301,20 @@ def test_half_up_negative_ties_match_spark(spark):
     sdf = compile_query(q, spark.createDataFrame(pdf)).sliced
     ldf = _to_spark(spark, execute_local(q, pa.Table.from_pandas(pdf)).sliced)
     assert _rows(sdf) == _rows(ldf)
+
+
+def test_welford_paths_agree_bitwise():
+    """std/var run Welford's update either across groups (numpy) or
+    row by row (a float loop); both give the same bits."""
+    from qcache_spark.plans.arrow import _Groups, _welford_m2
+
+    rng = np.random.default_rng(0)
+    keys = rng.integers(0, 40, 5000)
+    values = pa.array(np.round(rng.random(5000) * 1e7, 2), mask=rng.random(5000) < 0.05)
+    rows = pa.table({"k": keys, "row": np.arange(5000)}).group_by("k", use_threads=False)
+    groups = _Groups(rows.aggregate([("row", "list")]).column("row_list"), values)
+    looped = [_welford_m2(groups.values[s:s + c].tolist()) for s, c in zip(groups.starts, groups.counts)]
+    assert groups._m2_across_groups().tolist() == looped
 
 
 def test_unsliced_len_matches(spark, sf_dir):

@@ -1841,6 +1841,36 @@ def test_named_group_like_patterns_answer_alike(resident_server, monkeypatch):
     assert json.loads(query(base, "groups", queries[2])[1]) == [{"i": 1}, {"i": 3}]
 
 
+def test_like_on_line_breaks_and_unicode_answers_alike(resident_server, monkeypatch):
+    """Java's regex (the persisted key's) matches `$` before a final
+    line break, stops `.` at \\r, and folds case in ASCII only; RE2
+    does not. A resident key answers such a like as the persisted key
+    does, by falling back; a like both engines read alike stays
+    local."""
+    from qcache_spark import fastpath
+
+    base, catalog = resident_server
+    csv = 'i,s,u\n1,"abc\n",É\n2,"a\rc",é\n3,abc,eé\n4,b,b\n'
+    store(base, "breaks", csv)
+    with monkeypatch.context() as m:
+        m.setattr(fastpath, "MAX_FASTPATH_BYTES", 0)
+        store(base, "breaks_p", csv)
+    assert catalog.get("breaks").table is not None
+    assert catalog.get("breaks_p").table is None
+    queries = [
+        {"where": ["like", "s", "'abc'"], "select": ["i"], "order_by": ["i"]},
+        {"where": ["like", "s", "'%c'"], "select": ["i"], "order_by": ["i"]},
+        {"where": ["like", "s", "'a.c'"], "select": ["i"], "order_by": ["i"]},
+        {"where": ["ilike", "u", "'é'"], "select": ["i"], "order_by": ["i"]},
+        {"where": ["like", "u", "'[[:alpha:]]%'"], "select": ["i"], "order_by": ["i"]},
+        {"where": ["like", "u", "'%é'"], "select": ["i", "u"], "order_by": ["i"]},
+    ]
+    _local_counts(base)
+    _same_answers(base, "breaks", "breaks_p", queries)
+    assert _local_counts(base) == (2, 10)
+    assert json.loads(query(base, "breaks", queries[0])[1]) == [{"i": 1}, {"i": 3}]
+
+
 def test_nullable_bool_and_int_columns_stay_resident(resident_server, monkeypatch):
     """A bool column with an empty cell is stored resident and answers
     like the persisted store; so is an int64 column that a Spark-run
