@@ -20,7 +20,6 @@ from __future__ import annotations
 import os
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Row, SparkSession
@@ -208,30 +207,17 @@ def try_local(spark: SparkSession, sf_dir: str, table: str, q: dict):
 
 # -- driver-resident datasets ---------------------------------------
 
-def resident_table(data, decide=None) -> pa.Table | None:
-    """`data` (a pandas frame or an Arrow table) as a driver-resident
-    Arrow table, or None when it must be stored in Spark instead: it
-    is empty, larger than MAX_FASTPATH_BYTES, or has a column that is
-    not int64, float64, bool or string (nulls allowed in each). Every
-    string and int64 column of a pandas frame is stored in the
-    form `_decide` picks; so are the plain ones of an Arrow table that
-    `decide` names (default: all of them), while its other columns
-    keep their arrays."""
-    try:
-        if isinstance(data, pa.Table):
-            table = data.replace_schema_metadata(None)
-            for i, name in enumerate(table.column_names):
-                if decide is None or name in decide:
-                    table = table.set_column(i, name, _from_arrow(table.column(i)))
-        elif data.columns.is_unique:
-            table = pa.Table.from_arrays(
-                [_from_pandas(s) for _, s in data.items()],
-                names=[str(c) for c in data.columns],
-            )
-        else:
-            return None
-    except (pa.ArrowException, TypeError, ValueError):
-        return None  # e.g. an object column of mixed types
+def resident_table(table: pa.Table, decide=None) -> pa.Table | None:
+    """`table` as a driver-resident Arrow table, or None when it must
+    be stored in Spark instead: it is empty, larger than
+    MAX_FASTPATH_BYTES, or has a column that is not int64, float64,
+    bool or string (nulls allowed in each). Each plain string or int64
+    column that `decide` names (default: all of them) is stored in the
+    form `_decide` picks; the other columns keep their arrays."""
+    table = table.replace_schema_metadata(None)
+    for i, name in enumerate(table.column_names):
+        if decide is None or name in decide:
+            table = table.set_column(i, name, _from_arrow(table.column(i)))
     for f in table.schema:
         typ = f.type.value_type if pa.types.is_dictionary(f.type) else f.type
         if typ not in _RESIDENT_TYPES:
@@ -246,24 +232,11 @@ _ENCODED_TYPES = (pa.string(), pa.int64())
 _INDEX_TYPES = (pa.int8(), pa.int16(), pa.int32())
 
 
-def _from_pandas(s: pd.Series) -> pa.Array:
-    """One pandas column as Arrow. A string or int64 column is
-    factorized and only its uniques are converted, so a column stored
-    as a dictionary is never built plain. float64 and bool stay plain:
-    factorizing would merge -0.0 with 0.0, and a bool is one bit."""
-    if s.dtype == object or s.dtype == np.int64:
-        codes, uniques = pd.factorize(s.to_numpy())
-        dictionary = pa.array(uniques, from_pandas=True)
-        # not for e.g. bools with nulls, or True and 1, which it merges
-        if dictionary.type in _ENCODED_TYPES:
-            encoded = _decide(codes, dictionary)
-            if encoded is not None:
-                return encoded
-    return pa.array(s, from_pandas=True)
-
-
 def _from_arrow(column: pa.ChunkedArray):
-    """`_from_pandas` for a plain Arrow column (an update's result)."""
+    """A plain string or int64 column in its stored form: encoded in
+    order of first appearance, so the dictionary's codes are what
+    `_decide` weighs. float64 and bool stay plain: encoding would
+    merge -0.0 with 0.0, and a bool is one bit."""
     if column.type not in _ENCODED_TYPES:
         return column
     column = column.combine_chunks()

@@ -486,8 +486,9 @@ _KINDS = (
 # part ways, checked on Spark 4.1 and pyarrow 16.1. By pattern alone:
 # `\101` is octal in RE2 but a backreference in Java, and `\0` is NUL in
 # RE2 but an error; a `[` or `&&` inside a class nests or intersects in
-# Java only; `{,n}` is literal in RE2 and an error in Java.
-_JAVA_SYNTAX = re.compile(r"\\[0-9]|\{,|\[(?:\\.|[^]\\])*?(?:\[|&&)")
+# Java only. (`{,n}`, literal in RE2 and an error in Java, is a 400:
+# grammar.py rejects it.)
+_JAVA_SYNTAX = re.compile(r"\\[0-9]|\[(?:\\.|[^]\\])*?(?:\[|&&)")
 # By value: Java's `$` also matches before a final line break, its `.`
 # stops at \r, \x85, \u2028 and \u2029 too, and its `\s`/`\v` take \x0b
 # and \f otherwise than RE2's.

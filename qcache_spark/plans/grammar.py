@@ -110,6 +110,10 @@ ALIAS_STRING = r"^([A-Za-z0-9_-]+)$"
 ALIAS_RE = re.compile(ALIAS_STRING)
 # A regex group name that Java's (Catalyst's) regex engine can hold
 JAVA_GROUP_NAME = re.compile(r"[A-Za-z][A-Za-z0-9]*")
+# An escape or a character class, inside which `{,` is two literals; a
+# `{,` left outside them is a literal to Python and RE2 and an error to
+# Java's regex.
+_ESCAPE_OR_CLASS = re.compile(r"\\.|\[\^?\]?(?:\\.|[^]\\])*\]")
 
 
 def is_quoted(s: str) -> bool:
@@ -502,6 +506,9 @@ class _Predicate:
                 raise_malformed(
                     f"Invalid (i)like pattern: group name {group!r} must be "
                     "a letter then letters or digits", q)
+        if "{," in _ESCAPE_OR_CLASS.sub("", regex):
+            raise_malformed("Invalid (i)like pattern: a repetition needs its lower bound, "
+                            "as in {0,3}; write \\{ for a brace", q)
         return self.ex.rlike(self.frame, name, regex)
 
     def contains(self, q):

@@ -73,7 +73,7 @@ from ..errors import (
 from ..plans import compile_query, compile_update
 from ..sources import (  # noqa: F401 — from_csv/from_json_records: see below
     apply_stand_in_columns,
-    frame_from_pandas,
+    frame_from,
     from_csv,
     from_json_records,
     parse_csv,
@@ -84,12 +84,12 @@ from ..sources import (  # noqa: F401 — from_csv/from_json_records: see below
 )
 from .statistics import Statistics
 
-# The store path parses with parse_csv/parse_json_records, so that a
-# small body never becomes a Spark frame. from_csv/from_json_records
-# are no longer called here, but perfbench/tracing.py looks them up on
-# this module to wrap them, and a traced run fails without them. Until
-# the tracer wraps the parse functions, its `ingest.parse_ms` has no
-# samples from HTTP stores.
+# The store path parses with parse_csv/parse_json_records into an Arrow
+# table, so that a small body never becomes a Spark frame.
+# from_csv/from_json_records are no longer called here, but
+# perfbench/tracing.py looks them up on this module to wrap them, and a
+# traced run fails without them. Until the tracer wraps the parse
+# functions, its `ingest.parse_ms` has no samples from HTTP stores.
 
 try:  # optional codec, preferred by the reference when available
     import lz4.frame as _lz4
@@ -460,14 +460,12 @@ class QCacheHandler(BaseHTTPRequestHandler):
         stand_ins = self._stand_ins()
         bucket_by = _parse_bucket_header(self.headers.get("X-QCache-bucket-by"))
         body = self._read_body()
-        if ctype == CONTENT_TYPE_CSV:
-            pdf, enum_columns = parse_csv(body, types)
-        else:
-            pdf, enum_columns = parse_json_records(body, types)
+        parse = parse_csv if ctype == CONTENT_TYPE_CSV else parse_json_records
+        parsed, enum_columns = parse(body, types)
         table = None
-        if bucket_by is None and not stand_ins:
-            table = fastpath.resident_table(pdf)
-        data = table if table is not None else frame_from_pandas(self.spark, pdf, stand_ins)
+        if isinstance(parsed, pa.Table) and bucket_by is None and not stand_ins:
+            table = fastpath.resident_table(parsed)
+        data = table if table is not None else frame_from(self.spark, parsed, stand_ins)
         if key in self.catalog:
             self.stats.inc("replace_count")
         self.stats.inc("store_count")

@@ -8,7 +8,7 @@ from .files import (
 )
 from .ingest import (
     apply_stand_in_columns,
-    frame_from_pandas,
+    frame_from,
     from_csv,
     from_json_records,
     parse_csv,
@@ -24,7 +24,7 @@ __all__ = [
     "read_parquet",
     "write_parquet",
     "apply_stand_in_columns",
-    "frame_from_pandas",
+    "frame_from",
     "from_csv",
     "from_json_records",
     "parse_csv",

@@ -4,8 +4,8 @@ Mirrors the reference contract:
 - CSV: only the EMPTY STRING is null (`na_values=['']`,
   `keep_default_na=False` — qcache/qframe/__init__.py:51-55;
   "N/A"/"nan"/"null" stay strings, test_qframe.py:658-683).
-- Type hints: `string` forces object dtype, `float` forces float64,
-  `enum` forces category (qcache/app.py:150-168). Enum maps to Spark
+- Type hints: `string` forces a string column, `float` a float64 one,
+  `enum` a string column (qcache/app.py:150-168). Enum maps to Spark
   StringType plus an engine-side marker that rejects </> filters
   (test_qframe.py:627-629). Storage needs no hint: a driver-resident
   table keeps any repeated string or int64 column as an Arrow
@@ -16,43 +16,89 @@ Mirrors the reference contract:
   of another column, resolved left-to-right
   (qcache/qframe/__init__.py:26-38, test_api.py:530-537).
 
+CSV bodies parse with `pyarrow.csv` into the Arrow table the store
+keeps (`parse_csv`). The reference infers column types the way
+`pandas.read_csv` does; these are those rules, as `parse_csv` applies
+them. "Text" is a cell's characters; a column's type is decided by all
+of its non-empty cells.
+
+| cells of a column (no hint) | reference (pandas 2.2) | here |
+|---|---|---|
+| empty | null | null |
+| every cell empty, or no rows | float64 / object | float64; string when there are no rows |
+| integers (`[+-]digits`, spaces around allowed) | int64 | int64 |
+| integers and an empty cell | float64 | float64 |
+| integers and floats, `1.`, `.5`, `1e5` | float64 | float64, correctly rounded (pandas' default parser is one ulp off on ~40 % of `repr(float)` texts) |
+| `inf`, `-Infinity`, ... (any case, no spaces) | float64 ±inf | float64 ±inf |
+| `nan` in any case or sign | string | string |
+| a float that overflows (`1e400`) | string | string |
+| an integer outside int64 (`9223372036854775808`) | uint64 up to 2**64-1 (Spark then stored null), else string | string |
+| such an integer after a non-integer cell (`1.5`, then `99999999999999999999`) | float64 (pandas depends on row order) | string |
+| `0x10` | string | string |
+| `True`/`TRUE`/`true`/`False`/`FALSE`/`false` | bool | bool |
+| ISO dates, times, timestamps | string | string |
+| anything else, or a mix of the kinds above | string | string |
+| a hint `string`/`enum` | string, as is | string, as is |
+| a hint `float` | float64, or 1.0/0.0 for a column of only bool words; `nan`, `1e400` or other text is a 400 | the same |
+| a cell that is not UTF-8 | 400 | 400 |
+
+Header: an empty name becomes `Unnamed: <position>`, and a repeated
+name `a` becomes `a.1`, `a.2`, ... (taking the hint of `a`) as pandas
+names them. pandas skips a line of only spaces; in a one-column body
+it is a cell here (in a wider one it is a ragged row, see below).
+
+A body `pyarrow.csv` cannot read is split into string cells by
+`pandas.read_csv`, then typed by the same rules: ragged rows (pandas
+pads a short row and reads a long row's first cells as an index), a
+header alone with no line end, and a cell a `float` hint cannot read
+(a 400 unless its column is bool words).
+
 Scale note: HTTP-posted bodies are driver-sized by definition (the
 reference's whole design point); big data enters through
 `spark.read.parquet/csv/json` on a path, which stays fully
 distributed. Both paths end in the same DataFrame-typed world.
 """
+
 from __future__ import annotations
 
+import csv
 import io
 import json
 import math
 from typing import Iterable, Optional
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.csv as pa_csv
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..errors import MalformedQueryException, raise_malformed
 
+_HINT_TYPES = {"string": pa.string(), "enum": pa.string(), "float": pa.float64()}
+_TRUE, _FALSE = ["True", "TRUE", "true"], ["False", "FALSE", "false"]
+# pandas' number grammar (its C parser's), as RE2 patterns
+_SPACES = " \t\n\v\f\r"
+_INT = f"^[{_SPACES}]*[+-]?[0-9]+[{_SPACES}]*$"
+_DECIMAL = f"^[{_SPACES}]*[+-]?([0-9]+\\.?[0-9]*|\\.[0-9]+)([eE][+-]?[0-9]+)?[{_SPACES}]*$"
+_INFINITY = "^[+-]?(?i:inf|infinity)$"
+
 
 def _parse_type_hints(types: Optional[dict]) -> tuple[dict, set]:
-    """Split hints into pandas dtype overrides + enum column set.
+    """Split hints into Arrow column types + enum column set.
     Unknown type name → error (qcache/app.py:163-166)."""
-    dtypes: dict = {}
+    column_types: dict = {}
     enum_columns: set = set()
     for column, type_name in (types or {}).items():
-        if type_name == "string":
-            dtypes[column] = str
-        elif type_name == "float":
-            dtypes[column] = float
-        elif type_name == "enum":
-            enum_columns.add(column)
-            dtypes[column] = str
-        else:
+        if type_name not in _HINT_TYPES:
             raise MalformedQueryException(
                 f"Invalid type '{type_name}' for column '{column}'"
             )
-    return dtypes, enum_columns
+        column_types[column] = _HINT_TYPES[type_name]
+        if type_name == "enum":
+            enum_columns.add(column)
+    return column_types, enum_columns
 
 
 def _stand_in_value_column(df: DataFrame, value: str):
@@ -101,26 +147,153 @@ def parse_header_pairs(header: Optional[str], what: str) -> list[tuple[str, str]
     return pairs
 
 
-def parse_csv(body: bytes | str, types: Optional[dict] = None) -> tuple[pd.DataFrame, set]:
-    """CSV body → pandas frame, with the reference's null and type-hint
-    rules. Returns (frame, enum_columns). A bytes body is read as UTF-8
-    by the parser itself, with no decoded copy of it; one that is not
-    UTF-8 is malformed."""
-    dtypes, enum_columns = _parse_type_hints(types)
+def parse_csv(body: bytes | str, types: Optional[dict] = None) -> tuple[pa.Table, set]:
+    """CSV body → Arrow table, typed by the rules table in the module
+    docstring. Returns (table, enum_columns). pyarrow.csv reads the
+    body in one block, so each column is one array; a column whose
+    inferred type may break a rule is typed again from its text. A
+    body that is not UTF-8, or a cell its `float` hint cannot read,
+    is malformed."""
+    column_types, enum_columns = _parse_type_hints(types)
+    if isinstance(body, str):
+        body = body.encode("utf-8")
+    split = False
     try:
-        pdf = pd.read_csv(
-            io.BytesIO(body) if isinstance(body, bytes) else io.StringIO(body),
-            na_values=[""],
-            keep_default_na=False,
-            dtype=dtypes or None,
-        )
+        table = _read_csv(body, column_types)
+        read_as = table.column_names
+    except UnicodeDecodeError as e:  # a header that is not UTF-8
+        raise MalformedQueryException(f"Invalid CSV body: {e}")
+    except pa.ArrowInvalid:  # ragged rows, an empty body, a cell its hint cannot read
+        table, read_as = _split_with_pandas(body)
+        split = True
+    names, hinted_as = _pandas_names(read_as)
+    # RE2 scans the body several times faster than `b"0x" in body`
+    has_hex = pc.match_substring_regex(pa.array([body], pa.large_binary()), "0[xX]")[0].as_py()
+    text = table if split else None
+    columns = []
+    for i, (name, column) in enumerate(zip(names, table.columns)):
+        if pa.types.is_binary(column.type):
+            raise MalformedQueryException(f"Invalid CSV body: column '{name}' is not utf-8")
+        hint = column_types.get(name, column_types.get(hinted_as[i]))
+        if split or column_types.get(read_as[i]) != hint or _doubtful(column, hint, has_hex):
+            if text is None:
+                text = _read_csv(body, dict.fromkeys(read_as, pa.string()))
+            column = _from_text(name, text.column(i).combine_chunks(), hint)
+        if pa.types.is_null(column.type) and len(column):
+            column = pa.nulls(len(column), pa.float64())
+        elif column.type == pa.int64() and column.null_count:
+            column = column.cast(pa.float64(), safe=False)
+        columns.append(column)
+    return pa.Table.from_arrays(columns, names=names), enum_columns
+
+
+def _read_csv(body: bytes, column_types: dict) -> pa.Table:
+    return pa_csv.read_csv(
+        pa.BufferReader(body),
+        read_options=pa_csv.ReadOptions(use_threads=False, block_size=max(len(body), 1 << 20)),
+        parse_options=pa_csv.ParseOptions(newlines_in_values=True),
+        convert_options=pa_csv.ConvertOptions(
+            column_types=column_types,
+            null_values=[""],
+            strings_can_be_null=True,
+            true_values=_TRUE,
+            false_values=_FALSE,
+        ),
+    )
+
+
+def _split_with_pandas(body: bytes) -> tuple[pa.Table, list[str]]:
+    """The fallback for a body pyarrow.csv cannot tokenize: pandas
+    splits it into string cells, padding a short row and reading a
+    long row's first cells as an index, as the reference does.
+    Returns the table, named by pandas, and the header's own names."""
+    try:
+        pdf = pd.read_csv(io.BytesIO(body), dtype=str, na_values=[""], keep_default_na=False)
     except (pd.errors.EmptyDataError, pd.errors.ParserError, ValueError) as e:
         # ValueError covers UnicodeDecodeError
         raise MalformedQueryException(f"Invalid CSV body: {e}")
-    # pandas upcasts int columns with nulls to float; Spark keeps
-    # nullable long — preserve pandas-visible behavior by letting the
-    # inferred dtype stand (SURVEY.md §7 "hard parts").
-    return pdf, enum_columns
+    rows = csv.reader(io.TextIOWrapper(io.BytesIO(body), "utf-8-sig", newline=""))
+    header = next((row for row in rows if row), [])
+    if len(header) != len(pdf.columns):  # e.g. a first line of only spaces
+        header = list(pdf.columns)
+    return pa.Table.from_pandas(pdf, preserve_index=False), header
+
+
+def _pandas_names(header: list[str]) -> tuple[list[str], list[str]]:
+    """Column names as pandas' C parser gives them: an empty one is
+    `Unnamed: <position>`, and a repeat of `a` is `a.1`, `a.2`, ...,
+    skipping a name the header holds; named columns keep their names
+    before unnamed ones do. Also returns the name whose type hint each
+    column takes when it has none of its own: `a.1` takes `a`'s."""
+    hinted_as = [name or f"Unnamed: {i}" for i, name in enumerate(header)]
+    names = list(hinted_as)
+    counts: dict[str, int] = {}
+    for i in sorted(range(len(header)), key=lambda i: not header[i]):
+        name = hinted_as[i]
+        count = counts.get(name, 0)
+        while count:
+            counts[hinted_as[i]] = count + 1
+            name = f"{hinted_as[i]}.{count}"
+            count = count + 1 if name in names else counts.get(name, 0)
+        names[i] = name
+        counts[name] = count + 1
+    return names, hinted_as
+
+
+def _doubtful(column: pa.ChunkedArray, hint, has_hex: bool) -> bool:
+    """Whether the type pyarrow.csv read may break the rules table:
+    a date, time or timestamp; a float column holding a NaN or an
+    infinity (`nan`, `1e400`), only integers (`+1`), or an integer
+    of 2**63 or more; an int64 column, when the body has a `0x`."""
+    if column.type == pa.float64():
+        if pc.any(pc.or_(pc.is_nan(column), pc.is_inf(column))).as_py():
+            return True
+        if hint is not None:
+            return False
+        whole = pc.equal(pc.floor(column), column)
+        big = pc.and_(whole, pc.greater_equal(pc.abs(column), 2.0 ** 63))
+        return bool(pc.all(whole).as_py() or pc.any(big).as_py())
+    if column.type == pa.int64():
+        return has_hex
+    return column.type not in (pa.bool_(), pa.string(), pa.null())
+
+
+def _from_text(name: str, text: pa.Array, hint) -> pa.Array:
+    """A column typed from its cells' text by the rules table."""
+    if pa.types.is_null(text.type) or hint == pa.string():
+        return text if hint is None else text.cast(hint)
+    cells = text.drop_null()
+    if not len(cells):
+        return pa.nulls(len(text), hint)  # no hint: null, stored as float64
+    if hint is None:
+        ints = pc.match_substring_regex(cells, _INT)
+        try:
+            _strip(cells.filter(ints)).cast(pa.int64())
+        except pa.ArrowInvalid:  # an integer outside int64
+            return text
+        if pc.all(ints).as_py():
+            return _strip(text).cast(pa.int64())
+    if pc.all(pc.is_in(cells, pa.array(_TRUE + _FALSE))).as_py():
+        bools = pc.equal(pc.utf8_lower(text), "true")
+        return bools if hint is None else bools.cast(hint)
+    numbers = pc.or_(pc.match_substring_regex(cells, _DECIMAL),
+                     pc.match_substring_regex(cells, _INFINITY))
+    if pc.all(numbers).as_py():
+        # a finite text that overflows (`1e400`) is not a number
+        infinite = pc.is_inf(_strip(cells).cast(pa.float64()))
+        numbers = pc.or_(pc.invert(infinite), pc.match_substring_regex(cells, _INFINITY))
+        if pc.all(numbers).as_py():
+            return _strip(text).cast(pa.float64())
+    if hint is None:
+        return text
+    raise MalformedQueryException(
+        f"Invalid CSV body: could not convert string to float: "
+        f"'{cells.filter(pc.invert(numbers))[0]}' (column '{name}')")
+
+
+def _strip(text: pa.Array) -> pa.Array:
+    """Number text as Arrow's casts read it: no spaces, no `+`."""
+    return pc.replace_substring_regex(pc.utf8_trim(text, characters=_SPACES), "^\\+", "")
 
 
 def from_csv(
@@ -129,71 +302,38 @@ def from_csv(
     types: Optional[dict] = None,
     stand_in_columns: Optional[list[tuple[str, str]]] = None,
 ) -> tuple[DataFrame, set]:
-    """CSV body → DataFrame (Arrow-accelerated createDataFrame).
+    """CSV body → DataFrame (createDataFrame from the Arrow table).
     Returns (df, enum_columns)."""
-    pdf, enum_columns = parse_csv(csv_text, types)
-    return frame_from_pandas(spark, pdf, stand_in_columns), enum_columns
+    table, enum_columns = parse_csv(csv_text, types)
+    return frame_from(spark, table, stand_in_columns), enum_columns
 
 
-def frame_from_pandas(
+def frame_from(
     spark: SparkSession,
-    pdf: pd.DataFrame,
+    data: pa.Table | pd.DataFrame,
     stand_in_columns: Optional[list[tuple[str, str]]] = None,
 ) -> DataFrame:
     """A parsed body as a Spark frame, stand-in columns applied."""
-    return apply_stand_in_columns(_create_df(spark, pdf), stand_in_columns)
+    return apply_stand_in_columns(_create_df(spark, data), stand_in_columns)
 
 
-def _create_df(spark: SparkSession, pdf: pd.DataFrame) -> DataFrame:
-    """createDataFrame that also accepts a ZERO-ROW pandas frame (a
-    header-only CSV / empty JSON list — the reference's pandas engine
-    stores these happily; Spark raises CANNOT_INFER_EMPTY_SCHEMA).
-    Schema comes from the pandas dtypes; all-NaN object columns (what
-    read_csv infers when there is nothing to see) become string."""
-    if len(pdf) > 0:
-        return spark.createDataFrame(pdf)
-    from pyspark.sql import types as T
-
-    # Local dtype map instead of pyspark.pandas.typedef (ADVICE r7):
-    # importing pyspark.pandas enforces its pandas/pyarrow minimum
-    # versions at import time, so a deployment without pyarrow would
-    # 500 on an empty upload even though nothing else needs it. A
-    # zero-row frame only ever has dtypes read_csv/from_records can
-    # infer from NOTHING plus explicit dtype hints — this map covers
-    # that whole surface; anything exotic degrades to string, which
-    # for an empty column is lossless.
-    _DTYPE_TO_SPARK = {
-        "int8": T.ByteType(),
-        "int16": T.ShortType(),
-        "int32": T.IntegerType(),
-        "int64": T.LongType(),
-        "uint8": T.ShortType(),
-        "uint16": T.IntegerType(),
-        "uint32": T.LongType(),
-        "uint64": T.LongType(),
-        "float32": T.FloatType(),
-        "float64": T.DoubleType(),
-        "bool": T.BooleanType(),
-        "datetime64[ns]": T.TimestampType(),
-        "datetime64[us]": T.TimestampType(),
-        "datetime64[ms]": T.TimestampType(),
-        "datetime64[s]": T.TimestampType(),
-    }
-    fields = [
-        T.StructField(
-            str(col),
-            _DTYPE_TO_SPARK.get(str(pdf[col].dtype), T.StringType()),
-            True,
-        )
-        for col in pdf.columns
-    ]
-    return spark.createDataFrame([], T.StructType(fields))
+def _create_df(spark: SparkSession, data: pa.Table | pd.DataFrame) -> DataFrame:
+    """createDataFrame from an Arrow table, with a column that holds no
+    value (a header-only CSV's) as a string column; Spark raises
+    CANNOT_INFER_EMPTY_SCHEMA where the reference's pandas engine
+    stores these happily. A JSON body's pandas frame is one whose
+    columns mix types, which only Spark's own inference takes."""
+    if isinstance(data, pd.DataFrame):
+        return spark.createDataFrame(data)
+    columns = [c.cast(pa.string()) if pa.types.is_null(c.type) else c for c in data.columns]
+    return spark.createDataFrame(pa.Table.from_arrays(columns, names=data.column_names))
 
 
-def parse_json_records(data: bytes | str | list, types: Optional[dict] = None) -> tuple[pd.DataFrame, set]:
-    """JSON list-of-objects body → pandas frame
-    (reference from_dicts, qcache/qframe/__init__.py:57-69). Returns
-    (frame, enum_columns). A body that is not JSON, or not UTF-8, is
+def parse_json_records(data: bytes | str | list, types: Optional[dict] = None) -> tuple[pa.Table | pd.DataFrame, set]:
+    """JSON list-of-objects body → Arrow table, through pandas
+    (reference from_dicts, qcache/qframe/__init__.py:57-69): the pandas
+    frame itself when a column mixes types Arrow cannot hold. Returns
+    (data, enum_columns). A body that is not JSON, or not UTF-8, is
     malformed."""
     if isinstance(data, (bytes, str)):
         try:
@@ -209,7 +349,10 @@ def parse_json_records(data: bytes | str | list, types: Optional[dict] = None) -
             pdf[col] = pdf[col].astype(str)
         elif type_name == "float":
             pdf[col] = pdf[col].astype(float)
-    return pdf, enum_columns
+    try:
+        return pa.Table.from_pandas(pdf, preserve_index=False), enum_columns
+    except (pa.ArrowException, TypeError, ValueError):  # e.g. a column of ints and strings
+        return pdf, enum_columns
 
 
 def from_json_records(
@@ -219,8 +362,8 @@ def from_json_records(
     stand_in_columns: Optional[list[tuple[str, str]]] = None,
 ) -> tuple[DataFrame, set]:
     """JSON list-of-objects body → DataFrame. Returns (df, enum_columns)."""
-    pdf, enum_columns = parse_json_records(data, types)
-    return frame_from_pandas(spark, pdf, stand_in_columns), enum_columns
+    parsed, enum_columns = parse_json_records(data, types)
+    return frame_from(spark, parsed, stand_in_columns), enum_columns
 
 
 def rows_to_csv(rows: list, columns: list[str]) -> str:

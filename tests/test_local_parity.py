@@ -251,11 +251,10 @@ def test_empty_global_agg_declines(sf_dir):
         ("ilike", ["É", "é"], "é"),
         ("ilike", ["\u212a"], "k"),
         ("like", ["é"], "%\\bé%"),
-        # a class in a class, an intersection, octal, `{,n}`
+        # a class in a class, an intersection, octal
         ("like", ["b"], "[[:alpha:]]"),
         ("like", ["b"], "[a-z&&[^b]]"),
         ("like", ["A"], "\\101"),
-        ("like", ["aaa"], "a{,3}"),
     ],
 )
 def test_like_declines_where_java_reads_otherwise(op, values, pattern):
@@ -271,6 +270,19 @@ def test_like_declines_where_java_reads_otherwise(op, values, pattern):
     # an ASCII (?i) or \b pattern on ASCII values is answered
     if (op == "ilike" or "\\b" in pattern) and pattern.isascii():
         execute_local(q, pa.table({"s": ["abc", "xyz"]}))
+
+
+def test_like_open_repetition_is_malformed():
+    """`{,n}` outside a class is a literal to RE2 and an error to
+    Java's regex, so the grammar rejects it for both executors; inside
+    a class, or escaped, a brace and a comma are literals to both."""
+    table = pa.table({"s": ["aaa", "{,", "a{,3}"]})
+    for pattern in ("a{,3}", "%x{,}%", "\\\\{,"):
+        with pytest.raises(MalformedQueryException, match="repetition"):
+            execute_local({"where": ["like", "s", f"'{pattern}'"]}, table)
+    for pattern, rows in (("[{,]%", ["{,"]), ("%\\{,%", ["{,", "a{,3}"])):
+        result = execute_local({"where": ["like", "s", f"'{pattern}'"]}, table)
+        assert result.sliced.column("s").to_pylist() == rows, pattern
 
 
 def test_half_up_negative_ties_match_spark(spark):
@@ -419,6 +431,42 @@ def test_driver_executor_reads_arrow_in_place():
         if isinstance(node, ast.Call) and getattr(node.func, "attr", None) == "to_pandas"
     ]
     assert not conversions, conversions
+
+
+def test_store_path_parses_without_pandas():
+    """A CSV store builds its resident Arrow table with no pandas step:
+    the store path's functions name no `pd`/`pandas`, and their only
+    `read_csv` is pyarrow.csv's. pandas is left in `_split_with_pandas`,
+    the recorded fallback for a body pyarrow.csv cannot tokenize, and
+    `parse_csv` calls it only when pyarrow.csv raises ArrowInvalid."""
+    import ast
+    import inspect
+    import textwrap
+
+    from qcache_spark import fastpath
+    from qcache_spark.server import app
+    from qcache_spark.sources import ingest
+
+    store_path = (app.QCacheHandler._store_dataset, ingest.parse_csv, ingest._read_csv,
+                  ingest._doubtful, ingest._from_text, ingest._strip, ingest._pandas_names,
+                  fastpath.resident_table, fastpath._from_arrow, fastpath._decide)
+    fallback_calls = []
+    for fn in store_path:
+        tree = ast.parse(textwrap.dedent(inspect.getsource(fn)))
+        names = {node.id for node in ast.walk(tree) if isinstance(node, ast.Name)}
+        assert not names & {"pd", "pandas"}, fn.__name__
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call) and getattr(node.func, "attr", None) == "read_csv":
+                assert ast.unparse(node.func) == "pa_csv.read_csv", fn.__name__
+        for handler in ast.walk(tree):
+            if isinstance(handler, ast.ExceptHandler):
+                fallback_calls += [
+                    (ast.unparse(handler.type), fn.__name__) for node in ast.walk(handler)
+                    if isinstance(node, ast.Call) and ast.unparse(node.func) == "_split_with_pandas"]
+        calls = [node for node in ast.walk(tree)
+                 if isinstance(node, ast.Call) and ast.unparse(node.func) == "_split_with_pandas"]
+        assert len(calls) == sum(1 for _, f in fallback_calls if f == fn.__name__), fn.__name__
+    assert fallback_calls == [("pa.ArrowInvalid", "parse_csv")]
 
 
 def test_catalyst_tables_cover_grammar_names():

@@ -1508,6 +1508,11 @@ def test_resident_store_rules(resident_server):
     assert catalog.get("r_ok").byte_size == table.nbytes + 100
     for key in ("r_empty", "r_json_mixed", "r_bucketed", "r_stand_in"):
         assert catalog.get(key).table is None, key
+    # a header-only body is stored in Spark, its columns as strings
+    assert catalog.get("r_empty").df.dtypes == [("a", "string"), ("b", "string")]
+    code, body, _ = query(base, "r_empty", {}, accept="text/csv")
+    assert code == 200 and body.decode().splitlines() == ["a,b"]
+    assert json.loads(query(base, "r_empty", {})[1]) == []
 
 
 def _job_mark(spark, group):
@@ -1640,7 +1645,7 @@ def test_resident_columns_follow_the_size_rule():
         "b": [i % 2 == 0 for i in range(n)],
         "nulls": ["x" if i % 2 else None for i in range(n)],
     })
-    table = resident_table(pdf)
+    table = resident_table(pa.Table.from_pandas(pdf, preserve_index=False))
     dictionary = pa.dictionary
     assert dict(zip(table.column_names, table.schema.types)) == {
         "k128": dictionary(pa.int8(), pa.string()),
@@ -1688,7 +1693,7 @@ def test_encoded_resident_table_answers_like_persisted(resident_server, monkeypa
         assert pa.types.is_dictionary(types[name]), name
     assert types["text2"] == types["text8"] == pa.string()
     assert types["float1"] == pa.float64()
-    plain = pa.Table.from_pandas(parse_csv(csv.encode())[0], preserve_index=False)
+    plain = parse_csv(csv.encode())[0]
     assert item.byte_size == item.table.nbytes + 100 < plain.nbytes + 100
 
     _local_counts(base)
@@ -1752,7 +1757,9 @@ def test_encoded_updates_run_no_spark_job_and_match_persisted(resident_server, m
 
 @pytest.mark.parametrize(
     "ctype,body",
-    [("text/csv", b"a,b\n1,\xff\n"), ("application/json", b'[{"a": "\xff"}]')],
+    [("text/csv", b"a,b\n1,\xff\n"), ("application/json", b'[{"a": "\xff"}]'),
+     # pyarrow.csv reads a bad cell as a binary column: still a 400
+     ("text/csv", b"a,\xffb\n1,2\n"), ("text/csv", b"a,b\n1,2\n3,4\xff\n5,6\n")],
 )
 def test_store_body_that_is_not_utf8_is_400(server, ctype, body):
     code, resp, _ = call(server, "POST", "/qcache/dataset/not_utf8", body,
@@ -1760,6 +1767,50 @@ def test_store_body_that_is_not_utf8_is_400(server, ctype, body):
     assert code == 400, resp
     assert "utf-8" in json.loads(resp)["error"]
     assert call(server, "GET", "/qcache/dataset/not_utf8?q=%7B%7D")[0] == 404
+
+
+def test_repr_floats_are_found_by_equality(resident_server, monkeypatch):
+    """A float stored as its `repr` text is found by `==` on that same
+    literal, on a resident and on a persisted key: the store parse
+    rounds correctly, as the query's JSON literal does."""
+    import numpy as np
+
+    from qcache_spark import fastpath
+
+    base, catalog = resident_server
+    values = [float(v) for v in np.random.default_rng(3).random(20) * 10.0]
+    csv = "i,x\n" + "".join(f"{i},{v!r}\n" for i, v in enumerate(values))
+    assert store(base, "repr_r", csv)[0] == 201
+    with monkeypatch.context() as m:
+        m.setattr(fastpath, "MAX_FASTPATH_BYTES", 0)
+        assert store(base, "repr_p", csv)[0] == 201
+    assert catalog.get("repr_r").table is not None and catalog.get("repr_p").table is None
+    for key in ("repr_r", "repr_p"):
+        for i, v in enumerate(values):
+            code, body, _ = query(base, key, {"where": ["==", "x", v], "select": ["i"]})
+            assert code == 200 and json.loads(body) == [{"i": i}], (key, v, body)
+
+
+def test_like_open_repetition_is_400(resident_server, monkeypatch):
+    """`{,n}` is a 400 on a resident and a persisted key (Java's regex
+    rejects it, so Catalyst used to answer 500); a brace and a comma
+    inside a class still match as literals on both."""
+    from qcache_spark import fastpath
+
+    base, _ = resident_server
+    csv = "i,s\na,x\nb,{\nc,\"a,b\"\n"
+    assert store(base, "rep_r", csv)[0] == 201
+    with monkeypatch.context() as m:
+        m.setattr(fastpath, "MAX_FASTPATH_BYTES", 0)
+        assert store(base, "rep_p", csv)[0] == 201
+    for key in ("rep_r", "rep_p"):
+        code, body, _ = query(base, key, {"where": ["like", "s", "'a{,3}'"]})
+        assert code == 400 and "repetition" in json.loads(body)["error"], (key, body)
+    _same_answers(base, "rep_r", "rep_p",
+                  [{"where": ["like", "s", "'%[{,]%'"], "select": ["i"], "order_by": ["i"]}])
+    assert json.loads(query(base, "rep_r", {"where": ["like", "s", "'%[{,]%'"],
+                                            "select": ["i"], "order_by": ["i"]})[1]) == [
+        {"i": "b"}, {"i": "c"}]
 
 
 def test_keep_alive_status_has_no_delayed_ack_floor(server):
